@@ -21,9 +21,9 @@ THRESH = 1.5
 ABS_FLOOR = 0.1  # seconds
 # Shuffle-budget gate (r13): a query whose shuffle WRITE grew >= THRESH x
 # with an absolute delta past this floor is flagged even when its wall
-# time hides in machine noise. The floor absorbs listener-posting bleed
-# between adjacent queries (Bench runs without settle sleeps) and AQE
-# coalesce wobble on small frames.
+# time hides in machine noise. The floor absorbs AQE coalesce wobble on
+# small frames (and, in artifacts before Bench attributed shuffle by job
+# group, listener-posting bleed between adjacent queries).
 SHUF_ABS_FLOOR_MB = 16.0
 
 # The two FROZEN cohorts whose totals BASELINE.md tracks across rounds:
@@ -61,6 +61,14 @@ def cohort_total(queries, cohort):
     return sum(vals)
 
 
+# Bench line dispatch is by the `metric` field (BASELINE.md): a plain
+# run prints per_query / per_query_shuffle, a merged min-of-N artifact
+# adds their _minN forms. Any other metric (machine is read below,
+# per_query_split and later additions) never feeds the comparison.
+PER_QUERY = re.compile(r"per_query(_min\d+)?$")
+PER_QUERY_SHUFFLE = re.compile(r"per_query_shuffle(_min\d+)?$")
+
+
 def _merge(lines):
     """Fold parseable bench-JSON lines into one record: the per-query
     map from the per_query line, total/counters from the total line
@@ -75,17 +83,18 @@ def _merge(lines):
             continue  # head-truncated capture of a long line
         if not isinstance(j, dict):
             continue
-        if j.get("metric") == "machine":
+        metric = str(j.get("metric", ""))
+        if metric == "machine":
             machine = j  # r14+: loadavg/MemAvailable at start+end
-        elif str(j.get("metric", "")).startswith("per_query_shuffle"):
-            # plain (one run) or _minN (merged builder artifact); last
-            # one wins, same as the wall-time convention below
+        elif PER_QUERY_SHUFFLE.match(metric):
+            # last one wins, same as the wall-time convention below
             shuffle = j["queries"]
-        elif "queries" in j:
-            # per_query or per_query_minN — LAST wins, so a merged
-            # builder artifact's min-of-N record is what gets compared
+        elif PER_QUERY.match(metric) or (metric == "total" and "queries" in j):
+            # LAST wins, so a merged artifact's min-of-N record is what
+            # gets compared; before r7 the total line itself carried the
+            # per-query map
             per_query = j
-        elif j.get("metric") == "total":
+        elif metric == "total":
             total = j
     if per_query is not None and shuffle is not None:
         per_query = dict(per_query)

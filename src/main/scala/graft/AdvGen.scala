@@ -95,7 +95,7 @@ object AdvGen {
     val r = new SplittableRandom(42)
     val rows = Vector.newBuilder[(Long, Option[String], String, String)]
     // 26-value source catalog: the driver's 20 + lev-1 variants + "".
-    def source(k: Int): String = {
+    def source(): String = {
       val roll = r.nextInt(100)
       if (roll < 30) "src0"
       else if (roll < 32) "srcA"
@@ -112,13 +112,13 @@ object AdvGen {
     // block 1: 1000 regular docs over the 10⁵ vocabulary
     (0 until 1000).foreach { k =>
       val lg = lang()
-      rows += ((k.toLong, Some(docBody(r, lg, 20 + r.nextInt(160))), lg, source(k)))
+      rows += ((k.toLong, Some(docBody(r, lg, 20 + r.nextInt(160))), lg, source()))
     }
     // block 2: 40 dup families × 5 variants (exact / near / case / ws)
     (0 until 40).foreach { f =>
       val lg = lang()
       val base = docBody(r, lg, 30 + r.nextInt(60))
-      val src = source(f)
+      val src = source()
       val variants = Seq(
         base,
         base,                                    // exact duplicate
@@ -150,7 +150,7 @@ object AdvGen {
       Some("  leading and trailing  "),
       None, None, None, None)                    // NULL text
     specials.zipWithIndex.foreach { case (t, i) =>
-      rows += ((1200L + i, t, lang(), source(i)))
+      rows += ((1200L + i, t, lang(), source()))
     }
     // block 4: megadocs (> 1 MB). Wildly different lengths on purpose:
     // any minhash band collision involving one is killed by the
@@ -172,7 +172,7 @@ object AdvGen {
     // sparse big-id block: same content classes, ids ~10⁹
     (0 until 60).foreach { k =>
       val lg = lang()
-      rows += ((1000000007L + k * 9973L, Some(docBody(r, lg, 10 + r.nextInt(80))), lg, source(k)))
+      rows += ((1000000007L + k * 9973L, Some(docBody(r, lg, 10 + r.nextInt(80))), lg, source()))
     }
     rows.result().map { case (id, t, lg, src) =>
       (id, t, lg, src, t.map(codePoints))

@@ -1,14 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.obs.{Obs, Sample}
 
 /** Driver-run benchmark: times every registered query at the SF dir in
-  * SPARK_GRAFT_SF_DIR and prints TWO JSON lines: the full per-query dict
-  * on the penultimate stdout line, and a total-only JSON (bounded to a
-  * few hundred bytes at any suite size) as the very LAST line. All
-  * methodology commentary goes to stderr. History: round 4's ~4 KB line
-  * with an embedded note and round 6's 150-entry per-query dict each
-  * overflowed the driver's 2000-char tail capture → "parsed": null;
-  * splitting the lines makes the total un-overflowable.
+  * SPARK_GRAFT_SF_DIR and prints JSON lines whose LAST two carry the
+  * result: the full per-query dict on the penultimate stdout line, and a
+  * total-only JSON (bounded to a few hundred bytes at any suite size) as
+  * the very LAST line. All methodology commentary goes to stderr.
+  * History: round 4's ~4 KB line with an embedded note and round 6's
+  * 150-entry per-query dict each overflowed a 2000-char tail capture →
+  * "parsed": null; splitting the lines makes the total un-overflowable.
   *
   * A short warmup (session init + one tiny action per input table)
   * runs before timing so the first measured query doesn't absorb JVM /
@@ -16,10 +17,9 @@ import org.apache.spark.sql.SparkSession
   * whichever query happens to run first. Failed queries report value
   * -1.0 and are listed in "failed" — never silently timed.
   *
-  * Timing action: a `noop`-format write, which materializes EVERY
-  * output row through the full physical plan. `count()` would let
-  * Catalyst prune the final sort/projection (count needs neither), and
-  * the sink ordering every query carries is real work worth timing —
+  * Timing action: [[graft.obs.Obs.sink]], a `noop`-format write that
+  * materializes EVERY output row through the full physical plan; the
+  * sink ordering every query carries is real work worth timing —
   * Verify writes actual parquet through the same plans.
   *
   * Contention hardening: each query is timed twice and the MINIMUM is
@@ -87,149 +87,29 @@ object Bench {
 
     val warmDir = "/root/testdata/sf0.001"
     names.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+      try Obs.sink(fn(spark, warmDir))
       catch { case _: Throwable => () }
     }
 
-    // Per-query shuffle accounting (r13, the r12 verdict's tripwire
-    // item): total shuffle read/write bytes from a task-metrics
-    // listener, snapshotted around each timed run, reported from the
-    // SAME pass the min wall time comes from. Purpose: a code change
-    // that silently doubles a query's shuffle at sf0.1 while its wall
-    // time hides in machine noise now shows in the artifact, and
-    // scripts/bench_trend.py gates on it like it gates wall time.
-    // No settle sleeps between queries (ScaleBench pays 1 s per
-    // measurement; 195×2 of those would add ~7 min to every bench):
-    // listener postings are asynchronous, so a query's last in-flight
-    // tasks can bleed a few MB into the NEXT query's delta — the trend
-    // gate's ratio+absolute-floor thresholds absorb that, and the
-    // bleed is consistent across rounds (same suite order).
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-
-    // Plan-vs-execute split (round-9 item #4): job wall-clock intervals
-    // from the scheduler listener; per timed run, exec = union length of
-    // the job intervals inside the run's window, plan = wall − exec
-    // (driver-side analysis/optimization, codegen, AND the sanctioned
-    // eager-construction gates, which run scans through their OWN jobs —
-    // those jobs count as exec, so "plan" here is pure driver think
-    // time). Enabled only when SPARK_GRAFT_PLAN_SPLIT names an output
-    // path (the driver never sets it — its two stdout lines are
-    // unchanged).
-    val splitPath = sys.env.get("SPARK_GRAFT_PLAN_SPLIT")
-    val jobSpans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    if (splitPath.isDefined)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val open = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            open.put(e.jobId, e.time)
-          override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = open.remove(e.jobId)
-            if (s != null) jobSpans.add((s.longValue, e.time))
-          }
-        })
-
-    // (sec, windowStartMs, windowEndMs, shuffleReadMb, shuffleWriteMb)
-    // — the window bounds feed the plan/execute attribution when the
-    // split is enabled
-    case class Run(sec: Double, w0: Long, w1: Long, rdMb: Double, wrMb: Double)
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-      val r0 = shufRead.get; val s0 = shufWrite.get
-      val w0 = System.currentTimeMillis()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Run((System.nanoTime() - t0) / 1e9, w0, System.currentTimeMillis(),
-          (shufRead.get - r0) / 1e6, (shufWrite.get - s0) / 1e6)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        Run(-1.0, w0, System.currentTimeMillis(), 0.0, 0.0)
-      }
+    // Each timed run is its own job group on the graft.obs listener, so
+    // its shuffle bytes (per_query_shuffle, the r12 verdict's tripwire:
+    // scripts/bench_trend.py gates on them), job intervals and executor
+    // CPU (per_query_split, round-9 item #4) count only its own tasks —
+    // no bleed from the previous query, no settle sleep. Two passes over
+    // the whole suite (not back-to-back per query, so a contention burst
+    // is less likely to hit both passes of one query); every figure comes
+    // from the pass the reported minimum wall time comes from.
+    def pass(): Seq[Sample] = names.map { case (name, fn) =>
+      val s = Obs.run(spark, name)(Obs.sink(fn(spark, sfDir)))
+      s.error.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+      s
     }
-
-    // Two passes over the whole suite (not back-to-back per query, so a
-    // contention burst is less likely to hit both passes of one query);
-    // report the per-query minimum.
-    val pass1 = names.map { case (name, fn) => (name, timeOnce(name, fn)) }
-    val pass2 = names.map { case (name, fn) => (name, timeOnce(name, fn)) }
-    val results = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
-      val v =
-        if (a.sec < 0 && b.sec < 0) -1.0
-        else if (a.sec < 0) b.sec
-        else if (b.sec < 0) a.sec
-        else math.min(a.sec, b.sec)
-      (name, v)
-    }
-    // shuffle bytes from the pass the reported (min) wall time comes
-    // from — the ScaleBench convention (deterministic per pass up to
-    // AQE decisions + the bleed noted above)
-    val shuffles = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
-      val best =
-        if (b.sec < 0 || (a.sec >= 0 && a.sec <= b.sec)) a else b
-      (name, best.rdMb, best.wrMb)
-    }
-    pass1.zip(pass2).foreach { case ((name, a), (_, b)) =>
-      // shuffleW is the BEST-(wall-time)-pass value — the same number
-      // the per_query_shuffle artifact line reports (r14, closing the
-      // r13 advice: the min-of-passes this used to print could
-      // disagree with the committed artifact for the same query)
-      val best = if (b.sec < 0 || (a.sec >= 0 && a.sec <= b.sec)) a else b
+    val (pass1, pass2) = (pass(), pass())
+    val results = pass1.zip(pass2).map { case (a, b) =>
+      val best = Obs.best(a, b)
       System.err.println(
-        f"[bench] $name%-28s pass1=${a.sec}%8.3f pass2=${b.sec}%8.3f shuffleW=${best.wrMb}%9.1fMB")
-    }
-
-    // Attribute exec/plan per query from the MIN pass's window: merged
-    // union of job intervals clipped to the window (AQE overlaps jobs,
-    // so a plain sum would double-count).
-    splitPath.foreach { path =>
-      Thread.sleep(1500) // let the listener bus drain the last postings
-      val spans = {
-        val it = jobSpans.iterator(); val b = Seq.newBuilder[(Long, Long)]
-        while (it.hasNext) b += it.next(); b.result().sortBy(_._1)
-      }
-      def execMs(w0: Long, w1: Long): Long = {
-        val clipped = spans
-          .map { case (s, e) => (math.max(s, w0), math.min(e, w1)) }
-          .filter { case (s, e) => e > s }
-        var total = 0L; var curS = Long.MinValue; var curE = Long.MinValue
-        clipped.foreach { case (s, e) =>
-          if (s > curE) { total += math.max(0L, curE - curS); curS = s; curE = e }
-          else curE = math.max(curE, e)
-        }
-        total + math.max(0L, curE - curS)
-      }
-      def fmt3(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      val lines = pass1.zip(pass2).collect {
-        case ((name, a), (_, b)) if a.sec >= 0 || b.sec >= 0 =>
-          val best =
-            if (b.sec < 0 || (a.sec >= 0 && a.sec <= b.sec)) a else b
-          val ex = execMs(best.w0, best.w1) / 1e3
-          name -> (best.sec, math.min(ex, best.sec),
-            best.sec - math.min(ex, best.sec))
-      }
-      val body = lines.map { case (n, (w, e, p)) =>
-        s""""$n":{"wall":${fmt3(w)},"exec":${fmt3(e)},"plan":${fmt3(p)}}"""
-      }.mkString("{", ",", "}")
-      val (tw, te, tp) = lines.foldLeft((0.0, 0.0, 0.0)) {
-        case ((w, e, p), (_, (w1, e1, p1))) => (w + w1, e + e1, p + p1)
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-        s"""{"total":{"wall":${fmt3(tw)},"exec":${fmt3(te)},"plan":${fmt3(tp)}},"queries":$body}\n""")
-      System.err.println(f"[bench] plan-split: wall=$tw%.1f exec=$te%.1f plan=$tp%.1f -> $path")
+        f"[bench] ${best.label}%-28s pass1=${a.sec}%8.3f pass2=${b.sec}%8.3f shuffleW=${best.writeMb}%9.1fMB")
+      best
     }
     System.err.println(
       "[bench] methodology: noop-format write (full materialization incl. final " +
@@ -238,35 +118,41 @@ object Bench {
 
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
     // comma decimal separator would corrupt the machine-parsed JSON line.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    def fmt(v: Double, digits: Int = 3): String =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    def dict(rows: Seq[Sample])(value: Sample => String): String =
+      rows.map(s => "\"" + s.label + "\":" + value(s)).mkString("{", ",", "}")
+    val timed = results.filter(_.ok)
+    val qs = dict(results)(s => fmt(s.sec))
+    // a failed query reports no shuffle, as its wall time reports -1
+    val sh = dict(results) { s =>
+      val (r, w) = if (s.ok) (s.readMb, s.writeMb) else (0.0, 0.0)
+      s"""{"r":${fmt(r, 1)},"w":${fmt(w, 1)}}"""
+    }
+    // exec = union of the run's job intervals (eager-construction gates'
+    // scans included), plan = wall - exec (analysis, optimization, codegen)
+    val split = dict(timed) { s =>
+      val exec = math.min(s.execSec, s.sec)
+      s"""{"wall":${fmt(s.sec)},"exec":${fmt(exec)},"plan":${fmt(s.sec - exec)},"cpu":${fmt(s.cpuSec)}}"""
+    }
     // The failed list is capped at 8 names so the final line stays a few
     // hundred bytes even in a catastrophic all-fail run; n_failed carries
     // the true count and the per-query line has every value.
-    val failedNames = results.collect { case (k, v) if v < 0 => k }
+    val failedNames = results.filterNot(_.ok).map(_.label)
     val failed = failedNames.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val total = timed.map(_.sec).sum
     spark.stop()
-    // THREE stdout lines (shuffle line added r13), ordered so the two
-    // lines the driver parses stay LAST, per the round-6 verdict: the
-    // per-query dict grew to ~3.5 KB at 150 queries and overflowed the
-    // driver's 2000-char tail capture when embedded in the final line,
-    // hiding the total. Shuffle first (informational, consumed by the
-    // committed builder artifact + bench_trend), then the full
-    // per-query JSON on the PENULTIMATE line, and the LAST line is
-    // total-only — bounded to a few hundred bytes at any suite size.
-    def fmt1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val sh = shuffles.map { case (k, r, w) =>
-      "\"" + k + "\":{\"r\":" + fmt1(r) + ",\"w\":" + fmt1(w) + "}"
-    }.mkString("{", ",", "}")
-    // machine line FIRST (informational; the driver parses only the
-    // last lines, which stay per_query then total exactly as before)
+    // Informational lines first (machine state, plan split, shuffle), so
+    // the two result lines stay LAST, per the round-6 verdict: the
+    // per-query dict grew to ~3.5 KB at 150 queries and overflowed a
+    // 2000-char tail capture when embedded in the final line, hiding the
+    // total. The full per-query JSON is the PENULTIMATE line,
+    // and the LAST line is total-only — bounded to a few hundred bytes at
+    // any suite size.
     val machineEnd = machineState()
     System.err.println(s"[bench] machine at end: $machineEnd")
     println(s"""{"metric":"machine","start":$machineStart,"end":$machineEnd,"cpus":"$cpus"}""")
+    println(s"""{"metric":"per_query_split","unit":"sec","queries":$split}""")
     println(s"""{"metric":"per_query_shuffle","unit":"mb","queries":$sh,"sf":"$sfDir"}""")
     println(s"""{"metric":"per_query","unit":"sec","queries":$qs,"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failedNames.size},"failed":$failed,"sf":"$sfDir"}""")

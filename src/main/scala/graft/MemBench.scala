@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
+import graft.obs.Obs
 
 /** Memory-pressure evidence for the heavy-20 cohort (round-9 verdict
   * item #2): the scale ladders measure shuffle BYTES; this main
   * measures the MEMORY axis — per-task peak execution memory and
-  * spill bytes from the task-metrics listener — under a deliberately
+  * spill bytes from the graft.obs listener — under a deliberately
   * constrained heap (run with SPARK_DRIVER_MEM=4g, SPARK_GRAFT_CPUS=8:
   * half the bench heap, a quarter of its slots, so ~0.3 GB of unified
   * memory per task slot instead of ~1.2 GB). At 100 TB the analogous
@@ -48,21 +47,6 @@ object MemBench {
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val peak = new AtomicLong
-    val memSp = new AtomicLong
-    val diskSp = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peak.getAndAccumulate(m.peakExecutionMemory,
-            (a: Long, b: Long) => math.max(a, b))
-          memSp.addAndGet(m.memoryBytesSpilled)
-          diskSp.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-
     // codegen warmup off the clock (the Bench discipline); fall back to
     // the measured dir when the canonical small SF is absent, and say
     // so — a silently skipped warmup puts codegen/JIT on the clock and
@@ -72,25 +56,18 @@ object MemBench {
         "/root/testdata/sf0.001"
       else sfDir
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
+      try Obs.sink(SparkEntry.queries(n)(spark, warmDir))
       catch { case e: Throwable =>
         System.err.println(s"[mem] warmup $n failed (first pass unwarmed): ${e.getMessage}")
       }
     }
 
-    def settle(): Unit = Thread.sleep(800)
     val heapMb = Runtime.getRuntime.maxMemory / (1L << 20)
     var failed = List.empty[String]
     names.foreach { n =>
-      settle(); peak.set(0L); memSp.set(0L); diskSp.set(0L)
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
+      val s =
+        try Obs.run(spark, n)(Obs.sink(SparkEntry.queries(n)(spark, sfDir)))
+        catch {
           case oom: OutOfMemoryError =>
             // the one verdict this main exists to catch — and the one
             // state it must NOT keep measuring through: a post-OOM JVM
@@ -99,12 +76,9 @@ object MemBench {
             System.err.println(s"[mem] $n OOM under ${heapMb}m heap")
             println(s"""{"metric":"mem_total","heap_mb":$heapMb,"cpus":$cpus,"oom_query":"$n","sf":"$sfDir"}""")
             throw oom
-          case e: Throwable =>
-            System.err.println(s"[mem] $n FAILED: ${e.getMessage}")
-            failed ::= n; -1.0
         }
-      settle()
-      println(f"""{"query":"$n","sec":$sec%.2f,"peak_task_exec_mb":${peak.get / 1e6}%.1f,"mem_spill_mb":${memSp.get / 1e6}%.1f,"disk_spill_mb":${diskSp.get / 1e6}%.1f}""")
+      s.error.foreach { e => System.err.println(s"[mem] $n FAILED: ${e.getMessage}"); failed ::= n }
+      println(f"""{"query":"$n","sec":${s.sec}%.2f,"peak_task_exec_mb":${s.peakTaskExecMemory / 1e6}%.1f,"mem_spill_mb":${s.memorySpillBytes / 1e6}%.1f,"disk_spill_mb":${s.diskSpillBytes / 1e6}%.1f}""")
     }
     println(s"""{"metric":"mem_total","heap_mb":$heapMb,"cpus":$cpus,"n_queries":${names.size},"n_failed":${failed.size},"sf":"$sfDir"}""")
     spark.stop()

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.obs.Obs
+
 /** Dev tool: isolate the per-element cost of the native fixed-point
   * expressions against their higher-order-function reference forms on
   * a synthetic in-memory corpus big enough that per-row work dominates
@@ -25,9 +27,7 @@ object MicroBench {
       .localCheckpoint(true) // materialize so generation is off the clock
 
     def time(label: String)(df: => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
+      val s = Obs.run(spark, label)(Obs.sink(df)).orThrow.sec
       System.err.println(f"$label%-28s $s%8.3f s")
       s
     }

@@ -1,10 +1,10 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import scala.collection.mutable.ArrayBuffer
 
-/** Dev tool: run one registered query with a stage listener and print
-  * per-stage wall/CPU/records — where a slow query actually spends its
-  * time, on the same warmed session shape Bench uses.
+import graft.obs.Obs
+
+/** Dev tool: run one registered query and print per-stage
+  * wall/CPU/records from its graft.obs sample — where a slow query
+  * actually spends its time, on the same warmed session shape Bench uses.
   *
   * Usage: runMain graft.Profile <sfDir> <queryName> [repeats]
   */
@@ -15,31 +15,16 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val stages = ArrayBuffer[(Int, String, Long, Long, Long, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        val wall = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s).getOrElse(-1L)
-        stages.synchronized {
-          stages += ((i.stageId, i.name.split("\n").head.take(60), wall,
-            i.taskMetrics.executorRunTime, i.taskMetrics.executorCpuTime / 1000000,
-            i.taskMetrics.inputMetrics.recordsRead + i.taskMetrics.shuffleReadMetrics.recordsRead))
-        }
-      }
-    })
     // steady-state: warm at sf0.001 like Bench, then profile the last repeat
     SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       .write.format("noop").mode("overwrite").save()
     (1 to repeats).foreach { r =>
-      stages.synchronized(stages.clear())
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"\n=== $name run $r: $sec%.3f s ===")
+      val s = Obs.run(spark, name)(Obs.sink(SparkEntry.queries(name)(spark, sfDir))).orThrow
+      println(f"\n=== $name run $r: ${s.sec}%.3f s ===")
       println(f"${"stage"}%6s ${"wall ms"}%8s ${"run ms"}%8s ${"cpu ms"}%8s ${"records"}%10s  name")
-      stages.synchronized(stages.sortBy(-_._3).take(15).foreach { case (id, n, w, rt, ct, rec) =>
-        println(f"$id%6d $w%8d $rt%8d $ct%8d $rec%10d  $n")
-      })
+      s.stages.sortBy(-_.wallMs).take(15).foreach { st =>
+        println(f"${st.stageId}%6d ${st.wallMs}%8d ${st.runMs}%8d ${st.cpuMs}%8d ${st.records}%10d  ${st.name}")
+      }
     }
     spark.stop()
   }

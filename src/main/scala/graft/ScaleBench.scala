@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.util.concurrent.atomic.AtomicLong
+
+import graft.obs.{Obs, Sample}
 
 /** Empirical scaling evidence for the dedup/ANN family (round-8
   * item #2): the 100 TB claims about bounded candidate generation
@@ -13,7 +13,7 @@ import java.util.concurrent.atomic.AtomicLong
   * of the base `documents`/`embeddings` tables by deterministic
   * replication with planted duplicates, times the seven headline
   * dedup/ANN queries at each scale, and records total shuffle
-  * read/write bytes per query from a task-metrics
+  * read/write bytes per query from the graft.obs
   * listener — the quantity whose growth exponent separates "bounded
   * candidates" (≈ linear) from a hidden df² blow-up (≈ quadratic).
   *
@@ -294,6 +294,16 @@ object ScaleBench {
         col("lang"), col("source"), col("n_chars"))
     }
 
+  /** Time query `q` at `dir` twice (a failed pass throws): the faster pass,
+    * and the worse pass's max per-task shuffle fan-in — the skew ladder's
+    * headline, since a generator that funnels a hot template into one task
+    * shows up there even while total bytes look linear. */
+  private def twice(spark: SparkSession, q: String, dir: String): (Sample, Long) = {
+    def once() = Obs.run(spark, q)(Obs.sink(SparkEntry.queries(q)(spark, dir))).orThrow
+    val (a, b) = (once(), once())
+    (Obs.best(a, b), math.max(a.maxTaskRecordsRead, b.maxTaskRecordsRead))
+  }
+
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
@@ -322,32 +332,9 @@ object ScaleBench {
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Shuffle-byte accounting: task metrics summed across the job(s) a
-    // query runs. Listener events are posted asynchronously; the short
-    // settle sleep after each action bounds the undercount to the last
-    // in-flight postings (negligible against MB-scale totals).
-    val shufRead = new AtomicLong
-    val shufWrite = new AtomicLong
-    // per-task max shuffle fan-in (records read by the hungriest task)
-    // — the skew ladder's headline metric: a candidate generator that
-    // funnels a hot template into one task shows up HERE even when
-    // total bytes still look linear
-    val maxRecs = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          maxRecs.getAndAccumulate(m.shuffleReadMetrics.recordsRead,
-            (a: Long, b: Long) => math.max(a, b))
-        }
-      }
-    })
-
     sys.env.get("SPARK_GRAFT_SKEW_PCTS") match {
       case Some(spec) =>
-        runSkew(spark, baseDir, outBase, spec, shufRead, shufWrite, maxRecs)
+        runSkew(spark, baseDir, outBase, spec)
         spark.stop()
         return
       case None => ()
@@ -355,7 +342,7 @@ object ScaleBench {
 
     sys.env.get("SPARK_GRAFT_ADV_DIR") match {
       case Some(advDir) =>
-        val ok = runAdv(spark, advDir, shufRead, shufWrite, maxRecs)
+        val ok = runAdv(spark, advDir)
         spark.stop()
         if (!ok) sys.exit(1)
         return
@@ -442,41 +429,21 @@ object ScaleBench {
 
     // Warmup at the smallest scale: JIT/codegen for all seven plans.
     val smallest = dirs(scales.min)._1
-    queries.foreach { q =>
-      SparkEntry.queries(q)(spark, smallest)
-        .write.format("noop").mode("overwrite").save()
-    }
+    queries.foreach(q => Obs.sink(SparkEntry.queries(q)(spark, smallest)))
 
-    def settle(): Unit = Thread.sleep(1000)
-
-    case class Obs(scale: Int, nDocs: Long, query: String, sec: Double,
-      readMb: Double, writeMb: Double)
-    val obs = scala.collection.mutable.ArrayBuffer[Obs]()
+    case class Point(scale: Int, query: String, sec: Double, writeMb: Double)
+    val points = scala.collection.mutable.ArrayBuffer[Point]()
 
     for (r <- scales.sorted; q <- queries) {
       val (dir, n) = dirs(r)
-      def once(): (Double, Double, Double) = {
-        settle()
-        val r0 = shufRead.get; val w0 = shufWrite.get
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        settle()
-        (sec, (shufRead.get - r0) / 1e6, (shufWrite.get - w0) / 1e6)
-      }
       // a per-query failure (e.g. a scale GATE firing by design, like
       // semantic_dedup's max-cluster contract at 100× with registry-
       // pinned k) records an err row and the ladder continues — one
       // out-of-domain point must not cost every other query's fit
       try {
-        val (s1, r1, w1) = once()
-        val (s2, r2, w2) = once()
-        // min time (contention hardening); shuffle bytes from the faster
-        // pass (they are deterministic per pass up to AQE decisions)
-        val (sec, rd, wr) = if (s1 <= s2) (s1, r1, w1) else (s2, r2, w2)
-        obs += Obs(r, n, q, sec, rd, wr)
-        println(f"""{"scale":$r,"scheme":"$scheme","n_docs":$n,"query":"$q","sec":$sec%.2f,"shuffle_read_mb":$rd%.1f,"shuffle_write_mb":$wr%.1f}""")
+        val s = twice(spark, q, dir)._1 // min time: contention hardening
+        points += Point(r, q, s.sec, s.writeMb)
+        println(f"""{"scale":$r,"scheme":"$scheme","n_docs":$n,"query":"$q","sec":${s.sec}%.2f,"shuffle_read_mb":${s.readMb}%.1f,"shuffle_write_mb":${s.writeMb}%.1f}""")
       } catch { case e: Throwable =>
         val msg = String.valueOf(e.getMessage).replaceAll("[\"\\\\\n\r\t]", " ").take(300)
         println(s"""{"scale":$r,"scheme":"$scheme","n_docs":$n,"query":"$q","err":"$msg"}""")
@@ -494,7 +461,7 @@ object ScaleBench {
     // A single-scale run has no ladder to fit — skip the exponent
     // lines rather than printing NaN (not legal JSON).
     if (scales.distinct.size >= 2) for (q <- queries) {
-      val o = obs.filter(_.query == q).sortBy(_.scale).toSeq
+      val o = points.filter(_.query == q).sortBy(_.scale).toSeq
       val xs = o.map(_.scale.toDouble)
       if (xs.distinct.size >= 2) {
         val eT = slope(xs, o.map(_.sec))
@@ -546,9 +513,7 @@ object ScaleBench {
     * returning. Ceiling via SPARK_GRAFT_ADV_CEILING_SEC (default 120 s,
     * generous against a measured ~1-10 s/query envelope so only a
     * complexity-class regression, not machine noise, can trip it). */
-  private def runAdv(spark: SparkSession, advDir: String,
-      shufRead: AtomicLong, shufWrite: AtomicLong,
-      maxRecs: AtomicLong): Boolean = {
+  private def runAdv(spark: SparkSession, advDir: String): Boolean = {
     val ceiling = sys.env.getOrElse("SPARK_GRAFT_ADV_CEILING_SEC", "120").toDouble
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -558,31 +523,13 @@ object ScaleBench {
     // warmup: compile every plan once off the clock (same discipline as
     // the ladder; the adversarial corpus is the only corpus here, so
     // warmup runs against it directly)
-    queries.foreach { q =>
-      SparkEntry.queries(q)(spark, advDir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    def settle(): Unit = Thread.sleep(1000)
+    queries.foreach(q => Obs.sink(SparkEntry.queries(q)(spark, advDir)))
     var allOk = true
     for (q <- queries) {
-      def once(): (Double, Double, Double, Long) = {
-        settle()
-        val r0 = shufRead.get; val w0 = shufWrite.get; maxRecs.set(0L)
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, advDir)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        settle()
-        (sec, (shufRead.get - r0) / 1e6, (shufWrite.get - w0) / 1e6,
-          maxRecs.get)
-      }
-      val (s1, r1, w1, m1) = once()
-      val (s2, r2, w2, m2) = once()
-      val (sec, rd, wr) = if (s1 <= s2) (s1, r1, w1) else (s2, r2, w2)
-      val mx = math.max(m1, m2)
-      val ok = sec <= ceiling
+      val (s, mx) = twice(spark, q, advDir)
+      val ok = s.sec <= ceiling
       if (!ok) allOk = false
-      println(f"""{"adv_query":"$q","sec":$sec%.2f,"shuffle_read_mb":$rd%.1f,"shuffle_write_mb":$wr%.1f,"max_task_shuffle_rows":$mx,"ceiling_sec":$ceiling%.0f,"within_ceiling":$ok}""")
+      println(f"""{"adv_query":"$q","sec":${s.sec}%.2f,"shuffle_read_mb":${s.readMb}%.1f,"shuffle_write_mb":${s.writeMb}%.1f,"max_task_shuffle_rows":$mx,"ceiling_sec":$ceiling%.0f,"within_ceiling":$ok}""")
     }
     println(s"""{"adv_summary":"${if (allOk) "all_within_ceiling" else "CEILING_EXCEEDED"}","n_queries":${queries.size}}""")
     allOk
@@ -593,8 +540,7 @@ object ScaleBench {
     * against each, per-(pct, query) rows plus a lo-vs-hi ratio line —
     * flat ratios = the caps bind. */
   private def runSkew(spark: SparkSession, baseDir: String, outBase: String,
-      spec: String, shufRead: AtomicLong, shufWrite: AtomicLong,
-      maxRecs: AtomicLong): Unit = {
+      spec: String): Unit = {
     import org.apache.spark.sql.functions._
     val pcts = spec.split(",").map(_.trim.toInt).toSeq
     require(pcts.nonEmpty && pcts.forall(p => p >= 0 && p <= 50),
@@ -622,34 +568,17 @@ object ScaleBench {
       Tables.invalidate(dir) // the planter rewrote parquet under dir
       p -> dir
     }.toMap
-    queries.foreach(q => SparkEntry.queries(q)(spark, dirs(pcts.head))
-      .write.format("noop").mode("overwrite").save())
-    def settle(): Unit = Thread.sleep(1000)
-    case class Obs(pct: Int, query: String, sec: Double, readMb: Double,
-      writeMb: Double, maxRows: Long)
-    val obs = scala.collection.mutable.ArrayBuffer[Obs]()
+    queries.foreach(q => Obs.sink(SparkEntry.queries(q)(spark, dirs(pcts.head))))
+    case class Point(pct: Int, query: String, writeMb: Double, maxRows: Long)
+    val points = scala.collection.mutable.ArrayBuffer[Point]()
     for (p <- pcts.sorted; q <- queries) {
-      def once(): (Double, Double, Double, Long) = {
-        settle()
-        val r0 = shufRead.get; val w0 = shufWrite.get; maxRecs.set(0L)
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dirs(p))
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        settle()
-        (sec, (shufRead.get - r0) / 1e6, (shufWrite.get - w0) / 1e6,
-          maxRecs.get)
-      }
-      val (s1, r1, w1, m1) = once()
-      val (s2, r2, w2, m2) = once()
-      val (sec, rd, wr) = if (s1 <= s2) (s1, r1, w1) else (s2, r2, w2)
-      val mx = math.max(m1, m2) // fan-in is a bound — keep the worse pass
-      obs += Obs(p, q, sec, rd, wr, mx)
-      println(f"""{"skew_pct":$p,"query":"$q","sec":$sec%.2f,"shuffle_read_mb":$rd%.1f,"shuffle_write_mb":$wr%.1f,"max_task_shuffle_rows":$mx}""")
+      val (s, mx) = twice(spark, q, dirs(p))
+      points += Point(p, q, s.writeMb, mx)
+      println(f"""{"skew_pct":$p,"query":"$q","sec":${s.sec}%.2f,"shuffle_read_mb":${s.readMb}%.1f,"shuffle_write_mb":${s.writeMb}%.1f,"max_task_shuffle_rows":$mx}""")
     }
     val lo = pcts.min; val hi = pcts.max
     if (lo != hi) for (q <- queries) {
-      val o = obs.filter(_.query == q)
+      val o = points.filter(_.query == q)
       val (a, b) = (o.find(_.pct == lo).get, o.find(_.pct == hi).get)
       // floor BOTH sides (the exponent-fit discipline): a 0-MB floor
       // value must read as growth from ~0, never as ratio 0.00 — a

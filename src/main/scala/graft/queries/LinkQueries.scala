@@ -125,8 +125,6 @@ object LinkQueries extends QueryModule {
     // counting and both orientation joins); the oriented frame's two
     // wedge-side uses share one exchange.
     "link_triangles" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val stats = docs.agg(count(lit(1)).as("n"))
       val raw = linkEdgesRaw(s, d)
       val und = graft.operators.Dedup.materialize(
         raw.filter(col("src") =!= col("dst"))
@@ -185,7 +183,6 @@ object LinkQueries extends QueryModule {
     "link_hits" -> ((s, d) => {
       val F = 1000000L
       val docs = Tables.documents(s, d).select("doc_id")
-      val stats = docs.agg(count(lit(1)).as("n"))
       val edges = linkEdges(s, d)
       def normalized(scoresIn: DataFrame, c: String): DataFrame = {
         // scores MATERIALIZED before the max: both the 1-row max
@@ -542,7 +539,6 @@ object LinkQueries extends QueryModule {
     // non-negative, so floor = both engines' truncation).
     "neighbor_features" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-      val stats = docs.agg(count(lit(1)).as("n"))
       val edges = linkEdges(s, d)
       def hop(h: DataFrame, valCol: String): DataFrame =
         edges.join(h, edges("src") === h("doc_id"))

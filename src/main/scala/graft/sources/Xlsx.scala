@@ -250,7 +250,7 @@ object Xlsx {
   private def parseSheet(bytes: Array[Byte],
       shared: Vector[String],
       onHeader: Array[String] => Set[Int],
-      cellCounter: java.util.concurrent.atomic.AtomicLong = null): Vector[Array[String]] = {
+      cellCounter: java.util.concurrent.atomic.AtomicLong): Vector[Array[String]] = {
     val r = xmlReader(bytes)
     val rows = Vector.newBuilder[Array[String]]
     var wanted: Set[Int] = null // null until the header row completes

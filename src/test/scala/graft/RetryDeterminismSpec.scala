@@ -3,9 +3,10 @@ package graft
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import graft.obs.Obs
 
 /** Shared fault-injection state. Local mode runs tasks in the driver
   * JVM, so a static flag/counter is visible to task closures without
@@ -54,34 +55,25 @@ class RetryDeterminismSpec extends SparkSpec {
     * tasks failed AND the two sorted outputs are identical. */
   private def assertRetryIdentical(name: String)(mk: DataFrame => DataFrame,
       input: => DataFrame): Unit = {
-    val taskFailures = new AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.reason != org.apache.spark.Success) taskFailures.incrementAndGet()
-    }
     def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     RetryFault.enabled.set(false)
     val clean = rows(mk(faulted(input)))
-    spark.sparkContext.addSparkListener(listener)
     try {
       RetryFault.enabled.set(true)
       RetryFault.fired.set(0L)
-      val retried = rows(mk(faulted(input)))
-      Thread.sleep(1000) // task-end events post asynchronously — drain
+      var retried = Seq.empty[String]
+      val s = Obs.run(spark, s"retry-$name") { retried = rows(mk(faulted(input))) }.orThrow
       withClue(s"$name: injection never fired — the property was not tested: ") {
         RetryFault.fired.get() should be > 0L
       }
       withClue(s"$name: no task end reported a failure: ") {
-        taskFailures.get() should be > 0L
+        s.failedTasks should be > 0
       }
       withClue(s"$name: retried output diverged from the clean run: ") {
         retried shouldEqual clean
       }
-    } finally {
-      RetryFault.enabled.set(false)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally RetryFault.enabled.set(false)
   }
 
   test("dedup pairs + connected components are hash-identical under first-attempt task failures") {

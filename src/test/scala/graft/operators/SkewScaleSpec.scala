@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.obs.Obs
 
 /** MEASURED skew evidence (round-7 verdict #5): plant a pathological
   * hot key (≥100× the median key's rows), show the `join_key_skew`
@@ -53,8 +51,6 @@ class SkewScaleSpec extends SparkSpec {
     // the Jaccard threshold (the unique bodies dominate the union), so
     // a bounded generator must show ~flat per-task max shuffle fan-in
     // and must not emit any pair the boilerplate alone created.
-    import java.util.concurrent.atomic.AtomicLong
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     def skewed(pct: Int): DataFrame =
@@ -62,74 +58,63 @@ class SkewScaleSpec extends SparkSpec {
         when(col("doc_id") % 100 < pct,
           concat(lit(graft.ScaleBench.Boilerplate), lit(" "), col("text")))
           .otherwise(col("text")).as("text"))
-    val maxRecs = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null)
-          maxRecs.getAndAccumulate(m.shuffleReadMetrics.recordsRead,
-            (a: Long, b: Long) => math.max(a, b))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def run(pct: Int): (Set[(Long, Long)], Long) = {
-        Thread.sleep(800); maxRecs.set(0L)
-        val pairs = Dedup.jaccardPairs(skewed(pct), 0.5)
+    def run(pct: Int): (Set[(Long, Long)], Long) = {
+      var pairs = Set.empty[(Long, Long)]
+      val s = Obs.run(spark, s"skew$pct") {
+        pairs = Dedup.jaccardPairs(skewed(pct), 0.5)
           .select("d1", "d2").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
-        Thread.sleep(800) // listener bus drains asynchronously
-        (pairs, maxRecs.get)
-      }
-      val (pairs0, fan0) = run(0)
-      val (pairs10, fan10) = run(10)
-      // the per-task candidate fan-in stays within AQE-coalescing noise
-      // of the clean corpus — a generator that joined hot shingles
-      // raw would multiply it (~30 boilerplate shingles x df^2/2)
-      withClue(s"max task fan-in grew $fan0 -> $fan10: ") {
-        fan10.toDouble should be <= 3.0 * math.max(fan0, 1L)
-      }
-      // every pair the template ADDED is a genuine near-dup, not a
-      // hot-shingle false positive: for LONG bodies the 32-token
-      // template can't reach J >= 0.5, but the corpus has short docs
-      // the template legitimately dominates — so recompute the exact
-      // Jaccard for every planted pair in plain Scala and require it
-      // to clear the threshold on its own merits
-      // EVERY pair new to the skewed run gets re-verified — including
-      // mixed (boiler, non-boiler) pairs, where a hot-shingle false
-      // positive would equally hide (r10 review finding)
-      val isBoiler = (id: Long) => id % 100 < 10
-      val planted = pairs10 -- pairs0
-      if (planted.nonEmpty) {
-        val ids = planted.flatMap(p => Seq(p._1, p._2))
-        val texts = skewed(10).filter(col("doc_id").isin(ids.toSeq: _*))
-          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        def sh(t: String): Set[String] =
-          t.trim.replaceAll("\\s+", " ").split(" ").toSeq
-            .sliding(3).filter(_.size == 3).map(_.mkString(" ")).toSet
-        planted.foreach { case (a, b) =>
-          val (sa, sb) = (sh(texts(a)), sh(texts(b)))
-          val j = (sa & sb).size.toDouble / (sa | sb).size.toDouble
-          withClue(s"planted pair ($a,$b) below threshold (J=$j): ") {
-            j should be >= 0.5
-          }
+      }.orThrow
+      (pairs, s.maxTaskRecordsRead)
+    }
+    val (pairs0, fan0) = run(0)
+    val (pairs10, fan10) = run(10)
+    // the per-task candidate fan-in stays within AQE-coalescing noise
+    // of the clean corpus — a generator that joined hot shingles
+    // raw would multiply it (~30 boilerplate shingles x df^2/2)
+    withClue(s"max task fan-in grew $fan0 -> $fan10: ") {
+      fan10.toDouble should be <= 3.0 * math.max(fan0, 1L)
+    }
+    // every pair the template ADDED is a genuine near-dup, not a
+    // hot-shingle false positive: for LONG bodies the 32-token
+    // template can't reach J >= 0.5, but the corpus has short docs
+    // the template legitimately dominates — so recompute the exact
+    // Jaccard for every planted pair in plain Scala and require it
+    // to clear the threshold on its own merits
+    // EVERY pair new to the skewed run gets re-verified — including
+    // mixed (boiler, non-boiler) pairs, where a hot-shingle false
+    // positive would equally hide (r10 review finding)
+    val isBoiler = (id: Long) => id % 100 < 10
+    val planted = pairs10 -- pairs0
+    if (planted.nonEmpty) {
+      val ids = planted.flatMap(p => Seq(p._1, p._2))
+      val texts = skewed(10).filter(col("doc_id").isin(ids.toSeq: _*))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      def sh(t: String): Set[String] =
+        t.trim.replaceAll("\\s+", " ").split(" ").toSeq
+          .sliding(3).filter(_.size == 3).map(_.mkString(" ")).toSet
+      planted.foreach { case (a, b) =>
+        val (sa, sb) = (sh(texts(a)), sh(texts(b)))
+        val j = (sa & sb).size.toDouble / (sa | sb).size.toDouble
+        withClue(s"planted pair ($a,$b) below threshold (J=$j): ") {
+          j should be >= 0.5
         }
       }
-      // and the template did NOT pair any two LONG-body docs (where it
-      // cannot dominate the union): the hot shingles' df never turned
-      // into candidates for them
-      val bodyToks = docs.collect()
-        .map(r => r.getLong(0) ->
-          r.getString(1).trim.replaceAll("\\s+", " ").split(" ").length)
-        .toMap
-      val longPlanted = planted.filter { case (a, b) =>
-        isBoiler(a) && isBoiler(b) && bodyToks(a) >= 90 && bodyToks(b) >= 90
-      }
-      longPlanted shouldBe empty
-      // non-vacuous: the template really went in (some docs changed)
-      skewed(10).filter(col("text").startsWith("breaking news update"))
-        .count() should be > 0L
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // and the template did NOT pair any two LONG-body docs (where it
+    // cannot dominate the union): the hot shingles' df never turned
+    // into candidates for them
+    val bodyToks = docs.collect()
+      .map(r => r.getLong(0) ->
+        r.getString(1).trim.replaceAll("\\s+", " ").split(" ").length)
+      .toMap
+    val longPlanted = planted.filter { case (a, b) =>
+      isBoiler(a) && isBoiler(b) && bodyToks(a) >= 90 && bodyToks(b) >= 90
+    }
+    longPlanted shouldBe empty
+    // non-vacuous: the template really went in (some docs changed)
+    skewed(10).filter(col("text").startsWith("breaking news update"))
+      .count() should be > 0L
   }
 
   test("join_key_skew's diagnostic flags the planted >=100x hot key") {
@@ -183,25 +168,14 @@ class SkewScaleSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.shuffle.partitions" -> "32") {
-      val maxTask = new AtomicLong
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            maxTask.getAndAccumulate(m.shuffleReadMetrics.recordsRead, math.max)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val joined = fact.join(dim, Seq("k"))
-        // collect() executes THIS dataset's queryExecution, so the
-        // adaptive plan below is the FINAL one (a sink like noop-write
-        // plans a separate execution and would leave it unfinalized)
-        joined.collect().length shouldEqual
-          (Hot + ColdKeys.toLong * ColdRows).toInt
-        Thread.sleep(1000) // listener events post asynchronously
-        (maxTask.get(), joined.queryExecution.executedPlan.toString)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val joined = fact.join(dim, Seq("k"))
+      // collect() executes THIS dataset's queryExecution, so the
+      // adaptive plan below is the FINAL one (a sink like noop-write
+      // plans a separate execution and would leave it unfinalized)
+      val s = Obs.run(spark, s"skew-join-$skewJoin") {
+        joined.collect().length shouldEqual (Hot + ColdKeys.toLong * ColdRows).toInt
+      }.orThrow
+      (s.maxTaskRecordsRead, joined.queryExecution.executedPlan.toString)
     }
 
     val (noSplitMax, _) = runJoin(skewJoin = false)
