@@ -58,7 +58,7 @@ object MicroBench {
         .select(graft.functions.DotProductFx.dot_fx(col("q"), col("q")).as("d")))
     System.err.println(f"native/HOF = ${tNat / tHof}%.3f  envelope/native = ${tEnv / tNat}%.3f")
 
-    // ── argmax assignment (r14): the assignMapSideTop1 inner loop at
+    // ── argmax assignment (r14): the nearestClusters inner loop at
     // the derived-k regimes — k=8 (every verify SF), k=100 (the 100×
     // ladder), k=1000 (the decade the r13 verdict flagged the flat
     // scan for). HOF = the r13 array_max-over-transform composition;

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 /** Native Catalyst expression: top-1 centroid assignment —
   * `argmax over cs of (cos(qe, c.ce), -c.cluster)` — the per-row inner
-  * loop of [[graft.queries.SimilarityQueries.assignMapSideTop1]].
+  * loop of [[graft.queries.SimilarityQueries.nearestClusters]].
   *
   * Semantics are EXACTLY the composed form it replaces (pinned in
   * ArgMaxCosFxSpec against the literal composition, and transitively in
@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
   *    exactly like the `lit(0L) - cluster` it replaces.
   *  - empty or null `cs` → NULL (the caller filters the degenerate
   *    empty-centroid row set to match the window form — see
-  *    assignMapSideTop1's scaladoc).
+  *    nearestClusters' scaladoc).
   *
   * Why a custom Expression and not the transform/array_max composition:
   * higher-order functions evaluate their lambda interpreted per

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
 
 /** Native Catalyst expression: argmin squared-L2 code assignment —
   * the per-row inner loop of the PQ family's
-  * [[graft.queries.SimilarityQueries]] `pqAssignMapSide`. Returns the
+  * [[graft.queries.SimilarityQueries]] `pqAssign`. Returns the
   * winning `struct(cluster, dist)` over a packed candidate array
   * `cs: array<struct<cluster bigint, ce array<bigint>>>`.
   *

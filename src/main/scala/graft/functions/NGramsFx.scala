@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.operators.TextAnalysis.ngrams]].
   *
   * Semantics are EXACTLY the shifted-slice composition it replaces
-  * (pinned in NGramsFxSpec against the literal form):
+  * (pinned in TextFxSpec against the literal form):
   *
   * {{{ slice(transform(arrays_zip(toks, slice(toks,2,…), …),
   *       s => concat_ws(" ", s.0, …, s.(n−1))),

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * {{{ simhashN(transform(toks, t => tokenHash(t)), nbits) }}}
   *
-  * Semantics are EXACTLY that composition (pinned in SimHashFxSpec
+  * Semantics are EXACTLY that composition (pinned in TextFxSpec
   * against the literal form):
   *
   *  - null `toks` → 0L, NOT null: `transform(null)` is null, each bit's

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * big-endian (each byte prints as 2 hex chars), so the value is a
   * direct bit extraction, no hex-string round trip. Bit-identical to
   * [[graft.operators.TextAnalysis.tokenHash]] (pinned in the native-
-  * expression specs that embed it: SimHashFxSpec / FingerprintFxSpec).
+  * expression spec that embeds it: TextFxSpec).
   *
   * Shared by every fused native expression that hashes tokens inside
   * its loop, so the hash can only change in one place. The

@@ -107,17 +107,24 @@ object Dedup {
       concat(parts: _*).as(s"band$b")
     }
 
-  /** Symmetric banded candidate pairs from a 16-hash signature frame:
-    * 4×4 band keys, stacked (band_id, band_key) posting list, distinct
-    * (d1 < d2) band-collision pairs — minhash_lsh's derivation, shared
-    * by every symmetric banding consumer (minhash_lsh, minhash_est_err,
-    * edit_distance_pairs) so the banding geometry can only change in
-    * one place; the oracle-side twin is DedupQueries.symBandPairsSql. */
-  def bandCollisionPairs(sig: DataFrame): DataFrame = {
+  /** (doc_id, band_id, band_key) posting list of a 16-hash signature
+    * frame: 4×4 band keys, stacked. The one banding geometry behind
+    * [[bandCollisionPairs]] and [[Ingest.bandStack]], so it can only
+    * change in one place. */
+  def stackedBands(sig: DataFrame): DataFrame = {
     val banded = sig.select(col("doc_id") +: bandKeys(bands = 4, rows = 4): _*)
-    val stacked = banded.select(col("doc_id"),
+    banded.select(col("doc_id"),
       posexplode(array((0 until 4).map(b => col(s"band$b")): _*))
         .as(Seq("band_id", "band_key")))
+  }
+
+  /** Symmetric banded candidate pairs from a 16-hash signature frame:
+    * distinct (d1 < d2) collisions of [[stackedBands]] — minhash_lsh's
+    * derivation, shared by every symmetric banding consumer
+    * (minhash_lsh, minhash_est_err, edit_distance_pairs, lsh_recall);
+    * the oracle-side twin is DedupQueries.symBandPairsSql. */
+  def bandCollisionPairs(sig: DataFrame): DataFrame = {
+    val stacked = stackedBands(sig)
     stacked.as("x").join(stacked.as("y"),
         col("x.band_id") === col("y.band_id") &&
           col("x.band_key") === col("y.band_key") &&
@@ -134,18 +141,10 @@ object Dedup {
     common.cast("double") / (size(a) + size(b) - common).cast("double")
   }
 
-  /** n-bit SimHash over a (multiset) token-hash array: bit j is set
-    * when the sum of ±1 votes from each hash's bit j is positive. The
-    * token hashes are mod 1e9+7 (< 2^30), so 30 is the widest sketch
-    * the single hash supports. */
+  /** SimHash sketch width of the registered near-dup queries: bit j of
+    * the sketch is set when the ±1 votes of the token hashes' bit j sum
+    * positive ([[graft.functions.SimHashFx]]). */
   val SimHashBits = 16
-  def simhashN(tokenHashes: Column, nbits: Int): Column =
-    (0 until nbits).map { j =>
-      val vote = aggregate(tokenHashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-      when(vote > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  def simhash(tokenHashes: Column): Column = simhashN(tokenHashes, SimHashBits)
 
   /** Materialize an iterative frame, cutting its lineage. When the
     * session has a checkpoint dir configured (cluster posture:

@@ -35,13 +35,8 @@ object Ingest {
 
   /** (doc_id, band_id, band_key) stacked 4×4 minhash banding of a
     * shingled frame — the minhash_lsh/minhash_incremental recipe. */
-  def bandStack(sh: DataFrame): DataFrame = {
-    val sig = minhashSigAgg(sh.select(col("doc_id"), explode(col("ss")).as("s")))
-    val banded = sig.select(col("doc_id") +: bandKeys(bands = 4, rows = 4): _*)
-    banded.select(col("doc_id"),
-      posexplode(array((0 until 4).map(b => col(s"band$b")): _*))
-        .as(Seq("band_id", "band_key")))
-  }
+  def bandStack(sh: DataFrame): DataFrame =
+    stackedBands(minhashSigAgg(sh.select(col("doc_id"), explode(col("ss")).as("s"))))
 
   /** Probe a batch's shingled frame against the standing index and
     * assign standing-cluster labels: banded candidates via the

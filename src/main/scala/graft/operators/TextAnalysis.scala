@@ -47,7 +47,7 @@ object TextAnalysis {
     * shifted slices evaluated its concat lambda interpreted per GRAM —
     * the shingle explode under the whole dedup family paid it per
     * corpus token. Bit-identical to that composition, pinned in
-    * NGramsFxSpec against the literal zip form (null-token skipping,
+    * TextFxSpec against the literal zip form (null-token skipping,
     * short-array truncation, null input). */
   def ngrams(toks: Column, n: Int): Column =
     graft.functions.NGramsFx.ngrams_fx(toks, n)

@@ -28,10 +28,11 @@ object WebFetch {
   case class FetchOut(id: Long, url: String, status: Option[Int],
       text: Option[String], links: Option[Seq[WebLink]])
 
-  /** @param rawText false (default): HTML posture — text is the
-    *   structural inner-text, links extracted. true: the body is NOT a
-    *   page (robots.txt, sitemap.xml, an API payload) — text is the
-    *   verbatim body (tag stripping would destroy XML), links None. */
+  /** @param rawText false (default): HTML posture — text and links come
+    *   from [[WebTextSource.parsePage]], the `graft-web` parse. true:
+    *   the body is NOT a page (robots.txt, sitemap.xml, an API payload)
+    *   — text is the verbatim body (tag stripping would destroy XML),
+    *   links None. */
   def fetchMap(in: Dataset[FetchIn],
       fetcher: WebTextSource.Fetcher = WebTextSource.JdkFetcher,
       timeoutMs: Long = 30000L,
@@ -43,12 +44,11 @@ object WebFetch {
           val (code, body) = fetcher.get(r.url, timeoutMs)
           if (code == 200 && rawText)
             FetchOut(r.id, r.url, Some(code), Some(body), None)
-          else if (code == 200)
-            FetchOut(r.id, r.url, Some(code),
-              Some(WebTextSource.innerText(body)),
-              Some(WebTextSource.extractLinks(body)
-                .map { case (h, a) => WebLink(h, a) }))
-          else FetchOut(r.id, r.url, Some(code), None, None)
+          else if (code == 200) {
+            val page = WebTextSource.parsePage(body)
+            FetchOut(r.id, r.url, Some(code), Some(page.text),
+              Some(page.links.map { case (h, a) => WebLink(h, a) }))
+          } else FetchOut(r.id, r.url, Some(code), None, None)
         } catch {
           // task kill arrives as Thread.interrupt() → InterruptedException
           // from HttpClient.send; it must propagate or a cancelled task

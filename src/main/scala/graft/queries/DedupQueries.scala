@@ -381,12 +381,7 @@ object DedupQueries extends QueryModule {
     // planted pairs straddling the split are surfaced.
     "minhash_incremental" -> ((s, d) => {
       val sh = materialize(shingled(Tables.documents(s, d)))
-      val sig = minhashSigAgg(
-        sh.select(col("doc_id"), explode(col("ss")).as("s")))
-      val banded = sig.select(col("doc_id") +: bandKeys(bands = 4, rows = 4): _*)
-      val stacked = banded.select(col("doc_id"),
-        posexplode(array((0 until 4).map(b => col(s"band$b")): _*))
-          .as(Seq("band_id", "band_key")))
+      val stacked = graft.operators.Ingest.bandStack(sh)
       val pairs = stacked.filter(graft.operators.Ingest.isNew(col("doc_id"))).as("x")
         .join(stacked.filter(!graft.operators.Ingest.isNew(col("doc_id"))).as("y"),
           col("x.band_id") === col("y.band_id") &&
@@ -514,18 +509,8 @@ object DedupQueries extends QueryModule {
       val truth = jaccardPairsSized(sh, t = 0.5)
         .select(col("d1"), col("d2"),
           expr("CAST(common * 10 DIV (n1 + n2 - common) AS BIGINT)").as("bucket"))
-      val sig = minhashSigAgg(
-        sh.select(col("doc_id"), explode(col("ss")).as("s")))
-      val banded = sig.select(col("doc_id") +: bandKeys(bands = 4, rows = 4): _*)
-      val stacked = banded.select(col("doc_id"),
-        posexplode(array((0 until 4).map(b => col(s"band$b")): _*))
-          .as(Seq("band_id", "band_key")))
-      val cand = stacked.as("x").join(stacked.as("y"),
-          col("x.band_id") === col("y.band_id") &&
-            col("x.band_key") === col("y.band_key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
+      val cand = bandCollisionPairs(minhashSigAgg(
+          sh.select(col("doc_id"), explode(col("ss")).as("s"))))
         .withColumn("hit", lit(1L))
       truth.join(cand, Seq("d1", "d2"), "left_outer")
         .groupBy("bucket")
@@ -675,7 +660,7 @@ object DedupQueries extends QueryModule {
     // r14: fused native expression (one codegen loop hashing tokens
     // and accumulating all 16 bit votes) replacing the interpreted
     // transform + 16 aggregate passes — bit-identical, pinned in
-    // SimHashFxSpec against the literal composition.
+    // TextFxSpec against the literal composition.
     "simhash" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),

@@ -113,27 +113,67 @@ object SimilarityQueries extends QueryModule {
       .withColumn("cos", cosFx(col("dot_fx"), col("nq"), col("q_nq")))
 
   // ── Lloyd-iteration building blocks, shared by kmeans_centroids
-  //    (training as the deliverable) and ivf_topk (training feeding the
-  //    index). Scale shape per round: centroids broadcast (≤8 rows by
-  //    construction — cluster ids ⊆ the 8 seeds), one corpus scan for
-  //    assignment, one (cluster, pos) aggregation for the update. ──
+  //    (training as the deliverable) and every IVF-family query
+  //    (training feeding the index). Scale shape per round: centroids
+  //    packed into one broadcast row, one corpus scan with the argmax
+  //    folded into it, one (cluster, pos) aggregation for the update. ──
 
-  /** Top-`n` nearest centroids per vector (max cosine, ties to lowest
-    * cluster id); `cents` must carry (cluster, ce, nc). */
+  /** Top-`n` nearest centroids per vector — the one centroid-assignment
+    * path: max cosine first, null cosines last, ties to the lowest
+    * cluster id (a zero-norm vector lands on its lowest-id candidates);
+    * one row per (vector, winner), fewer than `n` when `cents` has
+    * fewer rows. `cents` must carry (cluster, ce, nc) with unique
+    * cluster ids — true of every caller, whose centroids come from
+    * [[centroidArrays]]' group-by or the distinct vec_id seeds.
+    *
+    * The centroid table is folded into ONE broadcast row (an array of
+    * (cluster, ce, nc) structs) and the argmax runs INSIDE the scan via
+    * the native [[graft.functions.ArgMaxCosFx]]: no n×k rows are
+    * materialized or shuffled and no per-vector sort runs, so under the
+    * derived-k scale law (k ∝ n) assignment stays shuffle-free at any
+    * k, which is what lets semantic_dedup/ann_family fit the 100×
+    * ladder (MicroBench times the fused loop at k = 8, 100, 1000).
+    *
+    * n > 1 takes the winner n times: each round runs the argmax over
+    * the packed array with the earlier winners filtered out, and the
+    * winners explode into rows. Successive argmaxes over a shrinking
+    * set enumerate the centroids in exactly the `ORDER BY cos DESC
+    * NULLS LAST, cluster` rank of a per-vector window — the reference
+    * form RetrievalOpsSpec compares against and [[nearestSql]] mirrors
+    * for the oracle. Only query sets (≤ 10 rows, n ≤ 4) take this
+    * path, so its O(n·k) per row is noise.
+    *
+    * The isNotNull filter drops exhausted rounds: on an EMPTY centroid
+    * frame, or past the last centroid, the packed array is empty and
+    * the argmax null, so such a vector yields no row — as the window
+    * form. With any real centroid the argmax always resolves (all-null
+    * cosines fall back to the lowest cluster id). */
   private[graft] def nearestClusters(df: DataFrame, cents: DataFrame, n: Int): DataFrame = {
-    val w = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cluster"))
-    df.crossJoin(broadcast(cents))
-      .withColumn("c", cosFx(dotFx(col("qe"), col("ce")), col("nq"), col("nc")))
-      .withColumn("crk", row_number().over(w))
-      .filter(col("crk") <= n)
-      .drop("ce", "nc", "c", "crk")
+    val packed = cents.agg(
+      collect_list(struct(col("cluster"), col("ce"), col("nc"))).as("cs"))
+    val argmax = graft.functions.ArgMaxCosFx.argmax_cos_fx(col("qe"), col("nq"), col("cs"))
+    val joined = df.crossJoin(broadcast(packed))
+    val assigned =
+      if (n == 1) joined.withColumn("cluster", argmax)
+      else {
+        val rounds = (1 until n).foldLeft(joined.withColumn("w0", argmax)) { (f, i) =>
+          f.withColumn("cs", filter(col("cs"), c => c("cluster") =!= col(s"w${i - 1}")))
+            .withColumn(s"w$i", argmax)
+        }
+        val ws = (0 until n).map(i => s"w$i")
+        rounds.withColumn("cluster", explode(array(ws.map(col): _*))).drop(ws: _*)
+      }
+    assigned.filter(col("cluster").isNotNull).drop("cs")
   }
 
-  /** Centroid recompute: floor(exact-int-sum / count) per (cluster,
+  /** One Lloyd round over `b`: top-1 assignment to `cents`, then the
+    * centroid recompute floor(exact-int-sum / count) per (cluster,
     * pos) — a single IEEE division of identical operands, so both
-    * engines floor the same double. */
-  private def lloydUpdate(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster"), posexplode(col("qe")).as(Seq("pos", "v")))
+    * engines floor the same double. Rows: (cluster, pos, sv, cnt, val);
+    * `cnt` is the cluster's member count. */
+  private def lloydRound(b: DataFrame, cents: DataFrame): DataFrame =
+    nearestClusters(b, cents, 1)
+      .select(col("cluster"), posexplode(col("qe")).as(Seq("pos", "v")))
       .groupBy("cluster", "pos")
       .agg(sum(col("v")).as("sv"), count(lit(1)).as("cnt"))
       .withColumn("val",
@@ -146,59 +186,25 @@ object SimilarityQueries extends QueryModule {
         x => x("val")).as("ce"))
       .withColumn("nc", dotFx(col("ce"), col("ce")))
 
-  /** vec_id < 8 as the deterministic seed centroids. */
-  private def seedCentroids(b: DataFrame): DataFrame = seedCentroidsK(b, 8L)
-
-  /** vec_id < k seeds — the derived-k (X-110 scale-law) form; the
-    * fixed-k siblings keep [[seedCentroids]] because their oracles pin
-    * k = 8 structurally. */
-  private def seedCentroidsK(b: DataFrame, k: Long): DataFrame =
+  /** vec_id < k as the deterministic seed centroids. The fixed-k
+    * queries seed k = 8 because their oracles pin it structurally; the
+    * derived-k (X-110 scale-law) ones pass [[semDedupK]]. */
+  private def seedCentroids(b: DataFrame, k: Long): DataFrame =
     b.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"), col("qe").as("ce"), col("nq").as("nc"))
 
-  /** Top-1 cluster assignment with the centroid table folded into ONE
-    * broadcast row (an array of (cluster, ce, nc) structs) and the
-    * argmax computed INSIDE the corpus scan. Semantically identical to
-    * `nearestClusters(df, cents, 1)`: max cosine, null cosines lowest,
-    * ties to the lowest cluster id (a zero-norm vector still lands on
-    * its lowest-id candidate like the window form).
-    *
-    * Why a second shape exists (r13): the window form materializes and
-    * SHUFFLES n×k assignment rows. At fixed k = 8 that is noise, but
-    * under the derived-k scale law (k ∝ n) it becomes an n²/target
-    * exchange — the map-side argmax keeps assignment shuffle-free at
-    * any k, which is what lets semantic_dedup/ann_family fit the 100×
-    * ladder instead of erring on it.
-    *
-    * The argmax is a NATIVE fused-loop expression since r14
-    * ([[graft.functions.ArgMaxCosFx]] — bit-identical to the
-    * array_max-over-transform composition it replaced, pinned in
-    * ArgMaxCosFxSpec): under the k ∝ n law the per-CANDIDATE constant
-    * is the binding cost (n·k = n²/2000 candidate evaluations per
-    * Lloyd round — the r13 verdict's next-decade ceiling), and the HOF
-    * composition paid an interpreted lambda + boxed struct + ordering
-    * comparison per candidate. Measured in graft.MicroBench (500k × 64
-    * dims, min-of-2): 7.8× faster at k=8 (3.08→0.40 s), 39× at the
-    * 100×-ladder's k=100 (19.3→0.49 s), 64× at the flagged next
-    * decade's k=1000 (218→3.4 s) — ~7 ns/candidate fused vs ~440 ns
-    * interpreted.
-    *
-    * The trailing isNotNull filter closes the r13 advice's degenerate-
-    * input divergence: on an EMPTY centroid frame the packed row's `cs`
-    * is an empty array → null cluster for every corpus row, where the
-    * window form returns zero rows. The filter makes the two shapes
-    * row-identical there; with any real centroid frame the argmax
-    * always resolves (all-null cosines fall back to the lowest cluster
-    * id), so no registered row can carry a null cluster. */
-  private[graft] def assignMapSideTop1(df: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents.agg(
-      collect_list(struct(col("cluster"), col("ce"), col("nc"))).as("cs"))
-    df.crossJoin(broadcast(packed))
-      .withColumn("cluster",
-        graft.functions.ArgMaxCosFx.argmax_cos_fx(col("qe"), col("nq"), col("cs")))
-      .filter(col("cluster").isNotNull)
-      .drop("cs")
-  }
+  /** The index-training recipe every IVF-family query shares: seeds
+    * vec_id < k, then two Lloyd rounds over the corpus `b`. Returns
+    * round 2's per-(cluster, pos) rows, which kmeans_centroids reports;
+    * [[trainedCentroids]] turns them into the served index. Callers
+    * that serve the index more than once materialize or persist it —
+    * train once, serve many. */
+  private def lloydTrain(b: DataFrame, k: Long): DataFrame =
+    lloydRound(b, centroidArrays(lloydRound(b, seedCentroids(b, k))))
+
+  /** The trained (cluster, ce, nc) centroid table of [[lloydTrain]]. */
+  private def trainedCentroids(b: DataFrame, k: Long = 8L): DataFrame =
+    centroidArrays(lloydTrain(b, k))
 
   // ── PQ building blocks, shared by pq_error (X-101, training + codes
   //    as the deliverable) and ivfpq_topk (X-143, the trained codebook
@@ -397,22 +403,13 @@ object SimilarityQueries extends QueryModule {
     * reused across queries. */
   private def ivfTopK(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val b = base(s, d)
-    // Every corpus-scale TOP-1 assignment in the fixed-k IVF family
-    // runs through the map-side argmax since r14 (assignMapSideTop1 —
-    // spec-pinned identical to nearestClusters(_, _, 1)): the window
-    // form shuffles n×k assignment rows and sorts them per vector,
-    // pure overhead for an argmax the scan can fold map-side. Probe
-    // SIDES (n ≥ 2, |queries| rows) keep the window form. Plan diff:
-    // one Exchange + Window removed per assignment site.
-    val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
     // The trained index is MATERIALIZED (8 rows) before serving:
     // assignment and probing each re-embed the centroid lineage, so
     // without the cut the two Lloyd training rounds execute once per
     // consumer (measured 3.2 s → ~2 s at sf0.1). This is also what
     // deployment means by "index build": train once, serve many.
-    val c2 = graft.operators.Dedup.materialize(
-      centroidArrays(lloydUpdate(assignMapSideTop1(b, c1))))
-    val assigned = assignMapSideTop1(b.filter(col("vec_id") >= 10), c2)
+    val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
+    val assigned = nearestClusters(b.filter(col("vec_id") >= 10), c2, 1)
     val probes = nearestClusters(b.filter(col("vec_id") < 10), c2, 2)
       .select(col("vec_id").as("q_id"), col("cluster"),
         col("qe").as("q_qe"), col("nq").as("q_nq"))
@@ -509,10 +506,7 @@ object SimilarityQueries extends QueryModule {
     * `oldCounts` = (cluster, old_n) standing-list sizes. */
   private def maintLedger(cents: DataFrame, oldCounts: DataFrame,
       newb: DataFrame): DataFrame = {
-    // map-side argmax (identical semantics to nearestClusters top-1):
-    // the batch is corpus-proportional (n/17), so under ann_family's
-    // derived-k index the window form would shuffle (n/17)×k rows
-    val addN = assignMapSideTop1(newb, cents)
+    val addN = nearestClusters(newb, cents, 1)
       .groupBy("cluster").agg(count(lit(1)).as("added_n"))
     val report = graft.operators.Dedup.materialize(
       cents.select("cluster")
@@ -651,11 +645,9 @@ object SimilarityQueries extends QueryModule {
     // materialized assignment — no arm rebuilds anything.
     "ivf_nprobe_curve" -> ((s, d) => {
       val b = base(s, d)
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
-      val c2 = graft.operators.Dedup.materialize(
-        centroidArrays(lloydUpdate(assignMapSideTop1(b, c1))))
+      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
       val assigned = graft.operators.Dedup.materialize(
-        assignMapSideTop1(b.filter(col("vec_id") >= 10), c2)
+        nearestClusters(b.filter(col("vec_id") >= 10), c2, 1)
           .select("vec_id", "cluster", "qe", "nq"))
       val truth = graft.operators.Dedup.materialize(knnTopK(s, d, LshK))
       Seq(1, 2, 4)
@@ -687,10 +679,8 @@ object SimilarityQueries extends QueryModule {
     // the assignment lineages.
     "ivf_maintenance" -> ((s, d) => {
       val b = base(s, d)
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
-      val c2 = graft.operators.Dedup.materialize(
-        centroidArrays(lloydUpdate(assignMapSideTop1(b, c1))))
-      val oldN = assignMapSideTop1(b, c2)
+      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
+      val oldN = nearestClusters(b, c2, 1)
         .groupBy("cluster").agg(count(lit(1)).as("old_n"))
       maintLedger(c2, oldN, plantedVariants(b))
         .orderBy("cluster")
@@ -737,14 +727,13 @@ object SimilarityQueries extends QueryModule {
       // no n×k exchange at any k. ──
       val b = base(s, d)
       val k = semDedupK(Tables.embeddings(s, d).count())
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroidsK(b, k))))
-      centroidArrays(lloydUpdate(assignMapSideTop1(b, c1)))
+      trainedCentroids(b, k)
         .write.mode("overwrite").parquet(s"$artDir/centroids")
       // explicit schemas: an all-empty write may emit no part files,
       // and a schema-less read of such a directory cannot infer one
       val cents = s.read.schema("cluster BIGINT, ce ARRAY<BIGINT>, nc BIGINT")
         .parquet(s"$artDir/centroids")
-      assignMapSideTop1(b, cents).select("vec_id", "cluster", "qe", "nq")
+      nearestClusters(b, cents, 1).select("vec_id", "cluster", "qe", "nq")
         .write.mode("overwrite").parquet(s"$artDir/assigned")
       val assigned = s.read
         .schema("vec_id BIGINT, cluster BIGINT, qe ARRAY<BIGINT>, nq BIGINT")
@@ -874,11 +863,9 @@ object SimilarityQueries extends QueryModule {
     // window keyed on ≤8 clusters would funnel n/8 rows per task).
     "centroid_outliers" -> ((s, d) => {
       val b = base(s, d)
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
-      val c2 = graft.operators.Dedup.materialize(
-        centroidArrays(lloydUpdate(assignMapSideTop1(b, c1))))
+      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
       val assigned = graft.operators.Dedup.materialize(
-        assignMapSideTop1(b, c2).select("vec_id", "cluster", "qe", "nq"))
+        nearestClusters(b, c2, 1).select("vec_id", "cluster", "qe", "nq"))
       outlierReport(c2, assigned).orderBy("cluster", "rk")
     }),
 
@@ -957,14 +944,12 @@ object SimilarityQueries extends QueryModule {
     // next round (both engines aggregate only over existing groups).
     "kmeans_centroids" -> ((s, d) => {
       val b = base(s, d)
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
-      val a2 = assignMapSideTop1(b, c1)
-      // lloydUpdate's per-(cluster,pos) cnt IS the member count
+      // round 2's per-(cluster,pos) cnt IS the member count
       // (posexplode emits exactly one row per member per pos), so a
       // separate counts aggregate would re-execute the whole round-1
       // training + assignment lineage a second time and add a join —
       // byte-identical output either way.
-      lloydUpdate(a2)
+      lloydTrain(b, 8L)
         .select(col("cluster"), col("pos"), col("val").as("c_fx"),
           col("cnt").as("n_members"))
         .orderBy("cluster", "pos")
@@ -985,11 +970,9 @@ object SimilarityQueries extends QueryModule {
     // forbids); the only hint is the ≤8-row cluster-sizes frame.
     "cluster_balanced_sample" -> ((s, d) => {
       val b = base(s, d)
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
-      val c2 = graft.operators.Dedup.materialize(
-        centroidArrays(lloydUpdate(assignMapSideTop1(b, c1))))
+      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
       val assigned = graft.operators.Dedup.materialize(
-        assignMapSideTop1(b, c2).select("vec_id", "cluster"))
+        nearestClusters(b, c2, 1).select("vec_id", "cluster"))
       quotaSample(assigned).orderBy("cluster", "rk")
     }),
 
@@ -1054,7 +1037,7 @@ object SimilarityQueries extends QueryModule {
     // contract — k grows with n so clusters stay bounded — is now
     // REGISTERED, not just gated (r13): k = semDedupK(count), the
     // DuckDB oracle derives the identical k from the same count, and
-    // assignment runs through the map-side argmax (assignMapSideTop1)
+    // assignment runs through the map-side argmax (nearestClusters)
     // so the n×k assignment never shuffles. The max-cluster gate
     // (Fuzzy.MaxDomainKey pattern) stays as the BACKSTOP for cluster
     // skew the derivation can't see: one tiny agg off the materialized
@@ -1080,11 +1063,9 @@ object SimilarityQueries extends QueryModule {
       // k derivation is part of the index BUILD (one metadata-cheap
       // count, the same eager-construction class as the gate below)
       val k = semDedupK(Tables.embeddings(s, d).count())
-      val c1 = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroidsK(b, k))))
-      val c2 = graft.operators.Dedup.materialize(
-        centroidArrays(lloydUpdate(assignMapSideTop1(b, c1))))
+      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b, k))
       val assigned = graft.operators.Dedup.materialize(
-        assignMapSideTop1(b, c2).select("vec_id", "cluster", "qe", "nq"))
+        nearestClusters(b, c2, 1).select("vec_id", "cluster", "qe", "nq"))
       // The max-cluster gate is a driver-side `.first()` over a 1-row
       // aggregate of the ALREADY-materialized assignment — i.e. it
       // belongs to the index BUILD (train-once/serve-many), where the
@@ -1148,10 +1129,8 @@ object SimilarityQueries extends QueryModule {
     "ivfpq_topk" -> ((s, d) => {
       val b = base(s, d)
       // coarse quantizer: ivf_topk's trained + materialized index
-      val c1c = centroidArrays(lloydUpdate(assignMapSideTop1(b, seedCentroids(b))))
-      val coarse = graft.operators.Dedup.materialize(
-        centroidArrays(lloydUpdate(assignMapSideTop1(b, c1c))))
-      val assigned = assignMapSideTop1(b.filter(col("vec_id") >= 10), coarse)
+      val coarse = graft.operators.Dedup.materialize(trainedCentroids(b))
+      val assigned = nearestClusters(b.filter(col("vec_id") >= 10), coarse, 1)
         .select(col("vec_id"), col("cluster"))
       val probes = nearestClusters(b.filter(col("vec_id") < 10), coarse, 2)
         .select(col("vec_id").as("q_id"), col("cluster"))

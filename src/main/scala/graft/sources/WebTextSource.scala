@@ -118,18 +118,23 @@ object WebTextSource {
     def fetchPage(url: String, timeoutMs: Long): FetchedPage
   }
 
-  /** Plain-HTTP page fetch: raw body → [[innerText]] + [[extractLinks]]
-    * (JS-materialized text comes back sparse — the documented
-    * HTTP-crawler boundary). */
+  /** A status-200 HTML body as a rendered page: [[innerText]] +
+    * [[extractLinks]] over the body with its consent overlays stripped
+    * ONCE, so text and links see the same post-"click" DOM — a
+    * dismissed banner's links vanish with it in the reference too. The
+    * one page parse of both plain-HTTP paths: [[HttpPageFetcher]] (the
+    * `graft-web` reader) and [[graft.operators.WebFetch.fetchMap]]. */
+  def parsePage(body: String): FetchedPage = {
+    val clean = stripConsentOverlays(body)
+    FetchedPage(200, innerText(clean), extractLinks(clean))
+  }
+
+  /** Plain-HTTP page fetch: raw body → [[parsePage]] (JS-materialized
+    * text comes back sparse — the documented HTTP-crawler boundary). */
   object HttpPageFetcher extends PageFetcher {
     def fetchPage(url: String, timeoutMs: Long): FetchedPage = {
       val (code, body) = JdkFetcher.get(url, timeoutMs)
-      if (code == 200) {
-        // strip ONCE so text and links see the same post-"click" DOM —
-        // a dismissed banner's links vanish with it in the reference too
-        val clean = stripConsentOverlays(body)
-        FetchedPage(code, innerText(clean), extractLinks(clean))
-      } else FetchedPage(code, null, null)
+      if (code == 200) parsePage(body) else FetchedPage(code, null, null)
     }
   }
 

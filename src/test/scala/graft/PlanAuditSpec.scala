@@ -269,6 +269,25 @@ class PlanAuditSpec extends SparkSpec {
     offenders.toSet shouldEqual allowed
   }
 
+  test("IVF probe sides assign map-side — no window partitioned on vec_id") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LW}
+    // nearestClusters takes every top-n through the native argmax inside
+    // the scan; a window partitioned on vec_id is the n×k shuffle-plus-
+    // sort assignment form it replaced. These five queries probed their
+    // query vectors' nearest clusters through that window.
+    val offenders = Seq("ivf_topk", "ivfpq_topk", "ivf_nprobe_curve",
+        "ann_recall", "ann_family")
+      .filter { n =>
+        SparkEntry.queries(n)(spark, sf).queryExecution.optimizedPlan
+          .collect {
+            case w: LW if w.partitionSpec.flatMap(_.references.toSeq)
+              .exists(_.name == "vec_id") => w
+          }
+          .nonEmpty
+      }
+    offenders shouldBe empty
+  }
+
   test("sub-document dedup aggregates on the chunk hash — never a window over it") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
     // X-161/X-162 deliberately find first-occurrence / template chunks

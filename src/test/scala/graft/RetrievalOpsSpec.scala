@@ -403,12 +403,29 @@ class RetrievalOpsSpec extends SparkSpec {
       sec("maint").map(r => (r.getLong(1), r.getLong(16))).toSet
   }
 
-  test("assignMapSideTop1 agrees with the window form on ties, null cosines, and hostile vectors (r13)") {
-    import spark.implicits._
+  /** The shuffle-plus-window top-`n` assignment that nearestClusters'
+    * native argmax replaced, kept here as its reference: every
+    * (vector, centroid) cosine, ranked per vector by cosine DESC (nulls
+    * last), ties to the lowest cluster id, the first `n` kept. */
+  private def windowNearest(df: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame, n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity._
+    val w = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cluster"))
+    df.crossJoin(broadcast(cents))
+      .withColumn("c", cosFx(dotFx(col("qe"), col("ce")), col("nq"), col("nc")))
+      .withColumn("crk", row_number().over(w))
+      .filter(col("crk") <= n)
+      .drop("ce", "nc", "c", "crk")
+  }
+
+  test("nearestClusters agrees with the window form at n = 1, 2, 4 on ties, null cosines, hostile vectors and fewer centroids than n") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.queries.SimilarityQueries.nearestClusters
     // hand-built quantized frames exercising every tiebreak class the
-    // derived-k assignment must reproduce from nearestClusters:
+    // derived-k assignment must reproduce from the window form:
     //  - vec 0: strictly nearest one centroid (the plain case)
     //  - vec 1: EXACT cosine tie between two centroids (same direction
     //    scaled) -> lowest cluster id must win on both paths
@@ -431,15 +448,33 @@ class RetrievalOpsSpec extends SparkSpec {
       (3L, Seq(0L, 0L, -1L))
     ).toDF("cluster", "ce")
       .withColumn("nc", expr("aggregate(zip_with(ce, ce, (x, y) -> x * y), 0L, (a, x) -> a + x)"))
+    // (vec_id, cluster) pairs: a vector's top-n SET, so agreement at
+    // n = 1, 2, 4 pins the whole rank order up to the 4th place
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cluster").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val win = rows(graft.queries.SimilarityQueries.nearestClusters(vecs, cents, 1))
-    val map = rows(graft.queries.SimilarityQueries.assignMapSideTop1(vecs, cents))
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def agree(v: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame): Unit =
+      Seq(1, 2, 4).foreach { n =>
+        withClue(s"n = $n: ") { rows(nearestClusters(v, c, n)) shouldEqual rows(windowNearest(v, c, n)) }
+      }
+    val win = rows(windowNearest(vecs, cents, 1))
+    val map = rows(nearestClusters(vecs, cents, 1))
     map shouldEqual win
     // and both implement the documented tiebreaks
     map.find(_._1 == 1L).get._2 shouldEqual 0L // exact tie -> lowest id
     map.find(_._1 == 2L).get._2 shouldEqual 0L // all-null tie -> lowest id
+    agree(vecs, cents)
+    // top-2 of the exact tie is both tied centroids; the all-null
+    // zero-norm vector takes its n lowest ids
+    rows(nearestClusters(vecs, cents, 2)).filter(_._1 == 1L) shouldEqual Seq((1L, 0L), (1L, 1L))
+    rows(nearestClusters(vecs, cents, 4)).filter(_._1 == 2L).map(_._2) shouldEqual Seq(0L, 1L, 2L, 3L)
+    // fewer centroids than n: every centroid once per vector, no padding
+    val two = cents.filter(col("cluster") >= 2L)
+    agree(vecs, two)
+    rows(nearestClusters(vecs, two, 4)).size shouldEqual 5 * 2
+    // no centroids at all: no rows on either path
+    agree(vecs, cents.limit(0))
+    rows(nearestClusters(vecs, cents.limit(0), 2)) shouldBe empty
     // larger randomized agreement sweep (fixed seed): 200 vectors x 16
     // centroids of small ints, duplicate-direction centroids included
     val rnd = new scala.util.Random(7)
@@ -452,7 +487,7 @@ class RetrievalOpsSpec extends SparkSpec {
         (id + 8L, ce.map(_ * 2L)) }) // scaled duplicates -> cosine ties
       .toDF("cluster", "ce")
       .withColumn("nc", expr("aggregate(zip_with(ce, ce, (x, y) -> x * y), 0L, (a, x) -> a + x)"))
-    rows(graft.queries.SimilarityQueries.assignMapSideTop1(rv, rc)) shouldEqual
-      rows(graft.queries.SimilarityQueries.nearestClusters(rv, rc, 1))
+    rows(nearestClusters(rv, rc, 1)) shouldEqual rows(windowNearest(rv, rc, 1))
+    agree(rv, rc)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Pins [[ArgMaxCosFx]] to the array_max-over-transform composition it
-  * replaced in assignMapSideTop1 (r14): same winner, same tiebreaks,
+  * replaced in nearestClusters (r14): same winner, same tiebreaks,
   * same null semantics, on both the codegen and interpreted paths.
   * The window-form equivalence (the end-to-end contract) stays pinned
   * in RetrievalOpsSpec's r13 test, which now runs THROUGH this

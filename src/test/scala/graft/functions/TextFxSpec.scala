@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{SimHashHof, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,9 +39,9 @@ class TextFxSpec extends SparkSpec {
     conv(substring(md5(t), 1, 14), 16, 10).cast("long") % TokenHash56.HashMod
 
   /** simhash query shape through r13: interpreted per-token hashing
-    * plus Dedup.simhashN's nbits aggregate passes. */
+    * plus SimHashHof.simhashN's nbits aggregate passes. */
   private def hofSimhash(toks: Column, nbits: Int): Column =
-    Dedup.simhashN(transform(toks, t => hofTokenHash(t)), nbits)
+    SimHashHof.simhashN(transform(toks, t => hofTokenHash(t)), nbits)
 
   /** TextAnalysis.fingerprint as it stood through r13. */
   private def hofFingerprint(toks: Column): Column =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
   import Dedup._
+  import SimHashHof.simhash
 
   private def df(texts: (Int, String)*) = {
     import spark.implicits._

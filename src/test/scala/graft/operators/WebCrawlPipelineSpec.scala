@@ -50,6 +50,14 @@ class WebCrawlPipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
     """<html><body><p>Our leadership team has decades of experience.</p>
       |</body></html>""".stripMargin
 
+  /** A homepage whose cookie banner carries its own link. */
+  private val consentPage =
+    """<html><body>
+      |<div class="cookie-banner">We use cookies! <a href="/cookie-policy">Cookie policy</a></div>
+      |<h1>Acme Corp</h1>
+      |<a href="/about-us">About Us</a>
+      |</body></html>""".stripMargin
+
   private val robotsTxt =
     """# crawl policy
       |User-agent: archiver
@@ -72,6 +80,7 @@ class WebCrawlPipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
              |<url><loc>$base/search?q=a&amp;page=2</loc></url>
              |</urlset>""".stripMargin)
         case "/about-us"           => respond(ex, 200, aboutPage)
+        case "/consent"            => respond(ex, 200, consentPage)
         case "/company/leadership" => respond(ex, 200, leadershipPage)
         case _                     => respond(ex, 404, "nope")
       })
@@ -194,5 +203,21 @@ class WebCrawlPipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
     rows(1).status shouldEqual Some(404)
     rows(1).text shouldEqual None
     rows(2).status shouldEqual None   // transport failure → row survives
+  }
+
+  test("fetchMap and graft-web parse a page alike: a cookie banner's links never reach link selection") {
+    import spark.implicits._
+    import WebFetch._
+    val url = s"$base/consent"
+    val viaMap = fetchMap(Seq(FetchIn(0L, url)).toDS()).collect().head
+    val viaSource = spark.read.format("graft-web").option("urls", url).load()
+      .collect().head
+    val mapLinks = viaMap.links.get.map(l => (l.href, l.anchor))
+    val sourceLinks = viaSource.getSeq[Row](viaSource.fieldIndex("links"))
+      .map(r => (r.getString(0), r.getString(1)))
+    mapLinks shouldEqual sourceLinks
+    mapLinks shouldEqual Seq(("/about-us", "About Us"))
+    viaMap.text shouldEqual Some(viaSource.getAs[String]("text"))
+    viaMap.text.get should not include "cookies"
   }
 }
