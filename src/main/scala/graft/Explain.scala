@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one or all registered
   * queries — the plan-review loop (broadcasts present? filters pushed?

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.obs.Obs
+import graft.operators.Scratch
 
 /** Dev tool: isolate the per-element cost of the native fixed-point
   * expressions against their higher-order-function reference forms on
@@ -21,10 +22,10 @@ object MicroBench {
     spark.sparkContext.setLogLevel("ERROR")
 
     // deterministic synthetic embeddings: 64 floats derived from the id
-    val vecs = spark.range(n).select(
+    // cut so generation is off the clock
+    val vecs = Scratch.cut(spark.range(n).select(
       expr("transform(sequence(0, 63), i -> CAST(sin(id * (i + 1)) AS FLOAT))")
-        .as("embedding"))
-      .localCheckpoint(true) // materialize so generation is off the clock
+        .as("embedding")))
 
     def time(label: String)(df: => org.apache.spark.sql.DataFrame): Double = {
       val s = Obs.run(spark, label)(Obs.sink(df)).orThrow.sec
@@ -68,11 +69,10 @@ object MicroBench {
     // k=1000 HOF arm's wall time tolerable. ──
     import org.apache.spark.sql.functions.{aggregate => fAggregate, _}
     val nAsg = math.max(n / 4, 1L)
-    val qv = spark.range(nAsg).select(col("id").as("vec_id"),
+    val qv = Scratch.cut(spark.range(nAsg).select(col("id").as("vec_id"),
         expr("transform(sequence(0, 63), i -> CAST(floor(sin(id * (i + 1)) * 1e7) AS BIGINT))")
           .as("qe"))
-      .withColumn("nq", graft.functions.DotProductFx.dot_fx(col("qe"), col("qe")))
-      .localCheckpoint(true)
+      .withColumn("nq", graft.functions.DotProductFx.dot_fx(col("qe"), col("qe"))))
     def hofArgmax(qe: org.apache.spark.sql.Column, nq: org.apache.spark.sql.Column,
         cs: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
       def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 
 /** Scored item for [[TopKAggregator]] — (score desc, id asc) ordering. */
 case class Scored(score: Double, id: Long)

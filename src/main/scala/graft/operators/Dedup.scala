@@ -146,25 +146,6 @@ object Dedup {
     * positive ([[graft.functions.SimHashFx]]). */
   val SimHashBits = 16
 
-  /** Materialize an iterative frame, cutting its lineage. When the
-    * session has a checkpoint dir configured (cluster posture:
-    * `sc.setCheckpointDir` to durable storage), use a reliable
-    * `checkpoint` — localCheckpoint truncates lineage to executor-local
-    * blocks, so at the 1000-executor/100 TB posture an executor loss or
-    * dynamic-allocation decommission mid-iteration would make the job
-    * unrecoverable rather than recomputable. Local mode (no checkpoint
-    * dir) keeps the fast executor-local path. */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      // checkpoint(eager=true) otherwise runs the lineage TWICE: the
-      // eager count job, then ReliableCheckpointRDD's write job
-      // recomputes every partition — exactly the duplicated cost this
-      // helper exists to cut. Cache first so the write job reads
-      // blocks, drop the cache once the files are authoritative.
-      df.persist()
-      try df.checkpoint(true) finally df.unpersist()
-    } else df.localCheckpoint(true)
-
   /** Connected components over an undirected pair frame (d1, d2):
     * resolves near-dup PAIRS into dedup CLUSTERS, labeling every member
     * with the minimum doc_id of its component (the canonical survivor).
@@ -205,7 +186,7 @@ object Dedup {
     // so every round's edges-side exchange vanishes — edges is the big
     // frame of the loop, and shuffling it O(log n) times instead of
     // once is the kind of cost that only shows at cluster scale.
-    val edges = materialize(
+    val edges = Scratch.cut(
       pairs.select(explode(array(
           struct(col("d1").as("src"), col("d2").as("dst")),
           struct(col("d2").as("src"), col("d1").as("dst")))).as("e"))
@@ -232,7 +213,7 @@ object Dedup {
       // materialized frame (counting before the checkpoint would run
       // the whole join lineage a second time).
       val jumpTo = hooked.select(col("node").as("jn"), col("l1").as("l2"))
-      val next = materialize(
+      val next = Scratch.cut(
         hooked.join(jumpTo, col("l1") === col("jn"), "left_outer")
           .select(col("node"),
             least(col("l1"), coalesce(col("l2"), col("l1"))).as("newl"),
@@ -256,7 +237,7 @@ object Dedup {
     * Jaccard/MinHash pipelines. (r14: the `hs` shingle-hash column this
     * used to carry had NO consumer — [[minhashSigAgg]] hashes distinct
     * shingles itself and the AllPairs joins key on the shingle STRINGS
-    * — yet every `materialize(shingled(…))` checkpoint computed it
+    * — yet every `Scratch.cut(shingled(…))` checkpoint computed it
     * anyway, one interpreted md5 per shingle occurrence, because column
     * pruning cannot reach through a checkpoint. Dropped outright.) */
   def shingled(docs: DataFrame, n: Int = 3): DataFrame =
@@ -264,6 +245,12 @@ object Dedup {
       .withColumn("toks", TextAnalysis.tokens(TextAnalysis.norm(col("text"))))
       .withColumn("ss", shingles(col("toks"), n))
       .select("doc_id", "ss")
+
+  /** The `(doc_id, ss, n)` frame — [[shingled]] plus the set size —
+    * that both AllPairs arms consume. Declarative: callers that feed it
+    * to more than one consumer cut it ([[Scratch.cut]]). */
+  def sized(docs: DataFrame): DataFrame =
+    shingled(docs).select(col("doc_id"), col("ss"), size(col("ss")).as("n"))
 
   /** Exact Jaccard self-join at threshold `t` with AllPairs prefix
     * filtering (Bayardo et al., WWW'07): order each document's shingles
@@ -274,18 +261,13 @@ object Dedup {
     * what keeps Σdf² (and the shuffle) bounded at corpus scale; the
     * 2× size-band prune rides along in the join condition.
     *
-    * `materializeInput` checkpoints the shingled frame before use: it
-    * feeds the pipeline THREE times (candidate explode + both
-    * verification joins) and re-shingling (regex split + per-shingle
-    * md5) at every use would triple the scan-side cost. Exchange reuse
-    * covers the prefix self-join either way; the flag exists so plan
-    * audits can see the full declarative lineage. */
-  def jaccardPairs(docs: DataFrame, t: Double = 0.5,
-      materializeInput: Boolean = true): DataFrame = {
-    val sized0 = shingled(docs)
-      .select(col("doc_id"), col("ss"), size(col("ss")).as("n"))
-    jaccardPairsSized(if (materializeInput) materialize(sized0) else sized0, t)
-  }
+    * The [[sized]] frame is cut before use: it feeds the pipeline THREE
+    * times (candidate explode + both verification joins) and
+    * re-shingling (regex split + per-shingle md5) at every use would
+    * triple the scan-side cost. Plan audits that need the full
+    * declarative lineage call `jaccardPairsSized(sized(docs), t)`. */
+  def jaccardPairs(docs: DataFrame, t: Double = 0.5): DataFrame =
+    jaccardPairsSized(Scratch.cut(sized(docs)), t)
 
   /** ⌈x·t⌉ with t as an EXACT decimal literal. The double form
     * `ceil(x * lit(t))` can land one ulp ABOVE an exact integer
@@ -426,8 +408,7 @@ object Dedup {
     * and is lossless — for equal sizes either side's prefix must hit
     * the overlap, so probing from the smaller-id one suffices. */
   def containmentPairs(docs: DataFrame, t: Double = 0.8): DataFrame =
-    containmentPairsSized(materialize(shingled(docs)
-      .select(col("doc_id"), col("ss"), size(col("ss")).as("n"))), t)
+    containmentPairsSized(Scratch.cut(sized(docs)), t)
 
   /** [[containmentPairs]] over a pre-built `(doc_id, ss, n)` frame —
     * the [[jaccardPairsSized]] factoring applied to the containment

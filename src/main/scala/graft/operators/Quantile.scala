@@ -138,7 +138,7 @@ object Quantile {
     // lineage out of every downstream plan (phase 4 otherwise
     // re-embeds two more full scans) and makes the gate statistic
     // below a free driver-side read.
-    val targets = Dedup.materialize(
+    val targets = Scratch.cut(
       located.groupBy(col(group), col("__b"), col("__cb"), col("__cum"))
         .agg(collect_set(col("__target")).as("__targets"))
         .withColumn("__bc", col("__cum") - col("__cb")))
@@ -188,7 +188,7 @@ object Quantile {
       // surviving oversized-bucket rows, and every steering frame stays
       // ≤ |paths|·B rows — broadcast by construction.
       val outCols = df.columns.map(col) :+ col("__n") :+ col("__grank")
-      val joined = Dedup.materialize(
+      val joined = Scratch.cut(
         bucketed(df).join(broadcast(targets), Seq(group, "__b")))
       val wf1 = Window.partitionBy(col(group), col("__b"))
         .orderBy(v, col(tiebreakCol))
@@ -237,7 +237,7 @@ object Quantile {
           .agg(count(lit(1)).as("__c2"),
             first(col("__base")).as("__b0"), first(col("__ts")).as("__ts0"))
         val wc2 = Window.partitionBy(gcols: _*).orderBy("__sb")
-        val t2 = Dedup.materialize(hist2
+        val t2 = Scratch.cut(hist2
           .withColumn("__cum2", sum(col("__c2")).over(wc2))
           .withColumn("__cb2", col("__cum2") - col("__c2"))
           .select(gcols ++ Seq(col("__sb"), col("__b0"), col("__cb2"),
@@ -263,7 +263,7 @@ object Quantile {
           done :+= rankAll(live.join(broadcast(t2), gkeys :+ "__sb"))
           cur = null
         } else {
-          val joined2 = Dedup.materialize(
+          val joined2 = Scratch.cut(
             live.join(broadcast(t2), gkeys :+ "__sb"))
           done :+= rankAll(joined2.filter(col("__bc2") <= Level2Threshold))
           cur = joined2.filter(col("__bc2") > Level2Threshold)

@@ -61,7 +61,7 @@ object Rank {
   def globalRank(df: DataFrame, order: Seq[Column], rkName: String): DataFrame = {
     require(Seq("__pid", "__lrn", "__off", rkName).forall(!df.columns.contains(_)),
       s"input already has a '__pid'/'__lrn'/'__off'/'$rkName' column")
-    val ranged = Dedup.materialize(
+    val ranged = Scratch.cut(
       df.repartitionByRange(order: _*)
         .withColumn("__pid", spark_partition_id().cast("long")))
     // running SUM(1L), not row_number(): RowNumber's counter is 32-bit,

@@ -1,18 +1,55 @@
 package graft.operators
 
-/** Per-invocation scratch directories for queries that persist
-  * intermediate artifacts (dedup_family's pair+CC frames, ann_family's
-  * trained index). `java.nio.file.Files.createTempDirectory` appends a
-  * random token, so two concurrent Verify/Bench runs on the SAME sfDir
-  * can never collide on an artifact path (the r9 finding: a shared
-  * sfDir-derived layout raced under concurrency). Directories are
-  * removed by a JVM shutdown hook — "delete on success" for the
-  * one-shot Verify/Bench/test mains this repo runs; a long-lived
-  * service would instead persist its artifacts deliberately under a
-  * managed warehouse path (the train-once/serve-many posture), not
-  * here.
+import org.apache.spark.sql.DataFrame
+
+/** The one owner of intermediate state: every query, operator and
+  * measuring main that cuts a frame's lineage or persists an
+  * intermediate artifact goes through here.
+  *  - [[cut]] materializes a frame that is consumed more than once
+  *    (iterative loops, multi-consumer building blocks);
+  *  - [[artifact]] persists a frame as parquet and serves it back as a
+  *    scan — the train-once/serve-many posture of the capstones
+  *    (dedup_family's pair+CC frames, ann_family's trained index).
+  *
+  * Artifacts live in per-invocation directories.
+  * `java.nio.file.Files.createTempDirectory` appends a random token, so
+  * two concurrent Verify/Bench runs on the SAME sfDir can never collide
+  * on an artifact path (the r9 finding: a shared sfDir-derived layout
+  * raced under concurrency). Directories are removed by a JVM shutdown
+  * hook — "delete on success" for the one-shot Verify/Bench/test mains
+  * this repo runs; a long-lived service would instead persist its
+  * artifacts deliberately under a managed warehouse path, not here.
   */
 object Scratch {
+
+  /** Materialize an iterative frame, cutting its lineage. When the
+    * session has a checkpoint dir configured (cluster posture:
+    * `sc.setCheckpointDir` to durable storage), use a reliable
+    * `checkpoint` — localCheckpoint truncates lineage to executor-local
+    * blocks, so at the 1000-executor/100 TB posture an executor loss or
+    * dynamic-allocation decommission mid-iteration would make the job
+    * unrecoverable rather than recomputable. Local mode (no checkpoint
+    * dir) keeps the fast executor-local path. */
+  def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
+      // checkpoint(eager=true) otherwise runs the lineage TWICE: the
+      // eager count job, then ReliableCheckpointRDD's write job
+      // recomputes every partition — exactly the duplicated cost this
+      // helper exists to cut. Cache first so the write job reads
+      // blocks, drop the cache once the files are authoritative.
+      df.persist()
+      try df.checkpoint(true) finally df.unpersist()
+    } else df.localCheckpoint(true)
+
+  /** Write `df` as the parquet artifact `name` of `prefix`'s scratch
+    * dir and return a scan of it. The read carries `df`'s schema
+    * explicitly: an all-empty write may emit no part files, and a
+    * schema-less read of such a directory cannot infer one. */
+  def artifact(df: DataFrame, prefix: String, name: String): DataFrame = {
+    val path = s"${dir(prefix)}/$name"
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
 
   // ONE directory per prefix per JVM (r10 review finding): repeated
   // in-JVM invocations (ScaleBench warmup + 2 passes × 3 scales) reuse
@@ -25,7 +62,7 @@ object Scratch {
 
   /** `tmpdir/graft_<prefix>_<token>/`, created once per (JVM, prefix)
     * and registered for recursive deletion at JVM exit. */
-  def dir(prefix: String): String =
+  private def dir(prefix: String): String =
     dirs.computeIfAbsent(prefix, { p =>
       val d = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Scratch, TextAnalysis}
 
 /** Oracle-checked deduplication queries over `documents` (M3):
   * exact hash groups, shingle-Jaccard near-dup pairs (size-band-pruned
@@ -256,6 +256,39 @@ object DedupQueries extends QueryModule {
        |           CAST(m // ${1L << WinPosBits} AS BIGINT) AS fp
        |         FROM wm WHERE pos >= ${WinW - 1} OR pos = n_grams - 1)""".stripMargin
 
+  /** The 4×4 method-agreement grid shared by dedup_method_matrix and
+    * dedup_family: removal sets of the exact (min-id survivor per
+    * identical text) and simhash (larger-id member of each
+    * simhash_neardup pair) arms next to the caller's jaccard (`jr`) and
+    * containment (`cr`) arms, as (m1 ≤ m2, n_common) rows. The tagged
+    * union is cut once so the self-join doesn't re-run four dedup
+    * pipelines per side; the grid left-join keeps honest zeros. */
+  private def methodMatrix(s: SparkSession, d: String,
+      jr: DataFrame, cr: DataFrame): DataFrame = {
+    val ex = Tables.documents(s, d)
+      .select(col("doc_id"), md5(col("text")).as("h"))
+      .withColumn("m0", min(col("doc_id")).over(Window.partitionBy("h")))
+      .filter(col("doc_id") =!= col("m0")).select("doc_id")
+    val sr = defs("simhash_neardup")(s, d)
+      .select(col("d2").as("doc_id")).distinct()
+    val tagged = Scratch.cut(
+      ex.withColumn("m", lit("exact"))
+        .unionByName(jr.withColumn("m", lit("jaccard")))
+        .unionByName(sr.withColumn("m", lit("simhash")))
+        .unionByName(cr.withColumn("m", lit("containment"))))
+    val methods = s.sql(
+      "SELECT * FROM VALUES ('containment'), ('exact'), ('jaccard'), ('simhash') AS t(m)")
+    val grid = methods.select(col("m").as("m1"))
+      .crossJoin(methods.select(col("m").as("m2")))
+      .filter(col("m1") <= col("m2"))
+    val ov = tagged.select(col("doc_id"), col("m").as("m1"))
+      .join(tagged.select(col("doc_id"), col("m").as("m2")), "doc_id")
+      .filter(col("m1") <= col("m2"))
+      .groupBy("m1", "m2").agg(count(lit(1)).as("n"))
+    grid.join(ov, Seq("m1", "m2"), "left")
+      .select(col("m1"), col("m2"), coalesce(col("n"), lit(0L)).as("n_common"))
+  }
+
   def defs: Map[String, Q] = Map(
     // Exact dedup: one hash-partitioned groupBy on the content hash.
     "exact_dedup" -> ((s, d) =>
@@ -306,7 +339,7 @@ object DedupQueries extends QueryModule {
       // materialized once: feeds signature aggregation AND both exact-
       // verify joins — re-shingling (regex + per-shingle md5) at every
       // use would triple the scan-side cost (same shape as jaccardPairs)
-      val sh = materialize(shingled(Tables.documents(s, d)))
+      val sh = Scratch.cut(shingled(Tables.documents(s, d)))
       val sig = minhashSigAgg(
         sh.select(col("doc_id"), explode(col("ss")).as("s")))
       val pairs = bandCollisionPairs(sig)
@@ -345,10 +378,10 @@ object DedupQueries extends QueryModule {
     // the spec). On a multilingual corpus the Spark side is the engine
     // of record; the oracle would need a byte-length preprocess.
     "edit_distance_pairs" -> ((s, d) => {
-      val sh = materialize(shingled(Tables.documents(s, d)))
+      val sh = Scratch.cut(shingled(Tables.documents(s, d)))
       val pairs = bandCollisionPairs(minhashSigAgg(
         sh.select(col("doc_id"), explode(col("ss")).as("s"))))
-      val txt = materialize(Tables.documents(s, d).select(col("doc_id"),
+      val txt = Scratch.cut(Tables.documents(s, d).select(col("doc_id"),
         TextAnalysis.norm(col("text")).as("t")))
       pairs
         .join(txt.as("a"), col("d1") === col("a.doc_id"))
@@ -380,7 +413,7 @@ object DedupQueries extends QueryModule {
     // asymmetric band join, exact-Jaccard verification at ≥ 0.5 so
     // planted pairs straddling the split are surfaced.
     "minhash_incremental" -> ((s, d) => {
-      val sh = materialize(shingled(Tables.documents(s, d)))
+      val sh = Scratch.cut(shingled(Tables.documents(s, d)))
       val stacked = graft.operators.Ingest.bandStack(sh)
       val pairs = stacked.filter(graft.operators.Ingest.isNew(col("doc_id"))).as("x")
         .join(stacked.filter(!graft.operators.Ingest.isNew(col("doc_id"))).as("y"),
@@ -412,7 +445,7 @@ object DedupQueries extends QueryModule {
     // (Σdf rows — linear, no cap needed since the aggregation is
     // per-DOC, not per-pair), one left join to keep every doc.
     "ngram_novelty" -> ((s, d) => {
-      val sh = materialize(shingled(Tables.documents(s, d))
+      val sh = Scratch.cut(shingled(Tables.documents(s, d))
         .select(col("doc_id"), explode(col("ss")).as("sh")))
       val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       val per = sh.join(df, "sh")
@@ -447,9 +480,8 @@ object DedupQueries extends QueryModule {
     // argument, one level up the stack).
     "dedup_assign" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val sized = materialize(shingled(Tables.documents(s, d))
-        .select(col("doc_id"), col("ss"), size(col("ss")).as("n")))
-      val pairs = materialize(jaccardPairsSized(sized, t = 0.5)
+      val sized = Scratch.cut(Dedup.sized(Tables.documents(s, d)))
+      val pairs = Scratch.cut(jaccardPairsSized(sized, t = 0.5)
         .select(col("d1"), col("d2"), col("jac")))
       def isNew(c: org.apache.spark.sql.Column) = graft.operators.Ingest.isNew(c)
       val labels = connectedComponents(
@@ -504,8 +536,7 @@ object DedupQueries extends QueryModule {
           expr("CAST(size(toks) * ((doc_id DIV 5) % 5 + 5) DIV 10 AS BIGINT)")))
         .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
           array_join(slice(col("toks"), lit(1), col("m").cast("int")), " ").as("text"))
-      val sh = materialize(shingled(base.unionByName(variants))
-        .select(col("doc_id"), col("ss"), size(col("ss")).as("n")))
+      val sh = Scratch.cut(Dedup.sized(base.unionByName(variants)))
       val truth = jaccardPairsSized(sh, t = 0.5)
         .select(col("d1"), col("d2"),
           expr("CAST(common * 10 DIV (n1 + n2 - common) AS BIGINT)").as("bucket"))
@@ -546,7 +577,7 @@ object DedupQueries extends QueryModule {
       // NULLS FIRST, DuckDB NULLS LAST) — the r11 NULL-text docs moved
       // the neighbor windows by 9 pairs. '' blocks the unknown-text
       // docs together at the sort front on BOTH engines.
-      val base = materialize(Tables.documents(s, d)
+      val base = Scratch.cut(Tables.documents(s, d)
         .select(col("doc_id"),
           TextAnalysis.norm(coalesce(col("text"), lit(""))).as("nt"))
         .select(col("doc_id"),
@@ -558,7 +589,7 @@ object DedupQueries extends QueryModule {
       // global_ids determinism invariant, now in ONE place); the result
       // is materialized because the neighbor self-join consumes it on
       // both sides.
-      def ranked(key: String): DataFrame = materialize(
+      def ranked(key: String): DataFrame = Scratch.cut(
         graft.operators.Rank.globalRank(
           base.select(col("doc_id"), col("pfx"), col(key).as("bkey")),
           Seq(col("bkey"), col("doc_id")), "rnk")
@@ -738,7 +769,7 @@ object DedupQueries extends QueryModule {
     // the df count and both join sides.
     "winnow_overlap" -> ((s, d) => {
       val minShared = 2
-      val sel = Dedup.materialize(
+      val sel = Scratch.cut(
         winnowSel(s, d).select("doc_id", "fp").distinct())
       val keep = sel.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= WinDfCap)
@@ -843,7 +874,7 @@ object DedupQueries extends QueryModule {
           qualityScore(size(col("toks")),
             size(array_distinct(col("toks"))),
             occurrences(col("toks"), LangProfiles.head._2)).as("score"))
-      val docs = materialize(
+      val docs = Scratch.cut(
         scored.join(labels, Seq("doc_id"), "left")
           .withColumn("cluster", coalesce(col("label"), col("doc_id")))
           .select("doc_id", "score", "cluster"))
@@ -876,10 +907,10 @@ object DedupQueries extends QueryModule {
     // bit-for-bit). Same banded candidate generation as minhash_lsh —
     // only colliding pairs are ever compared.
     "minhash_est_err" -> ((s, d) => {
-      val sh = materialize(shingled(Tables.documents(s, d)))
+      val sh = Scratch.cut(shingled(Tables.documents(s, d)))
       // sig feeds THREE consumers (band derivation + both signature
       // verification joins) — same 3-consumer materialize policy as sh
-      val sig = materialize(minhashSigAgg(
+      val sig = Scratch.cut(minhashSigAgg(
         sh.select(col("doc_id"), explode(col("ss")).as("s"))))
       val pairs = bandCollisionPairs(sig)
       val matches = (0 until MinHashK)
@@ -910,9 +941,8 @@ object DedupQueries extends QueryModule {
     // against EACH OTHER before choosing, instead of assuming the
     // cheaper one finds the same documents. Each removal set derives
     // from its registered sibling (composition at the registry level,
-    // oracle spliced from the same oracle SQL); the tagged union is
-    // MATERIALIZED once so the self-join doesn't re-run four dedup
-    // pipelines per side; the 4×4 grid left-join keeps honest zeros.
+    // oracle spliced from the same oracle SQL); the 4×4 grid is
+    // [[methodMatrix]], shared with dedup_family.
     // [Shared-artifact form since r11 (the r10 verdict's #2 bench line,
     // 7.4 s of sibling re-execution): ONE materialized shingle base
     // feeds both AllPairs arms (jaccard via jaccardPairsSized +
@@ -924,41 +954,16 @@ object DedupQueries extends QueryModule {
     // keeps its own token pass: it consumes token HASHES, not
     // shingles, and its cost is one narrow scan.]
     "dedup_method_matrix" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-      val sized = materialize(shingled(docs)
-        .select(col("doc_id"), col("ss"), size(col("ss")).as("n")))
-      val ex = docs
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .withColumn("m0", min(col("doc_id")).over(Window.partitionBy("h")))
-        .filter(col("doc_id") =!= col("m0")).select("doc_id")
+      val sized = Scratch.cut(Dedup.sized(Tables.documents(s, d)))
       val jr = connectedComponents(
           jaccardPairsSized(sized, t = 0.5).select("d1", "d2"))
         .filter(col("node") =!= col("label"))
         .select(col("node").as("doc_id"))
-      val sr = defs("simhash_neardup")(s, d)
-        .select(col("d2").as("doc_id")).distinct()
       // X-131's policy arm: remove the larger-id member of each
       // containment pair (the same convention as the simhash arm)
       val cr = containmentPairsSized(sized, t = 0.8)
         .select(col("d2").as("doc_id")).distinct()
-      val tagged = graft.operators.Dedup.materialize(
-        ex.withColumn("m", lit("exact"))
-          .unionByName(jr.withColumn("m", lit("jaccard")))
-          .unionByName(sr.withColumn("m", lit("simhash")))
-          .unionByName(cr.withColumn("m", lit("containment"))))
-      val methods = s.sql(
-        "SELECT * FROM VALUES ('containment'), ('exact'), ('jaccard'), ('simhash') AS t(m)")
-      val grid = methods.select(col("m").as("m1"))
-        .crossJoin(methods.select(col("m").as("m2")))
-        .filter(col("m1") <= col("m2"))
-      val ov = tagged.select(col("doc_id"), col("m").as("m1"))
-        .join(tagged.select(col("doc_id"), col("m").as("m2")), "doc_id")
-        .filter(col("m1") <= col("m2"))
-        .groupBy("m1", "m2").agg(count(lit(1)).as("n"))
-      grid.join(ov, Seq("m1", "m2"), "left")
-        .select(col("m1"), col("m2"), coalesce(col("n"), lit(0L)).as("n_common"))
-        .orderBy("m1", "m2")
+      methodMatrix(s, d, jr, cr).orderBy("m1", "m2")
     }),
 
     // Dedup-family capstone (X-159): the REGISTERED form of
@@ -967,7 +972,7 @@ object DedupQueries extends QueryModule {
     // dedup_method_matrix / dedup_assign each re-derive standalone (the
     // registry contract) runs ONCE here and is PERSISTED as parquet
     // (the X-157 "persisted index" posture: pairs, corpus CC labels,
-    // and the standing index-side labels are real on-disk artifacts,
+    // and the standing index-side labels are Scratch.artifact files,
     // every consumer a scan of them). Downstream, one query emits all
     // three result families as a tagged union:
     //   kind='doc'    — the full dedup_artifacts surface (cluster,
@@ -990,27 +995,17 @@ object DedupQueries extends QueryModule {
     "dedup_family" -> ((s, d) => {
       import TextAnalysis.{norm, tokens, occurrences, qualityScore, LangProfiles, sampleBucket}
       def isNew(c: org.apache.spark.sql.Column) = graft.operators.Ingest.isNew(c)
-      // per-invocation token + shutdown-hook cleanup (Scratch): two
-      // concurrent runs on one sfDir must not race on the artifact path
-      val artDir = graft.operators.Scratch.dir("dedup_family")
-      // stage 1: ONE shingle + AllPairs + CC derivation, persisted
-      val sized = materialize(shingled(Tables.documents(s, d))
-        .select(col("doc_id"), col("ss"), size(col("ss")).as("n")))
-      jaccardPairsSized(sized, t = 0.5).select("d1", "d2", "jac")
-        .write.mode("overwrite").parquet(s"$artDir/pairs")
-      // explicit schemas: an all-empty write may emit no part files,
-      // and a schema-less read of such a directory cannot infer one
-      val pairs = s.read.schema("d1 BIGINT, d2 BIGINT, jac DOUBLE")
-        .parquet(s"$artDir/pairs")
-      connectedComponents(pairs.select("d1", "d2"))
-        .write.mode("overwrite").parquet(s"$artDir/labels")
-      connectedComponents(pairs
-          .filter(!isNew(col("d1")) && !isNew(col("d2"))).select("d1", "d2"))
-        .write.mode("overwrite").parquet(s"$artDir/index_labels")
-      val labels = s.read.schema("node BIGINT, label BIGINT")
-        .parquet(s"$artDir/labels")
-      val idxLabels = s.read.schema("node BIGINT, label BIGINT")
-        .parquet(s"$artDir/index_labels")
+      // stage 1: ONE shingle + AllPairs + CC derivation, persisted as
+      // Scratch artifacts (per-invocation dir: two concurrent runs on
+      // one sfDir must not race on the artifact path)
+      val pairs = Scratch.artifact(jaccardPairsSized(
+          Scratch.cut(Dedup.sized(Tables.documents(s, d))), t = 0.5)
+        .select("d1", "d2", "jac"), "dedup_family", "pairs")
+      val labels = Scratch.artifact(connectedComponents(pairs.select("d1", "d2")),
+        "dedup_family", "labels")
+      val idxLabels = Scratch.artifact(connectedComponents(pairs
+          .filter(!isNew(col("d1")) && !isNew(col("d2"))).select("d1", "d2")),
+        "dedup_family", "index_labels")
       // kind='doc': the dedup_artifacts composition off the shared labels
       val scored = Tables.documents(s, d)
         .withColumn("toks", tokens(norm(col("text"))))
@@ -1018,7 +1013,7 @@ object DedupQueries extends QueryModule {
           qualityScore(size(col("toks")),
             size(array_distinct(col("toks"))),
             occurrences(col("toks"), LangProfiles.head._2)).as("score"))
-      val docs = materialize(
+      val docs = Scratch.cut(
         scored.join(labels.select(col("node").as("doc_id"), col("label")),
             Seq("doc_id"), "left")
           .withColumn("cluster", coalesce(col("label"), col("doc_id")))
@@ -1059,50 +1054,23 @@ object DedupQueries extends QueryModule {
           col("jac"))
       // kind='matrix': jaccard arm from the shared labels; the other
       // three arms are distinct METHODS, registered siblings run once
-      val ex = Tables.documents(s, d)
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .withColumn("m0", min(col("doc_id")).over(Window.partitionBy("h")))
-        .filter(col("doc_id") =!= col("m0")).select("doc_id")
       val jr = labels.filter(col("node") =!= col("label"))
         .select(col("node").as("doc_id"))
-      val sr = defs("simhash_neardup")(s, d)
-        .select(col("d2").as("doc_id")).distinct()
       val cr = defs("containment_dup")(s, d)
         .select(col("d2").as("doc_id")).distinct()
-      val tagged = materialize(
-        ex.withColumn("m", lit("exact"))
-          .unionByName(jr.withColumn("m", lit("jaccard")))
-          .unionByName(sr.withColumn("m", lit("simhash")))
-          .unionByName(cr.withColumn("m", lit("containment"))))
-      val methods = s.sql(
-        "SELECT * FROM VALUES ('containment'), ('exact'), ('jaccard'), ('simhash') AS t(m)")
-      val grid = methods.select(col("m").as("m1"))
-        .crossJoin(methods.select(col("m").as("m2")))
-        .filter(col("m1") <= col("m2"))
-      val ov = tagged.select(col("doc_id"), col("m").as("m1"))
-        .join(tagged.select(col("doc_id"), col("m").as("m2")), "doc_id")
-        .filter(col("m1") <= col("m2"))
-        .groupBy("m1", "m2").agg(count(lit(1)).as("n"))
-      val mtxSec = grid.join(ov, Seq("m1", "m2"), "left")
-        .select(col("m1"), col("m2"), coalesce(col("n"), lit(0L)).as("n_common"))
-      // tagged union of the three sections (null-padded wide schema)
-      val nL = lit(null).cast("long"); val nD = lit(null).cast("double")
-      val nS = lit(null).cast("string"); val nI = lit(null).cast("int")
-      val nB = lit(null).cast("boolean")
+      val mtxSec = methodMatrix(s, d, jr, cr)
+      // tagged union of the three sections; unionByName pads each
+      // section's missing columns with typed nulls
       docSec.select(lit("doc").as("kind"), col("doc_id").as("id"),
           col("cluster"), col("csize"), col("weight_fx"), col("score"),
-          col("split"), col("is_kept"), nI.as("matched"), nD.as("jac"),
-          nS.as("m1"), nS.as("m2"), nL.as("n_common"))
+          col("split"), col("is_kept"))
         .unionByName(asgSec.select(lit("assign").as("kind"),
-          col("doc_id").as("id"), col("cluster"), nL.as("csize"),
-          nL.as("weight_fx"), nD.as("score"), nS.as("split"),
-          nB.as("is_kept"), col("matched"), col("jac"),
-          nS.as("m1"), nS.as("m2"), nL.as("n_common")))
-        .unionByName(mtxSec.select(lit("matrix").as("kind"), nL.as("id"),
-          nL.as("cluster"), nL.as("csize"), nL.as("weight_fx"),
-          nD.as("score"), nS.as("split"), nB.as("is_kept"),
-          nI.as("matched"), nD.as("jac"), col("m1"), col("m2"),
-          col("n_common")))
+          col("doc_id").as("id"), col("cluster"), col("matched"), col("jac")),
+          allowMissingColumns = true)
+        .unionByName(mtxSec.withColumn("kind", lit("matrix")),
+          allowMissingColumns = true)
+        .select("kind", "id", "cluster", "csize", "weight_fx", "score", "split",
+          "is_kept", "matched", "jac", "m1", "m2", "n_common")
         .orderBy(col("kind"), coalesce(col("id"), lit(-1L)),
           coalesce(col("m1"), lit("")), coalesce(col("m2"), lit("")))
     }),
@@ -1127,7 +1095,7 @@ object DedupQueries extends QueryModule {
     "ingest_pipeline" -> ((s, d) => {
       import graft.operators.Ingest
       val docsAll = Tables.documents(s, d)
-      val sh = materialize(shingled(docsAll))
+      val sh = Scratch.cut(shingled(docsAll))
       val idxSh = sh.filter(!Ingest.isNew(col("doc_id")))
       val batchSh = sh.filter(Ingest.isNew(col("doc_id")))
       val idxStack = Ingest.bandStack(idxSh)

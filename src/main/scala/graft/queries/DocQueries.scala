@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Extraction
+import graft.operators.{Extraction, Scratch}
 
 /** Oracle-checked queries over `documents`: the reference's extraction
   * surface (SURVEY §2.5 F-1..F-5, F-12; §2.7 A-1..A-3; §2.2 K-2).
@@ -153,7 +153,7 @@ object DocQueries extends QueryModule {
       // unpivot: both union branches consume it, and without the cut
       // the corpus scan + six md5 hashes per row could execute twice
       // (exchange reuse is an optimization, not a guarantee)
-      val agg = graft.operators.Dedup.materialize(
+      val agg = Scratch.cut(
         per.agg(count(lit(1)).as("n_docs"),
           sum(when(col("mod_moved"), 1L).otherwise(0L)).as("mod_m"),
           sum(when(col("hrw_moved"), 1L).otherwise(0L)).as("hrw_m")))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Enrichers, Enrichment, MockEnricher, Multimodal}
+import graft.operators.{Enrichers, Enrichment, Multimodal}
 
 /** O-9/O-11 enrichment pipeline and multimodal plumbing as
   * oracle-checked queries.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
-import graft.operators.Exact
+import graft.operators.{Exact, Scratch}
 
 /** Event-stream batch surface: JSON parse/flatten (F-9/F-10 over
   * `events.props`), conditional aggregation (A-1..A-5), time bucketing,
@@ -447,7 +447,7 @@ object EventQueries extends QueryModule {
       // re-plan, resample after executor loss), making the pid join
       // between the branches silently wrong. The cut pins ONE pid
       // assignment and halves the scan+md5 work.
-      val ranged = graft.operators.Dedup.materialize(Tables.events(s, d)
+      val ranged = Scratch.cut(Tables.events(s, d)
         .select(col("event_id"), (unix_micros(col("ts")) - delayUs).as("us"))
         .repartitionByRange(col("event_id"))
         .withColumn("pid", spark_partition_id().cast("long")))
@@ -510,7 +510,7 @@ object EventQueries extends QueryModule {
       // rows split by __grank afterwards; a row can serve both roles
       // when the ranks coincide at tiny n (the per-row flags overlap
       // rather than conflict).
-      val dmat = graft.operators.Dedup.materialize(delays)
+      val dmat = Scratch.cut(delays)
       val q = graft.operators.Quantile
       val sel = q.selectRanks(dmat, "grp", "d_us", "event_id",
           n => Seq(q.idiv(n + lit(1L), 2), q.idiv(n + lit(2L), 2),

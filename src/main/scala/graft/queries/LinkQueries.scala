@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{LinkSelection, UrlOps}
+import graft.operators.{LinkSelection, Scratch, UrlOps}
 
 /** Link-selection pipeline + URL functions (F-6/F-7/F-8, P-2..P-4,
   * T-1..T-3) over a deterministic candidate frame derived from
@@ -87,7 +87,7 @@ object LinkQueries extends QueryModule {
       val stats = docs.agg(count(lit(1)).as("n"))
       val edges = linkEdges(s, d)
       def iterate(rIn: DataFrame): DataFrame = {
-        val r = graft.operators.Dedup.materialize(rIn)
+        val r = Scratch.cut(rIn)
         val contrib = edges.join(r, edges("src") === r("doc_id"))
           .select(col("dst"), expr("r div 3").as("c"))
           .groupBy("dst").agg(sum(col("c")).as("dsum"))
@@ -126,7 +126,7 @@ object LinkQueries extends QueryModule {
     // wedge-side uses share one exchange.
     "link_triangles" -> ((s, d) => {
       val raw = linkEdgesRaw(s, d)
-      val und = graft.operators.Dedup.materialize(
+      val und = Scratch.cut(
         raw.filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("a"),
             greatest(col("src"), col("dst")).as("b"))
@@ -190,7 +190,7 @@ object LinkQueries extends QueryModule {
         // cut the round's edges-join + aggregation lineage executes
         // twice (4 joins + 4 aggregates per round instead of the
         // stated 2 + 2)
-        val scores = graft.operators.Dedup.materialize(scoresIn)
+        val scores = Scratch.cut(scoresIn)
         val m = scores.agg(max(col(c)).as("mx"))
         scores.crossJoin(broadcast(m))
           // mx = 0 on an edgeless graph (every score 0) — ANSI mode
@@ -200,10 +200,10 @@ object LinkQueries extends QueryModule {
             expr(s"CASE WHEN mx = 0 THEN 0L ELSE ($c * ${F}L) div mx END").as(c))
       }
       def round(aPrev: DataFrame): (DataFrame, DataFrame) = {
-        val a = graft.operators.Dedup.materialize(aPrev)
+        val a = Scratch.cut(aPrev)
         val hRaw = edges.join(a, edges("dst") === a("doc_id"))
           .groupBy("src").agg(sum(col("a")).as("h"))
-        val h = graft.operators.Dedup.materialize(normalized(
+        val h = Scratch.cut(normalized(
           docs.join(hRaw, docs("doc_id") === hRaw("src"), "left_outer")
             .select(docs("doc_id"), coalesce(col("h"), lit(0L)).as("h")), "h"))
         val aRaw = edges.join(h, edges("src") === h("doc_id"))
@@ -244,20 +244,9 @@ object LinkQueries extends QueryModule {
     // count grows with the corpus — never hinted).
     "label_propagation" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id")
-      // symmetrize BEFORE the distinct: one explode + ONE dedup
-      // aggregate over 2·|E| rows (a dedup-unordered-pairs-then-union
-      // form would embed the distinct in both union branches and run
-      // the aggregate twice per pass)
-      val und = graft.operators.Dedup.materialize(
-        linkEdgesRaw(s, d).filter(col("src") =!= col("dst"))
-          .select(explode(array(
-            struct(col("src").as("a"), col("dst").as("b")),
-            struct(col("dst").as("a"), col("src").as("b")))).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-          .distinct()
-          .repartition(col("a")))
+      val und = linkUndirected(s, d)
       def round(prevIn: DataFrame): DataFrame = {
-        val prev = graft.operators.Dedup.materialize(prevIn)
+        val prev = Scratch.cut(prevIn)
         val vote = und.join(prev, und("b") === prev("doc_id"))
           .groupBy(col("a"), col("label")).agg(count(lit(1)).as("cnt"))
           .groupBy(col("a"))
@@ -268,7 +257,7 @@ object LinkQueries extends QueryModule {
             coalesce(col("nlabel"), prev("label")).as("label"))
       }
       val l0 = docs.select(col("doc_id"), col("doc_id").as("label"))
-      val lab = graft.operators.Dedup.materialize(round(round(l0)))
+      val lab = Scratch.cut(round(round(l0)))
       val sizes = lab.groupBy("label").agg(count(lit(1)).as("community_size"))
       lab.join(sizes, "label")
         .select(col("doc_id"), col("label"), col("community_size"))
@@ -305,16 +294,9 @@ object LinkQueries extends QueryModule {
     "kcore_peel" -> ((s, d) => {
       val K = 5
       val docs = Tables.documents(s, d).select("doc_id")
-      val und = graft.operators.Dedup.materialize(
-        linkEdgesRaw(s, d).filter(col("src") =!= col("dst"))
-          .select(explode(array(
-            struct(col("src").as("a"), col("dst").as("b")),
-            struct(col("dst").as("a"), col("src").as("b")))).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-          .distinct()
-          .repartition(col("a")))
+      val und = linkUndirected(s, d)
       def round(aliveIn: DataFrame, r: Int): (DataFrame, DataFrame) = {
-        val alive = graft.operators.Dedup.materialize(aliveIn)
+        val alive = Scratch.cut(aliveIn)
         val deg = und
           .join(alive.select(col("node").as("na")), col("a") === col("na"))
           .join(alive.select(col("node").as("nb")), col("b") === col("nb"))
@@ -331,7 +313,7 @@ object LinkQueries extends QueryModule {
           val (nxt, peeled) = round(alive, r)
           (nxt, acc :+ peeled)
       }
-      val labeled = graft.operators.Dedup.materialize(
+      val labeled = Scratch.cut(
         peels.reduce(_ unionByName _)
           .unionByName(aliveN.select(col("node"),
             lit(null).cast("int").as("peel_round"))))
@@ -380,7 +362,7 @@ object LinkQueries extends QueryModule {
         .select(col("src"), col("anchor"),
           concat(lit("https://www."), col("source"), lit(".example.com/"),
             col("lang"), lit("/p"), (col("tgt") % 5).cast("string")).as("url"))
-      val usa = graft.operators.Dedup.materialize(
+      val usa = Scratch.cut(
         urls.groupBy("url", "src", "anchor").agg(count(lit(1)).as("n")))
       val pa = usa.groupBy("url", "anchor").agg(sum(col("n")).as("n_a"))
       val tot = usa.groupBy("url").agg(sum(col("n")).as("n_links"),
@@ -416,14 +398,7 @@ object LinkQueries extends QueryModule {
     // build, three bounded consumers.
     "link_prediction" -> ((s, d) => {
       val DegCap = 64
-      val und = graft.operators.Dedup.materialize(
-        linkEdgesRaw(s, d).filter(col("src") =!= col("dst"))
-          .select(explode(array(
-            struct(col("src").as("a"), col("dst").as("b")),
-            struct(col("dst").as("a"), col("src").as("b")))).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-          .distinct()
-          .repartition(col("a")))
+      val und = linkUndirected(s, d)
       val deg = und.groupBy(col("a").as("z")).agg(count(lit(1)).as("deg"))
       val mids = und.join(deg, col("a") === col("z"))
         .filter(col("deg") <= DegCap)
@@ -460,7 +435,7 @@ object LinkQueries extends QueryModule {
       val docs = Tables.documents(s, d).select("doc_id")
       val edges = linkEdges(s, d)
       def relax(prevIn: DataFrame): DataFrame = {
-        val prev = graft.operators.Dedup.materialize(prevIn)
+        val prev = Scratch.cut(prevIn)
         val cand = edges.join(prev, edges("src") === prev("node"))
           .select(col("dst").as("node"), (col("hops") + 1L).as("hops"))
         prev.select("node", "hops").unionByName(cand)
@@ -489,7 +464,7 @@ object LinkQueries extends QueryModule {
     // joins total, shuffle ∝ walks, never degree². Walks fan out from
     // EVERY node, so output rows = |V| regardless of skew.
     "random_walks" -> ((s, d) => {
-      val adj = graft.operators.Dedup.materialize(
+      val adj = Scratch.cut(
         linkEdgesRaw(s, d).distinct()
           .groupBy(col("src"))
           .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
@@ -545,7 +520,7 @@ object LinkQueries extends QueryModule {
           .groupBy("dst")
           .agg(count(lit(1)).as("indeg"), sum(col(valCol)).as("s"))
       val a1 = hop(docs, "n_chars")
-      val h1 = graft.operators.Dedup.materialize(
+      val h1 = Scratch.cut(
         docs.join(a1, docs("doc_id") === a1("dst"), "left_outer")
           .select(col("doc_id"), col("n_chars"),
             coalesce(col("indeg"), lit(0L)).as("in_deg"),
@@ -774,8 +749,24 @@ object LinkQueries extends QueryModule {
           (col("doc_id") * 31 + j * 97) % col("n")): _*)).as("dst"))
   }
   private def linkEdges(s: SparkSession, d: String): DataFrame =
-    graft.operators.Dedup.materialize(
-      linkEdgesRaw(s, d).repartition(col("src")))
+    Scratch.cut(linkEdgesRaw(s, d).repartition(col("src")))
+
+  /** The undirected simple-graph view of [[linkEdgesRaw]]: self-loops
+    * dropped, both orientations, distinct (a, b) pairs, cut and
+    * pre-partitioned on the probe key `a` — the shared input of
+    * label_propagation, kcore_peel and link_prediction. Symmetrized
+    * BEFORE the distinct: one explode + ONE dedup aggregate over 2·|E|
+    * rows (a dedup-unordered-pairs-then-union form would embed the
+    * distinct in both union branches and run the aggregate twice). */
+  private def linkUndirected(s: SparkSession, d: String): DataFrame =
+    Scratch.cut(
+      linkEdgesRaw(s, d).filter(col("src") =!= col("dst"))
+        .select(explode(array(
+          struct(col("src").as("a"), col("dst").as("b")),
+          struct(col("dst").as("a"), col("src").as("b")))).as("p"))
+        .select(col("p.a").as("a"), col("p.b").as("b"))
+        .distinct()
+        .repartition(col("a")))
 
   /** Shared crawl-frontier synthesis for X-133/X-134: one URL per doc
     * (host from source, path from lang; every 11th doc targets a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Bloom, Exact, Quantile, Relational}
+import graft.operators.{Bloom, Exact, Quantile, Relational, Scratch}
 
 /** M2 relational surface: star-schema joins, group-by aggregation,
   * rollup/cube, window functions, semi/anti joins, date functions and set
@@ -245,7 +245,7 @@ object RelationalQueries extends QueryModule {
       // and without the cut each re-embedding would re-run the whole
       // first selection — the ivf_topk index-build pattern applied to
       // a statistic instead of centroids.
-      val med = graft.operators.Dedup.materialize(
+      val med = Scratch.cut(
         Quantile.selectRanks(cents, "o_orderpriority", "p_c",
             "o_orderkey", midRanks)
           .groupBy("o_orderpriority")
@@ -477,7 +477,7 @@ object RelationalQueries extends QueryModule {
         .select(col("c_custkey"))
       // MATERIALIZED: consumed by its own count AND the lineitem join
       // — without the cut the orders scan + subject join runs twice
-      val ordersHit = graft.operators.Dedup.materialize(Tables.orders(s, d)
+      val ordersHit = Scratch.cut(Tables.orders(s, d)
         .join(subjects, col("o_custkey") === col("c_custkey"))
         .select("o_orderkey"))
       val cust = subjects.agg(count(lit(1)).as("n_rows"))
@@ -563,7 +563,7 @@ object RelationalQueries extends QueryModule {
       // stats and the exact semi join — without the cut the fact scan
       // + probe filter (the pass the query exists to minimize) runs
       // twice under two different exchanges
-      val candidates = graft.operators.Dedup.materialize(Tables.lineitem(s, d)
+      val candidates = Scratch.cut(Tables.lineitem(s, d)
         .select("l_returnflag", "l_partkey", "l_extendedprice", "l_discount")
         .crossJoin(broadcast(bloomDf))
         .filter(Bloom.mightContain(col("bloom"), col("l_partkey"))))
@@ -1280,7 +1280,7 @@ object RelationalQueries extends QueryModule {
       // shuffle here, and both `upserts` and `touched` consume it —
       // without the cut it executes twice (different parent operators,
       // no exchange reuse).
-      val joined = graft.operators.Dedup.materialize(
+      val joined = Scratch.cut(
         neu.select(col("o_orderkey").as("k_new"),
           col("o_orderstatus").as("st_new"), col("cents").as("c_new"))
         .join(old.select(col("o_orderkey").as("k_old"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Scratch
 import graft.operators.Similarity._
 
 /** Oracle-checked similarity-search queries over `embeddings` (M3):
@@ -196,15 +197,18 @@ object SimilarityQueries extends QueryModule {
   /** The index-training recipe every IVF-family query shares: seeds
     * vec_id < k, then two Lloyd rounds over the corpus `b`. Returns
     * round 2's per-(cluster, pos) rows, which kmeans_centroids reports;
-    * [[trainedCentroids]] turns them into the served index. Callers
-    * that serve the index more than once materialize or persist it —
-    * train once, serve many. */
+    * [[trainedCentroids]] turns them into the served index. */
   private def lloydTrain(b: DataFrame, k: Long): DataFrame =
     lloydRound(b, centroidArrays(lloydRound(b, seedCentroids(b, k))))
 
-  /** The trained (cluster, ce, nc) centroid table of [[lloydTrain]]. */
+  /** The trained (cluster, ce, nc) centroid table of [[lloydTrain]],
+    * cut: every IVF-family query serves it more than once (assignment
+    * and probing each re-embed the centroid lineage, so without the cut
+    * the two Lloyd rounds run once per consumer) — train once, serve
+    * many. ann_family persists `centroidArrays(lloydTrain(…))` as an
+    * artifact instead. */
   private def trainedCentroids(b: DataFrame, k: Long = 8L): DataFrame =
-    centroidArrays(lloydTrain(b, k))
+    Scratch.cut(centroidArrays(lloydTrain(b, k)))
 
   // ── PQ building blocks, shared by pq_error (X-101, training + codes
   //    as the deliverable) and ivfpq_topk (X-143, the trained codebook
@@ -403,12 +407,9 @@ object SimilarityQueries extends QueryModule {
     * reused across queries. */
   private def ivfTopK(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val b = base(s, d)
-    // The trained index is MATERIALIZED (8 rows) before serving:
-    // assignment and probing each re-embed the centroid lineage, so
-    // without the cut the two Lloyd training rounds execute once per
-    // consumer (measured 3.2 s → ~2 s at sf0.1). This is also what
-    // deployment means by "index build": train once, serve many.
-    val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
+    // trainedCentroids cuts the 8-row index before serving (measured
+    // 3.2 s → ~2 s at sf0.1 against re-training per consumer).
+    val c2 = trainedCentroids(b)
     val assigned = nearestClusters(b.filter(col("vec_id") >= 10), c2, 1)
     val probes = nearestClusters(b.filter(col("vec_id") < 10), c2, 2)
       .select(col("vec_id").as("q_id"), col("cluster"),
@@ -508,7 +509,7 @@ object SimilarityQueries extends QueryModule {
       newb: DataFrame): DataFrame = {
     val addN = nearestClusters(newb, cents, 1)
       .groupBy("cluster").agg(count(lit(1)).as("added_n"))
-    val report = graft.operators.Dedup.materialize(
+    val report = Scratch.cut(
       cents.select("cluster")
         .join(oldCounts, Seq("cluster"), "left_outer")
         .join(addN, Seq("cluster"), "left_outer")
@@ -624,7 +625,7 @@ object SimilarityQueries extends QueryModule {
       // queries×candidates kNN scan — the most expensive input here
       // (the ivfTopK index-build discipline applied to the truth set;
       // the frame is |queries|·k rows, trivially small).
-      val truth = graft.operators.Dedup.materialize(knnTopK(s, d, LshK))
+      val truth = Scratch.cut(knnTopK(s, d, LshK))
       recallOf(truth, lshTopK(s, d, 0), "lsh")
         .unionByName(recallOf(truth, lshTopK(s, d, LshProbes), "lsh_mp"))
         .unionByName(recallOf(truth, ivfTopK(s, d), "ivf"))
@@ -645,11 +646,11 @@ object SimilarityQueries extends QueryModule {
     // materialized assignment — no arm rebuilds anything.
     "ivf_nprobe_curve" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
-      val assigned = graft.operators.Dedup.materialize(
+      val c2 = trainedCentroids(b)
+      val assigned = Scratch.cut(
         nearestClusters(b.filter(col("vec_id") >= 10), c2, 1)
           .select("vec_id", "cluster", "qe", "nq"))
-      val truth = graft.operators.Dedup.materialize(knnTopK(s, d, LshK))
+      val truth = Scratch.cut(knnTopK(s, d, LshK))
       Seq(1, 2, 4)
         .map(n => nprobeArm(c2, assigned, b.filter(col("vec_id") < 10), truth, n))
         .reduce(_.unionByName(_))
@@ -679,7 +680,7 @@ object SimilarityQueries extends QueryModule {
     // the assignment lineages.
     "ivf_maintenance" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
+      val c2 = trainedCentroids(b)
       val oldN = nearestClusters(b, c2, 1)
         .groupBy("cluster").agg(count(lit(1)).as("old_n"))
       maintLedger(c2, oldN, plantedVariants(b))
@@ -713,12 +714,11 @@ object SimilarityQueries extends QueryModule {
     // every section reads the parquet artifacts (train-once/serve-many
     // made literal), and each section's own shape is its sibling's
     // audited one. The oracle splices the sibling CTE fragments
-    // verbatim (the X-136 discipline). Artifacts live in a
-    // per-invocation Scratch dir (no concurrent-run races; removed at
+    // verbatim (the X-136 discipline). Artifacts are Scratch.artifact
+    // scans (per-(JVM, prefix) dir: no concurrent-run races; removed at
     // JVM exit); a deployment would persist them under a managed
     // warehouse path instead.
     "ann_family" -> ((s, d) => {
-      val artDir = graft.operators.Scratch.dir("ann_family")
       // ── stage 1: train once, persist index + truth. The coarse
       // index follows the X-110 scale law since r13: k derived from
       // the corpus count (oracle mirrors the derivation — floors at
@@ -727,26 +727,17 @@ object SimilarityQueries extends QueryModule {
       // no n×k exchange at any k. ──
       val b = base(s, d)
       val k = semDedupK(Tables.embeddings(s, d).count())
-      trainedCentroids(b, k)
-        .write.mode("overwrite").parquet(s"$artDir/centroids")
-      // explicit schemas: an all-empty write may emit no part files,
-      // and a schema-less read of such a directory cannot infer one
-      val cents = s.read.schema("cluster BIGINT, ce ARRAY<BIGINT>, nc BIGINT")
-        .parquet(s"$artDir/centroids")
-      nearestClusters(b, cents, 1).select("vec_id", "cluster", "qe", "nq")
-        .write.mode("overwrite").parquet(s"$artDir/assigned")
-      val assigned = s.read
-        .schema("vec_id BIGINT, cluster BIGINT, qe ARRAY<BIGINT>, nq BIGINT")
-        .parquet(s"$artDir/assigned")
+      val cents = Scratch.artifact(centroidArrays(lloydTrain(b, k)),
+        "ann_family", "centroids")
+      val assigned = Scratch.artifact(
+        nearestClusters(b, cents, 1).select("vec_id", "cluster", "qe", "nq"),
+        "ann_family", "assigned")
       val qs = broadcast(assigned.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("qe").as("q_qe"), col("nq").as("q_nq")))
-      graft.operators.Rank.topKPerGroup(
+      val truth = Scratch.artifact(graft.operators.Rank.topKPerGroup(
           scored(assigned.filter(col("vec_id") >= 10).crossJoin(qs)),
           LshK, Seq("q_id"), Seq(col("cos").desc, col("vec_id")))
-        .select(col("q_id"), col("vec_id").as("neighbor_id"))
-        .write.mode("overwrite").parquet(s"$artDir/truth")
-      val truth = s.read.schema("q_id BIGINT, neighbor_id BIGINT")
-        .parquet(s"$artDir/truth")
+        .select(col("q_id"), col("vec_id").as("neighbor_id")), "ann_family", "truth")
       // ── stage 2: every section a scan of the artifacts ──
       val centSec = cents
         .join(assigned.groupBy("cluster").agg(count(lit(1)).as("nm")),
@@ -766,49 +757,26 @@ object SimilarityQueries extends QueryModule {
       val sampleSec = quotaSample(assigned.select("vec_id", "cluster"))
       semDedupGate(s, assigned)
       val semSec = semDedupDrops(assigned)
-      // tagged union of the six sections (null-padded wide schema)
-      val nL = lit(null).cast("long"); val nD = lit(null).cast("double")
-      val nS = lit(null).cast("string"); val nI = lit(null).cast("int")
-      val nB = lit(null).cast("boolean")
-      centSec.select(lit("centroid").as("kind"), col("cluster"), nL.as("vec_id"),
-          col("pos"), col("c_fx"), col("n_members"), nS.as("method"),
-          nL.as("q_id"), nL.as("n_true"), nL.as("n_hit"), nD.as("recall"),
-          nL.as("n_cand"), nD.as("cos"), nI.as("rk"), nL.as("n_cluster"),
-          nD.as("max_cos"), nL.as("old_n"), nL.as("added_n"), nL.as("new_n"),
-          nL.as("load_ppm"), nB.as("retrain_hint"), nL.as("near_id"))
-        .unionByName(curveSec.select(lit("curve").as("kind"), nL.as("cluster"),
-          nL.as("vec_id"), nI.as("pos"), nL.as("c_fx"), nL.as("n_members"),
-          col("method"), col("q_id"), col("n_true"), col("n_hit"), col("recall"),
-          col("n_cand"), nD.as("cos"), nI.as("rk"), nL.as("n_cluster"),
-          nD.as("max_cos"), nL.as("old_n"), nL.as("added_n"), nL.as("new_n"),
-          nL.as("load_ppm"), nB.as("retrain_hint"), nL.as("near_id")))
-        .unionByName(outSec.select(lit("outlier").as("kind"), col("cluster"),
-          col("vec_id"), nI.as("pos"), nL.as("c_fx"), nL.as("n_members"),
-          nS.as("method"), nL.as("q_id"), nL.as("n_true"), nL.as("n_hit"),
-          nD.as("recall"), nL.as("n_cand"), col("cos_c").as("cos"), col("rk"),
-          col("n_cluster"), col("max_cos"), nL.as("old_n"), nL.as("added_n"),
-          nL.as("new_n"), nL.as("load_ppm"), nB.as("retrain_hint"),
-          nL.as("near_id")))
-        .unionByName(maintSec.select(lit("maint").as("kind"), col("cluster"),
-          nL.as("vec_id"), nI.as("pos"), nL.as("c_fx"), nL.as("n_members"),
-          nS.as("method"), nL.as("q_id"), nL.as("n_true"), nL.as("n_hit"),
-          nD.as("recall"), nL.as("n_cand"), nD.as("cos"), nI.as("rk"),
-          nL.as("n_cluster"), nD.as("max_cos"), col("old_n"), col("added_n"),
-          col("new_n"), col("load_ppm"), col("retrain_hint"), nL.as("near_id")))
-        .unionByName(sampleSec.select(lit("sample").as("kind"), col("cluster"),
-          col("vec_id"), nI.as("pos"), nL.as("c_fx"), nL.as("n_members"),
-          nS.as("method"), nL.as("q_id"), nL.as("n_true"), nL.as("n_hit"),
-          nD.as("recall"), nL.as("n_cand"), nD.as("cos"), col("rk"),
-          col("n_cluster"), nD.as("max_cos"), nL.as("old_n"), nL.as("added_n"),
-          nL.as("new_n"), nL.as("load_ppm"), nB.as("retrain_hint"),
-          nL.as("near_id")))
-        .unionByName(semSec.select(lit("semdedup").as("kind"), col("cluster"),
-          col("vec_id"), nI.as("pos"), nL.as("c_fx"), nL.as("n_members"),
-          nS.as("method"), nL.as("q_id"), nL.as("n_true"), nL.as("n_hit"),
-          nD.as("recall"), nL.as("n_cand"), col("cos"), nI.as("rk"),
-          nL.as("n_cluster"), nD.as("max_cos"), nL.as("old_n"), nL.as("added_n"),
-          nL.as("new_n"), nL.as("load_ppm"), nB.as("retrain_hint"),
-          col("near_id")))
+      // tagged union of the six sections; unionByName pads each
+      // section's missing columns with typed nulls
+      Seq(
+        centSec.select(lit("centroid").as("kind"), col("cluster"), col("pos"),
+          col("c_fx"), col("n_members")),
+        curveSec.select(lit("curve").as("kind"), col("method"), col("q_id"),
+          col("n_true"), col("n_hit"), col("recall"), col("n_cand")),
+        outSec.select(lit("outlier").as("kind"), col("cluster"), col("vec_id"),
+          col("cos_c").as("cos"), col("rk"), col("n_cluster"), col("max_cos")),
+        maintSec.select(lit("maint").as("kind"), col("cluster"), col("old_n"),
+          col("added_n"), col("new_n"), col("load_ppm"), col("retrain_hint")),
+        sampleSec.select(lit("sample").as("kind"), col("cluster"), col("vec_id"),
+          col("rk"), col("n_cluster")),
+        semSec.select(lit("semdedup").as("kind"), col("cluster"), col("vec_id"),
+          col("cos"), col("near_id")))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .select("kind", "cluster", "vec_id", "pos", "c_fx", "n_members", "method",
+          "q_id", "n_true", "n_hit", "recall", "n_cand", "cos", "rk", "n_cluster",
+          "max_cos", "old_n", "added_n", "new_n", "load_ppm", "retrain_hint",
+          "near_id")
         .orderBy(col("kind"), coalesce(col("method"), lit("")),
           coalesce(col("cluster"), lit(-1L)), coalesce(col("q_id"), lit(-1L)),
           coalesce(col("vec_id"), lit(-1L)), coalesce(col("pos"), lit(-1)),
@@ -863,8 +831,8 @@ object SimilarityQueries extends QueryModule {
     // window keyed on ≤8 clusters would funnel n/8 rows per task).
     "centroid_outliers" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
-      val assigned = graft.operators.Dedup.materialize(
+      val c2 = trainedCentroids(b)
+      val assigned = Scratch.cut(
         nearestClusters(b, c2, 1).select("vec_id", "cluster", "qe", "nq"))
       outlierReport(c2, assigned).orderBy("cluster", "rk")
     }),
@@ -970,8 +938,8 @@ object SimilarityQueries extends QueryModule {
     // forbids); the only hint is the ≤8-row cluster-sizes frame.
     "cluster_balanced_sample" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b))
-      val assigned = graft.operators.Dedup.materialize(
+      val c2 = trainedCentroids(b)
+      val assigned = Scratch.cut(
         nearestClusters(b, c2, 1).select("vec_id", "cluster"))
       quotaSample(assigned).orderBy("cluster", "rk")
     }),
@@ -1063,8 +1031,8 @@ object SimilarityQueries extends QueryModule {
       // k derivation is part of the index BUILD (one metadata-cheap
       // count, the same eager-construction class as the gate below)
       val k = semDedupK(Tables.embeddings(s, d).count())
-      val c2 = graft.operators.Dedup.materialize(trainedCentroids(b, k))
-      val assigned = graft.operators.Dedup.materialize(
+      val c2 = trainedCentroids(b, k)
+      val assigned = Scratch.cut(
         nearestClusters(b, c2, 1).select("vec_id", "cluster", "qe", "nq"))
       // The max-cluster gate is a driver-side `.first()` over a 1-row
       // aggregate of the ALREADY-materialized assignment — i.e. it
@@ -1129,7 +1097,7 @@ object SimilarityQueries extends QueryModule {
     "ivfpq_topk" -> ((s, d) => {
       val b = base(s, d)
       // coarse quantizer: ivf_topk's trained + materialized index
-      val coarse = graft.operators.Dedup.materialize(trainedCentroids(b))
+      val coarse = trainedCentroids(b)
       val assigned = nearestClusters(b.filter(col("vec_id") >= 10), coarse, 1)
         .select(col("vec_id"), col("cluster"))
       val probes = nearestClusters(b.filter(col("vec_id") < 10), coarse, 2)
@@ -1138,7 +1106,7 @@ object SimilarityQueries extends QueryModule {
       // because BOTH the candidate code assignment and the ADC tables
       // consume it (each would otherwise re-run the training round)
       val sv = pqSubvectors(b.select(col("vec_id"), col("qe")))
-      val cb = graft.operators.Dedup.materialize(pqTrain(sv))
+      val cb = Scratch.cut(pqTrain(sv))
       val codes = pqAssign(sv.filter(col("vec_id") >= 10), cb)
         .select(col("vec_id"), col("sub"), col("cluster").as("code"))
       val tables = pqDists(sv.filter(col("vec_id") < 10), cb)
@@ -1189,7 +1157,7 @@ object SimilarityQueries extends QueryModule {
       def sqL2(sv: Column): Column =
         aggregate(zip_with(col("qe"), sv, (p, q) => (p - q) * (p - q)),
           lit(0L), (a, v) => a + v)
-      val s1 = graft.operators.Dedup.materialize(
+      val s1 = Scratch.cut(
         b.orderBy("vec_id").limit(1)
           .select(col("vec_id"), col("qe"), lit(1).as("seed_rk"),
             lit(null).cast("long").as("dist_fx")))
@@ -1209,7 +1177,7 @@ object SimilarityQueries extends QueryModule {
         // embeddings scan's fan-out repartition — the audited
         // CPU-dense single-split-file discipline — ∝ n per round;
         // the fetch join itself moves 1 row.)
-        graft.operators.Dedup.materialize(
+        Scratch.cut(
           b.join(broadcast(far), "vec_id")
             .select(col("vec_id"), col("qe"), lit(rk).as("seed_rk"),
               col("dist_fx")))
@@ -1239,7 +1207,7 @@ object SimilarityQueries extends QueryModule {
       val b = base(s, d)
       val qs = broadcast(b.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("qe").as("q_qe"), col("nq").as("q_nq")))
-      val pool = graft.operators.Dedup.materialize(
+      val pool = Scratch.cut(
         graft.operators.Rank.topKPerGroup(
             scored(b.filter(col("vec_id") >= 10).crossJoin(qs)),
             MmrPool, Seq("q_id"), Seq(col("cos").desc, col("vec_id")))
@@ -1252,7 +1220,7 @@ object SimilarityQueries extends QueryModule {
       // SortMergeJoin (24 of them: two exchanges + sorts per ≤640-row
       // join). Broadcast hints on the provably-bounded sides convert
       // them all (r14, guide §3.1; plan diff: SortMergeJoin 24 → 0).
-      val sims = graft.operators.Dedup.materialize(
+      val sims = Scratch.cut(
         pool.select(col("q_id"), col("vec_id").as("ca"),
             col("qe").as("a_qe"), col("nq").as("a_nq"))
           .join(broadcast(pool.select(col("q_id").as("r_qid"), col("vec_id").as("cb"),
@@ -1323,7 +1291,7 @@ object SimilarityQueries extends QueryModule {
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
       val q = Tables.embeddings(s, d).select(
         graft.functions.QuantizeFx.quantize_fx(col("embedding"), 10000.0).as("q"))
-      val g = graft.operators.Dedup.materialize(
+      val g = Scratch.cut(
         q.agg(gram(col("q")).as("g"))
           .select(posexplode(col("g")).as(Seq("idx", "s")))
           .select(expr("CAST(idx div 64 AS BIGINT)").as("i"),

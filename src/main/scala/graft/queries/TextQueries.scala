@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Scratch}
 import graft.operators.TextAnalysis._
 
 /** Oracle-checked text-analysis queries over `documents` (M3 extension
@@ -273,7 +273,7 @@ object TextQueries extends QueryModule {
       // materialized: the tokenize feeds bounds, the per-bucket doc
       // stats, AND the first-occurrence explode — unmaterialized it
       // re-runs the corpus regex+split three times (the minhash sh rule)
-      val perDoc = graft.operators.Dedup.materialize(Tables.documents(s, d)
+      val perDoc = Scratch.cut(Tables.documents(s, d)
         .select(col("doc_id"), tokens(norm(col("text"))).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_toks"),
           col("toks")))
@@ -344,20 +344,20 @@ object TextQueries extends QueryModule {
       // degree rollup and the edge normalization — unmaterialized each
       // re-runs tokenize+ngrams over the corpus (twice each through the
       // symmetrizing union)
-      val und = graft.operators.Dedup.materialize(
+      val und = Scratch.cut(
         big.select(col("w1").as("u"), col("w2").as("v"))
           .union(big.select(col("w2").as("u"), col("w1").as("v")))
           .groupBy("u", "v").agg(count(lit(1)).as("w")))
-      val wdeg = graft.operators.Dedup.materialize(
+      val wdeg = Scratch.cut(
         und.groupBy("u").agg(sum(col("w")).as("wdeg")))
-      val edges = graft.operators.Dedup.materialize(
+      val edges = Scratch.cut(
         und.join(wdeg, "u")
           .select(col("u"), col("v"), expr(s"(w * $PFx) div wdeg").as("p_fx")))
-      val nodes = graft.operators.Dedup.materialize(
+      val nodes = Scratch.cut(
         edges.select(col("u").as("token")).distinct())
       val stats = nodes.agg(count(lit(1)).as("nv"))
       def iterate(rIn: DataFrame): DataFrame = {
-        val r = graft.operators.Dedup.materialize(rIn)
+        val r = Scratch.cut(rIn)
         val contrib = edges.join(r, edges("u") === r("token"))
           .select(col("v"), expr(s"(sc * p_fx) div $PFx").as("c"))
           .groupBy("v").agg(sum(col("c")).as("csum"))
@@ -492,7 +492,7 @@ object TextQueries extends QueryModule {
     // consumer re-executes the scan + tokenize + earlier rounds'
     // rewrites (the connectedComponents 8×-measured recompute).
     "bpe_merges" -> ((s, d) => {
-      val t0 = Dedup.materialize(Tables.documents(s, d)
+      val t0 = Scratch.cut(Tables.documents(s, d)
         .select(col("doc_id"), tokens(norm(col("text"))).as("toks")))
       def top1(t: org.apache.spark.sql.DataFrame) = t
         .select(explode(ngrams(col("toks"), 2)).as("bg"))
@@ -508,7 +508,7 @@ object TextQueries extends QueryModule {
             bpeMergeOnce(col("toks"), col("a"), col("b")).as("toks"))
       def total(t: org.apache.spark.sql.DataFrame) =
         t.agg(sum(size(col("toks"))).as("n_tokens_after"))
-      val m1 = top1(t0); val t1 = Dedup.materialize(merged(t0, m1))
+      val m1 = top1(t0); val t1 = Scratch.cut(merged(t0, m1))
       val m2 = top1(t1); val t2 = merged(t1, m2)
       m1.withColumn("merge_round", lit(1)).crossJoin(broadcast(total(t1)))
         .unionByName(
@@ -692,7 +692,7 @@ object TextQueries extends QueryModule {
     // |sources|-bounded.
     "source_datacard" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val base = Dedup.materialize(
+      val base = Scratch.cut(
         gopherBase(s, d)
           .withColumn("pass",
             gopherPreds.reduce(_ && _).cast("long"))
@@ -722,13 +722,13 @@ object TextQueries extends QueryModule {
 
     "tf_cosine_pairs" -> ((s, d) => {
       val DfCap = 8
-      val tf = Dedup.materialize(
+      val tf = Scratch.cut(
         Tables.documents(s, d)
           .select(col("doc_id"),
             explode(tokens(norm(col("text")))).as("tok"))
           .filter(col("tok") =!= "")
           .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
-      val sh = Dedup.materialize(
+      val sh = Scratch.cut(
         Dedup.shingled(Tables.documents(s, d))
           .select(col("doc_id"), explode(col("ss")).as("sh")))
       val keep = sh.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -845,7 +845,7 @@ object TextQueries extends QueryModule {
       // dedup arm (shingles → prefix-filtered pairs → components) both
       // derive from this materialized token base — without it each arm
       // re-runs the scan + regex tokenization on its own lineage.
-      val base = Dedup.materialize(
+      val base = Scratch.cut(
         docs.withColumn("toks", tokens(norm(col("text")))).select("doc_id", "toks"))
       val q = base
         .select(col("doc_id"),
@@ -856,7 +856,7 @@ object TextQueries extends QueryModule {
         .withColumn("score",
           qualityScore(col("n_tokens"), col("n_distinct"), col("stop_hits")))
         .withColumn("grade", grade(col("score")))
-      val sized = Dedup.materialize(
+      val sized = Scratch.cut(
         base.withColumn("ss", Dedup.shingles(col("toks"), 3))
           .select(col("doc_id"), col("ss"), size(col("ss")).as("n")))
       val nonCanonical = Dedup
@@ -1096,7 +1096,7 @@ object TextQueries extends QueryModule {
       // materialized: the one corpus-linear aggregate feeds srcs, vals,
       // tot, the grid fill, and (through cum) BOTH sides of the pair
       // self-join — unmaterialized each consumer re-embeds the scan
-      val cnt = graft.operators.Dedup.materialize(Tables.documents(s, d)
+      val cnt = Scratch.cut(Tables.documents(s, d)
         .select(col("source"), col("n_chars").cast("long").as("v"))
         .groupBy("source", "v").agg(count(lit(1)).as("c")))
       val srcs = cnt.select("source").distinct()
@@ -1657,7 +1657,7 @@ object TextQueries extends QueryModule {
       .select(col("doc_id"), col("lang"),
         explode(ngrams(tokens(norm(col("text"))), 2)).as("g"))
       .withColumn("bucket", tokenHash(col("g")) % B)
-    val counts = Dedup.materialize(grams.groupBy("bucket").agg(
+    val counts = Scratch.cut(grams.groupBy("bucket").agg(
       count(lit(1)).as("c_r"),
       sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c_t")))
     val tot = counts.agg(sum(col("c_r")).as("n_r"), sum(col("c_t")).as("n_t"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Independent plain-Scala references for the corpus-maintenance and
   * retention queries (stopword strip with document reconstruction,

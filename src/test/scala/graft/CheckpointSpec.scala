@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 /** Reliable-checkpoint branch coverage (round-8 item #4).
   *
-  * `Dedup.materialize` switches from executor-local `localCheckpoint`
+  * `Scratch.cut` switches from executor-local `localCheckpoint`
   * to a reliable `df.checkpoint(true)` whenever the SparkContext has a
   * checkpoint dir configured — the 100 TB recovery posture (an executor
   * loss mid-iteration must be recomputable from durable storage, not
@@ -56,7 +56,7 @@ class CheckpointSpec extends SparkSpec {
 
   test("quantile selection under a reliable checkpoint dir: same rows selected") {
     // pathological fixture forcing the refinement loop (its steering
-    // frames and materialized cuts all route through materialize)
+    // frames and materialized cuts all route through Scratch.cut)
     val rows =
       (1 to 5000).map(i => ("g", ((i * 2654435761L) % 10007L).toDouble / 1435.0, i.toLong)) ++
       Seq(("g", 1e9, 90001L)) ++

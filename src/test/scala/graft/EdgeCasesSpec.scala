@@ -174,6 +174,15 @@ class EdgeCasesSpec extends SparkSpec {
       .count() shouldEqual 0
     SparkEntry.queries("ngram_novelty")(spark, emptyCorpusDir)
       .count() shouldEqual 0
+    // the capstones' Scratch artifacts of an empty corpus are read back
+    // with the written schema (an all-empty write may emit no part
+    // files); dedup_family keeps only its 4×4 method grid, all zeros
+    val fam = SparkEntry.queries("dedup_family")(spark, emptyCorpusDir).collect()
+    fam.map(_.getAs[String]("kind")).toSet shouldEqual Set("matrix")
+    fam.length shouldEqual 10
+    fam.map(_.getAs[Long]("n_common")).toSet shouldEqual Set(0L)
+    SparkEntry.queries("ann_family")(spark, emptyCorpusDir)
+      .count() shouldEqual 0
   }
 
   test("bm25_score: only docs carrying a query term appear; scores are positive") {

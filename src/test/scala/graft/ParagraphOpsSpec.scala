@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** X-161 paragraph_dedup / X-162 boilerplate_strip pinned against an
   * independent plain-Scala reference implementation over the sf0.001

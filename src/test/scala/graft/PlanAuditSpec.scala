@@ -34,9 +34,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("the near-dup pair pipeline (inside the iterative queries) joins on keys") {
-    // materializeInput=false keeps the full declarative lineage visible
+    // the uncut sized frame keeps the full declarative lineage visible
     val p = operators.Dedup
-      .jaccardPairs(Tables.documents(spark, sf), 0.5, materializeInput = false)
+      .jaccardPairsSized(operators.Dedup.sized(Tables.documents(spark, sf)), 0.5)
       .queryExecution.executedPlan.toString
     p should not include "CartesianProduct"
     // the candidate join must be prefix-bounded (AllPairs): the rarest-

@@ -80,7 +80,6 @@ class ArgMaxCosFxSpec extends SparkSpec {
   }
 
   test("zero-norm CENTROID scores null like cosFx; empty cs is null") {
-    import spark.implicits._
     // centroid 0 is the zero vector (nc = 0 -> cos null); centroid 1 real
     agree(frame(Seq((0L, Seq(5L, 5L))),
       Seq((0L, Seq(0L, 0L)), (1L, Seq(1L, 0L)))))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -72,7 +72,6 @@ class ArgMinL2FxSpec extends SparkSpec {
   }
 
   test("empty cands is a null struct; survives interpreted eval") {
-    import spark.implicits._
     val empty = frame(Seq((0L, Seq(1L, 2L))), Seq.empty)
     empty.select(argmin_l2_fx(col("sv"), col("cands"))).collect()
       .head.isNullAt(0) shouldEqual true

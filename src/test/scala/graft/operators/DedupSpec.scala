@@ -120,10 +120,10 @@ class DedupSpec extends SparkSpec {
     val base = (1 to 30).map(i => s"w$i").mkString(" ")
     val near = ((1 to 28).map(i => s"w$i") ++ Seq("x1", "x2")).mkString(" ")
     val docs = df(1 -> base, 2 -> near, 3 -> base)
-    def rows(materialized: Boolean) =
-      jaccardPairs(docs, t = 0.5, materializeInput = materialized)
-        .orderBy("d1", "d2").collect().map(_.toSeq).toSeq
-    rows(materialized = true) shouldEqual rows(materialized = false)
+    def rows(pairs: org.apache.spark.sql.DataFrame) =
+      pairs.orderBy("d1", "d2").collect().map(_.toSeq).toSeq
+    rows(jaccardPairs(docs, t = 0.5)) shouldEqual
+      rows(jaccardPairsSized(sized(docs), t = 0.5))
   }
 
   test("connectedComponents labels chains and triangles with the component min") {

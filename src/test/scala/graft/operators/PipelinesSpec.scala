@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Golden E2E for the composed reference pipeline (M5): exact output
   * schema and per-row values over a literal fixture. */

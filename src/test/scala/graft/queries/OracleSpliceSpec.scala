@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** r11 (round-10 verdict item #8): the shared-SQL splice map is the
   * engine's anti-drift guarantee — a fragment edited in ONE place must
@@ -92,11 +91,8 @@ class OracleSpliceSpec extends SparkSpec {
 
   test("the spliced thresholds BIND: perturbing them changes consumer output") {
     val sf = "/root/testdata/sf0.001"
-    import graft.operators.Dedup
-    val sized = Dedup.materialize(
-      Dedup.shingled(Tables.documents(spark, sf))
-        .select(col("doc_id"), col("ss"),
-          org.apache.spark.sql.functions.size(col("ss")).as("n")))
+    import graft.operators.{Dedup, Scratch}
+    val sized = Scratch.cut(Dedup.sized(Tables.documents(spark, sf)))
     // Jaccard 0.5 (shSql+ccSql consumers): a stricter threshold must
     // drop at least one pair — the constant is live, so a fragment
     // mutation of it would hash-diverge its consumers
@@ -115,9 +111,7 @@ class OracleSpliceSpec extends SparkSpec {
       toksDoc(2, base.take(12) ++ Seq("uX", "uY")),       // cont ≈ 0.83
       toksDoc(3, base.take(6) ++ Seq("uA", "uB", "uC", "uD"))) // ≈ 0.5
       .toDF("doc_id", "text")
-    val psized = Dedup.shingled(partial)
-      .select(col("doc_id"), col("ss"),
-        org.apache.spark.sql.functions.size(col("ss")).as("n"))
+    val psized = Dedup.sized(partial)
     val c50 = Dedup.containmentPairsSized(psized, 0.5).count()
     val c80 = Dedup.containmentPairsSized(psized, 0.8).count()
     val c95 = Dedup.containmentPairsSized(psized, 0.95).count()

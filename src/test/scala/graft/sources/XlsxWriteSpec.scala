@@ -20,7 +20,6 @@ class XlsxWriteSpec extends SparkSpec {
     Files.createTempDirectory(prefix).toString
 
   test("write → read round-trip: strings, numbers, booleans, nulls, unicode, whitespace") {
-    import spark.implicits._
     val schema = StructType(Seq(
       StructField("name", StringType), StructField("n", LongType),
       StructField("x", DoubleType), StructField("ok", BooleanType)))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{SparkSpec, Tables}
-import graft.operators.{Dedup, Ingest}
+import graft.operators.{Dedup, Ingest, Scratch}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -29,10 +29,10 @@ class IngestPipelineSpec extends SparkSpec {
 
     // standing index artifacts, built ONCE (the persisted-index posture)
     val docsAll = Tables.documents(spark, sf)
-    val sh = Dedup.materialize(Dedup.shingled(docsAll))
+    val sh = Scratch.cut(Dedup.shingled(docsAll))
     val idxSh = sh.filter(!Ingest.isNew(col("doc_id")))
-    val idxStack = Dedup.materialize(Ingest.bandStack(idxSh))
-    val idxLabels = Dedup.materialize(Dedup.connectedComponents(
+    val idxStack = Scratch.cut(Ingest.bandStack(idxSh))
+    val idxLabels = Scratch.cut(Dedup.connectedComponents(
       Dedup.jaccardPairsSized(
         idxSh.select(col("doc_id"), col("ss"),
           org.apache.spark.sql.functions.size(col("ss")).as("n")),

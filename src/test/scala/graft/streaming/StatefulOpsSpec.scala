@@ -3,7 +3,6 @@ package graft.streaming
 import graft.{SparkSpec, Tables}
 import graft.streaming.StatefulOps.EvRow
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** X-24 micro-batch ≡ batch: the SAME StatefulOps.userStates code run
   * (a) as one batch over the events table — the registered
