@@ -77,34 +77,56 @@ object RobotsTxt {
       filter(groupRules(robotsTxt), r => !r.getField("allow")),
       r => r.getField("path"))
 
-  /** Plain-Scala twin of [[groupRules]] for the LIVE fetch path (r13):
-    * the DSv2 `graft-web` reader consults robots on executors, outside
-    * any Catalyst context, so the same group model runs here as a
-    * line fold. RobotsTxtSpec pins this twin against the column form
-    * on shared fixtures, so the two implementations cannot drift.
-    * Returns (allow, pathPrefix) in file order. */
-  def groupRulesScala(robotsTxt: String): Seq[(Boolean, String)] = {
+  /** The group fold of the LIVE fetch path: the DSv2 `graft-web`
+    * reader consults robots on executors, outside any Catalyst context,
+    * so the same group model [[groupRules]] folds in Catalyst runs here
+    * as a line fold. Calls `directive(lowerCasedLine, value)` for every
+    * non-`User-agent` line of a group that applies to `*`, in file
+    * order; noise lines neither count nor break a header run. */
+  private def foldStarGroup(robotsTxt: String)(directive: (String, String) => Unit): Unit = {
     var run = false
     var star = false
-    val out = Seq.newBuilder[(Boolean, String)]
     robotsTxt.replace('\t', ' ').split("\r?\n", -1).foreach { raw =>
       val line = raw.replaceAll("#.*", "").trim
-      if (line.isEmpty) {
-        // noise: contributes nothing and does NOT break a header run
-      } else {
+      if (line.nonEmpty) {
         val low = line.toLowerCase(java.util.Locale.ROOT)
         val value = line.replaceAll("^[^:]*:", "").trim
         val isUa = low.startsWith("user-agent:")
-        if (isUa) {
-          star = if (run) star || value == "*" else value == "*"
-        } else if ((low.startsWith("disallow:") || low.startsWith("allow:"))
-            && star && value.nonEmpty) {
-          out += ((low.startsWith("allow:"), value))
-        }
+        if (isUa) star = if (run) star || value == "*" else value == "*"
+        else if (star) directive(low, value)
         run = isUa
       }
     }
+  }
+
+  /** Plain-Scala twin of [[groupRules]] over [[foldStarGroup]].
+    * RobotsTxtSpec pins this twin against the column form on shared
+    * fixtures, so the two implementations cannot drift.
+    * Returns (allow, pathPrefix) in file order. */
+  def groupRulesScala(robotsTxt: String): Seq[(Boolean, String)] = {
+    val out = Seq.newBuilder[(Boolean, String)]
+    foldStarGroup(robotsTxt) { (low, value) =>
+      if ((low.startsWith("disallow:") || low.startsWith("allow:")) && value.nonEmpty)
+        out += ((low.startsWith("allow:"), value))
+    }
     out.result()
+  }
+
+  // integer or decimal seconds; anything else (negative, units, junk)
+  // is not a delay
+  private val CrawlDelayValue = "[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+".r
+
+  /** `Crawl-delay` of the `*` group in seconds, through the same group
+    * fold as [[groupRulesScala]], so a delay inside a non-`*` group is
+    * ignored. Non-standard (RFC 9309 leaves it out), so the most
+    * conservative reading: the largest valid value when several appear. */
+  def crawlDelayScala(robotsTxt: String): Option[Double] = {
+    var delay: Option[Double] = None
+    foldStarGroup(robotsTxt) { (low, value) =>
+      if (low.startsWith("crawl-delay:") && CrawlDelayValue.matches(value))
+        delay = Some(math.max(delay.getOrElse(0.0), value.toDouble))
+    }
+    delay
   }
 
   /** RFC 9309 §2.2.2 precedence over [[groupRulesScala]] rules — the

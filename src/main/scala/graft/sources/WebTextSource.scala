@@ -49,21 +49,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * site never fails the partition, let alone the job.
   *
   * Scale posture: each input partition carries a slice of the URL
-  * list (`numPartitions`, default min(8, n)); one fetch in flight per
-  * task, one shared JDK HttpClient per executor JVM (`@transient
-  * lazy`), which is the reference's strictly-sequential loop
-  * parallelized across executors.
+  * list (`numPartitions`, default min(8, n)). A task runs one HOST
+  * CHAIN per distinct host in its slice, the chains concurrently on a
+  * small pool of daemon threads (min(hosts, [[WebTextSource.MaxHostChains]]
+  * = 16) per task): each chain is that host's own serial sequence, so
+  * a task has up to 16 requests in flight but never two to one host.
+  * Rows still come out in the slice's URL order. One shared JDK
+  * HttpClient per executor JVM (`@transient lazy`). This is the
+  * reference's strictly-sequential loop (app.py:290) made parallel
+  * ACROSS hosts and kept serial WITHIN one.
   *
   * Crawl governance (r13, the X-133/X-134/X-135 batch gates applied
   * LIVE): `.option("respectRobots", "true")` fetches each host's
-  * `/robots.txt` once per task, parses it with the RFC 9309 group
-  * model ([[graft.operators.RobotsTxt.groupRulesScala]], pinned
-  * against the Catalyst twin), applies longest-match/Allow-wins
-  * precedence, and emits a [[RobotsBlockedStatus]] row WITHOUT
-  * fetching a disallowed URL (unreachable robots = full disallow,
-  * unavailable 4xx = allow, per RFC 9309 §2.3.1).
+  * `/robots.txt` once per task, first in the host's chain, parses it
+  * with the RFC 9309 group model
+  * ([[graft.operators.RobotsTxt.groupRulesScala]], pinned against the
+  * Catalyst twin), applies longest-match/Allow-wins precedence, and
+  * emits a [[RobotsBlockedStatus]] row WITHOUT fetching a disallowed
+  * URL (unreachable robots = full disallow, unavailable 4xx = allow,
+  * per RFC 9309 §2.3.1).
   * `.option("politenessMs", "500")` enforces a minimum gap between
-  * consecutive requests to the same host, robots fetch included.
+  * consecutive requests to the same host, robots fetch included. A
+  * `Crawl-delay` in the robots `*` group widens that gap to
+  * max(politenessMs, delay), the delay capped at `timeoutMs` so a
+  * hostile robots.txt cannot stall a task without bound.
   * Either option switches the planner to HOST-GROUPED partitions (a
   * host never spans two tasks, so per-host state is partition-local);
   * the reference gets this for free by crawling sequentially
@@ -82,6 +91,32 @@ object WebTextSource {
     * the null-status transport-error row so a frontier can separate
     * "politely skipped" from "host down". */
   val RobotsBlockedStatus: Int = -1
+
+  /** Most host chains a reader runs at once (its thread-pool size is
+    * min(distinct hosts in the partition, this)); further hosts' chains
+    * queue in order of first appearance. Fixed on purpose, not an
+    * option: it bounds one task's threads and sockets. */
+  val MaxHostChains: Int = 16
+
+  /** (scheme, lower-cased authority), or None when the URL has no
+    * parseable scheme+authority. */
+  private[sources] def authorityOf(url: String): Option[(String, String)] =
+    try {
+      val u = java.net.URI.create(url)
+      for (a <- Option(u.getAuthority); s <- Option(u.getScheme))
+        yield (s, a.toLowerCase(java.util.Locale.ROOT))
+    } catch { case _: IllegalArgumentException => None }
+
+  /** The host a URL's requests are serialized on: its authority, or the
+    * URL itself when it has none. Host-grouped planning and the
+    * reader's host chains both key on it. */
+  private[sources] def hostOf(url: String): String =
+    authorityOf(url).map(_._2).getOrElse(url)
+
+  private[sources] def pathOf(url: String): String =
+    try Option(java.net.URI.create(url).getRawPath).filter(_.nonEmpty)
+      .getOrElse("/")
+    catch { case _: IllegalArgumentException => "/" }
 
   val Schema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = false),
@@ -212,7 +247,7 @@ object WebTextSource {
         val resp = fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
         (resp.statusCode(), resp.body())
       } catch {
-        case e: java.util.concurrent.TimeoutException =>
+        case e @ (_: java.util.concurrent.TimeoutException | _: InterruptedException) =>
           fut.cancel(true)
           throw e
         case e: java.util.concurrent.ExecutionException =>
@@ -434,16 +469,13 @@ class WebTextScan(urls: Array[String], numPartitions: Int, timeoutMs: Long,
       // the one-robots-fetch-per-host cache are partition-local
       // properties only if a host never spans two tasks. Hosts are
       // spread round-robin by first appearance; within a partition the
-      // original URL order is kept, so a task interleaves its hosts
-      // and fetches one host's page while another host's politeness
-      // window elapses. (The reference crawls strictly sequentially —
-      // accidental politeness; this is the scale-correct form: full
-      // parallelism ACROSS hosts, serial WITHIN one.)
-      val hostOf = urls.map { u =>
-        u -> (try Option(java.net.URI.create(u).getAuthority)
-          .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse(u)
-        catch { case _: IllegalArgumentException => u })
-      }.toMap
+      // original URL order is kept, and the reader runs each host's
+      // URLs as one serial chain, the chains concurrently — one host's
+      // page is fetched while another host's politeness window elapses.
+      // (The reference crawls strictly sequentially — accidental
+      // politeness; this is the scale-correct form: full parallelism
+      // ACROSS hosts, serial WITHIN one.)
+      val hostOf = urls.map(u => u -> WebTextSource.hostOf(u)).toMap
       val hosts = urls.map(hostOf).distinct
       val n = math.max(1,
         if (numPartitions > 0) math.min(numPartitions, hosts.length)
@@ -486,102 +518,119 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
     fetcher: WebTextSource.PageFetcher = WebTextSource.HttpPageFetcher,
     respectRobots: Boolean = false, politenessMs: Long = 0L)
     extends PartitionReader[InternalRow] {
+  import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, TimeUnit}
+
   private var i = -1
   private var row: InternalRow = _
 
-  // ── crawl governance (r13): per-host robots cache + request spacing.
-  // Host-grouped planning guarantees a host never spans two tasks, so
-  // partition-local state IS per-host state. ──
-  // None = robots UNREACHABLE (5xx/transport): full disallow per
-  // RFC 9309 §2.3.1.4 — a host whose governance can't be read is not
-  // crawled. Unavailable (4xx) = allow all (§2.3.1.3).
-  // Keyed by (scheme, authority), NOT authority alone (r14, closing the
-  // r13 advice): RFC 9309 §2.3 scopes rules per scheme+authority, and a
-  // URL list mixing http:// and https:// for one host would otherwise
-  // reuse whichever scheme's robots.txt was fetched first — applying
-  // the wrong origin's rules. The politeness map below intentionally
-  // stays authority-keyed: spacing protects the physical HOST, which
-  // serves both schemes.
-  private val robotsCache =
-    scala.collection.mutable.Map[(String, String), Option[Seq[(Boolean, String)]]]()
-  private val lastHit = scala.collection.mutable.Map[String, Long]()
+  /** One slot per URL, completed by its host's chain; [[next]] takes
+    * them in partition order and drops each once it is returned. Chains
+    * run ahead of [[next]], so up to a whole slice's rows may be held at
+    * once — the bounded URL list this source is the entry point for. */
+  private val results = Array.fill(urls.length)(new CompletableFuture[InternalRow]())
 
-  private def authorityOf(url: String): Option[(String, String)] =
-    try {
-      val u = java.net.URI.create(url)
-      for (a <- Option(u.getAuthority); s <- Option(u.getScheme))
-        yield (s, a.toLowerCase(java.util.Locale.ROOT))
-    } catch { case _: IllegalArgumentException => None }
+  /** URL indices per host, ascending, hosts in order of first appearance. */
+  private val chains: Seq[Seq[Int]] =
+    urls.indices.groupBy(j => WebTextSource.hostOf(urls(j))).values.toSeq.sortBy(_.head)
 
-  private def pathOf(url: String): String =
-    try Option(java.net.URI.create(url).getRawPath).filter(_.nonEmpty)
-      .getOrElse("/")
-    catch { case _: IllegalArgumentException => "/" }
+  private var pool: ExecutorService = _
+  private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
 
-  /** Sleep out the remainder of the host's politeness window (no-op
-    * when politenessMs is 0). Applies to EVERY request to the host,
-    * including the robots.txt fetch itself. */
-  private def politeWait(host: String): Unit = if (politenessMs > 0) {
-    lastHit.get(host).foreach { t =>
-      val remainMs = politenessMs - (System.nanoTime() - t) / 1000000L
-      if (remainMs > 0) Thread.sleep(remainMs)
-    }
+  /** Chain threads of this reader that are still running (spec probe). */
+  private[sources] def liveThreads: Int = threads.stream.filter(_.isAlive).count.toInt
+
+  private def start(): Unit = {
+    pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(chains.size, WebTextSource.MaxHostChains), (r: Runnable) => {
+        val t = new Thread(r, s"graft-web-host-chain-${threads.size}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    chains.foreach(c => pool.execute(new HostChain(c)))
   }
-  private def recordHit(host: String): Unit =
-    if (politenessMs > 0) lastHit(host) = System.nanoTime()
 
-  /** Robots rules for an origin, fetched ONCE per (scheme, authority,
-    * partition) and cached; politeness spacing covers the fetch. */
-  private def robotsFor(scheme: String, auth: String): Option[Seq[(Boolean, String)]] =
-    robotsCache.getOrElseUpdate((scheme, auth), {
-      politeWait(auth)
-      try {
-        val (code, body) =
-          WebTextSource.JdkFetcher.get(s"$scheme://$auth/robots.txt", timeoutMs)
-        if (code == 200) Some(graft.operators.RobotsTxt.groupRulesScala(body))
-        else if (code >= 400 && code < 500) Some(Seq.empty) // allow all
-        else None // server error → unreachable → full disallow
-      } catch {
-        case ie: InterruptedException => throw ie
-        case _: Exception => None // transport failure → full disallow
-      } finally recordHit(auth)
-    })
+  /** One host's own sequence: robots.txt first (when `respectRobots`),
+    * then each of its URLs in partition order, one request at a time.
+    * Its state is its own, so no other thread touches it.
+    *
+    * Robots rules are cached per (scheme, authority), NOT authority
+    * alone: RFC 9309 §2.3 scopes rules per
+    * scheme+authority, and a URL list mixing http:// and https:// for
+    * one host would otherwise reuse whichever scheme's robots.txt was
+    * fetched first — applying the wrong origin's rules. The spacing
+    * stays per chain, i.e. per authority: it protects the physical
+    * HOST, which serves both schemes. */
+  private final class HostChain(idx: Seq[Int]) extends Runnable {
+    // None = robots UNREACHABLE (5xx/transport): full disallow per
+    // RFC 9309 §2.3.1.4 — a host whose governance can't be read is not
+    // crawled. Unavailable (4xx) = allow all (§2.3.1.3).
+    private val robotsCache =
+      scala.collection.mutable.Map[(String, String), Option[Seq[(Boolean, String)]]]()
+    // max(politenessMs, Crawl-delay) once robots are read
+    private var gapMs = politenessMs
+    private var lastHitNs = Option.empty[Long]
 
-  /** False only when governance says DON'T fetch: robots disallow the
-    * path, or robots themselves are unreachable. URLs without a
-    * parseable scheme+authority skip governance (their fetch fails into
-    * the transport-error row anyway). */
-  private def allowedByRobots(url: String): Boolean =
-    !respectRobots || (authorityOf(url) match {
-      case Some((scheme, auth)) => robotsFor(scheme, auth) match {
-        case Some(rules) =>
-          graft.operators.RobotsTxt.isAllowed(rules, pathOf(url))
-        case None => false
+    /** One request to the host: sleep out the rest of the gap since the
+      * previous request ended (robots fetch included), never start once
+      * the chain is cancelled, stamp the end. */
+    private def spaced[T](request: => T): T = {
+      lastHitNs.foreach { t =>
+        val remainMs = gapMs - (System.nanoTime() - t) / 1000000L
+        if (remainMs > 0) Thread.sleep(remainMs)
       }
-      case None => true
-    })
+      if (Thread.interrupted()) throw new InterruptedException
+      try request finally lastHitNs = Some(System.nanoTime())
+    }
 
-  // the fetch happens in next(), not get(): the PartitionReader
-  // contract allows get() to be called repeatedly per advance and
-  // requires it to return the same row — a fetch in get() would re-hit
-  // the network and could return a DIFFERENT row the second time
-  override def next(): Boolean = {
-    i += 1
-    if (i >= urls.length) return false
-    val url = urls(i)
-    // plain Tuple3[Any, ...] access, NOT a destructuring val: a typed
-    // pattern (`val (s: Any, …) = t`) is a runtime type TEST, and null
-    // fails it — the error row itself would MatchError
-    val fetched: (Any, Any, Any) =
-      if (!allowedByRobots(url))
-        // governance row: never fetched (RobotsBlockedStatus, not an
-        // HTTP status) — the live form of the X-133/X-135 gates
-        (WebTextSource.RobotsBlockedStatus, null, null)
-      else try {
-        val hostKey = authorityOf(url).map(_._2)
-        hostKey.foreach(politeWait)
+    /** Robots rules for an origin, fetched ONCE per (scheme, authority)
+      * per task and cached. A `Crawl-delay` in the `*` group widens the
+      * host's gap to max(politenessMs, delay), the delay capped at
+      * `timeoutMs` so one hostile robots.txt cannot stall the task
+      * without bound. */
+    private def robotsFor(scheme: String, auth: String): Option[Seq[(Boolean, String)]] =
+      robotsCache.getOrElseUpdate((scheme, auth), spaced {
         try {
-          val page = fetcher.fetchPage(url, timeoutMs)
+          val (code, body) =
+            WebTextSource.JdkFetcher.get(s"$scheme://$auth/robots.txt", timeoutMs)
+          if (code == 200) {
+            graft.operators.RobotsTxt.crawlDelayScala(body).foreach { sec =>
+              gapMs = math.max(gapMs, math.min((sec * 1000).toLong, timeoutMs))
+            }
+            Some(graft.operators.RobotsTxt.groupRulesScala(body))
+          } else if (code >= 400 && code < 500) Some(Seq.empty) // allow all
+          else None // server error → unreachable → full disallow
+        } catch {
+          case ie: InterruptedException => throw ie
+          case _: Exception => None // transport failure → full disallow
+        }
+      })
+
+    /** False only when governance says DON'T fetch: robots disallow the
+      * path, or robots themselves are unreachable. URLs without a
+      * parseable scheme+authority skip governance (their fetch fails
+      * into the transport-error row anyway). */
+    private def allowedByRobots(url: String): Boolean =
+      !respectRobots || (WebTextSource.authorityOf(url) match {
+        case Some((scheme, auth)) => robotsFor(scheme, auth) match {
+          case Some(rules) =>
+            graft.operators.RobotsTxt.isAllowed(rules, WebTextSource.pathOf(url))
+          case None => false
+        }
+        case None => true
+      })
+
+    private def fetchRow(url: String): InternalRow = {
+      // plain Tuple3[Any, ...] access, NOT a destructuring val: a typed
+      // pattern (`val (s: Any, …) = t`) is a runtime type TEST, and null
+      // fails it — the error row itself would MatchError
+      val fetched: (Any, Any, Any) =
+        if (!allowedByRobots(url))
+          // governance row: never fetched (RobotsBlockedStatus, not an
+          // HTTP status) — the live form of the X-133/X-135 gates
+          (WebTextSource.RobotsBlockedStatus, null, null)
+        else try {
+          val page = spaced(fetcher.fetchPage(url, timeoutMs))
           if (page.text != null)
             (page.status,
               UTF8String.fromString(page.text),
@@ -590,22 +639,55 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
                   UTF8String.fromString(href), UTF8String.fromString(anchor))
               }.toArray[Any]))
           else (page.status, null, null)
-        } finally hostKey.foreach(recordHit)
+        } catch {
+          // cancellation (close() or a killed task) arrives as an
+          // interrupt; swallowing it would keep the chain fetching
+          case ie: InterruptedException => throw ie
+          // transport failure (connect refused, timeout, bad host):
+          // null status/text — the row survives, the task never fails
+          case _: Exception => (null, null, null)
+        }
+      InternalRow(UTF8String.fromString(url), fetched._1, fetched._2, fetched._3)
+    }
+
+    override def run(): Unit = {
+      var k = 0
+      try while (k < idx.length) {
+        results(idx(k)).complete(fetchRow(urls(idx(k))))
+        k += 1
       } catch {
-        // task cancellation arrives as Thread.interrupt() →
-        // InterruptedException out of HttpClient.send; swallowing it
-        // would keep a KILLED task fetching its remaining URLs
-        case ie: InterruptedException => throw ie
-        // transport failure (connect refused, timeout, bad host):
-        // null status/text — the row survives, the task never fails
-        case _: Exception => (null, null, null)
+        // cancelled, or a fatal error: the rows this chain still owes
+        // fail with it, so next() rethrows instead of waiting forever
+        case t: Throwable => idx.drop(k).foreach(j => results(j).completeExceptionally(t))
       }
-    row = InternalRow(UTF8String.fromString(url),
-      fetched._1, fetched._2, fetched._3)
+    }
+  }
+
+  // the fetch happens in next(), not get(): the PartitionReader
+  // contract allows get() to be called repeatedly per advance and
+  // requires it to return the same row — a fetch in get() would re-hit
+  // the network and could return a DIFFERENT row the second time
+  override def next(): Boolean = {
+    i += 1
+    if (i >= urls.length) return false
+    if (pool == null) start()
+    row = try results(i).get() catch {
+      // task cancellation arrives as Thread.interrupt(): stop every
+      // chain so a KILLED task fetches nothing more, then rethrow
+      case ie: InterruptedException => pool.shutdownNow(); throw ie
+      case e: ExecutionException => throw e.getCause
+    }
+    results(i) = null
     true
   }
 
   override def get(): InternalRow = row
 
-  override def close(): Unit = ()
+  /** Cancels every chain and waits (at most `timeoutMs`) for their
+    * threads to end; a request already on the wire is abandoned. */
+  override def close(): Unit = if (pool != null) {
+    pool.shutdownNow()
+    try pool.awaitTermination(timeoutMs, TimeUnit.MILLISECONDS)
+    catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+  }
 }

@@ -108,6 +108,7 @@ class RobotsTxtSpec extends SparkSpec {
       "User-agent: *\r\nDisallow: /private/\r\n\r\nDisallow: /tmp/\r\n",
       "User-agent:\t*\r\nDisallow:\t/p/",
       "Sitemap: https://x/s.xml\nUser-agent: *\nDisallow: /s/\nSitemap: y\nAllow: /s/a/",
+      "User-agent: *\nCrawl-delay: 1\nUser-agent: b\nDisallow: /z/",
       "", "garbage without any directive\nDisallow: /orphan/")
     for (txt <- fixtures)
       withClue(s"fixture <<$txt>>: ") {
@@ -127,5 +128,27 @@ class RobotsTxtSpec extends SparkSpec {
     val tie = Seq((false, "/a/"), (true, "/a/"))
     RobotsTxt.isAllowed(tie, "/a/x") shouldBe true
     RobotsTxt.isAllowed(Seq.empty, "/anything") shouldBe true
+  }
+
+  test("crawlDelayScala: the * group's Crawl-delay, integer or decimal seconds") {
+    RobotsTxt.crawlDelayScala("User-agent: *\nCrawl-delay: 0.3\nDisallow: /p/") shouldEqual Some(0.3)
+    RobotsTxt.crawlDelayScala("User-agent: *\ncrawl-delay: 2 # seconds") shouldEqual Some(2.0)
+    RobotsTxt.crawlDelayScala("User-agent: *\nCrawl-delay: .5") shouldEqual Some(0.5)
+    // several valid values: the largest (the most conservative reading)
+    RobotsTxt.crawlDelayScala("User-agent: *\nCrawl-delay: 1\nCrawl-delay: 4") shouldEqual Some(4.0)
+    // not a delay: negative, units, junk, empty
+    for (v <- Seq("-1", "5s", "soon", ""))
+      RobotsTxt.crawlDelayScala(s"User-agent: *\nCrawl-delay: $v") shouldEqual None
+    RobotsTxt.crawlDelayScala("User-agent: *\nDisallow: /p/") shouldEqual None
+  }
+
+  test("crawlDelayScala: a delay inside a non-* group is ignored") {
+    RobotsTxt.crawlDelayScala(
+      "User-agent: slowbot\nCrawl-delay: 30\n\nUser-agent: *\nDisallow: /x/") shouldEqual None
+    RobotsTxt.crawlDelayScala(
+      "User-agent: *\nDisallow: /x/\nUser-agent: slowbot\nCrawl-delay: 30") shouldEqual None
+    // a header run that names * does carry its delay
+    RobotsTxt.crawlDelayScala(
+      "User-agent: slowbot\nUser-agent: *\nCrawl-delay: 3") shouldEqual Some(3.0)
   }
 }

@@ -190,6 +190,138 @@ class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally { s1.stop(0); s2.stop(0) }
   }
 
+  /** A loopback host that answers each request after `latencyMs` on a
+    * multi-threaded executor, so the server itself would let requests
+    * overlap. `started` logs (path, start) on arrival; `log` adds
+    * (path, start, end) once the answer is ready, before it is sent, so
+    * an entry is in place before the client can see the response. */
+  private final class TimedHost(latencyMs: Long, robotsBody: String = "User-agent: *\nDisallow: /private/\n") {
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    private val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    private val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    s.setExecutor(pool)
+    s.createContext("/", (ex: HttpExchange) => {
+      val t0 = System.nanoTime()
+      val p = ex.getRequestURI.getPath
+      started.add((p, t0))
+      Thread.sleep(latencyMs)
+      log.add((p, t0, System.nanoTime()))
+      if (p == "/robots.txt") respond(ex, 200, robotsBody)
+      else respond(ex, 200, s"<html><body><p>page $p</p></body></html>")
+    })
+    s.start()
+    val base = s"http://127.0.0.1:${s.getAddress.getPort}"
+    def entries: Seq[(String, Long, Long)] =
+      log.toArray.map(_.asInstanceOf[(String, Long, Long)]).toSeq.sortBy(_._2)
+    def arrivals: Seq[(String, Long)] =
+      started.toArray.map(_.asInstanceOf[(String, Long)]).toSeq.sortBy(_._2)
+    def stop(): Unit = { s.stop(0); pool.shutdownNow() }
+  }
+
+  test("host chains: hosts overlap, one host never does, robots first, rows in URL order") {
+    for (governed <- Seq(true, false)) withClue(s"governed=$governed: ") {
+      val hosts = Seq.fill(3)(new TimedHost(150))
+      try {
+        val urls = for (p <- Seq("a", "b"); h <- hosts) yield s"${h.base}/site/$p"
+        val rows = spark.read.format("graft-web")
+          .option("urls", urls.mkString(","))
+          .option("respectRobots", governed.toString)
+          .option("numPartitions", "1")
+          .option("timeoutMs", "5000")
+          .load().collect()
+        rows.map(_.getString(0)).toSeq shouldEqual urls
+        rows.foreach(_.getInt(1) shouldEqual 200)
+        val logs = hosts.map(_.entries)
+        for (l <- logs) {
+          l.map(_._1).count(_ != "/robots.txt") shouldEqual 2
+          l.map(_._1).count(_ == "/robots.txt") shouldEqual (if (governed) 1 else 0)
+          // same host: each request ends before the next one starts
+          l.sliding(2).foreach {
+            case Seq(a, b) => assert(a._3 <= b._2, s"overlap on one host: $a $b")
+            case _ =>
+          }
+          if (governed) l.head._1 shouldEqual "/robots.txt"
+        }
+        // different hosts: some pair of requests is in flight together
+        val all = logs.zipWithIndex.flatMap { case (l, h) => l.map(e => (h, e._2, e._3)) }
+        assert(all.exists { case (h1, s1, e1) =>
+          all.exists { case (h2, s2, e2) => h1 != h2 && s1 < e2 && s2 < e1 } },
+          "no two hosts were ever in flight at once")
+      } finally hosts.foreach(_.stop())
+    }
+  }
+
+  test("Crawl-delay spaces same-host requests without politenessMs, capped at timeoutMs") {
+    val h = new TimedHost(20, "User-agent: *\nCrawl-delay: 0.3\n")
+    try {
+      spark.read.format("graft-web")
+        .option("urls", (1 to 3).map(i => s"${h.base}/site/$i").mkString(","))
+        .option("respectRobots", "true")
+        .option("timeoutMs", "5000")
+        .load().collect().map(_.getInt(1)).toSeq shouldEqual Seq(200, 200, 200)
+      val starts = h.entries.filter(_._1.startsWith("/site/")).map(_._2)
+      starts should have size 3
+      starts.sliding(2).foreach { case Seq(a, b) =>
+        (b - a) / 1000000L should be >= 250L
+      }
+    } finally h.stop()
+    // a hostile delay waits out timeoutMs, not the hour it asks for
+    val slow = new TimedHost(0, "User-agent: *\nCrawl-delay: 3600\n")
+    try {
+      val t0 = System.nanoTime()
+      spark.read.format("graft-web")
+        .option("urls", s"${slow.base}/site/1,${slow.base}/site/2")
+        .option("respectRobots", "true")
+        .option("timeoutMs", "300")
+        .load().collect().map(_.getInt(1)).toSeq shouldEqual Seq(200, 200)
+      (System.nanoTime() - t0) / 1000000L should be < 30000L
+      val starts = slow.entries.filter(_._1.startsWith("/site/")).map(_._2)
+      (starts(1) - starts(0)) / 1000000L should be >= 250L
+    } finally slow.stop()
+  }
+
+  test("close() stops every host chain: no request starts after it, no thread outlives it") {
+    val a = new TimedHost(150)
+    val b = new TimedHost(1500)
+    try {
+      // a: 150 ms answers, then a 600 ms gap; b: its first request is
+      // still on the wire when close() runs
+      val urls = (1 to 3).flatMap(i => Seq(s"${a.base}/site/$i", s"${b.base}/site/$i")).toArray
+      val reader = new WebTextReader(urls, 5000L, politenessMs = 600L)
+      reader.next() shouldBe true
+      reader.get().getString(0) shouldEqual urls(0)
+      reader.close()
+      val closedAt = System.nanoTime()
+      reader.liveThreads shouldEqual 0
+      Thread.sleep(1000)
+      for (h <- Seq(a, b)) {
+        h.arrivals.map(_._1) shouldEqual Seq("/site/1")
+        h.arrivals.foreach(e => assert(e._2 < closedAt, s"request after close(): $e"))
+      }
+    } finally { a.stop(); b.stop() }
+  }
+
+  test("an interrupt in next() cancels the chains and propagates") {
+    val h = new TimedHost(600)
+    try {
+      val reader = new WebTextReader((1 to 3).map(i => s"${h.base}/site/$i").toArray, 5000L)
+      val caught = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val t = new Thread(() => try reader.next() catch { case e: Throwable => caught.set(e) })
+      t.start()
+      Thread.sleep(200)
+      t.interrupt()
+      t.join(5000)
+      caught.get() shouldBe an[InterruptedException]
+      // no close() yet: the interrupt alone stops the chain, so /site/2
+      // (due at ~600 ms) never arrives
+      Thread.sleep(800)
+      h.arrivals.map(_._1) shouldEqual Seq("/site/1")
+      reader.liveThreads shouldEqual 0
+      reader.close()
+    } finally h.stop()
+  }
+
   test("innerText: script/style/comments dropped, blocks break lines, entities decoded") {
     val t = WebTextSource.innerText(page)
     t should include("Acme & Sons")
