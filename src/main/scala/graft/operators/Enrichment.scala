@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.CompletableFuture
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,10 +14,12 @@ import org.apache.spark.sql.types._
   * Spark `mapPartitions` over a typed Dataset.
   *
   * The external call sits behind [[Enricher]]: one instance serialized
-  * to each partition (a real impl would open its HTTP client lazily per
-  * partition and batch requests inside it — llm_utils.py:137-153's
-  * 60 s-timeout POST, parallelized across partitions instead of the
-  * reference's strictly sequential loop, app.py:289-300). The default
+  * to each partition. [[Enrichment.enrichMap]] asks it through
+  * `enrichAsync` and keeps up to [[Enrichment.MaxInFlight]] calls of a
+  * task in flight, rows still in input order (llm_utils.py:137-153's
+  * 60 s-timeout POST, overlapped within a task and parallel across
+  * partitions, where the reference's loop runs them one after another,
+  * app.py:289-300). The default
   * [[MockEnricher]] is deterministic and pure so the whole pipeline is
   * oracle-checkable; it reproduces the reference's null-skip semantics
   * (no usable input → None → enrichment columns stay null while the
@@ -22,6 +29,16 @@ import org.apache.spark.sql.types._
 trait Enricher extends Serializable {
   /** Raw LLM JSON for one company context, or None to skip (null-skip). */
   def enrich(company: String, website: String, about: String): Option[String]
+
+  /** The same call as a future, so a caller can keep several in flight.
+    * The default runs [[enrich]] on the calling thread and returns it
+    * already completed (failed when it throws): a pure enricher pays no
+    * thread handoff. An enricher that does I/O overrides this to send
+    * without blocking, and lets cancelling the future cancel the call. */
+  def enrichAsync(company: String, website: String,
+      about: String): CompletableFuture[Option[String]] =
+    try CompletableFuture.completedFuture(enrich(company, website, about))
+    catch { case NonFatal(e) => CompletableFuture.failedFuture(e) }
 }
 
 /** Deterministic mock: builds the prompt-pinned JSON document shape
@@ -115,17 +132,57 @@ object Enrichment {
   /** The 9 flattened output keys in OUTPUT_COLUMNS order (app.py:42-58). */
   val FlattenKeys: Seq[String] = LlmSchema.fields.map(_.name).toSeq
 
-  /** O-9: the enrichment map itself. Errors inside the enricher are
-    * contained per row (Try → null raw_json), never failing the task —
-    * the reference's swallow-and-continue posture (app.py:258-269). */
+  /** Most enrichment calls one task keeps in flight, like
+    * [[graft.sources.WebTextSource.MaxHostChains]]: it bounds one task's
+    * sockets and the rows it holds. Fixed on purpose, not an option. */
+  val MaxInFlight: Int = 16
+
+  /** O-9: the enrichment map itself. Each task keeps up to
+    * [[MaxInFlight]] calls in flight ([[Enricher.enrichAsync]]) and
+    * returns rows in input order, so it holds at most that many rows.
+    * Errors inside the enricher are contained per row (any failure →
+    * null raw_json), never failing the task — the reference's
+    * swallow-and-continue posture (app.py:258-269). The task's
+    * completion, or an interrupt while it waits, cancels the calls still
+    * pending. */
   def enrichMap(in: Dataset[EnrichIn], enricher: Enricher): Dataset[EnrichOut] = {
     import in.sparkSession.implicits._
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val raw = scala.util.Try(enricher.enrich(r.company, r.website, r.about))
-          .toOption.flatten.orNull
-        EnrichOut(r.doc_id, r.company, r.website, r.about, raw)
+    in.mapPartitions(rows => new InFlight(rows, enricher))
+  }
+
+  /** The window behind [[enrichMap]]: calls start in input order, at
+    * most [[MaxInFlight]] at a time counting the one being waited on. */
+  private final class InFlight(rows: Iterator[EnrichIn], enricher: Enricher)
+      extends Iterator[EnrichOut] {
+    private val pending = new java.util.ArrayDeque[(EnrichIn, CompletableFuture[Option[String]])]()
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => cancelPending()))
+
+    private def cancelPending(): Unit = {
+      pending.forEach(_._2.cancel(true))
+      pending.clear()
+    }
+
+    private def fill(): Unit =
+      while (pending.size < MaxInFlight && rows.hasNext) {
+        val r = rows.next()
+        val call =
+          try enricher.enrichAsync(r.company, r.website, r.about)
+          catch { case NonFatal(e) => CompletableFuture.failedFuture[Option[String]](e) }
+        pending.add(r -> call)
       }
+
+    def hasNext: Boolean = { fill(); !pending.isEmpty }
+
+    def next(): EnrichOut = {
+      fill()
+      val (r, call) = pending.removeFirst()
+      val raw =
+        try graft.Net.await(call).orNull
+        catch {
+          case ie: InterruptedException => cancelPending(); throw ie
+          case NonFatal(_) => null
+        }
+      EnrichOut(r.doc_id, r.company, r.website, r.about, raw)
     }
   }
 

@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.CompletableFuture
+
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
@@ -15,9 +19,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Distribution posture: the enricher object is serialized once per
   * task; the HTTP client is `@transient lazy`, so each executor JVM
-  * builds exactly one client on first use (the "per-partition lazy
-  * client" shape — the reference's strictly sequential loop,
-  * app.py:289-300, becomes one in-flight request per partition).
+  * builds exactly one client on first use. [[HttpEnricher.enrichAsync]]
+  * sends without blocking, so [[Enrichment.enrichMap]] keeps up to
+  * [[Enrichment.MaxInFlight]] = 16 calls of a task in flight (the
+  * reference's strictly sequential loop, app.py:289-300, kept only its
+  * order, which the map keeps too). Each call is bounded by
+  * `timeoutMs` on the whole exchange, body included.
   * NEVER on the verify path: [[Enrichers.fromConf]] returns the
   * deterministic [[MockEnricher]] unless an endpoint is explicitly
   * configured, so oracle runs do no I/O.
@@ -27,26 +34,37 @@ object HttpEnricher {
   /** The transport seam: post a JSON body, return (status, body);
     * throw on transport failure (connect error, timeout). Separated
     * from the enricher so failure semantics are unit-testable without
-    * a network. */
+    * a network. `postAsync` is the same call as a future; by default it
+    * runs `post` on the calling thread and returns it completed, so a
+    * stub transport needs only `post`. */
   trait Transport extends Serializable {
     def post(url: String, headers: Map[String, String], body: String,
         timeoutMs: Long): (Int, String)
+
+    def postAsync(url: String, headers: Map[String, String], body: String,
+        timeoutMs: Long): CompletableFuture[(Int, String)] =
+      try CompletableFuture.completedFuture(post(url, headers, body, timeoutMs))
+      catch { case NonFatal(e) => CompletableFuture.failedFuture(e) }
   }
 
   /** JDK built-in client (java.net.http, no extra dependency), via the
     * engine-wide [[graft.Net]] seam (one non-redirecting API instance
-    * per executor JVM). */
+    * per executor JVM). `postAsync` is the one send: the whole exchange
+    * is bounded by `timeoutMs` ([[graft.Net.exchange]]), and cancelling
+    * its future cancels the exchange. */
   object JdkTransport extends Transport {
     def post(url: String, headers: Map[String, String], body: String,
-        timeoutMs: Long): (Int, String) = {
+        timeoutMs: Long): (Int, String) =
+      graft.Net.await(postAsync(url, headers, body, timeoutMs))
+
+    override def postAsync(url: String, headers: Map[String, String], body: String,
+        timeoutMs: Long): CompletableFuture[(Int, String)] = {
       val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
         .timeout(java.time.Duration.ofMillis(timeoutMs))
         .header("Content-Type", "application/json")
       headers.foreach { case (k, v) => b.header(k, v) }
-      val resp = graft.Net.api.send(
-        b.POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      (resp.statusCode(), resp.body())
+      graft.Net.exchange(graft.Net.api,
+        b.POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(), timeoutMs)
     }
   }
 
@@ -87,18 +105,31 @@ class HttpEnricher(
   extends Enricher {
 
   def enrich(company: String, website: String, about: String): Option[String] =
-    if (company == null || about == null || about.isEmpty) None
-    else
-      scala.util.Try {
-        val (status, body) = transport.post(
+    graft.Net.await(enrichAsync(company, website, about))
+
+  /** The call in flight: completes with the content, or None on any
+    * failure; only cancelling it, which cancels the exchange, completes
+    * it exceptionally. */
+  override def enrichAsync(company: String, website: String,
+      about: String): CompletableFuture[Option[String]] =
+    if (company == null || about == null || about.isEmpty)
+      CompletableFuture.completedFuture(None)
+    else {
+      val sent =
+        try transport.postAsync(
           url,
           if (apiKey.nonEmpty) Map("Authorization" -> s"Bearer $apiKey") else Map.empty,
-          HttpEnricher.requestBody(model,
-            Enrichment.prompt(company, website, about)),
+          HttpEnricher.requestBody(model, Enrichment.prompt(company, website, about)),
           timeoutMs)
-        require(status == 200, s"status $status")
-        HttpEnricher.extractContent(body)
-      }.toOption
+        catch { case NonFatal(e) => CompletableFuture.failedFuture[(Int, String)](e) }
+      graft.Net.linked(sent)(_.handle[Option[String]] { (resp: (Int, String), err: Throwable) =>
+        if (err != null) None
+        else scala.util.Try {
+          require(resp._1 == 200, s"status ${resp._1}")
+          HttpEnricher.extractContent(resp._2)
+        }.toOption
+      })
+    }
 }
 
 /** The config gate keeping I/O off the verify path: queries resolve

@@ -50,6 +50,10 @@ object LinkSelection {
       .withColumn("score",
         keywordScore(Extraction.normToken(col("anchor_text")), col("full_url"), keywords)) // F-8, F-5
       .filter(col("score") > 0)                              // P-4
+      // the one shuffle: hash(company) clusters both the (company,
+      // full_url) dedup below and the per-company window, so neither
+      // plans an exchange of its own
+      .repartition(col("company"))
       // T-3 dedup — deterministic: the same URL can appear under several
       // anchor texts (hence several scores); keep the best score per URL
       // rather than dropDuplicates' arbitrary-row pick.

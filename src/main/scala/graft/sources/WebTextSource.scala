@@ -60,8 +60,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * ACROSS hosts and kept serial WITHIN one.
   *
   * Crawl governance (r13, the X-133/X-134/X-135 batch gates applied
-  * LIVE): `.option("respectRobots", "true")` fetches each host's
-  * `/robots.txt` once per task, first in the host's chain, parses it
+  * LIVE): `.option("respectRobots", "true")` reads each origin's
+  * `/robots.txt` first in its host's chain, from a per-JVM cache when
+  * this JVM fetched it within [[WebTextSource.RobotsTtlMs]] (1 h, RFC
+  * 9309 §2.4 allows 24 h; at most [[WebTextSource.RobotsCacheCap]] =
+  * 4096 origins; an unreachable robots.txt is never cached), parses it
   * with the RFC 9309 group model
   * ([[graft.operators.RobotsTxt.groupRulesScala]], pinned against the
   * Catalyst twin), applies longest-match/Allow-wins precedence, and
@@ -70,9 +73,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * per RFC 9309 §2.3.1).
   * `.option("politenessMs", "500")` enforces a minimum gap between
   * consecutive requests to the same host, robots fetch included. A
-  * `Crawl-delay` in the robots `*` group widens that gap to
-  * max(politenessMs, delay), the delay capped at `timeoutMs` so a
-  * hostile robots.txt cannot stall a task without bound.
+  * `Crawl-delay` in the robots `*` group, cached or fetched, widens
+  * that gap to max(politenessMs, delay), the delay capped at
+  * `timeoutMs` so a hostile robots.txt cannot stall a task without
+  * bound.
   * Either option switches the planner to HOST-GROUPED partitions (a
   * host never spans two tasks, so per-host state is partition-local);
   * the reference gets this for free by crawling sequentially
@@ -97,6 +101,58 @@ object WebTextSource {
     * queue in order of first appearance. Fixed on purpose, not an
     * option: it bounds one task's threads and sockets. */
   val MaxHostChains: Int = 16
+
+  /** How long one JVM reuses an origin's robots.txt result. RFC 9309
+    * §2.4 lets a crawler cache it for up to 24 h; an hour keeps a rule
+    * change on the host in force within the hour. Fixed, not an option. */
+  val RobotsTtlMs: Long = 60L * 60 * 1000
+
+  /** Most origins the robots cache holds, so a long-lived service that
+    * crawls ever new hosts cannot grow it without limit. */
+  val RobotsCacheCap: Int = 4096
+
+  /** An origin's robots.txt as the chains use it: the `*` group's rules
+    * (empty = allow all) and its `Crawl-delay` in ms (0 = none), not yet
+    * capped — each read caps it at its own `timeoutMs`. */
+  private[sources] final case class Robots(rules: Seq[(Boolean, String)], delayMs: Long)
+
+  /** The robots results of this JVM, keyed by (scheme, authority) as
+    * RFC 9309 §2.3 scopes them, each kept [[RobotsTtlMs]] from its fetch.
+    * Only readable results are put here (200, and 4xx = allow all); an
+    * unreachable robots.txt is not, so the next read asks again. Entries
+    * sit in fetch order, so the expired ones are the oldest: a put drops
+    * entries from the oldest end while they are expired or the cache is
+    * over [[RobotsCacheCap]]. */
+  private[sources] object RobotsCache {
+    /** Clock in ms, replaceable so a spec can move past the TTL. */
+    @volatile private[sources] var now: () => Long = () => System.currentTimeMillis()
+
+    private val entries = new java.util.LinkedHashMap[(String, String), (Robots, Long)]()
+
+    def get(origin: (String, String)): Option[Robots] = synchronized {
+      Option(entries.get(origin)).flatMap { case (robots, at) =>
+        if (now() - at < RobotsTtlMs) Some(robots)
+        else { entries.remove(origin); None }
+      }
+    }
+
+    def put(origin: (String, String), robots: Robots): Unit = synchronized {
+      val t = now()
+      entries.remove(origin) // a refreshed entry moves to the newest end
+      entries.put(origin, (robots, t))
+      val oldest = entries.values.iterator
+      var evicting = true
+      while (evicting && oldest.hasNext) {
+        val (_, at) = oldest.next()
+        evicting = entries.size > RobotsCacheCap || t - at >= RobotsTtlMs
+        if (evicting) oldest.remove()
+      }
+    }
+
+    def size: Int = synchronized(entries.size)
+
+    def clear(): Unit = synchronized(entries.clear())
+  }
 
   /** (scheme, lower-cased authority), or None when the URL has no
     * parseable scheme+authority. */
@@ -228,33 +284,20 @@ object WebTextSource {
   }
 
   /** JDK built-in client via the engine-wide [[graft.Net]] seam (one
-    * browser-like redirect-following instance per executor JVM).
-    * The WHOLE exchange is bounded by `timeoutMs`: HttpRequest.timeout
-    * only bounds time-to-response-HEADERS, so a slow-loris host that
-    * returns 200 and then drips the body one byte a minute would wedge
-    * the Spark task forever — sendAsync + a deadline on the future
-    * bounds headers AND body together (TimeoutException propagates to
-    * the caller's swallow-and-skip error row like any transport
-    * failure). */
+    * browser-like redirect-following instance per executor JVM). The
+    * WHOLE exchange, headers and body, is bounded by `timeoutMs`
+    * ([[graft.Net.exchange]]): a slow-loris host that returns 200 and
+    * then drips the body cannot wedge the Spark task. The
+    * `TimeoutException` propagates to the caller's swallow-and-skip
+    * error row like any transport failure; an interrupt cancels the
+    * exchange. */
   object JdkFetcher extends Fetcher {
-    def get(url: String, timeoutMs: Long): (Int, String) = {
-      val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-        .timeout(java.time.Duration.ofMillis(timeoutMs))
-        .GET().build()
-      val fut = graft.Net.fetching.sendAsync(req,
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      try {
-        val resp = fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-        (resp.statusCode(), resp.body())
-      } catch {
-        case e @ (_: java.util.concurrent.TimeoutException | _: InterruptedException) =>
-          fut.cancel(true)
-          throw e
-        case e: java.util.concurrent.ExecutionException =>
-          // unwrap so callers see the same IOException the sync send threw
-          throw Option(e.getCause).getOrElse(e)
-      }
-    }
+    def get(url: String, timeoutMs: Long): (Int, String) =
+      graft.Net.await(graft.Net.exchange(graft.Net.fetching,
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+          .timeout(java.time.Duration.ofMillis(timeoutMs))
+          .GET().build(),
+        timeoutMs))
   }
 
   // &amp; decodes LAST: a literal "&amp;lt;" on the page renders as
@@ -465,12 +508,11 @@ class WebTextScan(urls: Array[String], numPartitions: Int, timeoutMs: Long,
 
   override def planInputPartitions(): Array[InputPartition] = {
     if (governed) {
-      // HOST-GROUPED planning: per-host serialization (politeness) and
-      // the one-robots-fetch-per-host cache are partition-local
-      // properties only if a host never spans two tasks. Hosts are
-      // spread round-robin by first appearance; within a partition the
-      // original URL order is kept, and the reader runs each host's
-      // URLs as one serial chain, the chains concurrently — one host's
+      // HOST-GROUPED planning: per-host serialization (politeness) is
+      // a partition-local property only if a host never spans two
+      // tasks. Hosts are spread round-robin by first appearance; within
+      // a partition the original URL order is kept, and the reader runs
+      // each host's URLs as one serial chain, the chains concurrently — one host's
       // page is fetched while another host's politeness window elapses.
       // (The reference crawls strictly sequentially — accidental
       // politeness; this is the scale-correct form: full parallelism
@@ -554,18 +596,19 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
     * then each of its URLs in partition order, one request at a time.
     * Its state is its own, so no other thread touches it.
     *
-    * Robots rules are cached per (scheme, authority), NOT authority
+    * Robots rules are keyed per (scheme, authority), NOT authority
     * alone: RFC 9309 §2.3 scopes rules per
     * scheme+authority, and a URL list mixing http:// and https:// for
     * one host would otherwise reuse whichever scheme's robots.txt was
-    * fetched first — applying the wrong origin's rules. The spacing
+    * read first — applying the wrong origin's rules. The spacing
     * stays per chain, i.e. per authority: it protects the physical
     * HOST, which serves both schemes. */
   private final class HostChain(idx: Seq[Int]) extends Runnable {
-    // None = robots UNREACHABLE (5xx/transport): full disallow per
-    // RFC 9309 §2.3.1.4 — a host whose governance can't be read is not
-    // crawled. Unavailable (4xx) = allow all (§2.3.1.3).
-    private val robotsCache =
+    // this read's verdict per origin. None = robots UNREACHABLE
+    // (5xx/transport): full disallow per RFC 9309 §2.3.1.4 — a host
+    // whose governance can't be read is not crawled in this read.
+    // Unavailable (4xx) = allow all (§2.3.1.3).
+    private val robotsSeen =
       scala.collection.mutable.Map[(String, String), Option[Seq[(Boolean, String)]]]()
     // max(politenessMs, Crawl-delay) once robots are read
     private var gapMs = politenessMs
@@ -583,28 +626,44 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
       try request finally lastHitNs = Some(System.nanoTime())
     }
 
-    /** Robots rules for an origin, fetched ONCE per (scheme, authority)
-      * per task and cached. A `Crawl-delay` in the `*` group widens the
-      * host's gap to max(politenessMs, delay), the delay capped at
-      * `timeoutMs` so one hostile robots.txt cannot stall the task
-      * without bound. */
+    /** Robots rules for an origin, decided ONCE per read: from the JVM's
+      * [[WebTextSource.RobotsCache]] when it holds the origin, else
+      * fetched (a spaced request like any other), and a readable result
+      * (200 or 4xx) put back for the next read. An unreachable robots.txt
+      * blocks the host for this read only. A `Crawl-delay` in the `*`
+      * group, cached or fetched, widens the host's gap to
+      * max(politenessMs, delay), the delay capped at `timeoutMs` so one
+      * hostile robots.txt cannot stall the task without bound. */
     private def robotsFor(scheme: String, auth: String): Option[Seq[(Boolean, String)]] =
-      robotsCache.getOrElseUpdate((scheme, auth), spaced {
+      robotsSeen.getOrElseUpdate((scheme, auth), {
+        val robots = WebTextSource.RobotsCache.get((scheme, auth)).orElse {
+          val fetched = fetchRobots(scheme, auth)
+          fetched.foreach(WebTextSource.RobotsCache.put((scheme, auth), _))
+          fetched
+        }
+        robots.foreach(r => gapMs = math.max(gapMs, math.min(r.delayMs, timeoutMs)))
+        robots.map(_.rules)
+      })
+
+    /** None when robots.txt is unreachable: a 5xx, any other non-200
+      * non-4xx status, or a transport failure. */
+    private def fetchRobots(scheme: String, auth: String): Option[WebTextSource.Robots] =
+      spaced {
         try {
           val (code, body) =
             WebTextSource.JdkFetcher.get(s"$scheme://$auth/robots.txt", timeoutMs)
-          if (code == 200) {
-            graft.operators.RobotsTxt.crawlDelayScala(body).foreach { sec =>
-              gapMs = math.max(gapMs, math.min((sec * 1000).toLong, timeoutMs))
-            }
-            Some(graft.operators.RobotsTxt.groupRulesScala(body))
-          } else if (code >= 400 && code < 500) Some(Seq.empty) // allow all
-          else None // server error → unreachable → full disallow
+          if (code == 200)
+            Some(WebTextSource.Robots(graft.operators.RobotsTxt.groupRulesScala(body),
+              graft.operators.RobotsTxt.crawlDelayScala(body)
+                .map(sec => (sec * 1000).toLong).getOrElse(0L)))
+          else if (code >= 400 && code < 500)
+            Some(WebTextSource.Robots(Seq.empty, 0L)) // allow all
+          else None
         } catch {
           case ie: InterruptedException => throw ie
-          case _: Exception => None // transport failure → full disallow
+          case _: Exception => None
         }
-      })
+      }
 
     /** False only when governance says DON'T fetch: robots disallow the
       * path, or robots themselves are unreachable. URLs without a

@@ -370,6 +370,23 @@ class PlanAuditSpec extends SparkSpec {
     p should include("hashpartitioning(o_custkey")
   }
 
+  test("selectLinks plans one exchange: hash(company) serves the URL dedup and the window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import spark.implicits._
+    val candidates = Seq(
+      ("acme", "https://acme.example", "/about", "About us"),
+      ("acme", "https://acme.example", "/about", "Company"),
+      ("beta", "https://beta.example", "/team", "Leadership"))
+      .toDF("company", "website", "href", "anchor_text")
+    val planned = operators.LinkSelection.selectLinks(candidates, k = 3)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+    planned.collect { case e: ShuffleExchangeLike => e } should have size 1
+  }
+
   test("the transparent sketches aggregate with a PARTIAL map-side phase") {
     // The whole point of the KMV / bottom-k sample sketches is the
     // fixed-size mergeable state that collapses per task BEFORE the

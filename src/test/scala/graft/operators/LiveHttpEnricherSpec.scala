@@ -6,6 +6,26 @@ import java.util.concurrent.atomic.AtomicReference
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkSpec
 
+/** The JDK transport, recording every call's future: serialized into
+  * tasks at file scope (an inner class would drag the suite along), the
+  * futures land in one JVM-wide queue the spec reads back. */
+private class RecordingTransport extends HttpEnricher.Transport {
+  def post(url: String, headers: Map[String, String], body: String,
+      timeoutMs: Long): (Int, String) =
+    HttpEnricher.JdkTransport.post(url, headers, body, timeoutMs)
+  override def postAsync(url: String, headers: Map[String, String], body: String,
+      timeoutMs: Long): java.util.concurrent.CompletableFuture[(Int, String)] = {
+    val f = HttpEnricher.JdkTransport.postAsync(url, headers, body, timeoutMs)
+    RecordingTransport.calls.add(f)
+    f
+  }
+}
+
+private object RecordingTransport {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[
+    java.util.concurrent.CompletableFuture[(Int, String)]]()
+}
+
 /** HttpEnricher against a LIVE endpoint — a JDK loopback HttpServer, so
   * the REAL java.net.http transport (connection, request write,
   * timeout, status handling) is exercised end-to-end with zero egress.
@@ -86,6 +106,117 @@ class LiveHttpEnricherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
     }
     new HttpEnricher(s"http://127.0.0.1:$dead/x", "", "m1", timeoutMs = 1000)
       .enrich("A", "w", "about") shouldEqual None
+  }
+
+  test("a body dripped past timeoutMs gives None within the deadline, not when the drip ends") {
+    val drip = new graft.DripServer
+    try {
+      val t0 = System.nanoTime()
+      new HttpEnricher(s"${drip.base}/v1", "", "m1", timeoutMs = 500)
+        .enrich("Acme", "w", "about") shouldEqual None
+      (System.nanoTime() - t0) / 1000000L should be < 2500L
+    } finally drip.stop()
+  }
+
+  /** A loopback LLM on its own thread pool, so calls can overlap: each
+    * answers after `latencyMs(prompt)`, a prompt holding "boom" gets a
+    * 500, and the largest number of calls in flight at once is kept. */
+  private final class ConcurrentLlm(latencyMs: String => Long) {
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    private val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    s.setExecutor(pool)
+    s.createContext("/", (ex: HttpExchange) => {
+      val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), (a: Int, b: Int) => math.max(a, b))
+      try Thread.sleep(latencyMs(body))
+      catch { case _: InterruptedException => }
+      inFlight.decrementAndGet()
+      try {
+        if (body.contains("boom")) respond(ex, 500, "boom")
+        else respond(ex, 200, chatJson("enriched"))
+      } catch { case _: java.io.IOException => } // the caller gave up
+    })
+    s.start()
+    val url = s"http://127.0.0.1:${s.getAddress.getPort}/v1"
+    def stop(): Unit = { s.stop(0); pool.shutdownNow() }
+  }
+
+  private def companies(n: Int, failing: Int = -1): Seq[Enrichment.EnrichIn] =
+    (0 until n).map(i => Enrichment.EnrichIn(i.toLong,
+      if (i == failing) "boom" else s"c$i", s"https://c$i.example", s"about c$i"))
+
+  test("enrichMap keeps a task's calls in flight, rows in input order, a failed call contained") {
+    import spark.implicits._
+    // later rows answer sooner, so completion order is the reverse of
+    // input order
+    val llm = new ConcurrentLlm(body =>
+      "about c(\\d+)".r.findFirstMatchIn(body).map(m => 300L - 20L * m.group(1).toLong)
+        .getOrElse(150L))
+    try {
+      val in = companies(8, failing = 5)
+      val out = Enrichment.enrichMap(in.toDS().coalesce(1),
+        new HttpEnricher(llm.url, "", "m1", timeoutMs = 5000)).collect()
+      out.map(_.doc_id).toSeq shouldEqual in.map(_.doc_id)
+      out.map(r => Option(r.raw_json)).toSeq shouldEqual
+        (0 until 8).map(i => if (i == 5) None else Some("enriched"))
+      llm.maxInFlight.get() should (be > 1 and be <= Enrichment.MaxInFlight)
+    } finally llm.stop()
+  }
+
+  test("enrichMap never has more than MaxInFlight calls of a task in flight") {
+    import spark.implicits._
+    val llm = new ConcurrentLlm(_ => 100L)
+    try {
+      val n = 3 * Enrichment.MaxInFlight
+      val out = Enrichment.enrichMap(companies(n).toDS().coalesce(1),
+        new HttpEnricher(llm.url, "", "m1", timeoutMs = 5000)).collect()
+      out.count(_.raw_json == "enriched") shouldEqual n
+      llm.maxInFlight.get() should (be > 1 and be <= Enrichment.MaxInFlight)
+    } finally llm.stop()
+  }
+
+  test("a task interrupt cancels the calls still pending") {
+    import spark.implicits._
+    val llm = new ConcurrentLlm(_ => 20000L)
+    RecordingTransport.calls.clear()
+    val sc = spark.sparkContext
+    val failure = new AtomicReference[Throwable]()
+    val job = new Thread(() => {
+      sc.setJobGroup("enrich-interrupt", "enrich-interrupt", interruptOnCancel = true)
+      try Enrichment.enrichMap(companies(8).toDS().coalesce(1),
+        new HttpEnricher(llm.url, "", "m1", timeoutMs = 60000,
+          transport = new RecordingTransport)).collect()
+      catch { case e: Throwable => failure.set(e) }
+      finally sc.clearJobGroup()
+    })
+    try {
+      job.start()
+      val deadline = System.nanoTime() + 10000L * 1000000L
+      while (llm.inFlight.get() < 8 && System.nanoTime() < deadline) Thread.sleep(20)
+      llm.inFlight.get() shouldEqual 8
+      sc.cancelJobGroup("enrich-interrupt")
+      job.join(5000)
+      job.isAlive shouldBe false
+      failure.get() should not be null
+      // the job fails as soon as the cancel is processed; the killed
+      // task cancels its calls on its own thread, well inside the 20 s
+      // the endpoint would take to answer. A JDK exchange cancelled from
+      // a derived stage fails that stage with the client's own
+      // CancellationException, so either form counts.
+      def cancelled(f: java.util.concurrent.CompletableFuture[(Int, String)]): Boolean =
+        f.isDone && scala.util.Try(f.getNow(null)).failed.toOption.exists {
+          case _: java.util.concurrent.CancellationException => true
+          case e => e.getCause.isInstanceOf[java.util.concurrent.CancellationException]
+        }
+      val calls = RecordingTransport.calls.toArray.toSeq
+        .map(_.asInstanceOf[java.util.concurrent.CompletableFuture[(Int, String)]])
+      calls should have size 8
+      val cancelBy = System.nanoTime() + 5000L * 1000000L
+      while (!calls.forall(cancelled) && System.nanoTime() < cancelBy) Thread.sleep(20)
+      calls.foreach(f => assert(cancelled(f), s"call still pending or not cancelled: $f"))
+    } finally llm.stop()
   }
 
   test("distributed: executors call the live endpoint through enrichMap") {

@@ -3,7 +3,7 @@ package graft.sources
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.SparkSpec
+import graft.{DripServer, SparkSpec}
 import org.apache.spark.sql.Row
 
 /** The S-3 DataSourceV2 exercised END-TO-END over a real socket: a JDK
@@ -12,7 +12,8 @@ import org.apache.spark.sql.Row
   * META-INF/services, partition planning, the executor-side fetch, the
   * inner-text and anchor extraction — runs with zero egress (the
   * LiveHttpEnricherSpec discipline applied to the source). */
-class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
+    with org.scalatest.BeforeAndAfterEach {
 
   private var server: HttpServer = _
   private var base: String = _
@@ -88,6 +89,14 @@ class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   override def afterAll(): Unit = {
     if (server != null) server.stop(0)
     super.afterAll()
+  }
+
+  // robots results live per JVM for an hour: a loopback port the OS
+  // hands out again within that hour must not inherit an earlier
+  // test's rules
+  override def beforeEach(): Unit = {
+    WebTextSource.RobotsCache.clear()
+    super.beforeEach()
   }
 
   /** A fresh logging loopback host for the governance tests: every
@@ -320,6 +329,130 @@ class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       reader.liveThreads shouldEqual 0
       reader.close()
     } finally h.stop()
+  }
+
+  private def robotsFetches(h: TimedHost): Int = h.entries.count(_._1 == "/robots.txt")
+
+  private def governedRead(urls: Seq[String], timeoutMs: Long = 5000L): Seq[Row] =
+    spark.read.format("graft-web")
+      .option("urls", urls.mkString(","))
+      .option("respectRobots", "true")
+      .option("timeoutMs", timeoutMs.toString)
+      .load().collect().toSeq
+
+  test("robots cache: two reads of one host in one JVM fetch robots.txt once, rules still applied") {
+    val h = new TimedHost(20)
+    try {
+      for (read <- Seq("first", "second")) withClue(s"$read read: ") {
+        governedRead(Seq(s"${h.base}/site/a", s"${h.base}/private/x"))
+          .map(_.getInt(1)) shouldEqual Seq(200, WebTextSource.RobotsBlockedStatus)
+      }
+      robotsFetches(h) shouldEqual 1
+      h.entries.map(_._1) should not contain "/private/x"
+      h.entries.count(_._1 == "/site/a") shouldEqual 2
+    } finally h.stop()
+  }
+
+  test("robots cache: a cached Crawl-delay still spaces the second read's page starts") {
+    val h = new TimedHost(20, "User-agent: *\nCrawl-delay: 0.3\n")
+    try {
+      governedRead(Seq(s"${h.base}/first/1")).map(_.getInt(1)) shouldEqual Seq(200)
+      governedRead((1 to 3).map(i => s"${h.base}/second/$i"))
+        .map(_.getInt(1)) shouldEqual Seq(200, 200, 200)
+      robotsFetches(h) shouldEqual 1
+      val starts = h.entries.filter(_._1.startsWith("/second/")).map(_._2)
+      starts should have size 3
+      starts.sliding(2).foreach { case Seq(a, b) =>
+        (b - a) / 1000000L should be >= 250L
+      }
+    } finally h.stop()
+  }
+
+  test("robots cache: an entry past its TTL is fetched again") {
+    val h = new TimedHost(0)
+    val clock = new java.util.concurrent.atomic.AtomicLong(1000000L)
+    val realNow = WebTextSource.RobotsCache.now
+    WebTextSource.RobotsCache.now = () => clock.get()
+    try {
+      governedRead(Seq(s"${h.base}/site/1"))
+      clock.addAndGet(WebTextSource.RobotsTtlMs - 1)
+      governedRead(Seq(s"${h.base}/site/2"))
+      robotsFetches(h) shouldEqual 1
+      clock.addAndGet(2)
+      governedRead(Seq(s"${h.base}/site/3"))
+      robotsFetches(h) shouldEqual 2
+    } finally {
+      WebTextSource.RobotsCache.now = realNow
+      h.stop()
+    }
+  }
+
+  test("robots cache: a 5xx robots.txt is not cached, so a recovered host is crawled on the next read") {
+    val robotsStatus = new java.util.concurrent.atomic.AtomicInteger(503)
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    s.createContext("/", (ex: HttpExchange) => {
+      val p = ex.getRequestURI.getPath
+      log.add(p)
+      if (p == "/robots.txt") respond(ex, robotsStatus.get(), "User-agent: *\nDisallow:\n")
+      else respond(ex, 200, s"<html><body><p>page $p</p></body></html>")
+    })
+    s.start()
+    val b = s"http://127.0.0.1:${s.getAddress.getPort}"
+    try {
+      governedRead(Seq(s"$b/site/a", s"$b/site/b")).map(_.getInt(1)) shouldEqual
+        Seq(WebTextSource.RobotsBlockedStatus, WebTextSource.RobotsBlockedStatus)
+      log.toArray.toSeq shouldEqual Seq("/robots.txt") // one attempt per read
+      robotsStatus.set(200)
+      governedRead(Seq(s"$b/site/a", s"$b/site/b")).map(_.getInt(1)) shouldEqual Seq(200, 200)
+      log.toArray.toSeq shouldEqual Seq("/robots.txt", "/robots.txt", "/site/a", "/site/b")
+    } finally s.stop(0)
+  }
+
+  test("robots cache: http and https on one authority keep separate entries") {
+    // the http origin's rules allow /site/; its https twin is no TLS
+    // server, so its robots.txt is unreachable: the https URL must come
+    // back robots-blocked, never fetched under the http origin's rules
+    val h = new TimedHost(0)
+    try {
+      governedRead(Seq(s"${h.base}/site/a")).map(_.getInt(1)) shouldEqual Seq(200)
+      val auth = h.base.stripPrefix("http://")
+      governedRead(Seq(s"https://$auth/site/a"), timeoutMs = 1000L)
+        .map(_.getInt(1)) shouldEqual Seq(WebTextSource.RobotsBlockedStatus)
+      WebTextSource.RobotsCache.get(("http", auth)) shouldBe defined
+      WebTextSource.RobotsCache.get(("https", auth)) shouldBe empty
+    } finally h.stop()
+  }
+
+  test("robots cache: never holds more than its cap, expired and oldest entries go first") {
+    import WebTextSource.{Robots, RobotsCache, RobotsCacheCap, RobotsTtlMs}
+    val clock = new java.util.concurrent.atomic.AtomicLong(0L)
+    val realNow = RobotsCache.now
+    RobotsCache.now = () => clock.get()
+    try {
+      val r = Robots(Seq.empty, 0L)
+      RobotsCache.put(("http", "stale.example"), r)
+      clock.set(RobotsTtlMs)
+      RobotsCache.put(("http", "fresh.example"), r)
+      // the expired entry is dropped by the put, with room to spare
+      RobotsCache.size shouldEqual 1
+      val hosts = (0 until RobotsCacheCap + 10).map(i => ("http", s"h$i.example"))
+      hosts.foreach(RobotsCache.put(_, r))
+      RobotsCache.size shouldEqual RobotsCacheCap
+      RobotsCache.get(("http", "fresh.example")) shouldBe empty
+      hosts.take(10).foreach(RobotsCache.get(_) shouldBe empty)
+      hosts.drop(10).foreach(RobotsCache.get(_) shouldBe Some(r))
+    } finally RobotsCache.now = realNow
+  }
+
+  test("JdkFetcher bounds the whole exchange: a body dripped past timeoutMs fails in time") {
+    val drip = new DripServer
+    try {
+      val t0 = System.nanoTime()
+      an[java.util.concurrent.TimeoutException] should be thrownBy
+        WebTextSource.JdkFetcher.get(s"${drip.base}/drip", 500L)
+      (System.nanoTime() - t0) / 1000000L should be < 2500L
+    } finally drip.stop()
   }
 
   test("innerText: script/style/comments dropped, blocks break lines, entities decoded") {
