@@ -4,8 +4,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.{CompletableFuture, ExecutionException, TimeUnit}
 
 /** The engine's JDK HTTP clients, one of each kind per executor JVM,
-  * shared by every network seam (the GET fetchers in
-  * `graft.sources.WebTextSource` / `graft.operators.WebFetch`, the POST
+  * shared by every network seam (the one GET, `WebTextSource.JdkFetcher`,
+  * behind both the `graft-web` reader and `WebFetch.fetchMap`; the POST
   * enricher transport in `graft.operators.HttpEnricher`). Construction
   * is centralized so timeout/proxy/TLS configuration changes cannot
   * silently diverge between the GET and POST paths; the two instances

@@ -5,7 +5,7 @@ import java.util.concurrent.CompletableFuture
 import scala.util.control.NonFatal
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
   * Spark `mapPartitions` over a typed Dataset.
   *
   * The external call sits behind [[Enricher]]: one instance serialized
-  * to each partition. [[Enrichment.enrichMap]] asks it through
-  * `enrichAsync` and keeps up to [[Enrichment.MaxInFlight]] calls of a
-  * task in flight, rows still in input order (llm_utils.py:137-153's
+  * to each partition. [[Enrichment.enrichMap]] and [[Pipelines.leadSight]]
+  * keep up to [[Enrichment.MaxInFlight]] calls of a task in flight through
+  * `enrichAsync`, rows still in input order (llm_utils.py:137-153's
   * 60 s-timeout POST, overlapped within a task and parallel across
   * partitions, where the reference's loop runs them one after another,
   * app.py:289-300). The default
@@ -137,24 +137,29 @@ object Enrichment {
     * sockets and the rows it holds. Fixed on purpose, not an option. */
   val MaxInFlight: Int = 16
 
-  /** O-9: the enrichment map itself. Each task keeps up to
-    * [[MaxInFlight]] calls in flight ([[Enricher.enrichAsync]]) and
-    * returns rows in input order, so it holds at most that many rows.
-    * Errors inside the enricher are contained per row (any failure →
-    * null raw_json), never failing the task — the reference's
-    * swallow-and-continue posture (app.py:258-269). The task's
-    * completion, or an interrupt while it waits, cancels the calls still
-    * pending. */
+  /** O-9: the enrichment map itself, over [[enrichRows]]. */
   def enrichMap(in: Dataset[EnrichIn], enricher: Enricher): Dataset[EnrichOut] = {
     import in.sparkSession.implicits._
-    in.mapPartitions(rows => new InFlight(rows, enricher))
+    enrichRows(in, enricher)(r => (r.company, r.website, r.about))(
+      (r, raw) => EnrichOut(r.doc_id, r.company, r.website, r.about, raw))
   }
 
-  /** The window behind [[enrichMap]]: calls start in input order, at
-    * most [[MaxInFlight]] at a time counting the one being waited on. */
-  private final class InFlight(rows: Iterator[EnrichIn], enricher: Enricher)
-      extends Iterator[EnrichOut] {
-    private val pending = new java.util.ArrayDeque[(EnrichIn, CompletableFuture[Option[String]])]()
+  /** The one enrichment path, over any row type: `context` gives a row's
+    * (company, website, about); `out` builds the output from the row and
+    * its raw JSON, null on any failure (app.py:258-269's
+    * swallow-and-continue), so payload rides through with no join back.
+    * The task's completion, or an interrupt while it waits, cancels the
+    * calls still pending. */
+  private[operators] def enrichRows[I, O: Encoder](in: Dataset[I], enricher: Enricher)(
+      context: I => (String, String, String))(out: (I, String) => O): Dataset[O] =
+    in.mapPartitions(rows => new InFlight(rows, enricher, context, out))
+
+  /** The window behind [[enrichRows]]: calls start in input order, at
+    * most [[MaxInFlight]] at a time counting the one being waited on
+    * ([[Enricher.enrichAsync]]); rows leave in input order. */
+  private final class InFlight[I, O](rows: Iterator[I], enricher: Enricher,
+      context: I => (String, String, String), out: (I, String) => O) extends Iterator[O] {
+    private val pending = new java.util.ArrayDeque[(I, CompletableFuture[Option[String]])]()
     Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => cancelPending()))
 
     private def cancelPending(): Unit = {
@@ -166,14 +171,14 @@ object Enrichment {
       while (pending.size < MaxInFlight && rows.hasNext) {
         val r = rows.next()
         val call =
-          try enricher.enrichAsync(r.company, r.website, r.about)
+          try { val (c, w, a) = context(r); enricher.enrichAsync(c, w, a) }
           catch { case NonFatal(e) => CompletableFuture.failedFuture[Option[String]](e) }
         pending.add(r -> call)
       }
 
     def hasNext: Boolean = { fill(); !pending.isEmpty }
 
-    def next(): EnrichOut = {
+    def next(): O = {
       fill()
       val (r, call) = pending.removeFirst()
       val raw =
@@ -182,7 +187,7 @@ object Enrichment {
           case ie: InterruptedException => cancelPending(); throw ie
           case NonFatal(_) => null
         }
-      EnrichOut(r.doc_id, r.company, r.website, r.about, raw)
+      out(r, raw)
     }
   }
 

@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * Distribution posture: the enricher object is serialized once per
   * task; the HTTP client is `@transient lazy`, so each executor JVM
   * builds exactly one client on first use. [[HttpEnricher.enrichAsync]]
-  * sends without blocking, so [[Enrichment.enrichMap]] keeps up to
+  * sends without blocking, so [[Enrichment.enrichMap]] (and
+  * [[Pipelines.leadSight]], through the same window) keeps up to
   * [[Enrichment.MaxInFlight]] = 16 calls of a task in flight (the
   * reference's strictly sequential loop, app.py:289-300, kept only its
   * order, which the map keeps too). Each call is bounded by
@@ -104,6 +105,9 @@ class HttpEnricher(
     transport: HttpEnricher.Transport = HttpEnricher.JdkTransport)
   extends Enricher {
 
+  // fail fast: a non-positive timeout fails every call into a null row
+  require(timeoutMs > 0, s"HttpEnricher timeoutMs must be positive, got $timeoutMs")
+
   def enrich(company: String, website: String, about: String): Option[String] =
     graft.Net.await(enrichAsync(company, website, about))
 
@@ -139,12 +143,10 @@ object Enrichers {
   def fromConf(spark: SparkSession): Enricher =
     spark.conf.getOption("spark.graft.enricher.url") match {
       case Some(url) =>
-        new HttpEnricher(
-          url,
-          spark.conf.getOption("spark.graft.enricher.apiKey").getOrElse(""),
-          spark.conf.getOption("spark.graft.enricher.model").getOrElse("default"),
-          spark.conf.getOption("spark.graft.enricher.timeoutMs")
-            .map(_.toLong).getOrElse(60000L))
+        val timeoutMs = spark.conf.get("spark.graft.enricher.timeoutMs", "60000").toLong
+        require(timeoutMs > 0, s"spark.graft.enricher.timeoutMs must be positive, got $timeoutMs")
+        new HttpEnricher(url, spark.conf.get("spark.graft.enricher.apiKey", ""),
+          spark.conf.get("spark.graft.enricher.model", "default"), timeoutMs)
       case None => MockEnricher
     }
 }

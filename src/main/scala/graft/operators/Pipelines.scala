@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * A user of the reference switches by pointing this at their
   * (company, website, page-text) frame and swapping [[MockEnricher]]
   * for a real [[Enricher]]. The whole pipeline is ONE lineage: the
-  * extraction columns ride through the enrichment map instead of being
-  * recomputed on a second scan and joined back — at 100 TB the join
-  * would double the scan and add a shuffle for nothing.
+  * extraction columns ride through the enrichment map
+  * ([[Enrichment.enrichRows]], `enrichMap`'s window: up to 16 calls of
+  * a task in flight, rows in input order) instead of being recomputed
+  * on a second scan and joined back — at 100 TB the join would double
+  * the scan and add a shuffle for nothing.
   */
 object Pipelines {
 
@@ -42,16 +44,11 @@ object Pipelines {
         Extraction.sentenceNear(col("text_norm"), "about us").as("about_us"),
         Extraction.extractEmail(col("text_norm")).as("email"))
       .as[PipeIn]
-    val withRaw = extracted.mapPartitions { rows =>
-      rows.map { r =>
-        // the reference prompts with the extracted sentence or ""
-        // (app.py:226: about_text = result["About Us"] or "")
-        val about = Option(r.about_us).getOrElse("")
-        val raw = scala.util.Try(enricher.enrich(r.company, r.website, about))
-          .toOption.flatten.orNull
-        PipeOut(r.doc_id, r.company, r.website, r.founded, r.about_us, r.email, raw)
-      }
-    }
+    val withRaw = Enrichment.enrichRows(extracted, enricher)(
+      // the reference prompts with the extracted sentence or ""
+      // (app.py:226: about_text = result["About Us"] or "")
+      r => (r.company, r.website, Option(r.about_us).getOrElse("")))(
+      (r, raw) => PipeOut(r.doc_id, r.company, r.website, r.founded, r.about_us, r.email, raw))
     val renamed = Enrichment.flatten(withRaw.toDF())
       .withColumnRenamed("company", "Company Name")
       .withColumnRenamed("website", "Website")

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** robots.txt parsing as pure column expressions — the text-side half
   * of X-133/X-135 (the `robots_filter` / `robots_allow_filter` queries
   * consume (host, rule[, allow]) frames; this produces them from
-  * fetched `/robots.txt` bodies, so the crawl pipeline is: WebFetch
-  * robots.txt → [[groupRules]] → explode → the gate).
+  * fetched `/robots.txt` bodies, so the batch crawl pipeline is:
+  * `WebFetch.fetchMap(…, rawText = true)` → [[groupRules]] → explode →
+  * the gate; the `graft-web` reader's live check is [[groupRulesScala]]).
   *
   * Implements the Robots Exclusion Protocol's group model (RFC 9309
   * §2.1) for the `*` agent: consecutive `User-agent:` lines form ONE

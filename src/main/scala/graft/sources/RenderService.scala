@@ -19,9 +19,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * reader's swallow-and-skip error row. `GET /healthz` → 200 "ok".
   *
   * Rendering seam: this container ships no browser, so [[render]] is
-  * the STRUCTURAL renderer — plain fetch, then
-  * [[WebTextSource.parsePage]]: consent overlays stripped (the
-  * popup-click analog), inner text + anchors of what remains. A production
+  * the STRUCTURAL renderer — [[WebTextSource.HttpPageFetcher]]: consent
+  * overlays stripped (the popup-click analog), inner text + anchors of
+  * what remains. A production
   * deployment replaces ONLY [[render]] with a Playwright/Chromium
   * pool call (page.goto → click consent → inner_text + anchors);
   * every other line — the HTTP surface, the JSON contract, the error

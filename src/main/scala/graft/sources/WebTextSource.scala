@@ -24,68 +24,45 @@ import org.apache.spark.unsafe.types.UTF8String
   *   .load()                       // url, status, text, links
   * }}}
   *
-  * Fidelity boundary, stated honestly: the reference renders with a
-  * real browser (JS execution — out of engine scope per SURVEY §2).
-  * By default this source speaks plain HTTP and approximates
-  * `inner_text` by structural tag stripping
-  * ([[WebTextSource.innerText]]); pages that materialize their text
-  * with JavaScript come back sparse. The reference's cookie-popup
-  * click (O-10, app.py:127-136) has a STATIC analog since round 11:
-  * consent/cookie/GDPR overlay subtrees are dropped before text and
-  * link extraction ([[WebTextSource.stripConsentOverlays]]), so on the
-  * (overwhelmingly common) server-rendered consent banners the
-  * extracted text matches the post-click page; only JS-injected
-  * banners remain at the render-service boundary. Since round 9 the boundary has a
-  * spec'd PROTOCOL, not just a seam: `.option("renderService", url)`
-  * routes every fetch through a rendering sidecar speaking
-  * [[WebTextSource.RenderServiceFetcher]]'s JSON contract (rendered
-  * text + anchors per URL), so deploying a browser pool closes the
-  * gap with zero engine changes — WebTextSourceSpec proves the
-  * protocol end-to-end against a deterministic loopback renderer.
+  * Fidelity boundary: the reference renders with a real browser (JS
+  * execution — out of engine scope per SURVEY §2). By default this
+  * source speaks plain HTTP and approximates `inner_text` by structural
+  * tag stripping ([[WebTextSource.innerText]]), so pages that
+  * materialize their text with JavaScript come back sparse. The
+  * reference's cookie-popup click (O-10, app.py:127-136) has a static
+  * analog: server-rendered consent overlays are dropped before text and
+  * link extraction ([[WebTextSource.stripConsentOverlays]]). Rendering
+  * plugs in behind [[WebTextSource.PageFetcher]]:
+  * `.option("renderService", url)` routes every fetch through a
+  * rendering sidecar speaking [[WebTextSource.RenderServiceFetcher]]'s
+  * JSON contract, so a browser pool closes the gap with no engine
+  * change (WebTextSourceSpec drives it against a loopback renderer).
   *
   * Error posture matches the reference's swallow-and-skip
   * (app.py:258-269): a transport failure yields a row with null
   * status/text, a non-200 yields the status with null text — a dead
   * site never fails the partition, let alone the job.
   *
-  * Scale posture: each input partition carries a slice of the URL
-  * list (`numPartitions`, default min(8, n)). A task runs one HOST
-  * CHAIN per distinct host in its slice, the chains concurrently on a
-  * small pool of daemon threads (min(hosts, [[WebTextSource.MaxHostChains]]
-  * = 16) per task): each chain is that host's own serial sequence, so
-  * a task has up to 16 requests in flight but never two to one host.
-  * Rows still come out in the slice's URL order. One shared JDK
-  * HttpClient per executor JVM (`@transient lazy`). This is the
-  * reference's strictly-sequential loop (app.py:290) made parallel
-  * ACROSS hosts and kept serial WITHIN one.
+  * Scale posture: each input partition carries a slice of the URL list
+  * (`numPartitions`, default min(8, n)), fetched by [[HostChains]]: one
+  * serial chain per host, up to [[WebTextSource.MaxHostChains]] = 16
+  * hosts in flight per task, never two requests to one host, rows in
+  * the slice's URL order — the reference's strictly sequential loop
+  * (app.py:290) made parallel ACROSS hosts and kept serial WITHIN one.
   *
-  * Crawl governance (r13, the X-133/X-134/X-135 batch gates applied
-  * LIVE): `.option("respectRobots", "true")` reads each origin's
-  * `/robots.txt` first in its host's chain, from a per-JVM cache when
-  * this JVM fetched it within [[WebTextSource.RobotsTtlMs]] (1 h, RFC
-  * 9309 §2.4 allows 24 h; at most [[WebTextSource.RobotsCacheCap]] =
-  * 4096 origins; an unreachable robots.txt is never cached), parses it
-  * with the RFC 9309 group model
-  * ([[graft.operators.RobotsTxt.groupRulesScala]], pinned against the
-  * Catalyst twin), applies longest-match/Allow-wins precedence, and
-  * emits a [[RobotsBlockedStatus]] row WITHOUT fetching a disallowed
-  * URL (unreachable robots = full disallow, unavailable 4xx = allow,
-  * per RFC 9309 §2.3.1).
-  * `.option("politenessMs", "500")` enforces a minimum gap between
-  * consecutive requests to the same host, robots fetch included. A
-  * `Crawl-delay` in the robots `*` group, cached or fetched, widens
-  * that gap to max(politenessMs, delay), the delay capped at
-  * `timeoutMs` so a hostile robots.txt cannot stall a task without
-  * bound.
-  * Either option switches the planner to HOST-GROUPED partitions (a
-  * host never spans two tasks, so per-host state is partition-local);
-  * the reference gets this for free by crawling sequentially
-  * (app.py:290) — this is the same guarantee at cluster parallelism. The options-string URL list is the
+  * Crawl governance (the X-133/X-134/X-135 batch gates applied live):
+  * `.option("respectRobots", "true")` reads each origin's robots.txt
+  * first in its host's chain (RFC 9309, cached per JVM in
+  * [[WebTextSource.RobotsCache]]) and emits a
+  * [[WebTextSource.RobotsBlockedStatus]] row WITHOUT fetching a
+  * disallowed URL; `.option("politenessMs", "500")` sets a minimum gap
+  * between requests to one host, widened by a robots `Crawl-delay`.
+  * Either option switches the planner to HOST-GROUPED partitions, so a
+  * host never spans two tasks. The options-string URL list is the
   * reference's entry shape (a submitted list of sites, thousands at
-  * most — app.py's xlsx upload); a 100 TB-scale frontier would not
-  * arrive via an option string, and for that shape the engine's
-  * mapPartitions enrichment over a URL column (O-9/O-11 recipe) is
-  * the documented path — this source is the bounded-list entry point.
+  * most — app.py's xlsx upload). A 100 TB-scale frontier arrives as a
+  * URL column instead: [[graft.operators.WebFetch.fetchMap]] runs the
+  * same host chains over it, ungoverned.
   */
 object WebTextSource {
 
@@ -101,6 +78,11 @@ object WebTextSource {
     * queue in order of first appearance. Fixed on purpose, not an
     * option: it bounds one task's threads and sockets. */
   val MaxHostChains: Int = 16
+
+  /** URLs per [[HostChains]] in [[graft.operators.WebFetch.fetchMap]]:
+    * chains run ahead of the consumer, so a task holds at most one slice
+    * of pages, whatever its partition's size. Fixed, not an option. */
+  val FetchSlice: Int = 256
 
   /** How long one JVM reuses an origin's robots.txt result. RFC 9309
     * §2.4 lets a crawler cache it for up to 24 h; an hour keeps a rule
@@ -183,49 +165,50 @@ object WebTextSource {
       StructField("anchor", StringType, nullable = true))), containsNull = false),
       nullable = true)))
 
-  /** Transport seam (the [[graft.operators.HttpEnricher.Transport]]
-    * pattern): GET a URL, return (status, body); throw on transport
-    * failure. Lets specs run the REAL client against a loopback server
-    * and a deployment swap in a rendering fetch service. */
-  trait Fetcher extends Serializable {
-    def get(url: String, timeoutMs: Long): (Int, String)
-  }
-
   /** A fetched page in RENDERED form: HTTP status, the body's inner
     * text, and its (href, anchor) pairs — the unit the reference's
     * browser fetch produces (app.py:121,141: `page.goto` →
     * `inner_text("body")` → `locator("a")`). `text`/`links` are null
-    * for non-200 statuses. */
+    * for non-200 statuses; `links` is null for a [[RawPageFetcher]]
+    * body. */
   case class FetchedPage(status: Int, text: String,
       links: Seq[(String, String)])
 
-  /** Page-level fetch seam — what the reader actually consumes. Two
+  /** Page-level fetch seam — what the [[HostChains]] consume. Three
     * shipped impls: [[HttpPageFetcher]] (plain HTTP + structural
-    * approximation, the default) and [[RenderServiceFetcher]] (the
+    * approximation, the default), [[RawPageFetcher]] (the verbatim
+    * body, `fetchMap`'s `rawText`) and [[RenderServiceFetcher]] (the
     * sidecar render-service protocol, closing the JS-rendering
     * fidelity boundary when a browser pool is deployed). Throw on
-    * transport failure → the reader's swallow-and-skip null row. */
+    * transport failure → the swallow-and-skip null row. */
   trait PageFetcher extends Serializable {
     def fetchPage(url: String, timeoutMs: Long): FetchedPage
   }
 
-  /** A status-200 HTML body as a rendered page: [[innerText]] +
-    * [[extractLinks]] over the body with its consent overlays stripped
-    * ONCE, so text and links see the same post-"click" DOM — a
-    * dismissed banner's links vanish with it in the reference too. The
-    * one page parse of both plain-HTTP paths: [[HttpPageFetcher]] (the
-    * `graft-web` reader) and [[graft.operators.WebFetch.fetchMap]]. */
-  def parsePage(body: String): FetchedPage = {
-    val clean = stripConsentOverlays(body)
-    FetchedPage(200, innerText(clean), extractLinks(clean))
-  }
-
-  /** Plain-HTTP page fetch: raw body → [[parsePage]] (JS-materialized
-    * text comes back sparse — the documented HTTP-crawler boundary). */
+  /** Plain-HTTP page fetch (JS-materialized text comes back sparse —
+    * the documented HTTP-crawler boundary): a 200 body becomes
+    * [[innerText]] + [[extractLinks]] over the body with its consent
+    * overlays stripped ONCE, so text and links see the same post-"click"
+    * DOM — a dismissed banner's links vanish with it in the reference
+    * too. */
   object HttpPageFetcher extends PageFetcher {
     def fetchPage(url: String, timeoutMs: Long): FetchedPage = {
       val (code, body) = JdkFetcher.get(url, timeoutMs)
-      if (code == 200) parsePage(body) else FetchedPage(code, null, null)
+      if (code != 200) FetchedPage(code, null, null)
+      else {
+        val clean = stripConsentOverlays(body)
+        FetchedPage(200, innerText(clean), extractLinks(clean))
+      }
+    }
+  }
+
+  /** A body that is NOT a page (robots.txt, sitemap.xml, an API
+    * payload): the verbatim body as `text` — tag stripping would
+    * destroy XML — and no links. */
+  object RawPageFetcher extends PageFetcher {
+    def fetchPage(url: String, timeoutMs: Long): FetchedPage = {
+      val (code, body) = JdkFetcher.get(url, timeoutMs)
+      FetchedPage(code, if (code == 200) body else null, null)
     }
   }
 
@@ -291,7 +274,7 @@ object WebTextSource {
     * `TimeoutException` propagates to the caller's swallow-and-skip
     * error row like any transport failure; an interrupt cancels the
     * exchange. */
-  object JdkFetcher extends Fetcher {
+  object JdkFetcher {
     def get(url: String, timeoutMs: Long): (Int, String) =
       graft.Net.await(graft.Net.exchange(graft.Net.fetching,
         java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
@@ -471,6 +454,9 @@ class WebTextTable extends Table with SupportsRead {
     // fail fast: Pattern.quote("") is a zero-width match that would
     // shred the urls value into single characters
     require(delim.nonEmpty, "graft-web option 'delimiter' must be non-empty")
+    // fail fast: a non-positive timeout fails every request into an error row
+    val timeoutMs = Option(options.get("timeoutMs")).map(_.toLong).getOrElse(30000L)
+    require(timeoutMs > 0, s"graft-web option 'timeoutMs' must be positive, got $timeoutMs")
     new WebTextScan(
       Option(options.get("urls"))
         .map(_.split(java.util.regex.Pattern.quote(delim))
@@ -479,18 +465,13 @@ class WebTextTable extends Table with SupportsRead {
           "graft-web requires option 'urls' (delimiter-separated URL list; " +
             "option 'delimiter' defaults to ',')")),
       Option(options.get("numPartitions")).map(_.toInt).getOrElse(0),
-      Option(options.get("timeoutMs")).map(_.toLong).getOrElse(30000L),
+      timeoutMs,
       // option 'renderService': base URL of a rendering fetch service
       // (the RenderServiceFetcher protocol); absent → plain HTTP
       Option(options.get("renderService"))
         .map(WebTextSource.RenderServiceFetcher(_): WebTextSource.PageFetcher)
         .getOrElse(WebTextSource.HttpPageFetcher),
-      // crawl governance (r13): 'respectRobots' fetches + applies each
-      // host's robots.txt before any page on it (RFC 9309 group model
-      // + Allow precedence — the X-133/X-135 batch gates applied LIVE);
-      // 'politenessMs' spaces consecutive requests to the SAME host.
-      // Either option switches partition planning to host-grouped so
-      // per-host serialization is a partition-local property.
+      // crawl governance: see the WebTextSource scaladoc
       Option(options.get("respectRobots")).exists(_.trim.toBoolean),
       Option(options.get("politenessMs")).map(_.toLong).getOrElse(0L))
   }
@@ -511,12 +492,7 @@ class WebTextScan(urls: Array[String], numPartitions: Int, timeoutMs: Long,
       // HOST-GROUPED planning: per-host serialization (politeness) is
       // a partition-local property only if a host never spans two
       // tasks. Hosts are spread round-robin by first appearance; within
-      // a partition the original URL order is kept, and the reader runs
-      // each host's URLs as one serial chain, the chains concurrently — one host's
-      // page is fetched while another host's politeness window elapses.
-      // (The reference crawls strictly sequentially — accidental
-      // politeness; this is the scale-correct form: full parallelism
-      // ACROSS hosts, serial WITHIN one.)
+      // a partition the original URL order is kept.
       val hostOf = urls.map(u => u -> WebTextSource.hostOf(u)).toMap
       val hosts = urls.map(hostOf).distinct
       val n = math.max(1,
@@ -547,10 +523,8 @@ class WebTextScan(urls: Array[String], numPartitions: Int, timeoutMs: Long,
 
 case class UrlsPartition(urls: Array[String]) extends InputPartition
 
-class WebTextReaderFactory(timeoutMs: Long,
-    fetcher: WebTextSource.PageFetcher,
-    respectRobots: Boolean = false, politenessMs: Long = 0L)
-    extends PartitionReaderFactory {
+class WebTextReaderFactory(timeoutMs: Long, fetcher: WebTextSource.PageFetcher,
+    respectRobots: Boolean, politenessMs: Long) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new WebTextReader(partition.asInstanceOf[UrlsPartition].urls, timeoutMs,
       fetcher, respectRobots, politenessMs)
@@ -560,16 +534,59 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
     fetcher: WebTextSource.PageFetcher = WebTextSource.HttpPageFetcher,
     respectRobots: Boolean = false, politenessMs: Long = 0L)
     extends PartitionReader[InternalRow] {
-  import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, TimeUnit}
 
+  private val chains = new HostChains(urls, timeoutMs, fetcher, respectRobots, politenessMs)
   private var i = -1
   private var row: InternalRow = _
 
+  /** Chain threads of this reader that are still running (spec probe). */
+  private[sources] def liveThreads: Int = chains.liveThreads
+
+  // the fetch happens in next(), not get(): the PartitionReader
+  // contract allows get() to be called repeatedly per advance and
+  // requires it to return the same row — a fetch in get() would re-hit
+  // the network and could return a DIFFERENT row the second time
+  override def next(): Boolean = chains.hasNext && {
+    i += 1
+    val url = UTF8String.fromString(urls(i))
+    row = chains.next() match {
+      case Some(page) if page.text != null =>
+        InternalRow(url, page.status, UTF8String.fromString(page.text),
+          new GenericArrayData(page.links.map { case (href, anchor) => InternalRow(
+            UTF8String.fromString(href), UTF8String.fromString(anchor)) }.toArray[Any]))
+      // a non-200, or a RobotsBlockedStatus row: status, no text
+      case Some(page) => InternalRow(url, page.status, null, null)
+      // transport failure: null status/text — the row survives
+      case None => InternalRow(url, null, null, null)
+    }
+    true
+  }
+
+  override def get(): InternalRow = row
+
+  override def close(): Unit = chains.close()
+}
+
+/** The one fetch scheduler, behind the `graft-web` reader and
+  * [[graft.operators.WebFetch.fetchMap]]: one HOST CHAIN per distinct
+  * host of `urls`, the chains concurrently on min(hosts,
+  * [[WebTextSource.MaxHostChains]]) daemon threads, further hosts queued
+  * by first appearance. Yields each URL's outcome in `urls` order:
+  * `Some(page)`, status [[WebTextSource.RobotsBlockedStatus]] when robots
+  * refused it, or `None` on a transport failure. */
+final class HostChains(urls: Array[String], timeoutMs: Long,
+    fetcher: WebTextSource.PageFetcher,
+    respectRobots: Boolean = false, politenessMs: Long = 0L)
+    extends Iterator[Option[WebTextSource.FetchedPage]] {
+  import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, TimeUnit}
+
+  private var i = 0
+
   /** One slot per URL, completed by its host's chain; [[next]] takes
-    * them in partition order and drops each once it is returned. Chains
-    * run ahead of [[next]], so up to a whole slice's rows may be held at
-    * once — the bounded URL list this source is the entry point for. */
-  private val results = Array.fill(urls.length)(new CompletableFuture[InternalRow]())
+    * them in order and drops each once it is returned. Chains run ahead
+    * of [[next]], so all of `urls`' pages may be held at once. */
+  private val results =
+    Array.fill(urls.length)(new CompletableFuture[Option[WebTextSource.FetchedPage]]())
 
   /** URL indices per host, ascending, hosts in order of first appearance. */
   private val chains: Seq[Seq[Int]] =
@@ -578,7 +595,7 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
   private var pool: ExecutorService = _
   private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
 
-  /** Chain threads of this reader that are still running (spec probe). */
+  /** Chain threads that are still running (spec probe). */
   private[sources] def liveThreads: Int = threads.stream.filter(_.isAlive).count.toInt
 
   private def start(): Unit = {
@@ -590,11 +607,12 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
         t
       })
     chains.foreach(c => pool.execute(new HostChain(c)))
+    pool.shutdown() // queued chains still run; no thread outlives them
   }
 
   /** One host's own sequence: robots.txt first (when `respectRobots`),
-    * then each of its URLs in partition order, one request at a time.
-    * Its state is its own, so no other thread touches it.
+    * then each of its URLs in order, one request at a time. Its state
+    * is its own, so no other thread touches it.
     *
     * Robots rules are keyed per (scheme, authority), NOT authority
     * alone: RFC 9309 §2.3 scopes rules per
@@ -668,7 +686,7 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
     /** False only when governance says DON'T fetch: robots disallow the
       * path, or robots themselves are unreachable. URLs without a
       * parseable scheme+authority skip governance (their fetch fails
-      * into the transport-error row anyway). */
+      * into the transport-error outcome anyway). */
     private def allowedByRobots(url: String): Boolean =
       !respectRobots || (WebTextSource.authorityOf(url) match {
         case Some((scheme, auth)) => robotsFor(scheme, auth) match {
@@ -679,72 +697,52 @@ class WebTextReader(urls: Array[String], timeoutMs: Long,
         case None => true
       })
 
-    private def fetchRow(url: String): InternalRow = {
-      // plain Tuple3[Any, ...] access, NOT a destructuring val: a typed
-      // pattern (`val (s: Any, …) = t`) is a runtime type TEST, and null
-      // fails it — the error row itself would MatchError
-      val fetched: (Any, Any, Any) =
-        if (!allowedByRobots(url))
-          // governance row: never fetched (RobotsBlockedStatus, not an
-          // HTTP status) — the live form of the X-133/X-135 gates
-          (WebTextSource.RobotsBlockedStatus, null, null)
-        else try {
-          val page = spaced(fetcher.fetchPage(url, timeoutMs))
-          if (page.text != null)
-            (page.status,
-              UTF8String.fromString(page.text),
-              new GenericArrayData(page.links.map {
-                case (href, anchor) => InternalRow(
-                  UTF8String.fromString(href), UTF8String.fromString(anchor))
-              }.toArray[Any]))
-          else (page.status, null, null)
-        } catch {
-          // cancellation (close() or a killed task) arrives as an
-          // interrupt; swallowing it would keep the chain fetching
-          case ie: InterruptedException => throw ie
-          // transport failure (connect refused, timeout, bad host):
-          // null status/text — the row survives, the task never fails
-          case _: Exception => (null, null, null)
-        }
-      InternalRow(UTF8String.fromString(url), fetched._1, fetched._2, fetched._3)
-    }
+    private def fetchOne(url: String): Option[WebTextSource.FetchedPage] =
+      if (!allowedByRobots(url))
+        // governance outcome: never fetched (RobotsBlockedStatus, not an
+        // HTTP status) — the live form of the X-133/X-135 gates
+        Some(WebTextSource.FetchedPage(WebTextSource.RobotsBlockedStatus, null, null))
+      else try Some(spaced(fetcher.fetchPage(url, timeoutMs)))
+      catch {
+        // cancellation (close() or a killed task) arrives as an
+        // interrupt; swallowing it would keep the chain fetching
+        case ie: InterruptedException => throw ie
+        // transport failure (connect refused, timeout, bad host)
+        case _: Exception => None
+      }
 
     override def run(): Unit = {
       var k = 0
       try while (k < idx.length) {
-        results(idx(k)).complete(fetchRow(urls(idx(k))))
+        results(idx(k)).complete(fetchOne(urls(idx(k))))
         k += 1
       } catch {
-        // cancelled, or a fatal error: the rows this chain still owes
-        // fail with it, so next() rethrows instead of waiting forever
+        // cancelled, or a fatal error: the outcomes this chain still
+        // owes fail with it, so next() rethrows instead of waiting forever
         case t: Throwable => idx.drop(k).foreach(j => results(j).completeExceptionally(t))
       }
     }
   }
 
-  // the fetch happens in next(), not get(): the PartitionReader
-  // contract allows get() to be called repeatedly per advance and
-  // requires it to return the same row — a fetch in get() would re-hit
-  // the network and could return a DIFFERENT row the second time
-  override def next(): Boolean = {
-    i += 1
-    if (i >= urls.length) return false
+  def hasNext: Boolean = i < urls.length
+
+  def next(): Option[WebTextSource.FetchedPage] = {
+    if (!hasNext) throw new NoSuchElementException("every URL was returned")
     if (pool == null) start()
-    row = try results(i).get() catch {
+    val page = try results(i).get() catch {
       // task cancellation arrives as Thread.interrupt(): stop every
       // chain so a KILLED task fetches nothing more, then rethrow
       case ie: InterruptedException => pool.shutdownNow(); throw ie
       case e: ExecutionException => throw e.getCause
     }
     results(i) = null
-    true
+    i += 1
+    page
   }
-
-  override def get(): InternalRow = row
 
   /** Cancels every chain and waits (at most `timeoutMs`) for their
     * threads to end; a request already on the wire is abandoned. */
-  override def close(): Unit = if (pool != null) {
+  def close(): Unit = if (pool != null) {
     pool.shutdownNow()
     try pool.awaitTermination(timeoutMs, TimeUnit.MILLISECONDS)
     catch { case _: InterruptedException => Thread.currentThread().interrupt() }

@@ -98,4 +98,24 @@ class HttpEnricherSpec extends SparkSpec {
     }
     Enrichers.fromConf(spark) shouldBe MockEnricher // gate restored
   }
+
+  test("HttpEnricher rejects a non-positive timeoutMs up front") {
+    for (t <- Seq(0L, -1L)) withClue(s"timeoutMs=$t: ") {
+      val e = intercept[IllegalArgumentException](
+        new HttpEnricher("http://unit.test", "", "m", timeoutMs = t,
+          transport = stub(_ => (200, goodBody))))
+      e.getMessage should include("timeoutMs")
+    }
+  }
+
+  test("Enrichers.fromConf rejects a non-positive spark.graft.enricher.timeoutMs") {
+    for (t <- Seq("0", "-1")) withClue(s"timeoutMs=$t: ") {
+      withSQLConf("spark.graft.enricher.url" -> "http://cfg.test",
+          "spark.graft.enricher.timeoutMs" -> t) {
+        val e = intercept[IllegalArgumentException](Enrichers.fromConf(spark))
+        e.getMessage should include("spark.graft.enricher.timeoutMs")
+      }
+    }
+    Enrichers.fromConf(spark) shouldBe MockEnricher // gate restored
+  }
 }

@@ -119,9 +119,10 @@ class LiveHttpEnricherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
   }
 
   /** A loopback LLM on its own thread pool, so calls can overlap: each
-    * answers after `latencyMs(prompt)`, a prompt holding "boom" gets a
-    * 500, and the largest number of calls in flight at once is kept. */
-  private final class ConcurrentLlm(latencyMs: String => Long) {
+    * answers `content` after `latencyMs(prompt)`, a prompt holding
+    * "boom" gets a 500, and the largest number of calls in flight at
+    * once is kept. */
+  private final class ConcurrentLlm(latencyMs: String => Long, content: String = "enriched") {
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     private val pool = java.util.concurrent.Executors.newCachedThreadPool()
@@ -135,7 +136,7 @@ class LiveHttpEnricherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
       inFlight.decrementAndGet()
       try {
         if (body.contains("boom")) respond(ex, 500, "boom")
-        else respond(ex, 200, chatJson("enriched"))
+        else respond(ex, 200, chatJson(content))
       } catch { case _: java.io.IOException => } // the caller gave up
     })
     s.start()
@@ -230,5 +231,32 @@ class LiveHttpEnricherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
       .collect().sortBy(_.doc_id)
     out.map(r => Option(r.raw_json)).toSeq shouldEqual
       Seq(Some("live: enriched"), None, Some("live: enriched"))
+  }
+
+  test("leadSight keeps a task's calls in flight, rows in doc_id order, a failed call contained") {
+    import spark.implicits._
+    // later rows answer sooner (300 ms down to 160 ms), so completion
+    // order is the reverse of input order; row 5 gets a 500
+    val llm = new ConcurrentLlm(body =>
+      "https://c(\\d+)\\.example".r.findFirstMatchIn(body)
+        .map(m => 300L - 20L * m.group(1).toLong).getOrElse(150L),
+      content = """{"executive_brief":"brief"}""")
+    try {
+      val docs = (0 until 8).map(i => (i.toLong, if (i == 5) "boom" else s"c$i",
+        s"https://c$i.example", s"Founded in 199$i. Learn about us here. mail: ceo@c$i.io"))
+        .toDF("doc_id", "company", "website", "text").coalesce(1)
+      val out = Pipelines.leadSight(docs,
+        new HttpEnricher(llm.url, "", "m1", timeoutMs = 5000)).collect()
+      out.map(_.getAs[Long]("doc_id")).toSeq shouldEqual (0L until 8L)
+      out.foreach { r =>
+        val i = r.getAs[Long]("doc_id")
+        r.getAs[String]("Founded Info") shouldEqual s"Founded in 199$i"
+        r.getAs[String]("About Us") shouldEqual "Learn about us here"
+        r.getAs[String]("Email") shouldEqual s"ceo@c$i.io"
+        if (i == 5) Enrichment.FlattenKeys.foreach(k => r.getAs[String](k) shouldEqual null)
+        else r.getAs[String]("executive_brief") shouldEqual "brief"
+      }
+      llm.maxInFlight.get() should (be > 1 and be <= Enrichment.MaxInFlight)
+    } finally llm.stop()
   }
 }

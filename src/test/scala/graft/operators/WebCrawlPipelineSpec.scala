@@ -3,7 +3,7 @@ package graft.operators
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.SparkSpec
+import graft.{SparkSpec, TimedHost}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -66,6 +66,13 @@ class WebCrawlPipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
       |User-agent: *
       |Disallow: /company/""".stripMargin
 
+  private def sitemapXml =
+    s"""<?xml version="1.0"?><urlset>
+       |<url><loc>$base/about-us</loc></url>
+       |<url><loc>$base/company/leadership</loc></url>
+       |<url><loc>$base/search?q=a&amp;page=2</loc></url>
+       |</urlset>""".stripMargin
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -73,12 +80,7 @@ class WebCrawlPipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
       ex.getRequestURI.getPath match {
         case "/"                   => respond(ex, 200, home)
         case "/robots.txt"         => respond(ex, 200, robotsTxt)
-        case "/sitemap.xml"        => respond(ex, 200,
-          s"""<?xml version="1.0"?><urlset>
-             |<url><loc>$base/about-us</loc></url>
-             |<url><loc>$base/company/leadership</loc></url>
-             |<url><loc>$base/search?q=a&amp;page=2</loc></url>
-             |</urlset>""".stripMargin)
+        case "/sitemap.xml"        => respond(ex, 200, sitemapXml)
         case "/about-us"           => respond(ex, 200, aboutPage)
         case "/consent"            => respond(ex, 200, consentPage)
         case "/company/leadership" => respond(ex, 200, leadershipPage)
@@ -219,5 +221,57 @@ class WebCrawlPipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAl
     mapLinks shouldEqual Seq(("/about-us", "About Us"))
     viaMap.text shouldEqual Some(viaSource.getAs[String]("text"))
     viaMap.text.get should not include "cookies"
+  }
+
+  test("fetchMap keeps hosts in flight: one request per host at a time, rows in input order") {
+    import spark.implicits._
+    import WebFetch._
+    val hosts = Seq.fill(3)(new TimedHost(150))
+    try {
+      val urls = for (p <- Seq("a", "b"); h <- hosts) yield s"${h.base}/site/$p"
+      // the same URL under two ids is fetched, and returned, twice
+      val in = (urls :+ urls.head).zipWithIndex.map { case (u, i) => FetchIn(10L + i, u) }
+      val out = fetchMap(in.toDS().coalesce(1), timeoutMs = 5000).collect()
+      out.map(r => (r.id, r.url)).toSeq shouldEqual in.map(r => (r.id, r.url))
+      out.foreach { r =>
+        r.status shouldEqual Some(200)
+        r.text.get should include("page /site/")
+      }
+      val logs = hosts.map(_.entries)
+      logs.map(_.map(_._1)) shouldEqual Seq(
+        Seq("/site/a", "/site/b", "/site/a"), Seq("/site/a", "/site/b"),
+        Seq("/site/a", "/site/b"))
+      // same host: each request ends before the next one starts
+      for (l <- logs) l.sliding(2).foreach {
+        case Seq(a, b) => assert(a._3 <= b._2, s"overlap on one host: $a $b")
+        case _ =>
+      }
+      // different hosts: some pair of requests is in flight together
+      val all = logs.zipWithIndex.flatMap { case (l, h) => l.map(e => (h, e._2, e._3)) }
+      assert(all.exists { case (h1, s1, e1) =>
+        all.exists { case (h2, s2, e2) => h1 != h2 && s1 < e2 && s2 < e1 } },
+        "no two hosts were ever in flight at once")
+    } finally hosts.foreach(_.stop())
+  }
+
+  test("fetchMap raw mode returns robots.txt and sitemap.xml bodies verbatim") {
+    import spark.implicits._
+    import WebFetch._
+    val out = fetchMap(Seq(FetchIn(0L, s"$base/robots.txt"), FetchIn(1L, s"$base/sitemap.xml"),
+        FetchIn(2L, s"$base/missing"), FetchIn(3L, "http://127.0.0.1:1/dead")).toDS(),
+      rawText = true).collect().sortBy(_.id)
+    out.map(r => (r.status, r.text, r.links)).toSeq shouldEqual Seq(
+      (Some(200), Some(robotsTxt), None), (Some(200), Some(sitemapXml), None),
+      (Some(404), None, None), (None, None, None))
+  }
+
+  test("fetchMap rejects a non-positive timeoutMs up front") {
+    import spark.implicits._
+    import WebFetch._
+    for (t <- Seq(0L, -1L)) withClue(s"timeoutMs=$t: ") {
+      val e = intercept[IllegalArgumentException](
+        fetchMap(Seq(FetchIn(0L, s"$base/")).toDS(), timeoutMs = t))
+      e.getMessage should include("timeoutMs")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.{DripServer, SparkSpec}
+import graft.{DripServer, SparkSpec, TimedHost}
 import org.apache.spark.sql.Row
 
 /** The S-3 DataSourceV2 exercised END-TO-END over a real socket: a JDK
@@ -197,35 +197,6 @@ class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       hostsPerPartition.foreach(_.size shouldEqual 1)
       hostsPerPartition.flatMap(_.toSeq).toSet.size shouldEqual 2
     } finally { s1.stop(0); s2.stop(0) }
-  }
-
-  /** A loopback host that answers each request after `latencyMs` on a
-    * multi-threaded executor, so the server itself would let requests
-    * overlap. `started` logs (path, start) on arrival; `log` adds
-    * (path, start, end) once the answer is ready, before it is sent, so
-    * an entry is in place before the client can see the response. */
-  private final class TimedHost(latencyMs: Long, robotsBody: String = "User-agent: *\nDisallow: /private/\n") {
-    val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    private val pool = java.util.concurrent.Executors.newCachedThreadPool()
-    private val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    s.setExecutor(pool)
-    s.createContext("/", (ex: HttpExchange) => {
-      val t0 = System.nanoTime()
-      val p = ex.getRequestURI.getPath
-      started.add((p, t0))
-      Thread.sleep(latencyMs)
-      log.add((p, t0, System.nanoTime()))
-      if (p == "/robots.txt") respond(ex, 200, robotsBody)
-      else respond(ex, 200, s"<html><body><p>page $p</p></body></html>")
-    })
-    s.start()
-    val base = s"http://127.0.0.1:${s.getAddress.getPort}"
-    def entries: Seq[(String, Long, Long)] =
-      log.toArray.map(_.asInstanceOf[(String, Long, Long)]).toSeq.sortBy(_._2)
-    def arrivals: Seq[(String, Long)] =
-      started.toArray.map(_.asInstanceOf[(String, Long)]).toSeq.sortBy(_._2)
-    def stop(): Unit = { s.stop(0); pool.shutdownNow() }
   }
 
   test("host chains: hosts overlap, one host never does, robots first, rows in URL order") {
@@ -502,6 +473,14 @@ class WebTextSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
 
     val err = rows(dead)
     assert(err.isNullAt(1) && err.isNullAt(2) && err.isNullAt(3))
+  }
+
+  test("a non-positive timeoutMs is rejected up front, not turned into error rows") {
+    for (t <- Seq("0", "-1")) withClue(s"timeoutMs=$t: ") {
+      val e = intercept[IllegalArgumentException](spark.read.format("graft-web")
+        .option("urls", s"$base/page").option("timeoutMs", t).load().collect())
+      e.getMessage should include("timeoutMs")
+    }
   }
 
   test("partition planning: numPartitions honored, round-robin URL spread") {
