@@ -130,10 +130,12 @@ object Bench {
       s"""{"r":${fmt(r, 1)},"w":${fmt(w, 1)}}"""
     }
     // exec = union of the run's job intervals (eager-construction gates'
-    // scans included), plan = wall - exec (analysis, optimization, codegen)
+    // scans included), plan = wall - exec (analysis, optimization, codegen),
+    // compiles = generated classes Janino compiled during the run
     val split = dict(timed) { s =>
       val exec = math.min(s.execSec, s.sec)
-      s"""{"wall":${fmt(s.sec)},"exec":${fmt(exec)},"plan":${fmt(s.sec - exec)},"cpu":${fmt(s.cpuSec)}}"""
+      s"""{"wall":${fmt(s.sec)},"exec":${fmt(exec)},"plan":${fmt(s.sec - exec)},""" +
+        s""""cpu":${fmt(s.cpuSec)},"compiles":${s.compiles}}"""
     }
     // The failed list is capped at 8 names so the final line stays a few
     // hundred bytes even in a catastrophic all-fail run; n_failed carries

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.obs.Obs
+import graft.obs.{Obs, Sample}
 import graft.operators.Scratch
 
 /** Dev tool: isolate the per-element cost of the native fixed-point
@@ -27,19 +27,21 @@ object MicroBench {
       expr("transform(sequence(0, 63), i -> CAST(sin(id * (i + 1)) AS FLOAT))")
         .as("embedding")))
 
-    def time(label: String)(df: => org.apache.spark.sql.DataFrame): Double = {
-      val s = Obs.run(spark, label)(Obs.sink(df)).orThrow.sec
-      System.err.println(f"$label%-28s $s%8.3f s")
+    def time(label: String)(df: => org.apache.spark.sql.DataFrame): Sample = {
+      val s = Obs.run(spark, label)(Obs.sink(df)).orThrow
+      System.err.println(f"$label%-28s ${s.sec}%8.3f s  cpu ${s.cpuSec}%8.3f s")
       s
     }
+    // wall and executor CPU seconds of a timed pair's faster run
+    def json(s: Sample): String = s"""{"sec":${s.sec},"cpu_sec":${s.cpuSec}}"""
 
     val hofQ = expr(
       "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1e7) AS BIGINT))")
     val natQ = graft.functions.QuantizeFx.quantize_fx(col("embedding"), 1e7)
     val hofDot = (q: org.apache.spark.sql.Column) =>
       expr("aggregate(zip_with(q, q, (x, y) -> x * y), 0L, (a, x) -> a + x)")
-    def run2(label: String, f: => org.apache.spark.sql.DataFrame): Double =
-      math.min(time(label)(f), time(label)(f)) // min-of-2, same as Bench
+    def run2(label: String, f: => org.apache.spark.sql.DataFrame): Sample =
+      Obs.best(time(label)(f), time(label)(f)) // min-of-2, same as Bench
 
     val tHof = run2("HOF quantize + HOF dot",
       vecs.select(hofQ.as("q")).select(hofDot(col("q")).as("d")))
@@ -57,7 +59,8 @@ object MicroBench {
     val tEnv = run2("native quantize+envelope + dot",
       vecs.select(envQ.as("q"))
         .select(graft.functions.DotProductFx.dot_fx(col("q"), col("q")).as("d")))
-    System.err.println(f"native/HOF = ${tNat / tHof}%.3f  envelope/native = ${tEnv / tNat}%.3f")
+    System.err.println(f"native/HOF = ${tNat.sec / tHof.sec}%.3f  " +
+      f"envelope/native = ${tEnv.sec / tNat.sec}%.3f")
 
     // ── argmax assignment (r14): the nearestClusters inner loop at
     // the derived-k regimes — k=8 (every verify SF), k=100 (the 100×
@@ -100,13 +103,14 @@ object MicroBench {
         paired.select(col("vec_id"),
           graft.functions.ArgMaxCosFx.argmax_cos_fx(col("qe"), col("nq"), col("cs"))
             .as("cluster")))
-      System.err.println(f"k=$k%-5d native/HOF = ${tN / tH}%.3f")
+      System.err.println(f"k=$k%-5d native/HOF = ${tN.sec / tH.sec}%.3f")
       (k, tH, tN)
     }
     val asgJson = asg.map { case (k, h, nt) =>
-      s""""k$k":{"hof_sec":$h,"native_sec":$nt}"""
+      s""""k$k":{"hof":${json(h)},"native":${json(nt)}}"""
     }.mkString(",")
-    println(s"""{"rows":$n,"hof_sec":$tHof,"mixed_sec":$tMix,"native_sec":$tNat,"envelope_sec":$tEnv,"argmax_rows":$nAsg,$asgJson}""")
+    println(s"""{"rows":$n,"hof":${json(tHof)},"mixed":${json(tMix)},"native":${json(tNat)},""" +
+      s""""envelope":${json(tEnv)},"argmax_rows":$nAsg,$asgJson}""")
     spark.stop()
   }
 }

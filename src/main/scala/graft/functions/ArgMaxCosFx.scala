@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
@@ -43,8 +42,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
   * evaluates n·k candidates per Lloyd round (n²/2000 FLOPs — the r13
   * verdict's named next-decade ceiling), so the per-candidate constant
   * IS the binding cost at exactly the scale the law exists for. This
-  * expression generates one primitive fused loop (dot + compare, no
-  * allocation per candidate) via `doGenCode`; measured in
+  * expression runs one primitive fused loop (dot + compare, no
+  * allocation per candidate), the `argmax` kernel that both eval modes
+  * call; measured in
   * graft.MicroBench at the ladder's k=100 regime and at k=1000 (the
   * decade the flat scan was flagged for).
   */
@@ -87,19 +87,18 @@ case class ArgMaxCosFx(qe: Expression, nq: Expression, cs: Expression)
     }
   }
 
-  /** Null children do NOT null-propagate uniformly: a null `cs` is a
-    * null result, but a null `qe`/`nq` only nulls every candidate's
-    * COSINE (the composed form's behavior), which still resolves to
-    * the lowest cluster id. Hence a custom eval, not nullSafeEval. */
-  override def eval(input: InternalRow): Any = {
-    val csV = cs.eval(input)
-    if (csV == null) return null
-    val arr = csV.asInstanceOf[ArrayData]
-    val qeV = qe.eval(input)
-    val nqV = nq.eval(input)
-    val qeArr = if (qeV == null) null else qeV.asInstanceOf[ArrayData]
-    val nqL = if (nqV == null) 0L else nqV.asInstanceOf[Long]
-    val n = arr.numElements()
+  /** The kernel: the winning cluster id over `cs`, or null when `cs` is
+    * null or empty. `qe` is null when the query embedding or its norm
+    * `nq` is null: every cosine is then null (the composed form's
+    * behavior), which still resolves to the lowest cluster id. */
+  def argmax(qe: ArrayData, nq: Long, cs: ArrayData): java.lang.Long = {
+    if (cs == null) return null
+    val fields = numFields
+    val clIdx = clusterIdx
+    val ceI = ceIdx
+    val ncI = ncIdx
+    val n = cs.numElements()
+    val qeOk = qe != null && ArrayLoops.noNulls(qe)
     var bestSet = false
     var bestCosNull = true; var bestCos = 0.0
     var bestNegcNull = true; var bestNegc = 0L
@@ -107,27 +106,16 @@ case class ArgMaxCosFx(qe: Expression, nq: Expression, cs: Expression)
     while (i < n) {
       var cosNull = true; var cos = 0.0
       var negcNull = true; var negc = 0L
-      if (!arr.isNullAt(i)) {
-        val st = arr.getStruct(i, numFields)
-        if (!st.isNullAt(clusterIdx)) { negcNull = false; negc = -st.getLong(clusterIdx) }
-        if (qeArr != null && nqV != null &&
-            !st.isNullAt(ceIdx) && !st.isNullAt(ncIdx)) {
-          val ce = st.getArray(ceIdx)
-          val nc = st.getLong(ncIdx)
-          val m = qeArr.numElements()
-          if (ce.numElements() == m && nqL != 0L && nc != 0L) {
-            var dNull = false
-            var acc = 0L
-            var j = 0
-            while (j < m && !dNull) {
-              if (qeArr.isNullAt(j) || ce.isNullAt(j)) dNull = true
-              else acc += qeArr.getLong(j) * ce.getLong(j)
-              j += 1
-            }
-            if (!dNull) {
-              cosNull = false
-              cos = acc.toDouble / math.sqrt(nqL.toDouble * nc.toDouble)
-            }
+      if (!cs.isNullAt(i)) {
+        val st = cs.getStruct(i, fields)
+        if (!st.isNullAt(clIdx)) { negcNull = false; negc = -st.getLong(clIdx) }
+        if (qeOk && !st.isNullAt(ceI) && !st.isNullAt(ncI)) {
+          val ce = st.getArray(ceI)
+          val nc = st.getLong(ncI)
+          val m = qe.numElements()
+          if (ce.numElements() == m && nq != 0L && nc != 0L && ArrayLoops.noNulls(ce)) {
+            cosNull = false
+            cos = ArrayLoops.dot(qe, ce, m).toDouble / math.sqrt(nq.toDouble * nc.toDouble)
           }
         }
       }
@@ -149,94 +137,21 @@ case class ArgMaxCosFx(qe: Expression, nq: Expression, cs: Expression)
     if (!bestSet || bestNegcNull) null else -bestNegc
   }
 
+  /** Null children do NOT null-propagate uniformly: a null `cs` is a
+    * null result, but a null `qe`/`nq` only nulls every candidate's
+    * COSINE. Hence a custom eval, not nullSafeEval. */
+  override def eval(input: InternalRow): Any = {
+    val nqV = nq.eval(input)
+    val qeV = if (nqV == null) null else qe.eval(input).asInstanceOf[ArrayData]
+    argmax(qeV, if (nqV == null) 0L else nqV.asInstanceOf[Long],
+      cs.eval(input).asInstanceOf[ArrayData])
+  }
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qeGen = qe.genCode(ctx)
-    val nqGen = nq.genCode(ctx)
-    val csGen = cs.genCode(ctx)
-    val arr = ctx.freshName("csArr")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val st = ctx.freshName("st")
-    val ce = ctx.freshName("ce")
-    val nc = ctx.freshName("nc")
-    val m = ctx.freshName("m")
-    val acc = ctx.freshName("acc")
-    val dNull = ctx.freshName("dNull")
-    val cosNull = ctx.freshName("cosNull")
-    val cosV = ctx.freshName("cos")
-    val negcNull = ctx.freshName("negcNull")
-    val negcV = ctx.freshName("negc")
-    val bestSet = ctx.freshName("bestSet")
-    val bestCosNull = ctx.freshName("bestCosNull")
-    val bestCos = ctx.freshName("bestCos")
-    val bestNegcNull = ctx.freshName("bestNegcNull")
-    val bestNegc = ctx.freshName("bestNegc")
-    val better = ctx.freshName("better")
-    val cmp = ctx.freshName("cmp")
-    val code =
-      code"""
-         |${csGen.code}
-         |boolean ${ev.isNull} = true;
-         |long ${ev.value} = -1L;
-         |if (!${csGen.isNull}) {
-         |  ${qeGen.code}
-         |  ${nqGen.code}
-         |  org.apache.spark.sql.catalyst.util.ArrayData $arr = ${csGen.value};
-         |  boolean $bestSet = false;
-         |  boolean $bestCosNull = true; double $bestCos = 0.0;
-         |  boolean $bestNegcNull = true; long $bestNegc = 0L;
-         |  for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |    boolean $cosNull = true; double $cosV = 0.0;
-         |    boolean $negcNull = true; long $negcV = 0L;
-         |    if (!$arr.isNullAt($i)) {
-         |      org.apache.spark.sql.catalyst.InternalRow $st = $arr.getStruct($i, $numFields);
-         |      if (!$st.isNullAt($clusterIdx)) {
-         |        $negcNull = false; $negcV = -$st.getLong($clusterIdx);
-         |      }
-         |      if (!${qeGen.isNull} && !${nqGen.isNull} &&
-         |          !$st.isNullAt($ceIdx) && !$st.isNullAt($ncIdx)) {
-         |        org.apache.spark.sql.catalyst.util.ArrayData $ce = $st.getArray($ceIdx);
-         |        long $nc = $st.getLong($ncIdx);
-         |        int $m = ${qeGen.value}.numElements();
-         |        if ($ce.numElements() == $m && ${nqGen.value} != 0L && $nc != 0L) {
-         |          boolean $dNull = false;
-         |          long $acc = 0L;
-         |          for (int $j = 0; $j < $m; $j++) {
-         |            if (${qeGen.value}.isNullAt($j) || $ce.isNullAt($j)) { $dNull = true; break; }
-         |            $acc += ${qeGen.value}.getLong($j) * $ce.getLong($j);
-         |          }
-         |          if (!$dNull) {
-         |            $cosNull = false;
-         |            $cosV = (double) $acc /
-         |              java.lang.Math.sqrt((double) ${nqGen.value} * (double) $nc);
-         |          }
-         |        }
-         |      }
-         |    }
-         |    boolean $better;
-         |    if (!$bestSet) { $better = true; }
-         |    else if ($cosNull != $bestCosNull) { $better = !$cosNull; }
-         |    else if (!$cosNull &&
-         |        java.lang.Double.compare($cosV, $bestCos) != 0) {
-         |      int $cmp = java.lang.Double.compare($cosV, $bestCos);
-         |      $better = $cmp > 0;
-         |    }
-         |    else if ($negcNull != $bestNegcNull) { $better = !$negcNull; }
-         |    else if (!$negcNull) { $better = $negcV > $bestNegc; }
-         |    else { $better = false; }
-         |    if ($better) {
-         |      $bestSet = true;
-         |      $bestCos = $cosV; $bestCosNull = $cosNull;
-         |      $bestNegc = $negcV; $bestNegcNull = $negcNull;
-         |    }
-         |  }
-         |  if ($bestSet && !$bestNegcNull) {
-         |    ${ev.isNull} = false;
-         |    ${ev.value} = -$bestNegc;
-         |  }
-         |}
-       """.stripMargin
-    ev.copy(code = code)
+    val fx = KernelCall.self(ctx, this)
+    val (q, n, c) = (qe.genCode(ctx), nq.genCode(ctx), cs.genCode(ctx))
+    KernelCall.boxed(ctx, ev, this, Seq(q, n, c), s"$fx.argmax(${n.isNull} ? null : " +
+      s"${KernelCall.orNull(q)}, ${n.value}, ${KernelCall.orNull(c)})")
   }
 
   override protected def withNewChildrenInternal(
@@ -248,7 +163,7 @@ object ArgMaxCosFx {
   import org.apache.spark.sql.GraftColumnBridge._
 
   /** Column-API form: the winning cluster id (max cosine, ties to the
-    * lowest cluster, null on empty/null `cs`), fused-loop codegen'd. */
+    * lowest cluster, null on empty/null `cs`). */
   def argmax_cos_fx(qe: Column, nq: Column, cs: Column): Column =
     column(ArgMaxCosFx(expression(qe), expression(nq), expression(cs)))
 }

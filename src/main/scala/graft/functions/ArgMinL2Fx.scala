@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
@@ -28,8 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   *
   * Why native: same argument as [[ArgMaxCosFx]] — the window form
   * SHUFFLES n·(M·K) candidate rows per PQ training round / code
-  * assignment and sorts them per (vec, sub); the fused loop folds the
-  * argmin into the scan, exchange-free, at ~ns/candidate instead of an
+  * assignment and sorts them per (vec, sub); the fused loop (the
+  * `argmin` kernel, which both eval modes call) folds the argmin into
+  * the scan, exchange-free, at ~ns/candidate instead of an
   * interpreted lambda + boxed struct + sort comparison.
   */
 case class ArgMinL2Fx(sv: Expression, cs: Expression)
@@ -69,16 +69,17 @@ case class ArgMinL2Fx(sv: Expression, cs: Expression)
     }
   }
 
-  /** A null `sv` only nulls every candidate's DISTANCE (which then
-    * ranks FIRST — ascending NULLS FIRST), so null children don't
-    * null-propagate uniformly: custom eval, not nullSafeEval. */
-  override def eval(input: InternalRow): Any = {
-    val csV = cs.eval(input)
-    if (csV == null) return null
-    val arr = csV.asInstanceOf[ArrayData]
-    val svV = sv.eval(input)
-    val svArr = if (svV == null) null else svV.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  /** The kernel: the winning `struct(cluster, dist)` over `cs`, or null
+    * when `cs` is null or empty. A null `sv` only nulls every
+    * candidate's DISTANCE, which then ranks FIRST (ascending NULLS
+    * FIRST). */
+  def argmin(sv: ArrayData, cs: ArrayData): InternalRow = {
+    if (cs == null) return null
+    val fields = numFields
+    val clIdx = clusterIdx
+    val ceI = ceIdx
+    val n = cs.numElements()
+    val svOk = sv != null && ArrayLoops.noNulls(sv)
     var bestSet = false
     var bestDistNull = true; var bestDist = 0L
     var bestClNull = true; var bestCl = 0L
@@ -86,25 +87,15 @@ case class ArgMinL2Fx(sv: Expression, cs: Expression)
     while (i < n) {
       var distNull = true; var dist = 0L
       var clNull = true; var cl = 0L
-      if (!arr.isNullAt(i)) {
-        val st = arr.getStruct(i, numFields)
-        if (!st.isNullAt(clusterIdx)) { clNull = false; cl = st.getLong(clusterIdx) }
-        if (svArr != null && !st.isNullAt(ceIdx)) {
-          val ce = st.getArray(ceIdx)
-          val m = svArr.numElements()
-          if (ce.numElements() == m) {
-            var dNull = false
-            var acc = 0L
-            var j = 0
-            while (j < m && !dNull) {
-              if (svArr.isNullAt(j) || ce.isNullAt(j)) dNull = true
-              else {
-                val diff = svArr.getLong(j) - ce.getLong(j)
-                acc += diff * diff
-              }
-              j += 1
-            }
-            if (!dNull) { distNull = false; dist = acc }
+      if (!cs.isNullAt(i)) {
+        val st = cs.getStruct(i, fields)
+        if (!st.isNullAt(clIdx)) { clNull = false; cl = st.getLong(clIdx) }
+        if (svOk && !st.isNullAt(ceI)) {
+          val ce = st.getArray(ceI)
+          val m = sv.numElements()
+          if (ce.numElements() == m && ArrayLoops.noNulls(ce)) {
+            distNull = false
+            dist = ArrayLoops.l2(sv, ce, m)
           }
         }
       }
@@ -129,87 +120,16 @@ case class ArgMinL2Fx(sv: Expression, cs: Expression)
       if (bestDistNull) null else bestDist)
   }
 
+  /** Null children don't null-propagate uniformly (see `argmin`):
+    * custom eval, not nullSafeEval. */
+  override def eval(input: InternalRow): Any =
+    argmin(sv.eval(input).asInstanceOf[ArrayData], cs.eval(input).asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val svGen = sv.genCode(ctx)
-    val csGen = cs.genCode(ctx)
-    val arr = ctx.freshName("csArr")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val st = ctx.freshName("st")
-    val ce = ctx.freshName("ce")
-    val m = ctx.freshName("m")
-    val acc = ctx.freshName("acc")
-    val diff = ctx.freshName("diff")
-    val dNull = ctx.freshName("dNull")
-    val distNull = ctx.freshName("distNull")
-    val distV = ctx.freshName("dist")
-    val clNull = ctx.freshName("clNull")
-    val clV = ctx.freshName("cl")
-    val bestSet = ctx.freshName("bestSet")
-    val bestDistNull = ctx.freshName("bestDistNull")
-    val bestDist = ctx.freshName("bestDist")
-    val bestClNull = ctx.freshName("bestClNull")
-    val bestCl = ctx.freshName("bestCl")
-    val better = ctx.freshName("better")
-    val vals = ctx.freshName("vals")
-    val rowCls = classOf[org.apache.spark.sql.catalyst.expressions.GenericInternalRow].getName
-    val code =
-      code"""
-         |${csGen.code}
-         |boolean ${ev.isNull} = true;
-         |InternalRow ${ev.value} = null;
-         |if (!${csGen.isNull}) {
-         |  ${svGen.code}
-         |  org.apache.spark.sql.catalyst.util.ArrayData $arr = ${csGen.value};
-         |  boolean $bestSet = false;
-         |  boolean $bestDistNull = true; long $bestDist = 0L;
-         |  boolean $bestClNull = true; long $bestCl = 0L;
-         |  for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |    boolean $distNull = true; long $distV = 0L;
-         |    boolean $clNull = true; long $clV = 0L;
-         |    if (!$arr.isNullAt($i)) {
-         |      org.apache.spark.sql.catalyst.InternalRow $st = $arr.getStruct($i, $numFields);
-         |      if (!$st.isNullAt($clusterIdx)) {
-         |        $clNull = false; $clV = $st.getLong($clusterIdx);
-         |      }
-         |      if (!${svGen.isNull} && !$st.isNullAt($ceIdx)) {
-         |        org.apache.spark.sql.catalyst.util.ArrayData $ce = $st.getArray($ceIdx);
-         |        int $m = ${svGen.value}.numElements();
-         |        if ($ce.numElements() == $m) {
-         |          boolean $dNull = false;
-         |          long $acc = 0L;
-         |          for (int $j = 0; $j < $m; $j++) {
-         |            if (${svGen.value}.isNullAt($j) || $ce.isNullAt($j)) { $dNull = true; break; }
-         |            long $diff = ${svGen.value}.getLong($j) - $ce.getLong($j);
-         |            $acc += $diff * $diff;
-         |          }
-         |          if (!$dNull) { $distNull = false; $distV = $acc; }
-         |        }
-         |      }
-         |    }
-         |    boolean $better;
-         |    if (!$bestSet) { $better = true; }
-         |    else if ($distNull != $bestDistNull) { $better = $distNull; }
-         |    else if (!$distNull && $distV != $bestDist) { $better = $distV < $bestDist; }
-         |    else if ($clNull != $bestClNull) { $better = $clNull; }
-         |    else if (!$clNull) { $better = $clV < $bestCl; }
-         |    else { $better = false; }
-         |    if ($better) {
-         |      $bestSet = true;
-         |      $bestDist = $distV; $bestDistNull = $distNull;
-         |      $bestCl = $clV; $bestClNull = $clNull;
-         |    }
-         |  }
-         |  if ($bestSet) {
-         |    ${ev.isNull} = false;
-         |    Object[] $vals = new Object[2];
-         |    $vals[0] = $bestClNull ? null : (Object) java.lang.Long.valueOf($bestCl);
-         |    $vals[1] = $bestDistNull ? null : (Object) java.lang.Long.valueOf($bestDist);
-         |    ${ev.value} = new $rowCls($vals);
-         |  }
-         |}
-       """.stripMargin
-    ev.copy(code = code)
+    val fx = KernelCall.self(ctx, this)
+    val (s, c) = (sv.genCode(ctx), cs.genCode(ctx))
+    KernelCall.boxed(ctx, ev, this, Seq(s, c),
+      s"$fx.argmin(${KernelCall.orNull(s)}, ${KernelCall.orNull(c)})")
   }
 
   override protected def withNewChildrenInternal(
@@ -221,8 +141,7 @@ object ArgMinL2Fx {
   import org.apache.spark.sql.GraftColumnBridge._
 
   /** Column-API form: the winning `struct(cluster, dist)` (min exact
-    * squared-L2, ascending NULLS FIRST, ties to the lowest cluster),
-    * fused-loop codegen'd. */
+    * squared-L2, ascending NULLS FIRST, ties to the lowest cluster). */
   def argmin_l2_fx(sv: Column, cs: Column): Column =
     column(ArgMinL2Fx(expression(sv), expression(cs)))
 }

@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * enclosing projection out of whole-stage codegen. langGuess runs
   * FOUR of these per document (one per language profile) on every
   * quality/lang query, so the interpreted constant multiplies per
-  * corpus token.
+  * corpus token. Both eval modes call one loop, the `count` kernel,
+  * which reads the word set from the instance.
   */
 case class CountInFx(toks: Expression, words: Seq[String])
     extends UnaryExpression {
@@ -53,33 +54,25 @@ case class CountInFx(toks: Expression, words: Seq[String])
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  /** The kernel: how many non-null tokens of `toks` are in the set. */
+  def count(toks: ArrayData): Int = {
+    val words = set
+    val n = toks.numElements()
     var c = 0
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i) && set.contains(arr.getUTF8String(i))) c += 1
+      if (!toks.isNullAt(i) && words.contains(toks.getUTF8String(i))) c += 1
       i += 1
     }
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val setRef = ctx.addReferenceObj("wordSet", set, "java.util.HashSet")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = $arr.numElements();
-         |int $c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i) && $setRef.contains($arr.getUTF8String($i))) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any = count(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fx = KernelCall.self(ctx, this)
+    nullSafeCodeGen(ctx, ev, toks => s"${ev.value} = $fx.count($toks);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(toks = newChild)

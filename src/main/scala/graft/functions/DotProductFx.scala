@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -13,17 +14,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Why a custom Expression and not `aggregate(zip_with(a,b,_*_),0,_+_)`:
   * Spark's higher-order functions evaluate their lambda per element in
   * interpreted mode (boxed Longs, closure dispatch) and sit outside
-  * whole-stage codegen. This expression generates a primitive long loop
-  * via `doGenCode` — the per-row cost drops from microseconds to
-  * nanoseconds, which is what the inner loop of a 100 TB brute-force
-  * similarity scan needs. Semantics are identical to the HOF form
-  * (pinned in DotProductFxSpec), so the DuckDB oracles are unchanged.
+  * whole-stage codegen. This expression runs one primitive long loop
+  * (the companion's `dot` kernel, called by both eval modes) — the
+  * per-row cost drops from microseconds to nanoseconds, which is what
+  * the inner loop of a 100 TB brute-force similarity scan needs.
+  * Semantics are identical to the HOF form (pinned in
+  * DotProductFxSpec), so the DuckDB oracles are unchanged.
   *
   * Null semantics — EXACTLY the HOF form's, including on corrupt
-  * inputs: null if either array is null (BinaryExpression default),
-  * and null if the lengths differ or any element is null. zip_with
-  * pads the shorter side with null and a null product poisons the
-  * fold, so the HOF (and DuckDB's list arithmetic) returns NULL for
+  * inputs: null if either array is null, and null if the lengths
+  * differ or any element is null. zip_with pads the shorter side with
+  * null and a null product poisons the fold, so the HOF (and DuckDB's list arithmetic) returns NULL for
   * both cases; an earlier version coerced them to a prefix/0 sum —
   * a silent cross-engine divergence on the first corrupt row, where
   * the engine-wide discipline (QuantizeFx) is to surface bad shape,
@@ -49,9 +50,28 @@ case class DotProductFx(left: Expression, right: Expression)
   }
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def eval(input: InternalRow): Any =
+    DotProductFx.dot(left.eval(input).asInstanceOf[ArrayData],
+      right.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (x, y) = (left.genCode(ctx), right.genCode(ctx))
+    KernelCall.boxed(ctx, ev, this, Seq(x, y), "graft.functions.DotProductFx.dot(" +
+      s"${KernelCall.orNull(x)}, ${KernelCall.orNull(y)})")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProductFx {
+  import org.apache.spark.sql.GraftColumnBridge._
+
+  /** The kernel: `x · y`, or null when either array is null, their
+    * lengths differ or an element is null. */
+  def dot(x: ArrayData, y: ArrayData): java.lang.Long = {
+    if (x == null || y == null) return null
     val n = x.numElements()
     if (y.numElements() != n) return null
     var acc = 0L
@@ -63,34 +83,6 @@ case class DotProductFx(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $x.numElements();
-         |if ($y.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += $x.getLong($i) * $y.getLong($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProductFx {
-  import org.apache.spark.sql.GraftColumnBridge._
 
   /** Column-API form: exact long dot product of two array<bigint>
     * columns, whole-stage-codegen'd. */

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -23,7 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Why a custom Expression: the composed form runs TWO interpreted
   * higher-order passes per row — md5 per token through the hex round
   * trip inside `transform`, then an interpreted fold — on the
-  * doc_fingerprint / chunk_documents hot paths.
+  * doc_fingerprint / chunk_documents hot paths. Here both eval modes
+  * call one loop, the companion's `fingerprint` kernel.
   */
 case class FingerprintFx(toks: Expression) extends UnaryExpression {
 
@@ -41,35 +43,14 @@ case class FingerprintFx(toks: Expression) extends UnaryExpression {
           s"fingerprint_fx expects array<string>, got ${t.simpleString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var h = 0L
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      h = (h * 31L + TokenHash56.hash(arr.getUTF8String(i))) % TokenHash56.HashMod
-      i += 1
-    }
-    h
-  }
+  override def eval(input: InternalRow): Any =
+    FingerprintFx.fingerprint(toks.eval(input).asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $arr.numElements();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($arr.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $h = ($h * 31L +
-         |    graft.functions.TokenHash56.hash($arr.getUTF8String($i))) % 1000000007L;
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = toks.genCode(ctx)
+    KernelCall.boxed(ctx, ev, this, Seq(t),
+      s"graft.functions.FingerprintFx.fingerprint(${KernelCall.orNull(t)})")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(toks = newChild)
@@ -78,7 +59,22 @@ case class FingerprintFx(toks: Expression) extends UnaryExpression {
 object FingerprintFx {
   import org.apache.spark.sql.GraftColumnBridge._
 
-  /** Column-API form: fused md5 + rolling 31-ary fold, codegen'd. */
+  /** The kernel: the rolling fold over `toks`, or null when `toks` or
+    * any token is null. */
+  def fingerprint(toks: ArrayData): java.lang.Long = {
+    if (toks == null) return null
+    val n = toks.numElements()
+    var h = 0L
+    var i = 0
+    while (i < n) {
+      if (toks.isNullAt(i)) return null
+      h = (h * 31L + TokenHash56.hash(toks.getUTF8String(i))) % TokenHash56.HashMod
+      i += 1
+    }
+    h
+  }
+
+  /** Column-API form: fused md5 + rolling 31-ary fold. */
   def fingerprint_fx(toks: Column): Column =
     column(FingerprintFx(expression(toks)))
 }

@@ -36,7 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * family via [[graft.operators.Dedup.shingled]], substring_dup_spans'
   * 20-gram explode, winnowing's 4-grams) pays it per corpus token, the
   * scale class the 100 TB posture cares about. This expression is one
-  * fused primitive loop, whole-stage-codegen'd via `doGenCode`.
+  * primitive loop, the `grams` kernel, which both eval modes call and
+  * which reads `n` from the instance.
   */
 case class NGramsFx(toks: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"ngrams_fx needs n >= 1, got $n")
@@ -55,61 +56,42 @@ case class NGramsFx(toks: Expression, n: Int) extends UnaryExpression {
           s"ngrams_fx expects array<string>, got ${t.simpleString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    val out = math.max(len - (n - 1), 0)
-    val grams = new Array[Any](out)
-    val sep = NGramsFx.Sep
-    val window = new Array[UTF8String](n)
+  /** The kernel: the `n`-token windows of `toks`, each joined by
+    * concat_ws(" "). */
+  def grams(toks: ArrayData): ArrayData = {
+    val w = n
+    val out = new Array[Any](math.max(toks.numElements() - (w - 1), 0))
+    val window = new Array[UTF8String](w)
     var i = 0
-    while (i < out) {
+    while (i < out.length) {
       var j = 0
-      while (j < n) {
-        window(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
+      while (j < w) {
+        window(j) = if (toks.isNullAt(i + j)) null else toks.getUTF8String(i + j)
         j += 1
       }
-      grams(i) = UTF8String.concatWs(sep, window: _*)
+      out(i) = UTF8String.concatWs(NGramsFx.Sep, window: _*)
       i += 1
     }
-    new GenericArrayData(grams)
+    new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val len = ctx.freshName("len")
-      val out = ctx.freshName("out")
-      val grams = ctx.freshName("grams")
-      val window = ctx.freshName("window")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      val sep = ctx.addReferenceObj("sep", NGramsFx.Sep, u)
-      s"""
-         |int $len = $arr.numElements();
-         |int $out = java.lang.Math.max($len - ${n - 1}, 0);
-         |Object[] $grams = new Object[$out];
-         |$u[] $window = new $u[$n];
-         |for (int $i = 0; $i < $out; $i++) {
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $window[$j] = $arr.isNullAt($i + $j) ? null : $arr.getUTF8String($i + $j);
-         |  }
-         |  $grams[$i] = $u.concatWs($sep, $window);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($grams);
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any = grams(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fx = KernelCall.self(ctx, this)
+    nullSafeCodeGen(ctx, ev, toks => s"${ev.value} = $fx.grams($toks);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(toks = newChild)
 }
 
 object NGramsFx {
-  private[functions] val Sep = UTF8String.fromString(" ")
+  private val Sep = UTF8String.fromString(" ")
 
   import org.apache.spark.sql.GraftColumnBridge._
 
-  /** Column-API form: space-joined word n-grams, fused-loop codegen'd. */
+  /** Column-API form: space-joined word n-grams. */
   def ngrams_fx(toks: Column, n: Int): Column =
     column(NGramsFx(expression(toks), n))
 }

@@ -16,11 +16,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * ELEMENT (boxed values, closure dispatch) and exclude the enclosing
   * projection from whole-stage codegen — and quantization runs over
   * every element of every embedding in every similarity query, the
-  * hottest per-row loop in the family. This expression generates a
-  * primitive double→long loop via `doGenCode`, keeping the scan
-  * codegen span intact. float→double widening then `Math.floor` is
-  * exactly the arithmetic of the HOF form (pinned in
-  * DotProductFxSpec), so the DuckDB oracles are unchanged.
+  * hottest per-row loop in the family. This expression runs one
+  * primitive double→long loop, the `quantize` kernel, which both eval
+  * modes call, keeping the scan codegen span intact. float→double
+  * widening then `Math.floor` is exactly the arithmetic of the HOF
+  * form (pinned in DotProductFxSpec), so the DuckDB oracles are
+  * unchanged.
   *
   * `maxAbs` (when finite) is the fixed-point ENVELOPE: an element with
   * |x| > maxAbs fails fast with a named contract error instead of
@@ -55,14 +56,17 @@ case class QuantizeFx(child: Expression, scale: Double,
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  // lazy val, not def: constant for the expression's lifetime, and the
-  // interpreted eval loop reads it per ELEMENT (the codegen path
-  // already hoists it — the two paths now share the shape)
+  // lazy val, not def: constant for the expression's lifetime
   private lazy val isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  /** The kernel: `floor(x · scale)` per element, reading `scale`,
+    * `maxAbs` and the element type from the instance. A null element
+    * throws; so does an element outside the envelope. */
+  def quantize(x: ArrayData): ArrayData = {
+    val f = isFloat
+    val s = scale
+    val m = maxAbs
     val n = x.numElements()
     val out = new Array[Long](n)
     // Envelope check is BRANCHLESS in the hot loop (r12, the knn_cosine
@@ -73,29 +77,32 @@ case class QuantizeFx(child: Expression, scale: Double,
     // and `NaN > maxAbs` is false, so one NaN element used to MASK a
     // later element's genuine violation (r12 advice). A NaN element
     // itself still passes both compares, exactly as every prior form
-    // did (floor(NaN·s).toLong = 0).
+    // did (floor(NaN·s).toLong = 0). With no envelope (m = +∞) the
+    // flag stays false.
     var bad = false
     var i = 0
     while (i < n) {
       if (x.isNullAt(i))
         throw new IllegalArgumentException(
           s"quantize_fx: null element at index $i (oracle list_transform would propagate NULL; refusing to coerce to 0)")
-      val v = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      bad |= (v > maxAbs) | (v < -maxAbs)
-      out(i) = math.floor(v * scale).toLong
+      val v = if (f) x.getFloat(i).toDouble else x.getDouble(i)
+      bad |= (v > m) | (v < -m)
+      out(i) = math.floor(v * s).toLong
       i += 1
     }
     if (bad) envelopeViolation(x)
     new GenericArrayData(out)
   }
 
+  override def nullSafeEval(a: Any): Any = quantize(a.asInstanceOf[ArrayData])
+
   /** Cold path: rescan for the first out-of-envelope element and throw
-    * the named contract error with its index. Called from both eval
-    * modes only AFTER the branchless flag accumulation detected a
-    * violation, so the rescan cost is paid exclusively by failing rows.
-    * The rescan's compares are NaN-transparent like the hot loop's, so
-    * the flagged element is always found (a NaN can set neither). */
-  def envelopeViolation(x: ArrayData): Unit = {
+    * the named contract error with its index. Called only AFTER the
+    * branchless flag accumulation detected a violation, so the rescan
+    * cost is paid exclusively by failing rows. The rescan's compares
+    * are NaN-transparent like the hot loop's, so the flagged element is
+    * always found (a NaN can set neither). */
+  private def envelopeViolation(x: ArrayData): Unit = {
     val n = x.numElements()
     var i = 0
     while (i < n) {
@@ -109,40 +116,10 @@ case class QuantizeFx(child: Expression, scale: Double,
       "quantize_fx: envelope violation detected but no element exceeds it (unreachable)")
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      val v = ctx.freshName("v")
-      val bad = ctx.freshName("envBad")
-      val get = if (isFloat) s"(double) $x.getFloat($i)" else s"$x.getDouble($i)"
-      // Branchless envelope (r12; NaN-safe flag form per r12 advice):
-      // the hot loop accumulates a violation flag with two compares +
-      // bitwise or (no branch, no NaN-poisoned max accumulator); ONE
-      // test after the loop gates the cold rescan-and-throw helper on
-      // the expression instance.
-      val ref = if (maxAbs.isInfinite) "" else ctx.addReferenceObj("quantizeFx", this)
-      s"""
-         |int $n = $x.numElements();
-         |long[] $out = new long[$n];
-         |boolean $bad = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($x.isNullAt($i)) {
-         |    throw new IllegalArgumentException(
-         |      "quantize_fx: null element at index " + $i +
-         |      " (oracle list_transform would propagate NULL; refusing to coerce to 0)");
-         |  }
-         |  double $v = $get;
-         |  ${if (maxAbs.isInfinite) "" else
-             s"$bad |= ($v > ${maxAbs}D) | ($v < ${-maxAbs}D);"}
-         |  $out[$i] = (long) java.lang.Math.floor($v * $scale);
-         |}
-         |${if (maxAbs.isInfinite) "" else
-           s"if ($bad) $ref.envelopeViolation($x);"}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fx = KernelCall.self(ctx, this)
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $fx.quantize($x);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -151,7 +128,7 @@ case class QuantizeFx(child: Expression, scale: Double,
 object QuantizeFx {
   import org.apache.spark.sql.GraftColumnBridge._
 
-  /** Column-API form: floor(x · scale) per element, codegen'd. */
+  /** Column-API form: floor(x · scale) per element. */
   def quantize_fx(a: Column, scale: Double): Column =
     column(QuantizeFx(expression(a), scale))
 

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * display sketch, 30 for the banding sketch) on top of one interpreted
   * `transform` doing md5 per token through the hex-string round trip —
   * ~31 interpreted lambda evaluations per corpus token where one fused
-  * codegen loop suffices. simhash / simhash_neardup pay it per token,
-  * and dedup_method_matrix / dedup_family embed simhash_neardup whole.
+  * loop suffices: the `simhash` kernel, which both eval modes call.
+  * simhash / simhash_neardup pay it per token, and dedup_method_matrix
+  * / dedup_family embed simhash_neardup whole.
   */
 case class SimHashFx(toks: Expression, nbits: Int) extends UnaryExpression {
   require(nbits >= 1 && nbits <= 30,
@@ -53,23 +54,22 @@ case class SimHashFx(toks: Expression, nbits: Int) extends UnaryExpression {
           s"simhash_fx expects array<string>, got ${t.simpleString}")
     }
 
-  /** Null input does NOT null-propagate (it yields 0L — see scaladoc),
-    * hence a custom eval, not nullSafeEval. */
-  override def eval(input: InternalRow): Any = {
-    val v = toks.eval(input)
-    if (v == null) return 0L
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val votes = new Array[Int](nbits)
+  /** The kernel: the `nbits`-bit SimHash of `toks`, 0 when `toks` is
+    * null (see the class doc). */
+  def simhash(toks: ArrayData): Long = {
+    if (toks == null) return 0L
+    val bits = nbits
+    val n = toks.numElements()
+    val votes = new Array[Int](bits)
     var i = 0
     while (i < n) {
-      if (arr.isNullAt(i)) {
+      if (toks.isNullAt(i)) {
         var j = 0
-        while (j < nbits) { votes(j) -= 1; j += 1 }
+        while (j < bits) { votes(j) -= 1; j += 1 }
       } else {
-        val h = TokenHash56.hash(arr.getUTF8String(i))
+        val h = TokenHash56.hash(toks.getUTF8String(i))
         var j = 0
-        while (j < nbits) {
+        while (j < bits) {
           votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
           j += 1
         }
@@ -78,46 +78,22 @@ case class SimHashFx(toks: Expression, nbits: Int) extends UnaryExpression {
     }
     var out = 0L
     var j = 0
-    while (j < nbits) {
+    while (j < bits) {
       if (votes(j) > 0) out |= (1L << j)
       j += 1
     }
     out
   }
 
+  /** Null input does NOT null-propagate (it yields 0L — see scaladoc),
+    * hence a custom eval, not nullSafeEval. */
+  override def eval(input: InternalRow): Any =
+    simhash(toks.eval(input).asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tGen = toks.genCode(ctx)
-    val arr = ctx.freshName("arr")
-    val n = ctx.freshName("n")
-    val votes = ctx.freshName("votes")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val h = ctx.freshName("h")
-    val code =
-      code"""
-         |${tGen.code}
-         |boolean ${ev.isNull} = false;
-         |long ${ev.value} = 0L;
-         |if (!${tGen.isNull}) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $arr = ${tGen.value};
-         |  int $n = $arr.numElements();
-         |  int[] $votes = new int[$nbits];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($arr.isNullAt($i)) {
-         |      for (int $j = 0; $j < $nbits; $j++) $votes[$j] -= 1;
-         |    } else {
-         |      long $h = graft.functions.TokenHash56.hash($arr.getUTF8String($i));
-         |      for (int $j = 0; $j < $nbits; $j++) {
-         |        $votes[$j] += ((($h >>> $j) & 1L) == 1L) ? 1 : -1;
-         |      }
-         |    }
-         |  }
-         |  for (int $j = 0; $j < $nbits; $j++) {
-         |    if ($votes[$j] > 0) ${ev.value} |= (1L << $j);
-         |  }
-         |}
-       """.stripMargin
-    ev.copy(code = code)
+    val (fx, t) = (KernelCall.self(ctx, this), toks.genCode(ctx))
+    ev.copy(isNull = FalseLiteral, code = t.code +
+      code"long ${ev.value} = $fx.simhash(${KernelCall.orNull(t)});")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -8,6 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.{GraftListenerBridge, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,12 +21,15 @@ final case class StageRow(stageId: Int, name: String, wallMs: Long,
   * submitted under the run's job group, so a neighbour's late tasks never
   * land here. `sec` is -1 when the action threw; the figures then cover
   * the tasks that ran before it did. Bytes, executor CPU in ns, executor
-  * run time in ms, job intervals as (start, end) epoch ms. */
+  * run time in ms, job intervals as (start, end) epoch ms. `compiles`
+  * counts the generated classes Janino compiled during the run; that
+  * counter is per JVM, so a run that overlaps another also counts the
+  * other's compiles. */
 final case class Sample(label: String, sec: Double, error: Option[Throwable],
     tasks: Int, failedTasks: Int, shuffleReadBytes: Long, shuffleWriteBytes: Long,
     maxTaskRecordsRead: Long, peakTaskExecMemory: Long,
     memorySpillBytes: Long, diskSpillBytes: Long, cpuNs: Long, runMs: Long,
-    jobs: Seq[(Long, Long)], stages: Seq[StageRow]) {
+    jobs: Seq[(Long, Long)], stages: Seq[StageRow], compiles: Long) {
   def ok: Boolean = error.isEmpty
   def orThrow: Sample = { error.foreach(e => throw e); this }
   def readMb: Double = shuffleReadBytes / 1e6
@@ -78,9 +82,9 @@ private final class Acc {
       m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
   }
 
-  def sample(label: String, sec: Double, error: Option[Throwable]): Sample = synchronized(Sample(
-    label, sec, error, tasks, failed, read, write, maxRecs, peak, memSpill, diskSpill, cpu, run,
-    jobs.toSeq, stages.toSeq))
+  def sample(label: String, sec: Double, error: Option[Throwable], compiles: Long): Sample =
+    synchronized(Sample(label, sec, error, tasks, failed, read, write, maxRecs, peak,
+      memSpill, diskSpill, cpu, run, jobs.toSeq, stages.toSeq, compiles))
 }
 
 /** Attributes every job, stage and task to the `spark.jobGroup.id` of the
@@ -135,6 +139,7 @@ object Obs {
     val group = s"graft.obs-${runs.incrementAndGet()}-$label"
     val saved = GraftListenerBridge.JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
     val acc = l.begin(group)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val outcome: Either[Throwable, Double] =
       try { sc.setJobGroup(group, label); action; Right((System.nanoTime() - t0) / 1e9) }
@@ -142,7 +147,8 @@ object Obs {
       finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     GraftListenerBridge.drain(sc, timeoutMs = 60000L)
     l.end(group)
-    acc.sample(label, outcome.getOrElse(-1.0), outcome.left.toOption)
+    acc.sample(label, outcome.getOrElse(-1.0), outcome.left.toOption,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
   }
 
   /** The faster of two passes, with that pass's figures; a failed pass

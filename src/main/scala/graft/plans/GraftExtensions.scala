@@ -25,8 +25,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         DotProductFx(args.head, args(1))
       }))
     // quantize_fx(arr, scale): the scale must be a literal — it is a
-    // constructor parameter baked into the generated code, not a
-    // per-row operand
+    // constructor parameter the kernel reads from the expression
+    // instance, not a per-row operand
     e.injectFunction((
       new FunctionIdentifier("quantize_fx"),
       new ExpressionInfo(classOf[QuantizeFx].getName, "quantize_fx"),

@@ -55,10 +55,6 @@ object SimilarityQueries extends QueryModule {
     * (Fuzzy.MaxDomainKey pattern), and the cosine cutoff sits just
     * under this corpus's background max so the report is non-empty. */
   val SemDedupMaxKey = "spark.graft.semdedup.maxCluster"
-  /** Whether the max-cluster fail-fast aggregate runs inside the query
-    * (default true). Deployments that gate at index-build time set
-    * this false on the serve path — see the comment at the use site. */
-  val SemDedupGateKey = "spark.graft.semdedup.gate"
   val SemDedupDefaultMax = 10000L
   private val SemThreshold = 0.45
 
@@ -545,32 +541,20 @@ object SimilarityQueries extends QueryModule {
   /** semantic_dedup's fail-fast max-cluster gate (see that query's
     * comment for the build/serve rationale); shared with ann_family. */
   private def semDedupGate(s: SparkSession, assigned: DataFrame): Unit = {
-    // defensive parse: toBoolean throws a keyless IllegalArgument
-    // for anything but literal true/false — name the offending key
-    val gateOn = s.conf.getOption(SemDedupGateKey).forall { v =>
-      v.trim.toLowerCase match {
-        case "true" => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"$SemDedupGateKey must be true or false, got '$other'")
-      }
-    }
-    if (gateOn) {
-      val maxCluster = s.conf.getOption(SemDedupMaxKey)
-        .map(_.toLong).getOrElse(SemDedupDefaultMax)
-      // max() over zero rows is a null cell — an empty embeddings
-      // table must yield an empty report, not an NPE (EdgeCasesSpec
-      // discipline)
-      val biggest = Option(assigned.groupBy("cluster").count()
-        .agg(max(col("count"))).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      require(biggest <= maxCluster,
-        s"semantic dedup is quadratic within a cluster: largest cluster " +
-          s"has $biggest members, exceeding $SemDedupMaxKey = $maxCluster. " +
-          "k already scales with n (semDedupK), so this is cluster SKEW: " +
-          "raise k / lower SemDedupTargetCluster, or split oversized " +
-          "clusters via the banded embedding_neardup path")
-    }
+    val maxCluster = s.conf.getOption(SemDedupMaxKey)
+      .map(_.toLong).getOrElse(SemDedupDefaultMax)
+    // max() over zero rows is a null cell — an empty embeddings
+    // table must yield an empty report, not an NPE (EdgeCasesSpec
+    // discipline)
+    val biggest = Option(assigned.groupBy("cluster").count()
+      .agg(max(col("count"))).first().get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    require(biggest <= maxCluster,
+      s"semantic dedup is quadratic within a cluster: largest cluster " +
+        s"has $biggest members, exceeding $SemDedupMaxKey = $maxCluster. " +
+        "k already scales with n (semDedupK), so this is cluster SKEW: " +
+        "raise k / lower SemDedupTargetCluster, or split oversized " +
+        "clusters via the banded embedding_neardup path")
   }
 
   /** semantic_dedup's drop report off a trained assignment: earliest
@@ -1037,14 +1021,9 @@ object SimilarityQueries extends QueryModule {
       // The max-cluster gate is a driver-side `.first()` over a 1-row
       // aggregate of the ALREADY-materialized assignment — i.e. it
       // belongs to the index BUILD (train-once/serve-many), where the
-      // assignment frame is produced, not to the per-query serve path.
-      // The registered query IS build+serve in one (registry entries
-      // are standalone), so the gate defaults ON here; a deployment
-      // that materializes the assignment once and serves many queries
-      // runs the gate once at build time and disables it per-query via
-      // spark.graft.semdedup.gate=false. Correct either way — the gate
-      // only decides WHEN the quadratic bound is checked, never
-      // whether the pair join is cluster-bounded.
+      // assignment frame is produced. The registered query IS
+      // build+serve in one (registry entries are standalone), so it
+      // always runs here, before the quadratic within-cluster pair join.
       semDedupGate(s, assigned)
       semDedupDrops(assigned).orderBy("vec_id")
     }),

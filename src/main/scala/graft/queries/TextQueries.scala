@@ -820,7 +820,16 @@ object TextQueries extends QueryModule {
       val lex = topRanks(tfdoc, col("tf").desc, "tf_rank")
       val bm = topRanks(bm25Frame(s, d).select("doc_id", "score_fx"),
         col("score_fx").desc, "bm25_rank")
+      // Both ranks are full-outer sides, so nullable. Said explicitly:
+      // when an arm comes back empty, AQE folds the join into the other
+      // arm, whose rank column is NOT NULL — and which arm it sees empty
+      // first varies from run to run.
+      def nullableRank(c: String): Column = {
+        import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+        column(org.apache.spark.sql.catalyst.expressions.KnownNullable(expression(col(c)))).as(c)
+      }
       bm.join(lex, Seq("doc_id"), "full_outer")
+        .select(col("doc_id"), nullableRank("bm25_rank"), nullableRank("tf_rank"))
         .withColumn("rrf_fx",
           coalesce(expr("1000000000 div (60 + bm25_rank)").cast("long"), lit(0L)) +
             coalesce(expr("1000000000 div (60 + tf_rank)").cast("long"), lit(0L)))

@@ -115,6 +115,28 @@ class EdgeCasesSpec extends SparkSpec {
     dir
   }
 
+  test("rrf_fusion writes nullable rank columns on every run over an empty corpus") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.Type.Repetition
+    val out = java.nio.file.Files.createTempDirectory("edge-rrf").toString
+    (1 to 5).foreach { run =>
+      val dir = s"$out/$run"
+      SparkEntry.queries("rrf_fusion")(spark, emptyCorpusDir).coalesce(1)
+        .write.parquet(dir)
+      val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(file.toURI), spark.sparkContext.hadoopConfiguration))
+      val schema = try reader.getFileMetaData.getSchema finally reader.close()
+      Seq("bm25_rank", "tf_rank").foreach { c =>
+        withClue(s"run $run, $c: ") {
+          schema.getType(schema.getFieldIndex(c)).getRepetition shouldEqual Repetition.OPTIONAL
+        }
+      }
+    }
+  }
+
   test("selection ops (X-137..X-140) flow through an empty corpus") {
     // the funnel skeleton survives: 4 rule rows with zero docs entering
     // rule 1 (later stages are SQL-null — sum over zero rows — in both
