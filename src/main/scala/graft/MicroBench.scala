@@ -12,7 +12,8 @@ import graft.operators.Scratch
   * bench's 5k-vector embeddings table can't resolve these constants
   * above run-to-run noise).
   *
-  * Usage: runMain graft.MicroBench [nRows] (default 2,000,000 × 64 dims)
+  * Usage: runMain graft.MicroBench [nRows] (default 2,000,000 × 64 dims;
+  * the token arms run nRows rows of 64 tokens)
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -62,6 +63,21 @@ object MicroBench {
     System.err.println(f"native/HOF = ${tNat.sec / tHof.sec}%.3f  " +
       f"envelope/native = ${tEnv.sec / tNat.sec}%.3f")
 
+    // ── token kernels: the shingling and text-feature loops of the
+    // dedup family (ngrams_fx at the shingle width Dedup.shingled
+    // uses, simhash_fx, fingerprint_fx, count_in_fx) over 64 synthetic
+    // tokens per row from a 5000-word vocabulary ──
+    val toks = Scratch.cut(spark.range(n).select(
+      expr("transform(sequence(0, 63), i -> concat('w', CAST((id * 31 + i * 7) % 5000 AS STRING)))")
+        .as("toks")))
+    val text = Seq(
+      "ngrams" -> graft.functions.NGramsFx.ngrams_fx(col("toks"), 3),
+      "simhash" -> graft.functions.SimHashFx.simhash_fx(col("toks"), 30),
+      "fingerprint" -> graft.functions.FingerprintFx.fingerprint_fx(col("toks")),
+      "count_in" -> graft.functions.CountInFx.count_in_fx(col("toks"),
+        (0 until 5000 by 7).map(i => s"w$i"))
+    ).map { case (name, c) => name -> run2(s"native $name", toks.select(c.as("v"))) }
+
     // ── argmax assignment (r14): the nearestClusters inner loop at
     // the derived-k regimes — k=8 (every verify SF), k=100 (the 100×
     // ladder), k=1000 (the decade the r13 verdict flagged the flat
@@ -110,7 +126,9 @@ object MicroBench {
       s""""k$k":{"hof":${json(h)},"native":${json(nt)}}"""
     }.mkString(",")
     println(s"""{"rows":$n,"hof":${json(tHof)},"mixed":${json(tMix)},"native":${json(tNat)},""" +
-      s""""envelope":${json(tEnv)},"argmax_rows":$nAsg,$asgJson}""")
+      s""""envelope":${json(tEnv)},""" +
+      text.map { case (name, t) => s""""$name":${json(t)},""" }.mkString +
+      s""""argmax_rows":$nAsg,$asgJson}""")
     spark.stop()
   }
 }

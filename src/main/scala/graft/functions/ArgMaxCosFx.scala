@@ -98,7 +98,9 @@ case class ArgMaxCosFx(qe: Expression, nq: Expression, cs: Expression)
     val ceI = ceIdx
     val ncI = ncIdx
     val n = cs.numElements()
-    val qeOk = qe != null && ArrayLoops.noNulls(qe)
+    // the query vector, read once per row; null when no cosine is defined
+    val q = if (qe == null || nq == 0L || !ArrayLoops.noNulls(qe)) null
+      else qe.toLongArray()
     var bestSet = false
     var bestCosNull = true; var bestCos = 0.0
     var bestNegcNull = true; var bestNegc = 0L
@@ -109,13 +111,12 @@ case class ArgMaxCosFx(qe: Expression, nq: Expression, cs: Expression)
       if (!cs.isNullAt(i)) {
         val st = cs.getStruct(i, fields)
         if (!st.isNullAt(clIdx)) { negcNull = false; negc = -st.getLong(clIdx) }
-        if (qeOk && !st.isNullAt(ceI) && !st.isNullAt(ncI)) {
+        if (q != null && !st.isNullAt(ceI) && !st.isNullAt(ncI)) {
           val ce = st.getArray(ceI)
           val nc = st.getLong(ncI)
-          val m = qe.numElements()
-          if (ce.numElements() == m && nq != 0L && nc != 0L && ArrayLoops.noNulls(ce)) {
+          if (ce.numElements() == q.length && nc != 0L && ArrayLoops.noNulls(ce)) {
             cosNull = false
-            cos = ArrayLoops.dot(qe, ce, m).toDouble / math.sqrt(nq.toDouble * nc.toDouble)
+            cos = ArrayLoops.dot(q, ce).toDouble / math.sqrt(nq.toDouble * nc.toDouble)
           }
         }
       }

@@ -79,7 +79,9 @@ case class ArgMinL2Fx(sv: Expression, cs: Expression)
     val clIdx = clusterIdx
     val ceI = ceIdx
     val n = cs.numElements()
-    val svOk = sv != null && ArrayLoops.noNulls(sv)
+    // the query vector, read once per row; null when no distance is defined
+    val q = if (sv == null || !ArrayLoops.noNulls(sv)) null
+      else sv.toLongArray()
     var bestSet = false
     var bestDistNull = true; var bestDist = 0L
     var bestClNull = true; var bestCl = 0L
@@ -90,12 +92,11 @@ case class ArgMinL2Fx(sv: Expression, cs: Expression)
       if (!cs.isNullAt(i)) {
         val st = cs.getStruct(i, fields)
         if (!st.isNullAt(clIdx)) { clNull = false; cl = st.getLong(clIdx) }
-        if (svOk && !st.isNullAt(ceI)) {
+        if (q != null && !st.isNullAt(ceI)) {
           val ce = st.getArray(ceI)
-          val m = sv.numElements()
-          if (ce.numElements() == m && ArrayLoops.noNulls(ce)) {
+          if (ce.numElements() == q.length && ArrayLoops.noNulls(ce)) {
             distNull = false
-            dist = ArrayLoops.l2(sv, ce, m)
+            dist = ArrayLoops.l2(q, ce)
           }
         }
       }

@@ -73,11 +73,10 @@ object DotProductFx {
   def dot(x: ArrayData, y: ArrayData): java.lang.Long = {
     if (x == null || y == null) return null
     val n = x.numElements()
-    if (y.numElements() != n) return null
+    if (y.numElements() != n || !ArrayLoops.noNulls(x) || !ArrayLoops.noNulls(y)) return null
     var acc = 0L
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
       acc += x.getLong(i) * y.getLong(i)
       i += 1
     }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native Catalyst expression: fixed-point quantization of a float
@@ -62,11 +62,14 @@ case class QuantizeFx(child: Expression, scale: Double,
 
   /** The kernel: `floor(x · scale)` per element, reading `scale`,
     * `maxAbs` and the element type from the instance. A null element
-    * throws; so does an element outside the envelope. */
+    * throws; so does an element outside the envelope. The result is an
+    * `UnsafeArrayData` over the primitive `long[]`: no element is boxed,
+    * and the projection writing it copies its bytes. */
   def quantize(x: ArrayData): ArrayData = {
     val f = isFloat
     val s = scale
     val m = maxAbs
+    val enveloped = !m.isInfinite
     val n = x.numElements()
     val out = new Array[Long](n)
     // Envelope check is BRANCHLESS in the hot loop (r12, the knn_cosine
@@ -78,7 +81,7 @@ case class QuantizeFx(child: Expression, scale: Double,
     // later element's genuine violation (r12 advice). A NaN element
     // itself still passes both compares, exactly as every prior form
     // did (floor(NaN·s).toLong = 0). With no envelope (m = +∞) the
-    // flag stays false.
+    // compares are skipped.
     var bad = false
     var i = 0
     while (i < n) {
@@ -86,12 +89,12 @@ case class QuantizeFx(child: Expression, scale: Double,
         throw new IllegalArgumentException(
           s"quantize_fx: null element at index $i (oracle list_transform would propagate NULL; refusing to coerce to 0)")
       val v = if (f) x.getFloat(i).toDouble else x.getDouble(i)
-      bad |= (v > m) | (v < -m)
+      if (enveloped) bad |= (v > m) | (v < -m)
       out(i) = math.floor(v * s).toLong
       i += 1
     }
     if (bad) envelopeViolation(x)
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override def nullSafeEval(a: Any): Any = quantize(a.asInstanceOf[ArrayData])

@@ -820,10 +820,11 @@ object TextQueries extends QueryModule {
       val lex = topRanks(tfdoc, col("tf").desc, "tf_rank")
       val bm = topRanks(bm25Frame(s, d).select("doc_id", "score_fx"),
         col("score_fx").desc, "bm25_rank")
-      // Both ranks are full-outer sides, so nullable. Said explicitly:
-      // when an arm comes back empty, AQE folds the join into the other
-      // arm, whose rank column is NOT NULL — and which arm it sees empty
-      // first varies from run to run.
+      // Both ranks are full-outer sides, so nullable. Said explicitly
+      // because an empty result has been written with `tf_rank` NOT NULL
+      // in some runs; the likely cause is AQE folding the join into
+      // whichever arm it finds empty first, which keeps that arm's NOT
+      // NULL rank column.
       def nullableRank(c: String): Column = {
         import org.apache.spark.sql.GraftColumnBridge.{column, expression}
         column(org.apache.spark.sql.catalyst.expressions.KnownNullable(expression(col(c)))).as(c)
