@@ -67,7 +67,7 @@ object Bench {
     // Warmup: initialize parquet reader, shuffle machinery, and codegen
     // paths once, off the clock.
     Seq("lineitem", "documents", "events", "embeddings").foreach { t =>
-      try Tables.table(spark, sfDir, t).limit(1).count()
+      try Tables.table(spark, sfDir, t).isEmpty
       catch { case _: Throwable => () }
     }
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -108,7 +108,8 @@ object Bench {
     val results = pass1.zip(pass2).map { case (a, b) =>
       val best = Obs.best(a, b)
       System.err.println(
-        f"[bench] ${best.label}%-28s pass1=${a.sec}%8.3f pass2=${b.sec}%8.3f shuffleW=${best.writeMb}%9.1fMB")
+        f"[bench] ${best.label}%-28s pass1=${a.sec}%8.3f pass2=${b.sec}%8.3f shuffleW=${best.writeMb}%9.1fMB " +
+          s"compiles=${a.compiles}/${b.compiles}")
       best
     }
     System.err.println(

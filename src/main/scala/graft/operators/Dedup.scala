@@ -198,9 +198,13 @@ object Dedup {
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
-      // 1. hook: l1(v) = min(label(v), min over neighbors' labels)
+      // 1. hook: l1(v) = min(label(v), min over neighbors' labels).
+      // A sort-merge join on every round: without the hint both sides
+      // shuffle and adaptive execution broadcasts whichever side's stage
+      // finishes first, so the round's generated code (build left or
+      // right) would vary from run to run and compile again
       val neighborMin = edges
-        .join(labels, edges("src") === labels("node"))
+        .join(labels.hint("merge"), edges("src") === labels("node"))
         .groupBy(col("dst").as("node2"))
         .agg(min(col("label")).as("nmin"))
       val hooked = labels.join(neighborMin, labels("node") === col("node2"), "left_outer")
@@ -221,7 +225,10 @@ object Dedup {
               .as("chg")))
       prev.foreach(_.unpersist())
       prev = Some(next)
-      converged = next.filter(col("chg")).limit(1).count() == 0
+      // isEmpty plans a CollectLimit over the filter; limit(1).count()
+      // would codegen a limit whose counter is named from a JVM-global
+      // id, so every round would compile new classes
+      converged = next.filter(col("chg")).isEmpty
       labels = next.select(col("node"), col("newl").as("label"))
       it += 1
     }
