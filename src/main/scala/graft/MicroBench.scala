@@ -13,7 +13,8 @@ import graft.operators.Scratch
   * above run-to-run noise).
   *
   * Usage: runMain graft.MicroBench [nRows] (default 2,000,000 × 64 dims;
-  * the token arms run nRows rows of 64 tokens)
+  * the token arms run nRows rows of 64 tokens, the argmax and argmin
+  * arms nRows/4 vectors)
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -123,6 +124,46 @@ object MicroBench {
       tH.foreach(h => System.err.println(f"k=$k%-5d native/HOF = ${tN.sec / h.sec}%.3f"))
       (k, tH, tN)
     }
+    // ── argmin_l2 code assignment: pqAssign's PQ shape. Each row is
+    // one (vector, subspace) subvector of 64/M dims, against that
+    // subspace's K codes packed in one broadcast array. M=4 × K=8 is the
+    // registered pq_error/ivfpq_topk shape, M=8 × K=256 a one-byte-code
+    // codebook. HOF = the per-candidate distance of the r13 window form
+    // in a transform, reduced by array_min over (dist, cluster); native
+    // = graft.functions.ArgMinL2Fx. The HOF arm stops at K=8, as the
+    // argmax arms stop at k=100. ──
+    def hofArgmin(sv: org.apache.spark.sql.Column,
+        cs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      array_min(transform(cs, c => struct(
+        fAggregate(zip_with(sv, c.getField("ce"), (x, y) => (x - y) * (x - y)),
+          lit(0L), (acc, v) => acc + v).as("dist"),
+        c.getField("cluster").as("cluster"))))
+    val pq = Seq((4, 8), (8, 256)).map { case (m, k) =>
+      val sd = 64 / m
+      val sv = Scratch.cut(qv.select(col("vec_id"),
+          explode(sequence(lit(0), lit(m - 1))).as("sub"), col("qe"))
+        .select(col("vec_id"), col("sub"),
+          expr(s"slice(qe, sub * $sd + 1, $sd)").as("sv")))
+      val packed = spark.range(m.toLong * k).select(
+          (col("id") / k).cast("int").as("sub"),
+          struct((col("id") % k).as("cluster"),
+            expr(s"transform(sequence(0, ${sd - 1}), i -> CAST(floor(cos(id * (i + 3)) * 1e7) AS BIGINT))")
+              .as("ce")).as("c"))
+        .groupBy("sub").agg(collect_list(col("c")).as("cs"))
+      val paired = sv.join(broadcast(packed), "sub")
+      val tH = Option.when(k <= 8)(run2(s"HOF argmin M=$m K=$k",
+        paired.select(col("vec_id"), hofArgmin(col("sv"), col("cs")).as("best"))))
+      val tN = run2(s"native argmin M=$m K=$k",
+        paired.select(col("vec_id"),
+          graft.functions.ArgMinL2Fx.argmin_l2_fx(col("sv"), col("cs")).as("best")))
+      tH.foreach(h => System.err.println(f"M=$m K=$k%-4d native/HOF = ${tN.sec / h.sec}%.3f"))
+      sv.unpersist()
+      (m, k, tH, tN)
+    }
+    val pqJson = pq.map { case (m, k, h, nt) =>
+      s""""m${m}_k$k":{""" + h.map(t => s""""hof":${json(t)},""").getOrElse("") +
+        s""""native":${json(nt)}}"""
+    }.mkString(",")
     val asgJson = asg.map { case (k, h, nt) =>
       s""""k$k":{""" + h.map(t => s""""hof":${json(t)},""").getOrElse("") +
         s""""native":${json(nt)}}"""
@@ -130,7 +171,7 @@ object MicroBench {
     println(s"""{"rows":$n,"hof":${json(tHof)},"mixed":${json(tMix)},"native":${json(tNat)},""" +
       s""""envelope":${json(tEnv)},""" +
       text.map { case (name, t) => s""""$name":${json(t)},""" }.mkString +
-      s""""argmax_rows":$nAsg,$asgJson}""")
+      s""""argmax_rows":$nAsg,$asgJson,"argmin_vectors":$nAsg,$pqJson}""")
     spark.stop()
   }
 }

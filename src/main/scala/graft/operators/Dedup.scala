@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Deduplication family for the training-data pipeline (M3 extension
   * scope): exact hashing, word-shingle Jaccard (AllPairs prefix
@@ -150,9 +153,28 @@ object Dedup {
     * resolves near-dup PAIRS into dedup CLUSTERS, labeling every member
     * with the minimum doc_id of its component (the canonical survivor).
     *
-    * Iterative min-label HOOKING + POINTER JUMPING (the Shiloach–Vishkin
-    * shape; same O(log n) round family as alternating
-    * large-star/small-star, Kiveris et al., SoCC'14). Each round:
+    * Two phases: a local contraction (Łącki et al., *Connected
+    * Components at Scale via Local Contractions*, 2018) that labels a
+    * dedup pair graph exactly in about four Spark jobs, and the hook-
+    * and-jump loop, which only finishes what the local pass leaves.
+    *
+    * Local pass. Both edge orientations are shuffled once by `src`,
+    * so a node's partition holds every edge at that node. Each
+    * partition runs a union-find whose root is always the minimum id of
+    * its set and emits (node, local root) for every endpoint it holds;
+    * grouping by node gives `label = min(root)`, and the same job counts
+    * the nodes whose local roots disagree ([[Scratch.cutCounting]]).
+    * When none do, the labels are exact: an edge (u, v) puts u and v in
+    * one local set, so agreeing nodes give every global component a
+    * single root value; that value is the minimum of each local set the
+    * component is made of, so it is the component's minimum id. Graphs
+    * whose edges fit in one coalesced partition, and components that
+    * are cliques or stars around their minimum, close here.
+    *
+    * Fallback: iterative min-label HOOKING + POINTER JUMPING (the
+    * Shiloach–Vishkin shape; same O(log n) round family as alternating
+    * large-star/small-star, Kiveris et al., SoCC'14), seeded with the
+    * local labels instead of the node ids. Each round:
     *  1. hook: every node takes the min of its own and its neighbors'
     *     labels (one join + min-aggregation);
     *  2. jump: every node then replaces its label with its LABEL'S
@@ -163,39 +185,46 @@ object Dedup {
     *     round was measured: it cannot cut rounds below the
     *     1-plus-no-change floor that small-diameter dedup components
     *     already sit at, so it only added a join per round.)
-    * Labels are always node ids of the same component and monotonically
-    * non-increasing, so the fixpoint is exactly "every member labeled
-    * with the component min" — identical output to plain min-label
-    * propagation, pinned by DedupSpec (including a long-chain fixture
-    * with maxIters ≪ diameter that plain propagation could not pass).
-    * If `maxIters` is hit before the fixpoint the labels would be
-    * silently WRONG (one chain reported as several clusters), so
-    * non-convergence throws instead of truncating. Superseded
+    * Every seed is an id of the node's own component and ≤ the node's
+    * id, and labels only decrease, so the fixpoint is exactly "every
+    * member labeled with the component min" — identical output to plain
+    * min-label propagation, pinned by DedupSpec and PropertySpec against
+    * a union-find ground truth (including a long-chain fixture with
+    * maxIters ≪ diameter that plain propagation could not pass). A
+    * round's convergence is the count of changed labels, observed on
+    * the job that materializes the round. If `maxIters` rounds end
+    * before the fixpoint the labels would be silently WRONG (one chain
+    * reported as several clusters), so non-convergence throws instead of
+    * truncating; a graph the local pass closes runs no round. Superseded
     * materializations are unpersisted as the loop advances — only the
-    * final labels frame stays materialized. */
+    * final labels frame stays materialized. Ids keep their type. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // Materialize the edge list once: it is consumed every round, and
-    // its lineage (a full near-dup pair pipeline) would otherwise be
-    // recomputed per iteration — measured 8× slower without this.
-    // Both orientations come from ONE explode, not a self-union: a
-    // union's two branches each re-run the whole upstream pair
-    // pipeline (profiled as the hottest stage of this query — 2× the
-    // candidate volume), while explode duplicates rows after a single
-    // pass. Pre-partitioned on the hook-join key BEFORE the
-    // checkpoint: the materialized frame keeps its outputPartitioning,
-    // so every round's edges-side exchange vanishes — edges is the big
-    // frame of the loop, and shuffling it O(log n) times instead of
-    // once is the kind of cost that only shows at cluster scale.
+    // Materialize the edge list once: the local pass reads it, and the
+    // loop reads it every round; its lineage (a full near-dup pair
+    // pipeline) would otherwise be recomputed per use — measured 8×
+    // slower without this. Both orientations come from ONE explode, not
+    // a self-union: a union's two branches each re-run the whole
+    // upstream pair pipeline (profiled as the hottest stage of this
+    // query — 2× the candidate volume), while explode duplicates rows
+    // after a single pass. The partitioning by `src` is what the local
+    // pass reads; the loop's joins shuffle edges again every round (the
+    // checkpointed frame keeps no partitioning a plan can reuse).
     val edges = Scratch.cut(
       pairs.select(explode(array(
           struct(col("d1").as("src"), col("d2").as("dst")),
           struct(col("d2").as("src"), col("d1").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .repartition(col("src")))
-    val nodes = edges.select(col("src").as("node")).distinct()
-    var labels = nodes.withColumn("label", col("node"))
-    var prev: Option[DataFrame] = None
-    var converged = false
+    val idType = edges.schema("src").dataType
+    val roots = edges.mapPartitions(localRoots)(Encoders.row(StructType(Seq(
+      StructField("node", idType), StructField("root", idType)))))
+    val (seed, split) = Scratch.cutCounting(
+      roots.groupBy(col("node")).agg(min(col("root")).as("label"),
+        (min(col("root")) =!= max(col("root"))).as("split")),
+      col("split"))
+    var labels = seed.select(col("node"), col("label"))
+    var prev = seed
+    var converged = split == 0
     var it = 0
     while (!converged && it < maxIters) {
       // 1. hook: l1(v) = min(label(v), min over neighbors' labels).
@@ -212,32 +241,64 @@ object Dedup {
           least(col("label"), coalesce(col("nmin"), col("label"))).as("l1"))
       // 2. jump: newl(v) = l1(l1(v)). Every label is itself a node id
       // (mins over node ids), so the self-join always matches;
-      // left_outer + coalesce guards the invariant anyway. Carry the
-      // changed flag so convergence is read off the already-
-      // materialized frame (counting before the checkpoint would run
-      // the whole join lineage a second time).
+      // left_outer + coalesce guards the invariant anyway. The changed
+      // labels are counted in the job that materializes the round.
       val jumpTo = hooked.select(col("node").as("jn"), col("l1").as("l2"))
-      val next = Scratch.cut(
+      val (next, changed) = Scratch.cutCounting(
         hooked.join(jumpTo, col("l1") === col("jn"), "left_outer")
           .select(col("node"),
             least(col("l1"), coalesce(col("l2"), col("l1"))).as("newl"),
             (col("label") =!= least(col("l1"), coalesce(col("l2"), col("l1"))))
-              .as("chg")))
-      prev.foreach(_.unpersist())
-      prev = Some(next)
-      // isEmpty plans a CollectLimit over the filter; limit(1).count()
-      // would codegen a limit whose counter is named from a JVM-global
-      // id, so every round would compile new classes
-      converged = next.filter(col("chg")).isEmpty
+              .as("chg")),
+        col("chg"))
+      prev.unpersist()
+      prev = next
+      converged = changed == 0
       labels = next.select(col("node"), col("newl").as("label"))
       it += 1
     }
     edges.unpersist()
-    if (!converged)
+    if (!converged) {
+      prev.unpersist()
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIters rounds " +
           "(pointer jumping needs ~log2(n); raise maxIters)")
-    labels.select("node", "label")
+    }
+    labels
+  }
+
+  /** The local pass of [[connectedComponents]] over one partition of
+    * (src, dst) edges: (node, root) for every endpoint, where root is
+    * the minimum id of the node's set in a union-find over the
+    * partition's edges. Union by the smaller root makes every root its
+    * set's minimum, so the output does not depend on the order of the
+    * rows. Ids are compared through `Comparable`, so they keep their
+    * type; a null endpoint joins no set and comes out as (null, null).
+    * The map holds one entry per endpoint of the partition, on the
+    * task's heap and outside Spark's execution-memory accounting. */
+  private def localRoots(edges: Iterator[Row]): Iterator[Row] = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var y = x
+      while (y != r) { val up = parent.get(y); parent.put(y, r); y = up }
+      r
+    }
+    var sawNull = false
+    edges.foreach { e =>
+      val (s, d) = (e.get(0), e.get(1))
+      if (s == null || d == null) sawNull = true
+      if (s != null) parent.putIfAbsent(s, s)
+      if (d != null) parent.putIfAbsent(d, d)
+      if (s != null && d != null) {
+        val (rs, rd) = (find(s), find(d))
+        if (rs.asInstanceOf[Comparable[Any]].compareTo(rd) < 0) parent.put(rd, rs)
+        else parent.put(rs, rd)
+      }
+    }
+    val nodes = parent.keySet.asScala.toArray.iterator.map(n => Row(n, find(n)))
+    if (sawNull) nodes ++ Iterator.single(Row(null, null)) else nodes
   }
 
   /** doc_id + distinct shingle set, the shared input frame for the

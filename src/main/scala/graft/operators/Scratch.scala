@@ -1,12 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, when}
 
 /** The one owner of intermediate state: every query, operator and
   * measuring main that cuts a frame's lineage or persists an
   * intermediate artifact goes through here.
   *  - [[cut]] materializes a frame that is consumed more than once
-  *    (iterative loops, multi-consumer building blocks);
+  *    (iterative loops, multi-consumer building blocks), and
+  *    [[cutCounting]] also counts a condition in the same job (a loop's
+  *    convergence check);
   *  - [[artifact]] persists a frame as parquet and serves it back as a
   *    scan — the train-once/serve-many posture of the capstones
   *    (dedup_family's pair+CC frames, ann_family's trained index).
@@ -40,6 +46,25 @@ object Scratch {
       df.persist()
       try df.checkpoint(true) finally df.unpersist()
     } else df.localCheckpoint(true)
+
+  /** [[cut]] `df`, and count the rows for which `cond` is true in the
+    * job that materializes it (a `Dataset.observe`), where a separate
+    * count would run one more job over the cut. The observed row reaches
+    * the driver through the listener bus after that job ends; the wait
+    * for it is bounded, and a missing or late count is an error, never
+    * a 0. */
+  def cutCounting(df: DataFrame, cond: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val out = cut(df.observe(obs, count(when(cond, 1)).as("n")))
+    val row = Await.result(obs.future, ObservedWait)
+    if (row.length != 1)
+      throw new IllegalStateException(s"observed count of ${obs.name} was not delivered")
+    (out, row.getLong(0))
+  }
+
+  /** How long [[cutCounting]] waits for its observed count: the bound
+    * [[graft.obs.Obs.run]] gives a listener-bus drain. */
+  private val ObservedWait = 60.seconds
 
   /** Write `df` as the parquet artifact `name` of `prefix`'s scratch
     * dir and return a scan of it. The read carries `df`'s schema

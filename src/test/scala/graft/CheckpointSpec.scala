@@ -37,8 +37,8 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("connectedComponents under a reliable checkpoint dir: same labels, files written") {
-    // chain + triangle + singleton pair — several rounds of the loop,
-    // so the reliable branch is exercised repeatedly
+    // chain + triangle + singleton pair: the edges cut and the observed
+    // label cut both take the reliable branch
     val pairs = ((1L to 40L).sliding(2).map(s => (s.head, s.last)).toSeq ++
       Seq((100L, 101L), (101L, 102L), (100L, 102L), (200L, 201L)))
       .toDF("d1", "d2")

@@ -31,12 +31,10 @@ class CompileOnceSpec extends SparkSpec {
     }
   }
 
-  test("a second connectedComponents run over a multi-round chain compiles nothing") {
+  /** Two connectedComponents runs over a 64-link chain: both runs'
+    * labels and the second run's compiles. */
+  private def chainTwice(pairs: org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
-    // a 64-link chain needs several hook-and-jump rounds, each with its
-    // own convergence check
-    val n = 64
-    val pairs = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
     def run() = {
       var labels = Array.empty[Long]
       val s = Obs.run(spark, "cc") {
@@ -47,6 +45,35 @@ class CompileOnceSpec extends SparkSpec {
     }
     val (first, _) = run()
     val (second, compiles) = run()
+    (first, second, compiles)
+  }
+
+  private def chain(n: Int) = {
+    import spark.implicits._
+    (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
+  }
+
+  test("a second connectedComponents run over a multi-round chain compiles nothing") {
+    // the chain's edges share one coalesced partition, so the local pass
+    // labels it; the split variant below runs the hook-and-jump rounds
+    val n = 64
+    val (first, second, compiles) = chainTwice(chain(n))
+    first.length shouldBe n
+    first.distinct.toSeq shouldBe Seq(1L)
+    second.sorted shouldBe first.sorted
+    compiles shouldBe 0L
+  }
+
+  test("a second connectedComponents run over a chain split over 4 edge partitions compiles nothing") {
+    // coalescing off: the chain spans 4 edge partitions, so the local
+    // pass leaves it to the hook-and-jump rounds, each with its own
+    // convergence check
+    val n = 64
+    val pairs = chain(n).repartition(4)
+    val (first, second, compiles) = withSplitEdges {
+      intercept[IllegalStateException](Dedup.connectedComponents(pairs, maxIters = 0))
+      chainTwice(pairs)
+    }
     first.length shouldBe n
     first.distinct.toSeq shouldBe Seq(1L)
     second.sorted shouldBe first.sorted

@@ -22,6 +22,48 @@ class EdgeCasesSpec extends SparkSpec {
     import spark.implicits._
     val none = Seq.empty[(Long, Long)].toDF("d1", "d2")
     Dedup.connectedComponents(none).count() shouldEqual 0
+    // filtered to nothing, in one edge partition and in 4
+    val filtered = Seq((1L, 2L), (2L, 3L)).toDF("d1", "d2").filter(col("d1") > 100)
+    Dedup.connectedComponents(filtered).count() shouldEqual 0
+    withSplitEdges(Dedup.connectedComponents(filtered.repartition(4)).count()) shouldEqual 0
+  }
+
+  test("connectedComponents: a null endpoint becomes a (null, null) row, its partner a singleton") {
+    import spark.implicits._
+    val pairs = Seq((Some(5L), None), (Some(1L), Some(2L))).toDF("d1", "d2")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    val expected = Set[(Option[Any], Option[Any])]((None, None),
+      (Some(5L), Some(5L)), (Some(1L), Some(1L)), (Some(2L), Some(1L)))
+    rows(Dedup.connectedComponents(pairs)) shouldEqual expected
+    withSplitEdges(rows(Dedup.connectedComponents(pairs.repartition(4)))) shouldEqual expected
+  }
+
+  test("connectedComponents keeps int ids int") {
+    import spark.implicits._
+    val pairs = Seq((3, 2), (2, 1), (10, 11)).toDF("d1", "d2")
+    val cc = Dedup.connectedComponents(pairs)
+    cc.schema.map(f => f.name -> f.dataType.simpleString) shouldEqual
+      Seq("node" -> "int", "label" -> "int")
+    cc.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap shouldEqual
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10)
+  }
+
+  test("connectedComponents labels a self-loop with its own id") {
+    import spark.implicits._
+    val cc = Dedup.connectedComponents(Seq((7L, 7L), (9L, 8L)).toDF("d1", "d2"))
+    cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldEqual
+      Map(7L -> 7L, 8L -> 8L, 9L -> 8L)
+  }
+
+  test("connectedComponents still throws when the loop runs out of rounds") {
+    import spark.implicits._
+    // a 64-link chain over 4 edge partitions needs several rounds
+    val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("d1", "d2").repartition(4)
+    val e = intercept[IllegalStateException] {
+      withSplitEdges(Dedup.connectedComponents(pairs, maxIters = 1))
+    }
+    e.getMessage should include("did not converge within 1 rounds")
   }
 
   test("topKPerGroup on an empty frame is empty and keeps the rk column") {

@@ -98,34 +98,32 @@ class PropertySpec extends SparkSpec {
       .count() shouldEqual 0
   }
 
+  // 200 random edges over 80 nodes (dense enough for multi-node
+  // components, sparse enough for singleton pairs and chains), with
+  // duplicate and reversed edges left in — the operator must not care
+  private lazy val randomEdges: Seq[(Long, Long)] = samples(for {
+    a <- Gen.choose(1L, 80L); b <- Gen.choose(1L, 80L) if a != b
+  } yield (a, b), 200)
+
   test("connectedComponents matches union-find ground truth on random graphs") {
     import spark.implicits._
-    // 200 random edges over 80 nodes (dense enough for multi-node
-    // components, sparse enough for singleton pairs and chains), with
-    // duplicate and reversed edges left in — the operator must not care
-    val edgeGen: Gen[(Long, Long)] = for {
-      a <- Gen.choose(1L, 80L); b <- Gen.choose(1L, 80L) if a != b
-    } yield (a, b)
-    val edges = samples(edgeGen, 200)
     // ground truth: classic union-find over the same edges (test-side
     // only — the operator itself stays fully distributed)
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      .map(n => n -> find(n)).toMap
-    // min-label canonicalization: re-map each root to its component min
-    val minOfRoot = expected.groupBy(_._2).map { case (r, m) => r -> m.keys.min }
-    val truth = expected.map { case (n, r) => n -> minOfRoot(r) }
-    val cc = Dedup.connectedComponents(edges.toDF("d1", "d2")).collect()
+    val truth = componentMins(randomEdges)
+    val cc = Dedup.connectedComponents(randomEdges.toDF("d1", "d2")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     cc shouldEqual truth
+  }
+
+  test("connectedComponents matches union-find ground truth on random graphs split over 4 edge partitions") {
+    import spark.implicits._
+    val pairs = randomEdges.toDF("d1", "d2").repartition(4)
+    val cc = withSplitEdges {
+      // with no rounds to run, the local pass alone cannot label the graph
+      intercept[IllegalStateException](Dedup.connectedComponents(pairs, maxIters = 0))
+      Dedup.connectedComponents(pairs).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    cc shouldEqual componentMins(randomEdges)
   }
 
   test("jaccardPairs is invariant to the input's physical layout") {

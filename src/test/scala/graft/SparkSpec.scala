@@ -39,4 +39,27 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  /** Run `f` with adaptive partition coalescing off. A small pair frame
+    * then keeps all `spark.sql.shuffle.partitions` (4) edge partitions,
+    * so `Dedup.connectedComponents` cannot close a component that spans
+    * them in its local pass and runs the hook-and-jump loop. */
+  protected def withSplitEdges[T](f: => T): T =
+    withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(f)
+
+  /** Ground truth for connected components: every endpoint of `edges`
+    * labeled with the minimum id of its component, by a driver-side
+    * union-find. */
+  protected def componentMins(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
+  }
 }

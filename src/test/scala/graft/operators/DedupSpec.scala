@@ -141,13 +141,47 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // a 300-link chain has diameter 299: plain min-label propagation
     // needs ~300 rounds; hooking + pointer jumping doubles the covered
-    // distance each round (d → 2d+2), so 16 rounds must suffice
+    // distance each round (d → 2d+2), so 16 rounds must suffice. Its
+    // edges share one coalesced partition, so the local pass labels it;
+    // the split variant below runs the rounds
     val n = 300
     val pairs = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
     val cc = connectedComponents(pairs, maxIters = 16).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     cc.length shouldEqual n
     cc.map(_._2).distinct.toSeq shouldEqual Seq(1L)
+  }
+
+  test("connectedComponents on a long chain split over 4 edge partitions: the loop finishes within 16 rounds") {
+    import spark.implicits._
+    val edges = (1L until 300L).map(i => (i, i + 1))
+    val pairs = edges.toDF("d1", "d2").repartition(4)
+    val cc = withSplitEdges {
+      // with no rounds to run, the local pass alone cannot label the chain
+      intercept[IllegalStateException](connectedComponents(pairs, maxIters = 0))
+      connectedComponents(pairs, maxIters = 16).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    cc shouldEqual componentMins(edges)
+  }
+
+  test("connectedComponents labels planted families in its local pass, in at most 4 jobs") {
+    import spark.implicits._
+    // 60 near-dup families of 3: stars around the minimum, triangles and
+    // reversed pairs, the shapes a dedup pair graph is made of
+    val edges = (0L until 60L).flatMap { f =>
+      val b = 10 * f + 1
+      f % 3 match {
+        case 0 => Seq((b, b + 1), (b + 2, b))
+        case 1 => Seq((b, b + 1), (b + 1, b + 2), (b, b + 2))
+        case _ => Seq((b + 1, b))
+      }
+    }
+    val pairs = edges.toDF("d1", "d2")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val s = graft.obs.Obs.run(spark, "cc-local") { labels = connectedComponents(pairs) }.orThrow
+    labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldEqual
+      componentMins(edges)
+    withClue(s"job intervals ${s.jobs}: ") { s.jobs.size should be <= 4 }
   }
 
   test("simhash: identical for identical docs, different for unrelated docs") {
