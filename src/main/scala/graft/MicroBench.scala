@@ -13,8 +13,8 @@ import graft.operators.Scratch
   * above run-to-run noise).
   *
   * Usage: runMain graft.MicroBench [nRows] (default 2,000,000 × 64 dims;
-  * the token arms run nRows rows of 64 tokens, the argmax and argmin
-  * arms nRows/4 vectors)
+  * the token arms run nRows rows of 64 tokens, the argmax, Lloyd-round
+  * and argmin arms nRows/4 vectors)
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -29,11 +29,13 @@ object MicroBench {
       expr("transform(sequence(0, 63), i -> CAST(sin(id * (i + 1)) AS FLOAT))")
         .as("embedding")))
 
-    def time(label: String)(df: => org.apache.spark.sql.DataFrame): Sample = {
-      val s = Obs.run(spark, label)(Obs.sink(df)).orThrow
+    def timed(label: String)(action: => Any): Sample = {
+      val s = Obs.run(spark, label)(action).orThrow
       System.err.println(f"$label%-28s ${s.sec}%8.3f s  cpu ${s.cpuSec}%8.3f s")
       s
     }
+    def time(label: String)(df: => org.apache.spark.sql.DataFrame): Sample =
+      timed(label)(Obs.sink(df))
     // wall and executor CPU seconds of a timed pair's faster run
     def json(s: Sample): String = s"""{"sec":${s.sec},"cpu_sec":${s.cpuSec}}"""
 
@@ -107,11 +109,12 @@ object MicroBench {
           cosFx(hofDot(qe, c.getField("ce")), nq, c.getField("nc")).as("cos"),
           (lit(0L) - c.getField("cluster")).as("negc")))).getField("negc")
     }
+    def centsOf(k: Int) = spark.range(k).select(col("id").as("cluster"),
+        expr("transform(sequence(0, 63), i -> CAST(floor(cos(id * (i + 3)) * 1e7) AS BIGINT))")
+          .as("ce"))
+      .withColumn("nc", graft.functions.DotProductFx.dot_fx(col("ce"), col("ce")))
     val asg = Seq(8, 100, 1000).map { k =>
-      val cents = spark.range(k).select(col("id").as("cluster"),
-          expr("transform(sequence(0, 63), i -> CAST(floor(cos(id * (i + 3)) * 1e7) AS BIGINT))")
-            .as("ce"))
-        .withColumn("nc", graft.functions.DotProductFx.dot_fx(col("ce"), col("ce")))
+      val cents = centsOf(k)
       val packed = cents.agg(
         collect_list(struct(col("cluster"), col("ce"), col("nc"))).as("cs"))
       val paired = qv.crossJoin(broadcast(packed))
@@ -123,6 +126,43 @@ object MicroBench {
             .as("cluster")))
       tH.foreach(h => System.err.println(f"k=$k%-5d native/HOF = ${tN.sec / h.sec}%.3f"))
       (k, tH, tN)
+    }
+    // ── Lloyd round: one assignment + per-(cluster, pos) update over the
+    // nAsg vectors at the same k regimes. step = graft.operators.Lloyd's
+    // one-job step (assign and sum per partition, merge on the driver);
+    // composed = the DataFrame round it replaced (the centroid table
+    // packed by a collect_list and broadcast, argmax, posexplode(qe),
+    // a (cluster, pos) group-by, and the regroup into centroid arrays).
+    // Both start from the same synthetic centroids and end at the next
+    // (cluster, ce, nc) table; per-vector CPU is executor CPU / nAsg. ──
+    val lloydRows = graft.operators.Lloyd.corpus(qv)
+    def composedRound(cents: org.apache.spark.sql.DataFrame) = {
+      val packed = cents.agg(collect_list(struct(col("cluster"), col("ce"), col("nc"))).as("cs"))
+      qv.crossJoin(broadcast(packed))
+        .withColumn("cluster",
+          graft.functions.ArgMaxCosFx.argmax_cos_fx(col("qe"), col("nq"), col("cs")))
+        .filter(col("cluster").isNotNull)
+        .select(col("cluster"), posexplode(col("qe")).as(Seq("pos", "v")))
+        .groupBy("cluster", "pos")
+        .agg(sum(col("v")).as("sv"), count(lit(1)).as("cnt"))
+        .withColumn("val",
+          floor(col("sv").cast("double") / col("cnt").cast("double")).cast("long"))
+        .groupBy("cluster")
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("val")))),
+          x => x("val")).as("ce"))
+        .withColumn("nc", graft.functions.DotProductFx.dot_fx(col("ce"), col("ce")))
+    }
+    def perVecNs(t: Sample) = t.cpuSec * 1e9 / nAsg
+    val lloyd = Seq(8, 100, 1000).map { k =>
+      val cents = centsOf(k)
+      val tC = run2(s"composed Lloyd round k=$k", composedRound(cents))
+      val served = graft.operators.Lloyd.Centroids.collect(cents)
+      def stepRun = timed(s"Lloyd step k=$k")(
+        graft.operators.Lloyd.step(lloydRows, served).centroids)
+      val tS = Obs.best(stepRun, stepRun)
+      System.err.println(f"k=$k%-5d Lloyd CPU per vector: composed ${perVecNs(tC)}%.0f ns, " +
+        f"step ${perVecNs(tS)}%.0f ns")
+      (k, tC, tS)
     }
     // ── argmin_l2 code assignment: pqAssign's PQ shape. Each row is
     // one (vector, subspace) subvector of 64/M dims, against that
@@ -168,10 +208,14 @@ object MicroBench {
       s""""k$k":{""" + h.map(t => s""""hof":${json(t)},""").getOrElse("") +
         s""""native":${json(nt)}}"""
     }.mkString(",")
+    val lloydJson = lloyd.map { case (k, c, st) =>
+      s""""k$k":{"composed":${json(c)},"step":${json(st)}}"""
+    }.mkString(",")
     println(s"""{"rows":$n,"hof":${json(tHof)},"mixed":${json(tMix)},"native":${json(tNat)},""" +
       s""""envelope":${json(tEnv)},""" +
       text.map { case (name, t) => s""""$name":${json(t)},""" }.mkString +
-      s""""argmax_rows":$nAsg,$asgJson,"argmin_vectors":$nAsg,$pqJson}""")
+      s""""argmax_rows":$nAsg,$asgJson,"lloyd_vectors":$nAsg,"lloyd":{$lloydJson},""" +
+      s""""argmin_vectors":$nAsg,$pqJson}""")
     spark.stop()
   }
 }

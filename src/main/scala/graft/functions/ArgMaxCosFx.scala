@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 /** Native Catalyst expression: top-1 centroid assignment —
   * `argmax over cs of (cos(qe, c.ce), -c.cluster)` — the per-row inner
-  * loop of [[graft.queries.SimilarityQueries.nearestClusters]].
+  * loop of [[graft.queries.SimilarityQueries.nearestClusters]]; each
+  * step of [[graft.operators.Lloyd]] calls its `argmax` kernel directly.
   *
   * Semantics are EXACTLY the composed form it replaces (pinned in
   * ArgMaxCosFxSpec against the literal composition, and transitively in

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Scratch
+import graft.operators.{Lloyd, Scratch}
+import graft.operators.Lloyd.Centroids
 import graft.operators.Similarity._
 
 /** Oracle-checked similarity-search queries over `embeddings` (M3):
@@ -109,102 +110,77 @@ object SimilarityQueries extends QueryModule {
       .withColumn("dot_fx", dotFx(col("qe"), col("q_qe")))
       .withColumn("cos", cosFx(col("dot_fx"), col("nq"), col("q_nq")))
 
-  // ── Lloyd-iteration building blocks, shared by kmeans_centroids
-  //    (training as the deliverable) and every IVF-family query
-  //    (training feeding the index). Scale shape per round: centroids
-  //    packed into one broadcast row, one corpus scan with the argmax
-  //    folded into it, one (cluster, pos) aggregation for the update. ──
+  // ── The IVF index, shared by kmeans_centroids (training as the
+  //    deliverable) and every IVF-family query (training feeding the
+  //    index): graft.operators.Lloyd trains it, one job per Lloyd step,
+  //    and the trained k-row table stays on the driver, where
+  //    nearestClusters serves it to every consumer. ──
 
   /** Top-`n` nearest centroids per vector — the one centroid-assignment
     * path: max cosine first, null cosines last, ties to the lowest
     * cluster id (a zero-norm vector lands on its lowest-id candidates);
     * one row per (vector, winner), fewer than `n` when `cents` has
-    * fewer rows. `cents` must carry (cluster, ce, nc) with unique
-    * cluster ids — true of every caller, whose centroids come from
-    * [[centroidArrays]]' group-by or the distinct vec_id seeds.
+    * fewer rows. `cents` must carry unique cluster ids — true of every
+    * caller, whose centroids come from a Lloyd step's per-cluster sums
+    * or the distinct vec_id seeds.
     *
-    * The centroid table is folded into ONE broadcast row (an array of
-    * (cluster, ce, nc) structs) and the argmax runs INSIDE the scan via
-    * the native [[graft.functions.ArgMaxCosFx]]: no n×k rows are
-    * materialized or shuffled and no per-vector sort runs, so under the
-    * derived-k scale law (k ∝ n) assignment stays shuffle-free at any
-    * k, which is what lets semantic_dedup/ann_family fit the 100×
-    * ladder (MicroBench times the fused loop at k = 8, 100, 1000).
+    * The driver-held table reaches every row as ONE broadcast value
+    * (`Centroids.served`: a [[graft.functions.BroadcastArray]] behind
+    * the argmax's `cs` input, whose plan string prints `centroids(k=…)`
+    * and never the k × dim elements), and the argmax runs INSIDE the
+    * scan via the native [[graft.functions.ArgMaxCosFx]]: no join, no
+    * packing exchange, no n×k rows materialized or shuffled and no
+    * per-vector sort, so under the derived-k scale law (k ∝ n)
+    * assignment stays shuffle-free at any k (MicroBench times the fused
+    * loop at k = 8, 100, 1000).
     *
     * n > 1 takes the winner n times: each round runs the argmax over
-    * the packed array with the earlier winners filtered out, and the
-    * winners explode into rows. Successive argmaxes over a shrinking
-    * set enumerate the centroids in exactly the `ORDER BY cos DESC
-    * NULLS LAST, cluster` rank of a per-vector window — the reference
-    * form RetrievalOpsSpec compares against and [[nearestSql]] mirrors
-    * for the oracle. Only query sets (≤ 10 rows, n ≤ 4) take this
-    * path, so its O(n·k) per row is noise.
+    * the table with the earlier winners filtered out, and the winners
+    * explode into rows. Successive argmaxes over a shrinking set
+    * enumerate the centroids in exactly the `ORDER BY cos DESC NULLS
+    * LAST, cluster` rank of a per-vector window — the reference form
+    * RetrievalOpsSpec compares against and [[nearestSql]] mirrors for
+    * the oracle. Only query sets (≤ 10 rows, n ≤ 4) take this path, so
+    * its O(n·k) per row is noise.
     *
     * The isNotNull filter drops exhausted rounds: on an EMPTY centroid
-    * frame, or past the last centroid, the packed array is empty and
+    * table, or past the last centroid, the remaining array is empty and
     * the argmax null, so such a vector yields no row — as the window
-    * form. With any real centroid the argmax always resolves (all-null
-    * cosines fall back to the lowest cluster id). */
-  private[graft] def nearestClusters(df: DataFrame, cents: DataFrame, n: Int): DataFrame = {
-    val packed = cents.agg(
-      collect_list(struct(col("cluster"), col("ce"), col("nc"))).as("cs"))
-    val argmax = graft.functions.ArgMaxCosFx.argmax_cos_fx(col("qe"), col("nq"), col("cs"))
-    val joined = df.crossJoin(broadcast(packed))
-    val assigned =
-      if (n == 1) joined.withColumn("cluster", argmax)
-      else {
-        val rounds = (1 until n).foldLeft(joined.withColumn("w0", argmax)) { (f, i) =>
-          f.withColumn("cs", filter(col("cs"), c => c("cluster") =!= col(s"w${i - 1}")))
-            .withColumn(s"w$i", argmax)
-        }
-        val ws = (0 until n).map(i => s"w$i")
-        rounds.withColumn("cluster", explode(array(ws.map(col): _*))).drop(ws: _*)
+    * form. When every centroid has an id, the top-1 argmax always
+    * resolves (all-null cosines fall back to the lowest cluster id) and
+    * n = 1 takes no filter: the optimizer would push it below the
+    * fan-out exchange of [[graft.Tables.embeddings]], where it evaluates
+    * the argmax a second time and gives each consumer of the corpus its
+    * own exchange. */
+  private[graft] def nearestClusters(df: DataFrame, cents: Centroids, n: Int): DataFrame = {
+    def argmax(cs: Column) = graft.functions.ArgMaxCosFx.argmax_cos_fx(col("qe"), col("nq"), cs)
+    val served = cents.served(df.sparkSession)
+    if (n == 1) {
+      val top = df.withColumn("cluster", argmax(served))
+      if (cents.alwaysResolves) top else top.filter(col("cluster").isNotNull)
+    } else {
+      val rounds = (1 until n).foldLeft(
+          df.withColumn("cs", served).withColumn("w0", argmax(col("cs")))) { (f, i) =>
+        f.withColumn("cs", filter(col("cs"), c => c("cluster") =!= col(s"w${i - 1}")))
+          .withColumn(s"w$i", argmax(col("cs")))
       }
-    assigned.filter(col("cluster").isNotNull).drop("cs")
+      val ws = (0 until n).map(i => s"w$i")
+      rounds.withColumn("cluster", explode(array(ws.map(col): _*))).drop("cs" +: ws: _*)
+        .filter(col("cluster").isNotNull)
+    }
   }
 
-  /** One Lloyd round over `b`: top-1 assignment to `cents`, then the
-    * centroid recompute floor(exact-int-sum / count) per (cluster,
-    * pos) — a single IEEE division of identical operands, so both
-    * engines floor the same double. Rows: (cluster, pos, sv, cnt, val);
-    * `cnt` is the cluster's member count. */
-  private def lloydRound(b: DataFrame, cents: DataFrame): DataFrame =
-    nearestClusters(b, cents, 1)
-      .select(col("cluster"), posexplode(col("qe")).as(Seq("pos", "v")))
-      .groupBy("cluster", "pos")
-      .agg(sum(col("v")).as("sv"), count(lit(1)).as("cnt"))
-      .withColumn("val",
-        floor(col("sv").cast("double") / col("cnt").cast("double")).cast("long"))
+  /** [[nearestClusters]] against a (cluster, ce, nc) frame, collected
+    * to the driver first. */
+  private[graft] def nearestClusters(df: DataFrame, cents: DataFrame, n: Int): DataFrame =
+    nearestClusters(df, Centroids.collect(cents), n)
 
-  /** (cluster, pos, val) rows back into (cluster, ce, nc) arrays. */
-  private def centroidArrays(cp: DataFrame): DataFrame =
-    cp.groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("val")))),
-        x => x("val")).as("ce"))
-      .withColumn("nc", dotFx(col("ce"), col("ce")))
-
-  /** vec_id < k as the deterministic seed centroids. The fixed-k
-    * queries seed k = 8 because their oracles pin it structurally; the
-    * derived-k (X-110 scale-law) ones pass [[semDedupK]]. */
-  private def seedCentroids(b: DataFrame, k: Long): DataFrame =
-    b.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("qe").as("ce"), col("nq").as("nc"))
-
-  /** The index-training recipe every IVF-family query shares: seeds
-    * vec_id < k, then two Lloyd rounds over the corpus `b`. Returns
-    * round 2's per-(cluster, pos) rows, which kmeans_centroids reports;
-    * [[trainedCentroids]] turns them into the served index. */
-  private def lloydTrain(b: DataFrame, k: Long): DataFrame =
-    lloydRound(b, centroidArrays(lloydRound(b, seedCentroids(b, k))))
-
-  /** The trained (cluster, ce, nc) centroid table of [[lloydTrain]],
-    * cut: every IVF-family query serves it more than once (assignment
-    * and probing each re-embed the centroid lineage, so without the cut
-    * the two Lloyd rounds run once per consumer) — train once, serve
-    * many. ann_family persists `centroidArrays(lloydTrain(…))` as an
-    * artifact instead. */
-  private def trainedCentroids(b: DataFrame, k: Long = 8L): DataFrame =
-    Scratch.cut(centroidArrays(lloydTrain(b, k)))
+  /** The trained IVF index of `b`: the vec_id < k seeds (k = 8 for the
+    * fixed-k queries, whose oracles pin it; [[semDedupK]] for the
+    * derived-k ones), then two Lloyd steps. The result holds round 2's
+    * per-(cluster, pos) sums, which kmeans_centroids reports, and the
+    * trained centroid table every IVF-family query serves. */
+  private def lloydTrain(b: DataFrame, k: Long = 8L): Lloyd.Sums = Lloyd.train(b, k)
 
   // ── PQ building blocks, shared by pq_error (X-101, training + codes
   //    as the deliverable) and ivfpq_topk (X-143, the trained codebook
@@ -403,9 +379,8 @@ object SimilarityQueries extends QueryModule {
     * reused across queries. */
   private def ivfTopK(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val b = base(s, d)
-    // trainedCentroids cuts the 8-row index before serving (measured
-    // 3.2 s → ~2 s at sf0.1 against re-training per consumer).
-    val c2 = trainedCentroids(b)
+    // trained once on the driver; both consumers serve the same table
+    val c2 = lloydTrain(b).centroids
     val assigned = nearestClusters(b.filter(col("vec_id") >= 10), c2, 1)
     val probes = nearestClusters(b.filter(col("vec_id") < 10), c2, 2)
       .select(col("vec_id").as("q_id"), col("cluster"),
@@ -460,7 +435,7 @@ object SimilarityQueries extends QueryModule {
     * score only those lists' members, report recall@k + scanned-
     * candidate count. `corpus` = assigned candidate rows (vec_id ≥ 10),
     * `queries` needs (vec_id, qe, nq). */
-  private def nprobeArm(cents: DataFrame, corpus: DataFrame,
+  private def nprobeArm(cents: Centroids, corpus: DataFrame,
       queries: DataFrame, truth: DataFrame, nprobe: Int): DataFrame = {
     val probes = nearestClusters(queries, cents, nprobe)
       .select(col("vec_id").as("q_id"), col("cluster"),
@@ -501,12 +476,12 @@ object SimilarityQueries extends QueryModule {
   /** ivf_maintenance's ledger off a trained index: per-list standing
     * count + batch additions + exact-ppm load share + retrain hint.
     * `oldCounts` = (cluster, old_n) standing-list sizes. */
-  private def maintLedger(cents: DataFrame, oldCounts: DataFrame,
+  private def maintLedger(cents: Centroids, oldCounts: DataFrame,
       newb: DataFrame): DataFrame = {
     val addN = nearestClusters(newb, cents, 1)
       .groupBy("cluster").agg(count(lit(1)).as("added_n"))
     val report = Scratch.cut(
-      cents.select("cluster")
+      cents.frame(newb.sparkSession).select("cluster")
         .join(oldCounts, Seq("cluster"), "left_outer")
         .join(addN, Seq("cluster"), "left_outer")
         .select(col("cluster"),
@@ -623,14 +598,15 @@ object SimilarityQueries extends QueryModule {
     // of 8 lists): per query, how many of the TRUE top-3 each width
     // surfaces and how many candidates it had to score (n_cand — the
     // serve-cost axis; recall alone would hide that nprobe=8 is just a
-    // linear scan). Index-build posture: the trained centroids, the
-    // corpus assignment, and the truth set are each MATERIALIZED once
-    // and consumed by all three arms (train-once/serve-many); per arm,
+    // linear scan). Index-build posture: the centroids are trained once
+    // and held on the driver, the corpus assignment and the truth set
+    // are each MATERIALIZED once, and all three arms consume them
+    // (train-once/serve-many); per arm,
     // the probe set is ≤ 10·nprobe rows broadcast against the
     // materialized assignment — no arm rebuilds anything.
     "ivf_nprobe_curve" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = trainedCentroids(b)
+      val c2 = lloydTrain(b).centroids
       val assigned = Scratch.cut(
         nearestClusters(b.filter(col("vec_id") >= 10), c2, 1)
           .select("vec_id", "cluster", "qe", "nq"))
@@ -656,15 +632,15 @@ object SimilarityQueries extends QueryModule {
     // trained list: standing count, additions, new total, exact-ppm
     // load share (DECIMAL(38,0) — the dsirScores headroom rule), and a
     // retrain hint when a list holds > 2× the mean load. Scale shape:
-    // index trained + materialized once; the standing count is one
-    // corpus aggregate (at deployment: a persisted artifact maintained
-    // by mergeable adds); the batch assignment is variants ×
-    // broadcast(8-row centroids); everything after is an 8-row frame,
+    // index trained once and held on the driver; the standing count is
+    // one corpus aggregate (at deployment: a persisted artifact
+    // maintained by mergeable adds); the batch assignment reads the
+    // served 8-row table in the scan; everything after is an 8-row frame,
     // materialized so its two consumers (totals + report) never re-run
     // the assignment lineages.
     "ivf_maintenance" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = trainedCentroids(b)
+      val c2 = lloydTrain(b).centroids
       val oldN = nearestClusters(b, c2, 1)
         .groupBy("cluster").agg(count(lit(1)).as("old_n"))
       maintLedger(c2, oldN, plantedVariants(b))
@@ -696,7 +672,9 @@ object SimilarityQueries extends QueryModule {
     // Scale shape: the corpus-dominant work (training's scans, the one
     // corpus assignment, the brute-force truth) executes exactly once;
     // every section reads the parquet artifacts (train-once/serve-many
-    // made literal), and each section's own shape is its sibling's
+    // made literal; the curve's probes and the maint batch assign
+    // against the same centroid table where training left it, on the
+    // driver), and each section's own shape is its sibling's
     // audited one. The oracle splices the sibling CTE fragments
     // verbatim (the X-136 discipline). Artifacts are Scratch.artifact
     // scans (per-(JVM, prefix) dir: no concurrent-run races; removed at
@@ -711,10 +689,10 @@ object SimilarityQueries extends QueryModule {
       // no n×k exchange at any k. ──
       val b = base(s, d)
       val k = semDedupK(Tables.embeddings(s, d).count())
-      val cents = Scratch.artifact(centroidArrays(lloydTrain(b, k)),
-        "ann_family", "centroids")
+      val index = lloydTrain(b, k).centroids
+      val cents = Scratch.artifact(index.frame(s), "ann_family", "centroids")
       val assigned = Scratch.artifact(
-        nearestClusters(b, cents, 1).select("vec_id", "cluster", "qe", "nq"),
+        nearestClusters(b, index, 1).select("vec_id", "cluster", "qe", "nq"),
         "ann_family", "assigned")
       val qs = broadcast(assigned.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("qe").as("q_qe"), col("nq").as("q_nq")))
@@ -732,11 +710,11 @@ object SimilarityQueries extends QueryModule {
       val queries10 = assigned.filter(col("vec_id") < 10).select("vec_id", "qe", "nq")
       val corpus = assigned.filter(col("vec_id") >= 10)
       val curveSec = Seq(1, 2, 4)
-        .map(n => nprobeArm(cents, corpus, queries10, truth, n))
+        .map(n => nprobeArm(index, corpus, queries10, truth, n))
         .reduce(_.unionByName(_))
       val outSec = outlierReport(cents, assigned)
       val oldCounts = assigned.groupBy("cluster").agg(count(lit(1)).as("old_n"))
-      val maintSec = maintLedger(cents, oldCounts,
+      val maintSec = maintLedger(index, oldCounts,
         plantedVariants(assigned.select("vec_id", "qe")))
       val sampleSec = quotaSample(assigned.select("vec_id", "cluster"))
       semDedupGate(s, assigned)
@@ -809,16 +787,17 @@ object SimilarityQueries extends QueryModule {
     // helpers), recompute each vector's exact cosine to its own
     // centroid, and report the bottom-3 per cluster with the cluster's
     // size and max (the in-cluster cohesion range). Index-build
-    // posture: centroids + assignment materialized once; the cosine
-    // recompute is a ≤8-row broadcast join over the materialized
+    // posture: centroids trained once, assignment materialized once;
+    // the cosine recompute is a ≤8-row broadcast join (the driver-held
+    // table as a local frame) over the materialized
     // assignment; bottom-3 via the two-phase Rank pre-prune (a raw
     // window keyed on ≤8 clusters would funnel n/8 rows per task).
     "centroid_outliers" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = trainedCentroids(b)
+      val c2 = lloydTrain(b).centroids
       val assigned = Scratch.cut(
         nearestClusters(b, c2, 1).select("vec_id", "cluster", "qe", "nq"))
-      outlierReport(c2, assigned).orderBy("cluster", "rk")
+      outlierReport(c2.frame(s), assigned).orderBy("cluster", "rk")
     }),
 
     // Embedding-cosine near-dup pairs, LSH-banded: candidates must
@@ -885,9 +864,10 @@ object SimilarityQueries extends QueryModule {
     // K-means training iterations (Lloyd's): 2 unrolled rounds of
     // assign-to-nearest + centroid recompute, seeded from vec_id < 8 —
     // the step that turns ivf_topk's seed "centroids" into trained
-    // ones. Scale shape per round: centroids broadcast (8 rows), one
-    // corpus scan for assignment, one (cluster, pos) aggregation for
-    // the update — the canonical iterative-ML pattern on Spark.
+    // ones. Scale shape per round: ONE job (graft.operators.Lloyd.step)
+    // — each partition assigns its vectors against the broadcast
+    // centroids and sums them per (cluster, pos), the partial sums
+    // merge on the driver — the shape Spark MLlib's KMeans trains in.
     // Cross-engine exactness: assignment compares cosines built from
     // identical integers (bit-identical doubles, ties to the lowest
     // cluster); the centroid mean is floor(exact-int-sum / count) — a
@@ -896,12 +876,9 @@ object SimilarityQueries extends QueryModule {
     // next round (both engines aggregate only over existing groups).
     "kmeans_centroids" -> ((s, d) => {
       val b = base(s, d)
-      // round 2's per-(cluster,pos) cnt IS the member count
-      // (posexplode emits exactly one row per member per pos), so a
-      // separate counts aggregate would re-execute the whole round-1
-      // training + assignment lineage a second time and add a join —
-      // byte-identical output either way.
-      lloydTrain(b, 8L)
+      // round 2's per-(cluster, pos) cnt IS the member count (one per
+      // member reaching pos); the rows come from the driver's sums
+      lloydTrain(b).rows(s)
         .select(col("cluster"), col("pos"), col("val").as("c_fx"),
           col("cnt").as("n_members"))
         .orderBy("cluster", "pos")
@@ -915,14 +892,14 @@ object SimilarityQueries extends QueryModule {
     // helpers), assign every vector to its nearest trained centroid,
     // then take a fixed quota per cluster by deterministic md5
     // priority (never rand() — the corpus_mix rule). Scale shape: the
-    // trained index AND the thin (vec_id, cluster, pri) assignment are
-    // materialized once; the per-cluster quota runs through
+    // index is trained once on the driver and the thin (vec_id,
+    // cluster, pri) assignment materialized once; the per-cluster quota runs through
     // Rank.topKPerGroup (a raw window keyed on ≤8 clusters would
     // funnel n/8 rows per task — the exact anti-pattern the plan gate
     // forbids); the only hint is the ≤8-row cluster-sizes frame.
     "cluster_balanced_sample" -> ((s, d) => {
       val b = base(s, d)
-      val c2 = trainedCentroids(b)
+      val c2 = lloydTrain(b).centroids
       val assigned = Scratch.cut(
         nearestClusters(b, c2, 1).select("vec_id", "cluster"))
       quotaSample(assigned).orderBy("cluster", "rk")
@@ -981,11 +958,11 @@ object SimilarityQueries extends QueryModule {
     // pairwise cosine only WITHIN each cluster — the composition of the
     // trained k-means index (X-51) with pair verification that replaces
     // a corpus-wide all-pairs product with |clusters| bounded blocks.
-    // Index-build posture: train 2 Lloyd rounds, materialize the
-    // k-row centroid frame, assign the whole corpus ONCE and
+    // Index-build posture: train 2 Lloyd rounds (the k-row centroid
+    // table stays on the driver), assign the whole corpus ONCE and
     // materialize the assignment (train once / serve many — the
     // ivf_topk discipline; without the cut the self-join would re-run
-    // training+assignment on both sides). The algorithm's own scale
+    // the assignment on both sides). The algorithm's own scale
     // contract — k grows with n so clusters stay bounded — is now
     // REGISTERED, not just gated (r13): k = semDedupK(count), the
     // DuckDB oracle derives the identical k from the same count, and
@@ -1015,7 +992,7 @@ object SimilarityQueries extends QueryModule {
       // k derivation is part of the index BUILD (one metadata-cheap
       // count, the same eager-construction class as the gate below)
       val k = semDedupK(Tables.embeddings(s, d).count())
-      val c2 = trainedCentroids(b, k)
+      val c2 = lloydTrain(b, k).centroids
       val assigned = Scratch.cut(
         nearestClusters(b, c2, 1).select("vec_id", "cluster", "qe", "nq"))
       // The max-cluster gate is a driver-side `.first()` over a 1-row
@@ -1069,14 +1046,14 @@ object SimilarityQueries extends QueryModule {
     // the memory-bandwidth trade that makes PQ serving fast. Everything
     // is exact BIGINT arithmetic (the pq_error discipline), so both
     // engines reproduce every distance bit-for-bit. Scale shape: the
-    // coarse index and the 32-row codebook are trained once and
-    // MATERIALIZED; the corpus-side work is one coarse assignment +
+    // coarse index is trained once and held on the driver, the 32-row
+    // codebook trained once and MATERIALIZED; the corpus-side work is one coarse assignment +
     // one code assignment + an equi-join on the probed cluster key;
     // nothing corpus-sized is ever hinted.
     "ivfpq_topk" -> ((s, d) => {
       val b = base(s, d)
-      // coarse quantizer: ivf_topk's trained + materialized index
-      val coarse = trainedCentroids(b)
+      // coarse quantizer: ivf_topk's trained, driver-held index
+      val coarse = lloydTrain(b).centroids
       val assigned = nearestClusters(b.filter(col("vec_id") >= 10), coarse, 1)
         .select(col("vec_id"), col("cluster"))
       val probes = nearestClusters(b.filter(col("vec_id") < 10), coarse, 2)

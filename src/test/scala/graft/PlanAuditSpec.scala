@@ -118,9 +118,11 @@ class PlanAuditSpec extends SparkSpec {
       "knn_cosine" -> 1,           // 10 query vectors
       "ann_lsh_bucket" -> 1,       // 10 query vectors
       "cluster_balanced_sample" -> 1, // ≤8-row cluster-sizes frame (training + assignment hints sit behind the two materializations)
-      "ivf_topk" -> 3,             // ≤8-row MATERIALIZED trained-centroid frame hinted on the assign + probe sides, + ≤20 probes (the 2 training rounds' hints sit behind the index materialization)
-      "ivfpq_topk" -> 6,           // the same ≤8-row coarse index on assign + probe sides and the ≤20-row probe set, + the MATERIALIZED 32-row PQ codebook on the candidate-code side and the ≤320-row ADC tables (whose lineage re-embeds the codebook's hint) — every hinted frame bounded by seeds × subspaces or the query load; nothing corpus-sized (label_propagation carries NO visible hints: its bounded frames sit behind materializations)
-      "kmeans_centroids" -> 2,     // ≤8-row centroid frames; round 2's lineage re-embeds round 1's hint (member counts now read off lloydUpdate's cnt — no extra count join re-embedding the assignment tree)
+      "ivf_topk" -> 1,             // ≤20 probes (the trained centroid table is served from the driver through one broadcast value inside the argmax, not a hinted frame: 3 → 1 when the two hints on the packed centroid row went)
+      "ivfpq_topk" -> 4,           // the ≤20-row probe set (the coarse index is served from the driver, as in ivf_topk: 6 → 4), + the MATERIALIZED 32-row PQ codebook on the candidate-code side and the ≤320-row ADC tables (whose lineage re-embeds the codebook's hint) — every hinted frame bounded by seeds × subspaces or the query load; nothing corpus-sized (label_propagation carries NO visible hints: its bounded frames sit behind materializations)
+      // kmeans_centroids carries NO hint since its rounds run as Lloyd
+      // steps on the driver (2 → 0): its rows are a local frame of the
+      // last step's sums
       "link_pagerank" -> 2,        // final iteration's 1-row count + 1-row dangling-mass frames (earlier rounds' hints sit behind the per-round rank materialization)
       "link_hits" -> 1,            // final authority round's 1-row max-normalizer frame (earlier rounds' hints sit behind the per-round score materialization)
       "doc_lm_score" -> 1,         // single-row corpus total (the vocabulary is NOT hinted)
@@ -165,7 +167,7 @@ class PlanAuditSpec extends SparkSpec {
       // arms) — no hint visible in the final plan
       "zscore_features" -> 1,      // per-segment moment stats: |segments| rows
       "source_overlap" -> 2,       // per-source distinct-shingle sizes: |sources| rows, hinted on each pair side
-      "ann_recall" -> 8,           // 10-query frames: lsh's 1 + lsh_mp's 1 (multi-probe query fan-out) + ivf's 3 (materialized centroids on assign/probe + probes) + r14: recallOf's ≤|queries|·k approx side hinted per branch (×3 — it arrives behind checkpoints with no stats and fell back to SortMergeJoin); truth's own hint sits behind its round-8 materialization instead of re-embedding ×3
+      "ann_recall" -> 6,           // 10-query frames: lsh's 1 + lsh_mp's 1 (multi-probe query fan-out) + ivf's 1 (probes; its centroids are served from the driver, 3 → 1) + r14: recallOf's ≤|queries|·k approx side hinted per branch (×3 — it arrives behind checkpoints with no stats and fell back to SortMergeJoin); truth's own hint sits behind its round-8 materialization instead of re-embedding ×3
       "events_hourly_filled" -> 1, // |types| distinct frame crossed with the generated hour axis
       "hourly_anomalies" -> 1,     // same |types| distinct frame (the X-76 grid is its input)
       "equidepth_hist" -> 2,       // two-phase Quantile shape: per-group stats hinted in the selection pass + the materialized ≤ |bins| target-bucket frame
@@ -192,9 +194,9 @@ class PlanAuditSpec extends SparkSpec {
       // materialization that single-executes the link-synthesis lineage
       "kcore_peel" -> 1,           // the 1-row convergence probe over the MATERIALIZED label frame
       "hard_negatives" -> 3,       // the 10-query frame hinted in both scoring passes (pos_max + negatives) + the 10-row pos_max frame itself
-      "centroid_outliers" -> 3,    // ≤8-row MATERIALIZED centroid frame in the cosine recompute (visible in both its consumers: sizes + top-k) + the ≤8-row cluster-sizes frame (training/assignment hints sit behind the two materializations)
-      "ivf_nprobe_curve" -> 18,    // 3 probe arms × (≤8-row materialized centroids inside nearestClusters + the ≤10·nprobe probe set) × 2 consumers of the candidate frame (top-k + n_cand count) + r14: per arm, recallOf's ≤|queries|·k topk side and the ≤|queries|-row n_cand aggregate (both stats-less behind the arm's lineage, previously SortMergeJoined) — every hinted frame bounded by seeds or the query load; truth/assignment hints sit behind their materializations
-      "ivf_maintenance" -> 1,      // the 1-row load-totals frame over the MATERIALIZED 8-row report (the centroid hints in both assignment arms sit behind that materialization)
+      "centroid_outliers" -> 3,    // ≤8-row centroid frame (the driver-held trained table as a local frame) in the cosine recompute (visible in both its consumers: sizes + top-k) + the ≤8-row cluster-sizes frame (the assignment sits behind its materialization)
+      "ivf_nprobe_curve" -> 12,    // 3 probe arms × the ≤10·nprobe probe set × 2 consumers of the candidate frame (the centroids inside nearestClusters are served from the driver, no longer a hinted packed row: 18 → 12) (top-k + n_cand count) + r14: per arm, recallOf's ≤|queries|·k topk side and the ≤|queries|-row n_cand aggregate (both stats-less behind the arm's lineage, previously SortMergeJoined) — every hinted frame bounded by seeds or the query load; truth/assignment hints sit behind their materializations
+      "ivf_maintenance" -> 1,      // the 1-row load-totals frame over the MATERIALIZED 8-row report (both assignment arms read the driver-held centroids unhinted)
       "ks_drift" -> 4,             // |sources|-row distinct frame on the ECDF grid cross (re-embedded through BOTH sides of the pair self-join) + the |sources|-row totals frame on both pair sides — every hinted frame catalog-constant-bounded
       "textrank_keywords" -> 1,    // final round's 1-row node-count frame (earlier rounds' hints sit behind the per-round score materialization — the link_pagerank shape)
       "heaps_law" -> 3,            // 1-row bounds frame on the decile bucketing (re-embedded through the doc-stats AND first-occurrence consumers) + the final cutoff join — every hinted frame 1 row
