@@ -53,21 +53,12 @@ object Dedup {
   val MinHashA: Seq[Long] = (0 until MinHashK).map(i => (2L * i + 1) * 104729L % HashMod)
   val MinHashB: Seq[Long] = (0 until MinHashK).map(i => (i + 1) * 7919L % HashMod)
 
-  /** MinHash signature: one column per hash function, min over the
-    * shingle-hash set of (a·h + b) mod P. Products stay < 1e18, inside
-    * a long. */
-  def minhashSig(shingleHashes: Column): Seq[Column] =
-    (0 until MinHashK).map { i =>
-      array_min(transform(shingleHashes,
-        h => (lit(MinHashA(i)) * h + lit(MinHashB(i))) % lit(HashMod)))
-        .as(s"mh$i")
-    }
-
-  /** MinHash signatures via aggregation instead of per-row array
-    * lambdas: hash each occurrence on the exploded rows (codegen'd
-    * md5), then ONE groupBy(doc) computing the k mins. Same signature
-    * values as [[minhashSig]] (min over a set = min over its multiset),
-    * so oracles are unchanged.
+  /** MinHash signatures: one column per hash function, min over the
+    * shingle hashes of (a·h + b) mod P (products stay < 1e18, inside a
+    * long). Computed by aggregation instead of per-row array lambdas:
+    * hash each occurrence on the exploded rows (codegen'd md5), then
+    * ONE groupBy(doc) computing the k mins — min over a set = min over
+    * its multiset, so repeated occurrences leave the signature as is.
     *
     * r14 shape change (guide §2.4): this used to hash DISTINCT
     * shingles and join the hashes back — THREE exchanges of

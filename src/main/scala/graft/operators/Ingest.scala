@@ -41,9 +41,8 @@ object Ingest {
   /** Probe a batch's shingled frame against the standing index and
     * assign standing-cluster labels: banded candidates via the
     * asymmetric batch×index equi-join, exact-Jaccard ≥ t verification
-    * on candidates only, then X-157's deterministic best-match rule
-    * (jac desc, label, index doc) with own-id fallback for unmatched
-    * docs. One row per batch doc: (doc_id, cluster, matched). */
+    * on candidates only, then [[bestMatch]]. One row per batch doc:
+    * (doc_id, cluster, matched). */
   def probeAssign(batchSh: DataFrame, idxSh: DataFrame, idxStack: DataFrame,
       idxLabels: DataFrame, t: Double = 0.5): DataFrame = {
     val bStack = bandStack(batchSh)
@@ -60,6 +59,27 @@ object Ingest {
       .withColumn("jac", jaccard(col("a.ss"), col("b.ss")))
       .filter(col("jac") >= t)
       .select("d_new", "d_idx", "jac")
+    bestMatch(batchSh, probes, idxLabels).select("doc_id", "cluster", "matched")
+  }
+
+  /** The new×index orientation of a (d1, d2, jac) pair frame that
+    * spans both sides of the [[isNew]] split: its straddling pairs as
+    * (d_new, d_idx, jac) probe rows. */
+  def probeRows(pairs: DataFrame): DataFrame =
+    pairs.filter(isNew(col("d1")) =!= isNew(col("d2")))
+      .select(
+        when(isNew(col("d1")), col("d1")).otherwise(col("d2")).as("d_new"),
+        when(isNew(col("d1")), col("d2")).otherwise(col("d1")).as("d_idx"),
+        col("jac"))
+
+  /** X-157's best-match rule: each new document (`newDocs`' doc_id)
+    * takes the standing label (`idxLabels`' (node, label); an
+    * unlabeled index doc is its own label) of its best (d_new, d_idx,
+    * jac) probe, ranked by jac desc, then label, then index doc —
+    * fully deterministic. A document without probes seeds its own
+    * cluster. One row per new doc: (doc_id, cluster, matched, jac). */
+  def bestMatch(newDocs: DataFrame, probes: DataFrame,
+      idxLabels: DataFrame): DataFrame = {
     val withLabel = probes.join(
         idxLabels.select(col("node").as("d_idx"), col("label")),
         Seq("d_idx"), "left_outer")
@@ -69,11 +89,12 @@ object Ingest {
         Window.partitionBy("d_new")
           .orderBy(col("jac").desc, col("cand_label"), col("d_idx"))))
       .filter(col("rk") === 1)
-      .select(col("d_new").as("doc_id"), col("cand_label"))
-    batchSh.select("doc_id").join(best, Seq("doc_id"), "left_outer")
+      .select(col("d_new").as("doc_id"), col("cand_label"), col("jac"))
+    newDocs.select("doc_id").join(best, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("cand_label"), col("doc_id")).as("cluster"),
-        when(col("cand_label").isNotNull, lit(1)).otherwise(lit(0)).as("matched"))
+        when(col("cand_label").isNotNull, lit(1)).otherwise(lit(0)).as("matched"),
+        col("jac"))
   }
 
   /** 2^56 — the X-108 checksum modulus (56-bit md5-prefix hashes). */

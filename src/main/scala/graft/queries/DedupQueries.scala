@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Dedup, Scratch, TextAnalysis}
+import graft.operators.{Dedup, Ingest, Scratch, TextAnalysis}
 
 /** Oracle-checked deduplication queries over `documents` (M3):
   * exact hash groups, shingle-Jaccard near-dup pairs (size-band-pruned
@@ -289,6 +289,60 @@ object DedupQueries extends QueryModule {
       .select(col("m1"), col("m2"), coalesce(col("n"), lit(0L)).as("n_common"))
   }
 
+  /** X-70's soft-dedup weight: exact fixed-point ⌊10⁶/csize⌋ over the
+    * frame's `csize` column. */
+  private def weightFx: Column = expr("1000000 div csize").cast("long")
+
+  /** X-75's leakage-safe split: a deterministic md5 bucket of the
+    * cluster key, 90/10 train/val. */
+  private def leakageSplit(cluster: Column): Column =
+    when(TextAnalysis.sampleBucket(cluster, "graft-split") < 90, "train")
+      .otherwise("val")
+
+  /** The jaccard arm's removal set over a (node, label) CC frame: every
+    * member that is not its cluster's min-id survivor, as doc_id rows. */
+  private[queries] def jaccardRemoved(labels: DataFrame): DataFrame =
+    labels.filter(col("node") =!= col("label")).select(col("node").as("doc_id"))
+
+  /** X-81's keep-best section over a (node, label) near-dup label
+    * frame, shared by dedup_artifacts and dedup_family: per document
+    * its cluster (own id for a singleton), cluster size, weight,
+    * quality score, leakage-safe split, and whether it is the kept
+    * copy (highest score in the cluster, ties to the smallest doc_id).
+    * The per-cluster stats/keep frames are cluster-cardinality —
+    * corpus-order once singletons are in — so they join by shuffle on
+    * the cluster key, never a broadcast hint. The (doc_id, score,
+    * cluster) base is materialized: it feeds three frames (stats,
+    * keep, final join) and re-tokenizing + re-scoring the corpus per
+    * use would triple the scan-side cost. */
+  private def keepBest(s: SparkSession, d: String, labels: DataFrame): DataFrame = {
+    import TextAnalysis.{norm, tokens, occurrences, qualityScore, LangProfiles}
+    val scored = Tables.documents(s, d)
+      .withColumn("toks", tokens(norm(col("text"))))
+      .select(col("doc_id"),
+        qualityScore(size(col("toks")),
+          size(array_distinct(col("toks"))),
+          occurrences(col("toks"), LangProfiles.head._2)).as("score"))
+    val docs = Scratch.cut(
+      scored.join(labels.select(col("node").as("doc_id"), col("label")),
+          Seq("doc_id"), "left")
+        .withColumn("cluster", coalesce(col("label"), col("doc_id")))
+        .select("doc_id", "score", "cluster"))
+    val stats = docs.groupBy("cluster")
+      .agg(count(lit(1)).as("csize"), max(col("score")).as("best_score"))
+    // the max IS one of the member values, so the equality filter is
+    // exact even though score is a double
+    val keep = docs.join(stats, "cluster")
+      .filter(col("score") === col("best_score"))
+      .groupBy("cluster").agg(min(col("doc_id")).as("keep_doc"))
+    docs.join(stats, "cluster").join(keep, "cluster")
+      .withColumn("weight_fx", weightFx)
+      .withColumn("split", leakageSplit(col("cluster")))
+      .withColumn("is_kept", col("doc_id") === col("keep_doc"))
+      .select("doc_id", "cluster", "csize", "weight_fx", "score",
+        "split", "is_kept")
+  }
+
   def defs: Map[String, Q] = Map(
     // Exact dedup: one hash-partitioned groupBy on the content hash.
     "exact_dedup" -> ((s, d) =>
@@ -414,9 +468,9 @@ object DedupQueries extends QueryModule {
     // planted pairs straddling the split are surfaced.
     "minhash_incremental" -> ((s, d) => {
       val sh = Scratch.cut(shingled(Tables.documents(s, d)))
-      val stacked = graft.operators.Ingest.bandStack(sh)
-      val pairs = stacked.filter(graft.operators.Ingest.isNew(col("doc_id"))).as("x")
-        .join(stacked.filter(!graft.operators.Ingest.isNew(col("doc_id"))).as("y"),
+      val stacked = Ingest.bandStack(sh)
+      val pairs = stacked.filter(Ingest.isNew(col("doc_id"))).as("x")
+        .join(stacked.filter(!Ingest.isNew(col("doc_id"))).as("y"),
           col("x.band_id") === col("y.band_id") &&
             col("x.band_key") === col("y.band_key"))
         .select(col("x.doc_id").as("d_new"), col("y.doc_id").as("d_idx"))
@@ -470,7 +524,9 @@ object DedupQueries extends QueryModule {
     // re-clusters the corpus. Each new doc takes the cluster of its
     // best match at exact Jaccard ≥ 0.5 (ties: higher jac, then lower
     // label, then lower index doc — fully deterministic); unmatched
-    // docs seed their own cluster (label = own id, matched = 0).
+    // docs seed their own cluster (label = own id, matched = 0) — the
+    // rule is Ingest.bestMatch, shared with ingest_pipeline and
+    // dedup_family.
     // Scale shape: ONE AllPairs-prefix-filtered pair derivation
     // (exact, frequency-bounded) is materialized and consumed twice —
     // index×index pairs drive the CC, new×index pairs the probes; the
@@ -479,35 +535,14 @@ object DedupQueries extends QueryModule {
     // only the probe side runs per batch (the minhash_incremental
     // argument, one level up the stack).
     "dedup_assign" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val sized = Scratch.cut(Dedup.sized(Tables.documents(s, d)))
       val pairs = Scratch.cut(jaccardPairsSized(sized, t = 0.5)
         .select(col("d1"), col("d2"), col("jac")))
-      def isNew(c: org.apache.spark.sql.Column) = graft.operators.Ingest.isNew(c)
       val labels = connectedComponents(
-        pairs.filter(!isNew(col("d1")) && !isNew(col("d2")))
+        pairs.filter(!Ingest.isNew(col("d1")) && !Ingest.isNew(col("d2")))
           .select("d1", "d2"))
-      val probes = pairs
-        .filter(isNew(col("d1")) =!= isNew(col("d2")))
-        .select(
-          when(isNew(col("d1")), col("d1")).otherwise(col("d2")).as("doc_id"),
-          when(isNew(col("d1")), col("d2")).otherwise(col("d1")).as("d_idx"),
-          col("jac"))
-      val withLabel = probes.join(
-          labels.select(col("node").as("d_idx"), col("label")),
-          Seq("d_idx"), "left_outer")
-        .select(col("doc_id"), col("d_idx"), col("jac"),
-          coalesce(col("label"), col("d_idx")).as("cand_label"))
-      val best = withLabel.withColumn("rk", row_number().over(
-          Window.partitionBy("doc_id")
-            .orderBy(col("jac").desc, col("cand_label"), col("d_idx"))))
-        .filter(col("rk") === 1)
-      sized.filter(isNew(col("doc_id"))).select("doc_id")
-        .join(best, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("cand_label"), col("doc_id")).as("cluster"),
-          when(col("d_idx").isNotNull, lit(1)).otherwise(lit(0)).as("matched"),
-          col("jac"))
+      Ingest.bestMatch(sized.filter(Ingest.isNew(col("doc_id"))),
+          Ingest.probeRows(pairs), labels)
         .orderBy("doc_id")
     }),
 
@@ -809,7 +844,7 @@ object DedupQueries extends QueryModule {
         .select(col("doc_id"),
           coalesce(col("label"), col("doc_id")).as("cluster"),
           coalesce(col("csize"), lit(1L)).as("csize"))
-        .withColumn("weight_fx", expr("1000000 div csize").cast("long"))
+        .withColumn("weight_fx", weightFx)
         .orderBy("doc_id")
     }),
 
@@ -833,10 +868,7 @@ object DedupQueries extends QueryModule {
       Tables.documents(s, d).select("doc_id")
         .join(labels, Seq("doc_id"), "left")
         .withColumn("cluster", coalesce(col("label"), col("doc_id")))
-        .withColumn("bucket",
-          TextAnalysis.sampleBucket(col("cluster"), "graft-split"))
-        .withColumn("split",
-          when(col("bucket") < 90, "train").otherwise("val"))
+        .withColumn("split", leakageSplit(col("cluster")))
         .select("doc_id", "cluster", "split")
         .orderBy("doc_id")
     }),
@@ -852,48 +884,15 @@ object DedupQueries extends QueryModule {
     // from the materialized labels, which is exactly this composition.
     // Retention upgrades the min-doc_id canonical pick to the policy
     // real pipelines use: keep the BEST copy, not the first-crawled.
-    // The per-cluster stats/keep frames are cluster-cardinality —
-    // corpus-order once singletons are in — so they join by shuffle on
-    // the cluster key, never a broadcast hint. The (doc_id, score,
-    // cluster) base is materialized: it feeds three frames (stats,
-    // keep, final join) and re-tokenizing + re-scoring the corpus per
-    // use would triple the scan-side cost.
+    // The section itself is [[keepBest]], shared with dedup_family.
     // [Bench-accounting: re-derives the shared pairs+CC lineage from the
     // corpus because registry entries are standalone; production composes
     // from ONE persisted artifact — the REGISTERED X-159 `dedup_family`
     // capstone, measured ~2.9× cheaper than the sum of its parts.]
     "dedup_artifacts" -> ((s, d) => {
-      import TextAnalysis.{norm, tokens, occurrences, qualityScore, LangProfiles, sampleBucket}
       val pairs = jaccardPairs(Tables.documents(s, d), t = 0.5)
         .select("d1", "d2")
-      val labels = connectedComponents(pairs)
-        .select(col("node").as("doc_id"), col("label"))
-      val scored = Tables.documents(s, d)
-        .withColumn("toks", tokens(norm(col("text"))))
-        .select(col("doc_id"),
-          qualityScore(size(col("toks")),
-            size(array_distinct(col("toks"))),
-            occurrences(col("toks"), LangProfiles.head._2)).as("score"))
-      val docs = Scratch.cut(
-        scored.join(labels, Seq("doc_id"), "left")
-          .withColumn("cluster", coalesce(col("label"), col("doc_id")))
-          .select("doc_id", "score", "cluster"))
-      val stats = docs.groupBy("cluster")
-        .agg(count(lit(1)).as("csize"), max(col("score")).as("best_score"))
-      // the max IS one of the member values, so the equality filter is
-      // exact even though score is a double
-      val keep = docs.join(stats, "cluster")
-        .filter(col("score") === col("best_score"))
-        .groupBy("cluster").agg(min(col("doc_id")).as("keep_doc"))
-      docs.join(stats, "cluster").join(keep, "cluster")
-        .withColumn("weight_fx", expr("1000000 div csize").cast("long"))
-        .withColumn("split",
-          when(sampleBucket(col("cluster"), "graft-split") < 90, "train")
-            .otherwise("val"))
-        .withColumn("is_kept", col("doc_id") === col("keep_doc"))
-        .select("doc_id", "cluster", "csize", "weight_fx", "score",
-          "split", "is_kept")
-        .orderBy("doc_id")
+      keepBest(s, d, connectedComponents(pairs)).orderBy("doc_id")
     }),
 
     // MinHash estimate vs exact Jaccard (X-71): for every LSH
@@ -955,10 +954,8 @@ object DedupQueries extends QueryModule {
     // shingles, and its cost is one narrow scan.]
     "dedup_method_matrix" -> ((s, d) => {
       val sized = Scratch.cut(Dedup.sized(Tables.documents(s, d)))
-      val jr = connectedComponents(
-          jaccardPairsSized(sized, t = 0.5).select("d1", "d2"))
-        .filter(col("node") =!= col("label"))
-        .select(col("node").as("doc_id"))
+      val jr = jaccardRemoved(connectedComponents(
+        jaccardPairsSized(sized, t = 0.5).select("d1", "d2")))
       // X-131's policy arm: remove the larger-id member of each
       // containment pair (the same convention as the simhash arm)
       val cr = containmentPairsSized(sized, t = 0.8)
@@ -989,12 +986,14 @@ object DedupQueries extends QueryModule {
     // Scale shape: the corpus-dominant work (shingle + AllPairs +
     // verify) executes exactly once; both CC runs iterate over the
     // persisted PAIR frame (pair-cardinality, not corpus); every
-    // artifact join is keyed on doc_id/cluster. The oracle splices the
-    // SIBLING oracles verbatim (the X-136 fragment discipline), so the
-    // capstone cannot drift from the standalone definitions it embeds.
+    // artifact join is keyed on doc_id/cluster. Neither side can drift
+    // from the standalone definitions it embeds: the Spark side calls
+    // the siblings' own builders (keepBest for 'doc', Ingest.probeRows
+    // + Ingest.bestMatch for 'assign', jaccardRemoved + methodMatrix
+    // for 'matrix'; DedupFamilySpec pins the rows to the siblings), and
+    // the oracle splices the SIBLING oracles verbatim (the X-136
+    // fragment discipline, guarded by OracleSpliceSpec).
     "dedup_family" -> ((s, d) => {
-      import TextAnalysis.{norm, tokens, occurrences, qualityScore, LangProfiles, sampleBucket}
-      def isNew(c: org.apache.spark.sql.Column) = graft.operators.Ingest.isNew(c)
       // stage 1: ONE shingle + AllPairs + CC derivation, persisted as
       // Scratch artifacts (per-invocation dir: two concurrent runs on
       // one sfDir must not race on the artifact path)
@@ -1004,58 +1003,19 @@ object DedupQueries extends QueryModule {
       val labels = Scratch.artifact(connectedComponents(pairs.select("d1", "d2")),
         "dedup_family", "labels")
       val idxLabels = Scratch.artifact(connectedComponents(pairs
-          .filter(!isNew(col("d1")) && !isNew(col("d2"))).select("d1", "d2")),
+          .filter(!Ingest.isNew(col("d1")) && !Ingest.isNew(col("d2")))
+          .select("d1", "d2")),
         "dedup_family", "index_labels")
-      // kind='doc': the dedup_artifacts composition off the shared labels
-      val scored = Tables.documents(s, d)
-        .withColumn("toks", tokens(norm(col("text"))))
-        .select(col("doc_id"),
-          qualityScore(size(col("toks")),
-            size(array_distinct(col("toks"))),
-            occurrences(col("toks"), LangProfiles.head._2)).as("score"))
-      val docs = Scratch.cut(
-        scored.join(labels.select(col("node").as("doc_id"), col("label")),
-            Seq("doc_id"), "left")
-          .withColumn("cluster", coalesce(col("label"), col("doc_id")))
-          .select("doc_id", "score", "cluster"))
-      val stats = docs.groupBy("cluster")
-        .agg(count(lit(1)).as("csize"), max(col("score")).as("best_score"))
-      val keep = docs.join(stats, "cluster")
-        .filter(col("score") === col("best_score"))
-        .groupBy("cluster").agg(min(col("doc_id")).as("keep_doc"))
-      val docSec = docs.join(stats, "cluster").join(keep, "cluster")
-        .withColumn("weight_fx", expr("1000000 div csize").cast("long"))
-        .withColumn("split",
-          when(sampleBucket(col("cluster"), "graft-split") < 90, "train")
-            .otherwise("val"))
-        .withColumn("is_kept", col("doc_id") === col("keep_doc"))
-      // kind='assign': dedup_assign off the SAME persisted pair frame
-      val probes = pairs
-        .filter(isNew(col("d1")) =!= isNew(col("d2")))
-        .select(
-          when(isNew(col("d1")), col("d1")).otherwise(col("d2")).as("doc_id"),
-          when(isNew(col("d1")), col("d2")).otherwise(col("d1")).as("d_idx"),
-          col("jac"))
-      val withLabel = probes.join(
-          idxLabels.select(col("node").as("d_idx"), col("label")),
-          Seq("d_idx"), "left_outer")
-        .select(col("doc_id"), col("d_idx"), col("jac"),
-          coalesce(col("label"), col("d_idx")).as("cand_label"))
-      val best = withLabel.withColumn("rk", row_number().over(
-          Window.partitionBy("doc_id")
-            .orderBy(col("jac").desc, col("cand_label"), col("d_idx"))))
-        .filter(col("rk") === 1)
-      val asgSec = Tables.documents(s, d).select("doc_id")
-        .filter(isNew(col("doc_id")))
-        .join(best, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("cand_label"), col("doc_id")).as("cluster"),
-          when(col("d_idx").isNotNull, lit(1)).otherwise(lit(0)).as("matched"),
-          col("jac"))
+      // kind='doc': dedup_artifacts' keep-best section off the shared labels
+      val docSec = keepBest(s, d, labels)
+      // kind='assign': dedup_assign's best-match rule off the SAME
+      // persisted pair frame
+      val asgSec = Ingest.bestMatch(
+        Tables.documents(s, d).select("doc_id").filter(Ingest.isNew(col("doc_id"))),
+        Ingest.probeRows(pairs), idxLabels)
       // kind='matrix': jaccard arm from the shared labels; the other
       // three arms are distinct METHODS, registered siblings run once
-      val jr = labels.filter(col("node") =!= col("label"))
-        .select(col("node").as("doc_id"))
+      val jr = jaccardRemoved(labels)
       val cr = defs("containment_dup")(s, d)
         .select(col("d2").as("doc_id")).distinct()
       val mtxSec = methodMatrix(s, d, jr, cr)
@@ -1093,7 +1053,6 @@ object DedupQueries extends QueryModule {
     // batch, probe-side-only shuffle; candidates bounded by banding;
     // the manifest is |langs|·|shards| rows.
     "ingest_pipeline" -> ((s, d) => {
-      import graft.operators.Ingest
       val docsAll = Tables.documents(s, d)
       val sh = Scratch.cut(shingled(docsAll))
       val idxSh = sh.filter(!Ingest.isNew(col("doc_id")))

@@ -869,10 +869,8 @@ object TextQueries extends QueryModule {
       val sized = Scratch.cut(
         base.withColumn("ss", Dedup.shingles(col("toks"), 3))
           .select(col("doc_id"), col("ss"), size(col("ss")).as("n")))
-      val nonCanonical = Dedup
-        .connectedComponents(Dedup.jaccardPairsSized(sized, 0.5).select("d1", "d2"))
-        .filter(col("node") =!= col("label"))
-        .select(col("node").as("doc_id"))
+      val nonCanonical = DedupQueries.jaccardRemoved(Dedup
+        .connectedComponents(Dedup.jaccardPairsSized(sized, 0.5).select("d1", "d2")))
       q.join(nonCanonical, Seq("doc_id"), "left_anti")
         .filter(col("grade") =!= "poor" && col("lang_guess") === "en" &&
           sampleBucket(col("doc_id"), "subset") < 50)

@@ -110,8 +110,8 @@ object EventStream {
     * keeping the driver-side table bounded at |event types| rows for
     * the life of the dashboard — update mode would APPEND each batch's
     * changed rows and grow the table by ~one row per type per 300 ms
-    * forever. (Production feeds go through [[incrementalParquetSink]]/
-    * foreachBatch; the memory sink is the live-inspection surface.) */
+    * forever. (Production feeds go through [[idempotentParquetSink]];
+    * the memory sink is the live-inspection surface.) */
   def typeCountsLive(events: DataFrame, queryName: String,
       checkpoint: String): StreamingQuery =
     typeCounts(events).writeStream
@@ -128,27 +128,13 @@ object EventStream {
   /** NOTE: the memory sink materializes the drained result in DRIVER
     * memory — right for the bounded verification/backfill-inspection
     * runs it serves here; a large backfill drains through
-    * [[incrementalParquetSink]] instead (executor-side appends). */
+    * [[idempotentParquetSink]] instead (executor-side writes). */
   def drainAvailable(transformed: DataFrame, queryName: String,
       checkpoint: String): StreamingQuery =
     transformed.writeStream
       .outputMode("update").format("memory").queryName(queryName)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** R-4: incremental materialization — every micro-batch lands in the
-    * sink directory as its own append (the crash-safe-partial-results
-    * semantics of the reference's rewrite-per-row, app.py:303-310, at
-    * per-batch rather than per-row granularity). */
-  def incrementalParquetSink(df: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(path)
-      }
       .start()
 
   /** The idempotent per-batch writer: a batch lands in its own
@@ -160,7 +146,10 @@ object EventStream {
   def writeBatchIdempotent(batch: DataFrame, path: String, batchId: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
 
-  /** Idempotent variant of the incremental sink: foreachBatch is
+  /** R-4: incremental materialization — every micro-batch lands in the
+    * sink directory as its own partition (the crash-safe-partial-results
+    * semantics of the reference's rewrite-per-row, app.py:303-310, at
+    * per-batch rather than per-row granularity). foreachBatch is
     * at-least-once, and [[writeBatchIdempotent]] makes the redelivery
     * harmless — the standard exactly-once-by-idempotence recipe for
     * file sinks. */

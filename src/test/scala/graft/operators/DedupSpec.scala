@@ -33,11 +33,8 @@ class DedupSpec extends SparkSpec {
   test("minhash signature is identical for identical sets, mostly equal for near-dups") {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val nearDup = base.replace("w40", "w41") // 1 of 38 shingles differs
-    // r14: shingled no longer carries the (unconsumed) hash column;
-    // rebuild it here the way the historical frame did
-    val sh = shingled(df(1 -> base, 2 -> base, 3 -> nearDup))
-      .withColumn("hs", transform(col("ss"), t => TextAnalysis.tokenHash(t)))
-    val sig = sh.select(col("doc_id") +: minhashSig(col("hs")): _*)
+    val sig = minhashSigAgg(shingled(df(1 -> base, 2 -> base, 3 -> nearDup))
+        .select(col("doc_id"), explode(col("ss")).as("s")))
       .orderBy("doc_id").collect()
     val s1 = (1 to MinHashK).map(sig(0).getLong)
     val s2 = (1 to MinHashK).map(sig(1).getLong)
